@@ -4,13 +4,22 @@ The reference's entry point is ``HTML5::DOM->new(\\%opts)->parse($html)``
 (/root/reference/DOM.xs:934-971). Here: ``HTML5DOM(**opts).parse(html)``.
 Accepts str or bytes; bytes go through the encoding sniffing pipeline
 (meta prescan → BOM → heuristic → default, utils.c:620-649).
+
+Which tree builder runs: with the tree options at their defaults,
+``parse`` builds through the fast lane (``dom.fastparse.parse``, the
+same call the Spark extraction kernel makes), which falls back to the
+full insertion-mode machine (``dom.treebuilder.TreeBuilder``) whenever
+a document leaves its common subset; either way the tree is the one the
+full machine builds.  Non-default tree options, ``parseFragment`` and
+chunked parsing always run the full machine, which is imported only
+when one of them is used or the fast lane bails.
 """
 
 from __future__ import annotations
 
 from .dom import encoding as _enc
+from .dom import fastparse
 from .dom.node import Collection, Element, Fragment, Node, TokenList, Tree, _wrap
-from .dom.treebuilder import TreeBuilder
 from .selector.parser import SelectorList, parse_selector
 
 
@@ -38,6 +47,9 @@ class HTML5DOM:
         self._tb_opts = dict(scripts=scripts,
                              ignore_whitespace=ignore_whitespace,
                              ignore_doctype=ignore_doctype)
+        #: the fast lane implements the default tree options only
+        self._fast = (scripts and not ignore_whitespace
+                      and not ignore_doctype)
 
     def _decode(self, html, encoding: str | None = None) -> tuple[str, str]:
         return _enc.sniff_and_decode(
@@ -50,13 +62,23 @@ class HTML5DOM:
         )
 
     def parse(self, html, encoding: str | None = None) -> Tree:
+        """Decode ``html`` and build its tree.  Default tree options take
+        the fast lane (falling back to the full machine on a bail);
+        any non-default option runs the full machine directly."""
         enc, text = self._decode(html, encoding)
-        doc = TreeBuilder(**self._tb_opts).parse(text)
+        if self._fast:
+            doc = fastparse.parse(text)
+        else:
+            from .dom.treebuilder import TreeBuilder
+
+            doc = TreeBuilder(**self._tb_opts).parse(text)
         doc.encoding = enc
         return Tree(doc)
 
     def parseFragment(self, html, tag: str = "div",
                       encoding: str | None = None) -> Fragment:
+        from .dom.treebuilder import TreeBuilder
+
         enc, text = self._decode(html, encoding)
         doc, frag = TreeBuilder(**self._tb_opts).parse_fragment(text, tag)
         doc.encoding = enc

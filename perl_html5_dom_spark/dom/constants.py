@@ -84,6 +84,14 @@ FORMATTING_TAGS = frozenset(
 
 HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
 
+# in-body start tags that close an open <p> and insert a block (the same
+# list closes blocks as end tags)
+BLOCK_START = frozenset(
+    """address article aside blockquote center details dialog dir div dl
+    fieldset figcaption figure footer header hgroup main menu nav ol p
+    search section summary ul""".split()
+)
+
 IMPLIED_END_TAGS = frozenset(
     "dd dt li optgroup option p rb rp rt rtc".split()
 )
@@ -315,3 +323,29 @@ FOREIGN_ATTR_ADJUSTMENTS = {
 
 MATHML_TEXT_INTEGRATION = frozenset("mi mo mn ms mtext".split())
 HTML_INTEGRATION_SVG = frozenset("foreignObject desc title".split())
+
+# start tags that break out of foreign content back to HTML rules
+# (<font> also breaks out when it carries color/face/size)
+FOREIGN_BREAKOUT = frozenset(
+    """b big blockquote body br center code dd div dl dt em embed h1 h2 h3
+    h4 h5 h6 head hr i img li listing menu meta nobr ol p pre ruby s small
+    span strong strike sub sup table tt u ul var""".split()
+)
+
+MATHML_ATTR_ADJUSTMENTS = {"definitionurl": "definitionURL"}
+
+
+def adjust_foreign_attrs(attr_list, svg: bool = False,
+                         mathml: bool = False) -> dict:
+    """Token attributes of a foreign element as a dict, with the SVG or
+    MathML case adjustments applied; the first of duplicate names wins."""
+    attrs: dict = {}
+    for k, v in attr_list:
+        if svg and k in SVG_ATTR_ADJUSTMENTS:
+            k = SVG_ATTR_ADJUSTMENTS[k]
+        elif mathml and k in MATHML_ATTR_ADJUSTMENTS:
+            k = MATHML_ATTR_ADJUSTMENTS[k]
+        # foreign xlink:/xml:/xmlns attributes keep their qualified name
+        if k not in attrs:
+            attrs[k] = v
+    return attrs

@@ -219,6 +219,10 @@ def detect_by_prescan_stream(data: bytes | str,
 # ---------------------------------------------------------------------------
 # content heuristics (myencoding_detect analog)
 # ---------------------------------------------------------------------------
+_SMALL_BYTES = bytes(range(0x09))     # 0x00-0x08
+_ASCII_BYTES = bytes(range(0x80))
+
+
 def detect_unicode(data: bytes) -> str | None:
     """UTF-16LE/BE detection (reference detectUnicode, DOM.xs:2999-3013).
 
@@ -232,12 +236,12 @@ def detect_unicode(data: bytes) -> str | None:
     pairs = n // 2
     if pairs < 4:
         return None
-    le_hits = be_hits = 0
-    for i in range(0, n, 2):
-        if data[i + 1] <= 0x08:
-            le_hits += 1
-        if data[i] <= 0x08:
-            be_hits += 1
+    # stride slices pick the high bytes of each side; translate deletes
+    # the hits, so the length drop counts them (C loops, no Python one)
+    le_hi = data[1:n:2]
+    be_hi = data[0:n:2]
+    le_hits = pairs - len(le_hi.translate(None, _SMALL_BYTES))
+    be_hits = pairs - len(be_hi.translate(None, _SMALL_BYTES))
     if le_hits >= pairs * 0.9 and le_hits > be_hits:
         return "UTF-16LE"
     if be_hits >= pairs * 0.9 and be_hits > le_hits:
@@ -276,7 +280,7 @@ def detect_cyrillic(data: bytes) -> str | None:
         if score > best_score:
             best_score = score
             best = name
-    hi = sum(1 for b in sample if b >= 0x80)
+    hi = len(sample.translate(None, _ASCII_BYTES))   # bytes >= 0x80
     if best is not None and hi > 0 and best_score >= max(4, hi // 4):
         return best
     return None
@@ -293,7 +297,7 @@ def detect(data: bytes) -> str | None:
     if enc is not None:
         return enc
     if _is_valid_utf8(data):
-        if any(b >= 0x80 for b in data[:8192]):
+        if not data[:8192].isascii():
             return "UTF-8"
         return None
     return detect_cyrillic(data)

@@ -31,15 +31,25 @@ from the spec machine:
 ``parse`` falls back to the full TreeBuilder on bail, so the result is
 ALWAYS spec-identical; the differential test (tests/test_fastparse.py)
 asserts tree equality between the two lanes on every input it can
-generate.  Tokenization is shared — positions, entities and raw-text
-handling are byte-identical by construction.
+generate, the ``fostered``/``misnested`` document flags included.
+Tokenization is shared — positions, entities and raw-text handling are
+byte-identical by construction.
+
+Callers: ``parse`` is the document parse of every default-option path —
+the Spark kernels (``operators/extract.parse_document``) and the public
+API (``api.HTML5DOM.parse``, hence ``api.parse``).  Non-default tree
+options, fragments and chunked parsing go to the full machine directly.
+This module does not import ``treebuilder`` until a document bails.
 """
 
 from __future__ import annotations
 
 from .constants import (
+    BLOCK_START,
+    FOREIGN_BREAKOUT,
     FORMATTING_TAGS,
     HEADING_TAGS,
+    IMPLIED_END_TAGS_THOROUGH,
     MATHML_TEXT_INTEGRATION,
     NS_HTML,
     NS_MATHML,
@@ -47,15 +57,10 @@ from .constants import (
     SPECIAL_HTML,
     SVG_TAG_ADJUSTMENTS,
     VOID_TAGS,
+    adjust_foreign_attrs,
 )
 from .document import NULL, Document
 from .tokenizer import Tokenizer
-from .treebuilder import (
-    _BLOCK_START,
-    _FOREIGN_BREAKOUT,
-    TreeBuilder,
-    _adjust_foreign_attrs,
-)
 
 _WS = "\t\n\x0c\r "
 
@@ -86,7 +91,7 @@ _DD_DT = frozenset(("dd", "dt"))
 _IMPLIED = frozenset(("dd", "dt", "li", "p"))
 
 _OK_BODY_START = (
-    _BLOCK_START | HEADING_TAGS | FORMATTING_TAGS | _PHRASING | _BODY_VOID
+    BLOCK_START | HEADING_TAGS | FORMATTING_TAGS | _PHRASING | _BODY_VOID
     | _LIST_ITEM | _DD_DT | _HEAD_VOID | frozenset(_RAWTEXT_MODES)
 )
 
@@ -118,7 +123,7 @@ _SPECIAL = frozenset(SPECIAL_HTML)
 
 #: HTML start tags accepted inside island integration points (simple,
 #: AFE-free subset: no formatting/rawtext/table/list-implied machinery)
-_ISLAND_HTML_OK = _BLOCK_START | HEADING_TAGS | _PHRASING | _BODY_VOID
+_ISLAND_HTML_OK = BLOCK_START | HEADING_TAGS | _PHRASING | _BODY_VOID
 
 #: active-formatting-list marker (cell boundaries), like the full machine
 _MARKER = ("MARKER",)
@@ -296,6 +301,7 @@ class _Fast:
                 i += 1
                 break
         doc = self.doc
+        doc.misnested = True
         while i < len(fmt):
             e = fmt[i]
             nid = doc.new_element(e[0], NS_HTML,
@@ -643,7 +649,7 @@ class _Fast:
             raise _Bail               # eof / </body> / container close
         if tag not in _OK_BODY_START:
             raise _Bail
-        if tag in _BLOCK_START:
+        if tag in BLOCK_START:
             self._close_p()
             self._push(token)
             return
@@ -676,6 +682,7 @@ class _Fast:
                         if e[2]:
                             raise _Bail   # adoption agency
                         self.open_fmt.remove(e)
+                        self.doc.misnested = True
                         break
             elif tag == "nobr" and any(e[0] == "nobr" for e in tail):
                 # spec reconstructs FIRST (re-opening a pending nobr),
@@ -732,6 +739,7 @@ class _Fast:
         previous-sibling text node.  Only reached with an empty active
         formatting list (reconstruction into a foster position bails)."""
         doc = self.doc
+        doc.fostered = True
         prev = doc.prev_sib[table_nid]
         if prev != NULL and doc.node_type[prev] == 3:
             doc.text[prev] = (doc.text[prev] or "") + text
@@ -985,14 +993,22 @@ class _Fast:
                 continue
             if tt == "end":
                 if t[1] == "template":
-                    self._close_cell(tpl_idx)
+                    self._close_template(tpl_idx)
                     return
                 if in_body:
                     self._body_end(t[1])
                 continue              # in-template end tags are ignored
             # eof: spec closes the template and reprocesses eof
-            self._close_cell(tpl_idx)
+            self._close_template(tpl_idx)
             return
+
+    def _close_template(self, tpl_idx: int) -> None:
+        # the full machine flags a template close that force-pops an
+        # element the thorough implied end tags do not cover
+        if any(t not in IMPLIED_END_TAGS_THOROUGH
+               for t in self.tags[tpl_idx + 1:]):
+            self.doc.misnested = True
+        self._close_cell(tpl_idx)
 
     def _colgroup(self, next_token):
         """Consume "in column group" content; returns a token to
@@ -1075,6 +1091,8 @@ class _Fast:
                     return            # form not in scope: ignore
             while tags[-1] in _IMPLIED:
                 self._pop_implicit()
+            if self.stack[-1] != node:
+                self.doc.misnested = True   # as the full machine flags it
             del self.stack[i]
             del tags[i]
             return
@@ -1133,6 +1151,10 @@ class _Fast:
                     return            # no heading in scope: ignore
             return
         if tag in FORMATTING_TAGS:
+            # every formatting element on the fast lane's stack has an
+            # AFE entry, so the full machine's AAA never takes its
+            # "current node, not in the AFE" shortcut: flag as it does
+            self.doc.misnested = True
             # adoption agency outer-loop fast cases (treebuilder.py
             # _adoption_agency steps 3-5).  The spec acts on the LAST
             # AFE-tail entry with this tag name — iterate newest-first
@@ -1173,9 +1195,9 @@ class _Fast:
             # fall through to the generic walk below
         # blocks and any-other end tags share the walk-down rule; the
         # spec's block-closing end-tag list also includes button/pre/
-        # listing (not in _BLOCK_START), which close across non-special
+        # listing (not in BLOCK_START), which close across non-special
         # content like blocks do
-        block_close = tag in _BLOCK_START or tag in (
+        block_close = tag in BLOCK_START or tag in (
             "button", "pre", "listing")
         for t in reversed(tags):
             if t == tag:
@@ -1218,6 +1240,7 @@ class _Fast:
             # still goes on the open-elements stack
             nid = self._el(token)
             self.doc.insert_before(foster_table_nid, nid)
+            self.doc.fostered = True
             self.stack.append(nid)
             self.tags.append("select")
         else:
@@ -1345,7 +1368,7 @@ class _Fast:
         root_ns = NS_SVG if token[1] == "svg" else NS_MATHML
         nid = self._el(token)
         doc.ns[nid] = root_ns
-        doc.attrs[nid] = _adjust_foreign_attrs(
+        doc.attrs[nid] = adjust_foreign_attrs(
             token[2] or (), svg=root_ns == NS_SVG,
             mathml=root_ns == NS_MATHML) or None
         self._append(nid)
@@ -1389,17 +1412,17 @@ class _Fast:
                     continue
                 if tt == "start":
                     tag = token[1]
-                    if tag in _FOREIGN_BREAKOUT or (tag == "font" and any(
+                    if tag in FOREIGN_BREAKOUT or (tag == "font" and any(
                             k in ("color", "face", "size")
                             for k, _ in token[2])):
                         raise _Bail   # breakout: pops + body reprocess
                     ns = NS_SVG if svg_in_axml else top_ns
                     if ns == NS_SVG:
                         tag = SVG_TAG_ADJUSTMENTS.get(tag, tag)
-                        attrs = _adjust_foreign_attrs(token[2] or (), svg=True)
+                        attrs = adjust_foreign_attrs(token[2] or (), svg=True)
                     else:
-                        attrs = _adjust_foreign_attrs(token[2] or (),
-                                                      mathml=True)
+                        attrs = adjust_foreign_attrs(token[2] or (),
+                                                     mathml=True)
                     nid = self._el(token, tag=tag)
                     doc.ns[nid] = ns
                     doc.attrs[nid] = attrs or None
@@ -1440,7 +1463,7 @@ class _Fast:
                 nid = self._el(token)
                 ns = NS_SVG if tag == "svg" else NS_MATHML
                 doc.ns[nid] = ns
-                doc.attrs[nid] = _adjust_foreign_attrs(
+                doc.attrs[nid] = adjust_foreign_attrs(
                     token[2] or (), svg=ns == NS_SVG,
                     mathml=ns == NS_MATHML) or None
                 doc.append_child(top_nid, nid)
@@ -1449,7 +1472,7 @@ class _Fast:
                 return
             if tag not in _ISLAND_HTML_OK:
                 raise _Bail           # formatting/table/rawtext/...
-            if tag in _BLOCK_START or tag in HEADING_TAGS:
+            if tag in BLOCK_START or tag in HEADING_TAGS:
                 # close an open <p> at the integration point (in-body
                 # close-p; only the directly-open case stays fast)
                 if top_ns == NS_HTML and top_tag == "p":
@@ -1520,7 +1543,12 @@ def try_parse(src: str) -> Document | None:
 
 
 def parse(src: str) -> Document:
+    """Parse a full document: the fast lane, or the full machine when it
+    bails.  The full machine is imported only on a bail, so a process
+    whose documents all take the fast lane never loads it."""
     doc = try_parse(src)
     if doc is not None:
         return doc
+    from .treebuilder import TreeBuilder
+
     return TreeBuilder().parse(src)

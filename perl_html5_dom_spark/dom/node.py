@@ -29,7 +29,6 @@ from .constants import (
     VOID_TAGS,
 )
 from .document import NULL, Document
-from .treebuilder import TreeBuilder
 
 
 def _wrap(tree: "Tree", nid: int):
@@ -125,6 +124,8 @@ class Tree:
         return _wrap(self, self.doc.new_text(data))
 
     def parseFragment(self, html: str, tag: str = "div", ns: int = NS_HTML):
+        from .treebuilder import TreeBuilder
+
         tb = TreeBuilder()
         _doc, frag = tb.parse_fragment(html, tag, ns, doc=self.doc)
         return _wrap(self, frag)
@@ -330,6 +331,8 @@ class Node:
         return ""
 
     def _fragment_for(self, value: str):
+        from .treebuilder import TreeBuilder
+
         ctx = self.doc.tag[self.nid] if \
             self.doc.node_type[self.nid] == ELEMENT_NODE else "body"
         tb = TreeBuilder()

@@ -62,8 +62,12 @@ _LIT_PLAIN_RE = re.compile(rb"[^\\()]*\)")
 # coverage is total: every byte is ws, '%' (comment), keyword-class
 # (num/op, split on the numeric start set, or the run after '/'), or a
 # delimiter — so a non-match can only mean trailing ws/comments.
+# The ws/comment prefix is an atomic group: no token alternative starts
+# with ws or '%', so giving any of it back can never help a match —
+# backtracking into it only splits whitespace runs (exponential in the
+# run length) or restarts a token inside a comment.
 _CS_TOK = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*"
+    rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*)"
     rb"(?:(?P<num>[+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
     rb"|/(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
     rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
@@ -76,7 +80,7 @@ _CS_TOK = re.compile(
 # split by comments) falls back to the old explicit lookahead, so the
 # parse is bit-identical on every input.
 _OBJ_TOK = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*"
+    rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*)"
     rb"(?:(?P<rnum>\d+)[\x00\t\n\x0c\r ]+(?P<rgen>\d+)"
     rb"[\x00\t\n\x0c\r ]+R(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$)"
     rb"|(?P<num>[+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
@@ -88,7 +92,7 @@ _OBJ_TOK = re.compile(
 # key — one match per dict entry instead of skip_ws + two-byte slice
 # compare + full read_object for the key
 _DICT_KEY = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*"
+    rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*)"
     rb"(?:(?P<end>>>)|/(?P<key>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))")
 
 

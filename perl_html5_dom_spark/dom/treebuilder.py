@@ -17,8 +17,10 @@ reference's remaining parser flags (DOM.pod:3234-3238).
 from __future__ import annotations
 
 from .constants import (
+    BLOCK_START,
     ELEMENT_NODE,
     FOREIGN_ATTR_ADJUSTMENTS,
+    FOREIGN_BREAKOUT,
     FORMATTING_TAGS,
     HEADING_TAGS,
     HTML_INTEGRATION_SVG,
@@ -33,9 +35,9 @@ from .constants import (
     SPECIAL_HTML,
     SPECIAL_MATHML,
     SPECIAL_SVG,
-    SVG_ATTR_ADJUSTMENTS,
     SVG_TAG_ADJUSTMENTS,
     VOID_TAGS,
+    adjust_foreign_attrs,
 )
 from .document import NULL, Document
 from .tokenizer import Tokenizer
@@ -43,20 +45,7 @@ from .tokenizer import Tokenizer
 _WS = "\t\n\x0c "
 MARKER = ("MARKER",)
 
-_BLOCK_START = frozenset(
-    """address article aside blockquote center details dialog dir div dl
-    fieldset figcaption figure footer header hgroup main menu nav ol p
-    search section summary ul""".split()
-)
-_CLOSE_P_BLOCKS = _BLOCK_START  # same list for the end-tag variant
-
-_FOREIGN_BREAKOUT = frozenset(
-    """b big blockquote body br center code dd div dl dt em embed h1 h2 h3
-    h4 h5 h6 head hr i img li listing menu meta nobr ol p pre ruby s small
-    span strong strike sub sup table tt u ul var""".split()
-)
-
-_MATHML_ATTR_ADJUST = {"definitionurl": "definitionURL"}
+_CLOSE_P_BLOCKS = BLOCK_START  # same list for the end-tag variant
 
 
 def _is_ws(text: str) -> bool:
@@ -1091,7 +1080,7 @@ class TreeBuilder:
             self._insert_element(token)
             self.mode = "in_frameset"
             return
-        if tag in _BLOCK_START:
+        if tag in BLOCK_START:
             self._close_p()
             self._insert_element(token)
             return
@@ -1283,14 +1272,14 @@ class TreeBuilder:
             return
         if tag == "math":
             self._reconstruct_afe()
-            attrs = _adjust_foreign_attrs(token[2], mathml=True)
+            attrs = adjust_foreign_attrs(token[2], mathml=True)
             self._insert_element(token, ns=NS_MATHML, attrs_override=attrs)
             if token[3]:
                 self.stack.pop()
             return
         if tag == "svg":
             self._reconstruct_afe()
-            attrs = _adjust_foreign_attrs(token[2], svg=True)
+            attrs = adjust_foreign_attrs(token[2], svg=True)
             self._insert_element(token, ns=NS_SVG, attrs_override=attrs)
             if token[3]:
                 self.stack.pop()
@@ -2027,7 +2016,7 @@ class TreeBuilder:
             return
         if tt == "start":
             tag = token[1]
-            breakout = tag in _FOREIGN_BREAKOUT or (
+            breakout = tag in FOREIGN_BREAKOUT or (
                 tag == "font" and any(
                     k in ("color", "face", "size") for k, _ in token[2]
                 )
@@ -2050,9 +2039,9 @@ class TreeBuilder:
                 cur_ns = self.fragment_context_ns
             if cur_ns == NS_SVG:
                 tag = SVG_TAG_ADJUSTMENTS.get(tag, tag)
-                attrs = _adjust_foreign_attrs(token[2], svg=True)
+                attrs = adjust_foreign_attrs(token[2], svg=True)
             elif cur_ns == NS_MATHML:
-                attrs = _adjust_foreign_attrs(token[2], mathml=True)
+                attrs = adjust_foreign_attrs(token[2], mathml=True)
             else:
                 attrs = dict(token[2])
             self._insert_element(token, ns=cur_ns, tag_override=tag,
@@ -2103,20 +2092,6 @@ def _split_leading_ws(token) -> tuple[str, str, int]:
     stripped = text.lstrip(_WS)
     ws = text[: len(text) - len(stripped)]
     return ws, stripped, token[2] + len(ws)
-
-
-def _adjust_foreign_attrs(attr_list, svg: bool = False,
-                          mathml: bool = False) -> dict:
-    attrs: dict = {}
-    for k, v in attr_list:
-        if svg and k in SVG_ATTR_ADJUSTMENTS:
-            k = SVG_ATTR_ADJUSTMENTS[k]
-        elif mathml and k in _MATHML_ATTR_ADJUST:
-            k = _MATHML_ATTR_ADJUST[k]
-        # foreign xlink:/xml:/xmlns attributes keep their qualified name
-        if k not in attrs:
-            attrs[k] = v
-    return attrs
 
 
 def parse(src: str, **opts) -> Document:

@@ -131,3 +131,99 @@ def test_whatwg_label_folds():
     assert enc.python_codec("logical") == "iso8859-8"   # 8859-8-I
     assert enc.python_codec("visual") == "iso8859-8"
     assert enc.python_codec("iso-2022-jp") == "iso2022_jp"
+
+
+# -- the byte-loop heuristics, kept as the reference for the C-speed ones --
+
+def _loop_detect_unicode(data):
+    if not data:
+        return None
+    n = min(len(data), 4096) & ~1
+    pairs = n // 2
+    if pairs < 4:
+        return None
+    le_hits = be_hits = 0
+    for i in range(0, n, 2):
+        if data[i + 1] <= 0x08:
+            le_hits += 1
+        if data[i] <= 0x08:
+            be_hits += 1
+    if le_hits >= pairs * 0.9 and le_hits > be_hits:
+        return "UTF-16LE"
+    if be_hits >= pairs * 0.9 and be_hits > le_hits:
+        return "UTF-16BE"
+    return None
+
+
+def _loop_detect_cyrillic(data):
+    best = None
+    best_score = 0
+    sample = data[:8192]
+    for name in enc._CYR_CANDIDATES:
+        try:
+            text = sample.decode(enc.ENCODINGS[name])
+        except (UnicodeDecodeError, LookupError):
+            continue
+        score = sum(1 for ch in text.lower() if ch in enc._CYR_COMMON)
+        if score > best_score:
+            best_score = score
+            best = name
+    hi = sum(1 for b in sample if b >= 0x80)
+    if best is not None and hi > 0 and best_score >= max(4, hi // 4):
+        return best
+    return None
+
+
+def _loop_detect(data):
+    found = _loop_detect_unicode(data)
+    if found is not None:
+        return found
+    if enc._is_valid_utf8(data):
+        if any(b >= 0x80 for b in data[:8192]):
+            return "UTF-8"
+        return None
+    return _loop_detect_cyrillic(data)
+
+
+def _heuristic_inputs():
+    import random
+
+    rng = random.Random(20261017)
+    text = ("Съешь же ещё этих мягких французских булок, да выпей чаю. "
+            "<p>mixed ascii</p> ") * 40
+    html = f"<html><body><p>{text}</p></body></html>"
+    out = [b"", b"a", b"\x00" * 7, UTF16_SAMPLE, CP1251_SAMPLE]
+    for codec in ("cp1251", "koi8-r", "utf-16-le", "utf-16-be", "utf-8"):
+        data = html.encode(codec)
+        # whole, odd-length cut, past the 4096/8192 windows, tiny
+        out += [data, data[:4097], data[:8193], data[:9], data[1:]]
+    for _ in range(500):
+        n = rng.choice((0, 1, 7, 8, 9, 64, 1000, 4095, 4096, 4097, 9000))
+        kind = rng.randrange(4)
+        if kind == 0:      # uniform random bytes
+            data = bytes(rng.randrange(256) for _ in range(n))
+        elif kind == 1:    # ascii with a sprinkling of high bytes
+            data = bytes(rng.randrange(0x20, 0x7f) if rng.random() < 0.97
+                         else rng.randrange(0x80, 0x100) for _ in range(n))
+        elif kind == 2:    # utf-16-like: small bytes on one side
+            side = rng.randrange(2)
+            data = bytes(rng.randrange(0, 0x0b) if (i % 2) == side
+                         else rng.randrange(256) for i in range(n))
+        else:              # random cyrillic text in a random codec
+            s = "".join(rng.choice("абвгдеёжзийклмнопрстуфхцчшщъыьэюя <>p")
+                        for _ in range(n // 2))
+            data = s.encode(rng.choice(("cp1251", "koi8-r", "utf-8",
+                                        "cp866", "iso8859-5")))
+        out.append(data)
+    return out
+
+
+def test_heuristics_match_byte_loops(monkeypatch):
+    inputs = _heuristic_inputs()
+    for data in inputs:
+        assert enc.detect_unicode(data) == _loop_detect_unicode(data)
+        assert enc.detect_cyrillic(data) == _loop_detect_cyrillic(data)
+        assert enc.detect(data) == _loop_detect(data)
+    fast = [enc.sniff_and_decode(d) for d in inputs]
+    monkeypatch.setattr(enc, "detect", _loop_detect)
+    assert [enc.sniff_and_decode(d) for d in inputs] == fast

@@ -29,7 +29,8 @@ def project(doc):
             doc.elem_begin[nid], doc.elem_length[nid],
         ))
     meta = (doc.quirks, ref(doc.html_node), ref(doc.head_node),
-            ref(doc.body_node), ref(doc.doctype_node))
+            ref(doc.body_node), ref(doc.doctype_node),
+            doc.fostered, doc.misnested)
     return rows, meta
 
 

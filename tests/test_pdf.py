@@ -386,3 +386,86 @@ def test_content_stream_stray_delims_and_dict_operand():
         b"] } BT /F1 12 Tf 72 700 Td "
         b"/Tag << /K 1 >> BDC (x) Tj ET")
     assert spans == [(700.0, 72.0, "x")]
+
+
+# ---------------------------------------------------------------------------
+# termination: long whitespace/comment runs lex in linear time.  Each case
+# runs in a child interpreter, so a regression to exponential backtracking
+# fails on the timeout instead of hanging the suite.
+# ---------------------------------------------------------------------------
+
+_N = 100_000
+#: the runs, as source text evaluated in the child
+_RUNS = {
+    "newlines": f"b'\\n' * {_N}",
+    "mixed_ws": f"b' \\t\\r\\n\\x0c\\x00' * {_N // 6}",
+    "comments": f"b'% note\\n' * {_N // 7}",
+    "comment_tail": f"b'\\n' * {_N} + b'% unterminated'",
+}
+_TERMINATION_CASES = {
+    # content streams: a text object followed by the run
+    "content": (
+        "from perl_html5_dom_spark.dom.pdf import _spans_from_content\n"
+        "assert _spans_from_content(b'BT 10 700 Td (x) Tj ET' + RUN) "
+        "== [(700.0, 10.0, 'x')]\n"),
+    # a whole page whose content stream ends in the run
+    "page": (
+        "import sys; sys.path.insert(0, 'tests')\n"
+        "from test_pdf import build_pdf, one_page\n"
+        "from perl_html5_dom_spark.dom.pdf import extract_pdf_text\n"
+        "assert extract_pdf_text(build_pdf(one_page("
+        "b'BT 10 700 Td (x) Tj ET' + RUN))) == (1, 'x')\n"),
+    # object syntax: nothing but the run is left to read
+    "object": (
+        "from perl_html5_dom_spark.dom.pdf import PdfError, _Lexer\n"
+        "try:\n"
+        "    _Lexer(b'[1 2] ' + RUN).read_object(); "
+        "_Lexer(RUN).read_object()\n"
+        "except PdfError as e:\n"
+        "    assert 'end of data' in str(e), e\n"
+        "else:\n"
+        "    raise AssertionError('no error')\n"),
+    # dict bodies: an entry, then the run instead of '>>'
+    "dict": (
+        "from perl_html5_dom_spark.dom.pdf import PdfError, _Lexer\n"
+        "try:\n"
+        "    _Lexer(b'<< /A 1 /B /C' + RUN).read_object()\n"
+        "except PdfError as e:\n"
+        "    assert 'end of data' in str(e), e\n"
+        "else:\n"
+        "    raise AssertionError('no error')\n"),
+}
+
+
+@pytest.mark.parametrize("run", sorted(_RUNS))
+@pytest.mark.parametrize("where", sorted(_TERMINATION_CASES))
+def test_lexer_terminates_on_long_runs(where, run):
+    import os
+    import subprocess
+    import sys
+
+    body = _TERMINATION_CASES[where].replace("\n", "\n    ")
+    code = (
+        "import time\n"
+        f"RUN = {_RUNS[run]}\n"
+        "t0 = time.perf_counter()\n"
+        "if True:\n    " + body + "\n"
+        "print(time.perf_counter() - t0)\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=60, check=True, cwd=root)
+    # linear lexing takes milliseconds; the backtracking regexes took
+    # 0.4 s at 20 trailing newlines, doubling per byte
+    assert float(out.stdout) < 2.0
+
+
+def test_trailing_comment_yields_no_token():
+    from perl_html5_dom_spark.dom.pdf import (
+        _CS_TOK, _DICT_KEY, _OBJ_TOK, _spans_from_content)
+
+    for regex in (_CS_TOK, _OBJ_TOK, _DICT_KEY):
+        assert regex.match(b"  %abc") is None
+        assert regex.match(b"%/K 1 R >> (x)") is None
+    # a commented-out show operator after the last real token stays dead
+    assert _spans_from_content(
+        b"BT 10 700 Td (a) Tj ET %BT (b) Tj") == [(700.0, 10.0, "a")]

@@ -5,7 +5,7 @@ table/select/template vocabulary, foreign content, entities, quirks
 doctypes, attribute junk — checked per document:
 
   1. fast lane vs full TreeBuilder (project() equality; the fast lane
-     may bail, never diverge)
+     may bail, never diverge), and the public HTML5DOM().parse vs full
   2. serialize -> reparse -> serialize fixpoint (idempotence)
   3. chunked parse at a random split == whole-string parse
   4. inner_text / text_content never crash
@@ -108,6 +108,7 @@ def _setup_paths() -> None:
 def check_one(src: str) -> str | None:
     """Return a failure label or None."""
     _setup_paths()
+    from perl_html5_dom_spark.api import HTML5DOM
     from perl_html5_dom_spark.dom import fastparse
     from perl_html5_dom_spark.dom.chunked import ChunkedParser
     from perl_html5_dom_spark.dom.innertext import inner_text
@@ -120,6 +121,8 @@ def check_one(src: str) -> str | None:
     fast = fastparse.parse(src)
     if project(fast) != project(full):
         return "fast-vs-full"
+    if project(HTML5DOM().parse(src).doc) != project(full):
+        return "api-vs-full"
     # spec-inherent lossy corners are exempt from the fixpoint check
     # (tests/test_serialization.py::test_serialize_known_lossy_corners):
     #  - plaintext has no close tag (anything after re-parses as text)
