@@ -51,9 +51,9 @@ class HTML5DOM:
         self._fast = (scripts and not ignore_whitespace
                       and not ignore_doctype)
 
-    def _decode(self, html, encoding: str | None = None) -> tuple[str, str]:
-        return _enc.sniff_and_decode(
-            html,
+    def _sniff(self, encoding: str | None) -> dict:
+        """Keyword arguments of ``encoding.sniff_and_decode``."""
+        return dict(
             encoding=encoding or self.encoding,
             default_encoding=self.default_encoding,
             use_meta=self.encoding_use_meta,
@@ -61,19 +61,21 @@ class HTML5DOM:
             prescan_limit=self.encoding_prescan_limit,
         )
 
+    def _decode(self, html, encoding: str | None = None) -> tuple[str, str]:
+        return _enc.sniff_and_decode(html, **self._sniff(encoding))
+
     def parse(self, html, encoding: str | None = None) -> Tree:
-        """Decode ``html`` and build its tree.  Default tree options take
-        the fast lane (falling back to the full machine on a bail);
+        """Decode ``html`` and build its tree (``fastparse.parse_document``,
+        the same sequence the Spark kernels run).  Default tree options
+        take the fast lane (falling back to the full machine on a bail);
         any non-default option runs the full machine directly."""
-        enc, text = self._decode(html, encoding)
-        if self._fast:
-            doc = fastparse.parse(text)
-        else:
+        build = None
+        if not self._fast:
             from .dom.treebuilder import TreeBuilder
 
-            doc = TreeBuilder(**self._tb_opts).parse(text)
-        doc.encoding = enc
-        return Tree(doc)
+            build = TreeBuilder(**self._tb_opts).parse
+        return Tree(fastparse.parse_document(
+            html, build, **self._sniff(encoding)))
 
     def parseFragment(self, html, tag: str = "div",
                       encoding: str | None = None) -> Fragment:

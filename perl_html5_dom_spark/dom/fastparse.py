@@ -35,15 +35,18 @@ generate, the ``fostered``/``misnested`` document flags included.
 Tokenization is shared — positions, entities and raw-text handling are
 byte-identical by construction.
 
-Callers: ``parse`` is the document parse of every default-option path —
-the Spark kernels (``operators/extract.parse_document``) and the public
-API (``api.HTML5DOM.parse``, hence ``api.parse``).  Non-default tree
-options, fragments and chunked parsing go to the full machine directly.
-This module does not import ``treebuilder`` until a document bails.
+Callers: ``parse_document`` (sniff and decode, then build) is the one
+document parse of the Spark kernels (``operators.extract``, which
+re-exports it) and of the public API (``api.HTML5DOM.parse``, hence
+``api.parse``).  It builds through ``parse`` unless the API passes a
+``TreeBuilder`` for non-default tree options; fragments and chunked
+parsing go to the full machine directly.  This module does not import
+``treebuilder`` until a document bails.
 """
 
 from __future__ import annotations
 
+from . import encoding as _enc
 from .constants import (
     BLOCK_START,
     FOREIGN_BREAKOUT,
@@ -1552,3 +1555,16 @@ def parse(src: str) -> Document:
     from .treebuilder import TreeBuilder
 
     return TreeBuilder().parse(src)
+
+
+def parse_document(html, build=None, **sniff) -> Document:
+    """bytes|str → Document: ``encoding.sniff_and_decode(html, **sniff)``
+    (reference utils.c:620-649 semantics), then ``build(text)`` —
+    :func:`parse` unless given — with the sniffed encoding recorded on
+    the document.  Both calls go through module attributes, so a tracer
+    that patches ``encoding.sniff_and_decode`` or ``fastparse.parse``
+    sees them."""
+    name, text = _enc.sniff_and_decode(html, **sniff)
+    doc = (build or parse)(text)
+    doc.encoding = name
+    return doc

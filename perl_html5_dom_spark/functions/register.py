@@ -4,7 +4,8 @@ Registers the engine's scalar surface as SQL-callable functions so the
 query face is usable from plain ``spark.sql``.  All are Arrow-batched
 pandas UDFs (never per-row Python); each compiles its selector once per
 executor via an LRU cache — the executor-side analog of the reference's
-precompiled selectors (DOM.pod:2544-2551).
+precompiled selectors (DOM.pod:2544-2551).  A NULL ``html`` gives
+SQL NULL.
 
     SELECT css_text(html, 'article h1')       -- first match's text
     SELECT css_count(html, 'a[href]')         -- number of matches
@@ -23,80 +24,66 @@ from functools import lru_cache
 
 import pandas as pd
 
+from ..dom import innertext, serializer
+from ..dom.fastparse import parse_document
+from ..operators.extract import main_text
+from ..selector import matcher
+
 
 @lru_cache(maxsize=256)
 def _compiled(selector: str):
-    from ..selector import matcher
-
     return matcher.compile_selector(selector)
 
 
-def _parse(html):
-    from ..operators.extract import parse_document
+def _per_doc(fn, html: pd.Series, *args: pd.Series,
+             dtype=object) -> pd.Series:
+    """``fn(doc, *row_args)`` per row over the parsed ``html``; a NULL
+    ``html`` gives SQL NULL."""
+    return pd.Series(
+        [None if h is None else fn(parse_document(h), *a)
+         for h, *a in zip(html, *args)], dtype=dtype)
 
-    return parse_document(html)
+
+def _at(render):
+    """(doc, selector) → ``render(doc, first match)``, None if none."""
+    def fn(doc, sel):
+        nid = matcher.at(doc, _compiled(sel))
+        return render(doc, nid) if nid != -1 else None
+
+    return fn
+
+
+def _first_attr(doc, sel, name):
+    nid = matcher.at(doc, _compiled(sel))
+    a = doc.attrs[nid] if nid != -1 else None
+    return a.get(name) if a else None
 
 
 def css_text_fn(html: pd.Series, selector: pd.Series) -> pd.Series:
-    from ..dom import serializer
-    from ..selector import matcher
-
-    out = []
-    for h, sel in zip(html, selector):
-        doc = _parse(h)
-        nid = matcher.at(doc, _compiled(sel))
-        out.append(serializer.text_content(doc, nid) if nid != -1 else None)
-    return pd.Series(out, dtype=object)
+    return _per_doc(_at(serializer.text_content), html, selector)
 
 
 def css_count_fn(html: pd.Series, selector: pd.Series) -> pd.Series:
-    from ..selector import matcher
-
-    return pd.Series(
-        [len(matcher.find(_parse(h), _compiled(s)))
-         for h, s in zip(html, selector)])
+    return _per_doc(lambda doc, sel: len(matcher.find(doc, _compiled(sel))),
+                    html, selector, dtype="Int64")
 
 
 def css_html_fn(html: pd.Series, selector: pd.Series) -> pd.Series:
-    from ..dom import serializer
-    from ..selector import matcher
-
-    out = []
-    for h, sel in zip(html, selector):
-        doc = _parse(h)
-        nid = matcher.at(doc, _compiled(sel))
-        out.append(serializer.serialize(doc, nid) if nid != -1 else None)
-    return pd.Series(out, dtype=object)
+    return _per_doc(_at(serializer.serialize), html, selector)
 
 
 def css_inner_text_fn(html: pd.Series) -> pd.Series:
-    from ..dom import innertext
-
-    out = []
-    for h in html:
-        doc = _parse(h)
-        body = doc.body_node if doc.body_node != -1 else doc.root
-        out.append(innertext.inner_text(doc, body))
-    return pd.Series(out, dtype=object)
+    return _per_doc(lambda doc: innertext.inner_text(
+        doc, doc.body_node if doc.body_node != -1 else doc.root), html)
 
 
 def css_main_text_fn(html: pd.Series) -> pd.Series:
-    from ..operators.extract import main_text
-
-    return pd.Series([main_text(_parse(h)) for h in html], dtype=object)
+    return _per_doc(main_text, html)
 
 
 def css_attr_fn(html: pd.Series, selector: pd.Series,
                 name: pd.Series) -> pd.Series:
-    from ..selector import matcher
-
-    out = []
-    for h, sel, attr in zip(html, selector, name):
-        doc = _parse(h)
-        nid = matcher.at(doc, _compiled(sel))
-        a = doc.attrs[nid] if nid != -1 else None
-        out.append(a.get(attr) if a else None)
-    return pd.Series(out, dtype=object)
+    return _per_doc(_first_attr, html, selector, name)
 
 
 def register_all(spark) -> None:

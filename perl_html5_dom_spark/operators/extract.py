@@ -10,8 +10,8 @@ emits ``(url, text, spans, ...)`` rows.
 
 Design for 100 TB:
   * the kernel is a black box to Catalyst, so we keep its input narrow —
-    callers should ``select("url", "html")`` before invoking so parquet
-    scans prune to the two needed columns;
+    every operator selects ``(url, payload)`` before the kernel, so
+    parquet scans prune to the two needed columns;
   * documents never span partitions — all tree work is partition-local,
     the only shuffle in the whole pipeline is the optional salted
     repartition (plans/pipeline.py);
@@ -20,17 +20,37 @@ Design for 100 TB:
   * selector compilation happens once on the driver and ships to
     executors inside the closure — the analog of the reference's
     precompiled-selector reuse (DOM.pod:2544-2551).
+
+One runner, :func:`map_documents`, owns everything around the
+per-document body of every HTML and PDF operator (``extract_pages``, the
+``css_*`` kernels, ``nodes_df``, ``extract_pdfs`` and the ``(url,
+html)`` kernels of ``queries.py``):
+
+  * **memo** — web corpora carry 30-50% byte-identical pages (mirrors,
+    re-crawls, session urls) and every body is a pure function of the
+    payload bytes, so each DISTINCT payload runs once per Arrow batch and
+    replicas reuse its result.  The memo dies with the batch (bounded
+    memory: at most one batch of results); on an all-distinct corpus it
+    costs one dict probe per row;
+  * **null payloads** — a per-document operator emits its empty row
+    (``err`` null), a per-match operator emits no rows;
+  * **containment** — ``max_bytes`` truncates an oversized payload
+    before the body runs (HTML5 parsing is total, so the prefix still
+    parses) and ``on_error="contain"`` turns a raising body into the
+    empty result instead of failing the task; the ``err`` column, where
+    an operator has one, says ``truncated: N > M bytes`` and/or
+    ``Type: message``.  Operators without an ``err`` column fail fast.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
-from ..dom import encoding as enc
-from ..dom import fastparse, innertext, serializer
+from ..dom import innertext, serializer
 from ..dom.constants import ELEMENT_NODE, TEXT_NODE
 from ..dom.document import Document
+from ..dom.fastparse import parse_document
 from ..selector import matcher
 
 # ---------------------------------------------------------------------------
@@ -53,18 +73,6 @@ BLOCK_CLASS_RE = re.compile(
 
 #: candidate containers for main content
 CANDIDATE_TAGS = frozenset("article main section div body td".split())
-
-
-def _is_blocked(doc: Document, nid: int) -> bool:
-    tag = doc.tag[nid]
-    if tag in BLOCK_TAGS:
-        return True
-    attrs = doc.attrs[nid]
-    if attrs:
-        blob = (attrs.get("class") or "") + " " + (attrs.get("id") or "")
-        if blob.strip() and BLOCK_CLASS_RE.search(blob):
-            return True
-    return False
 
 
 def _blocked_array(doc: Document) -> list[bool]:
@@ -196,27 +204,7 @@ def main_text(doc: Document) -> str:
 # Per-document kernel
 # ---------------------------------------------------------------------------
 
-#: Spark schema of the full extraction output (callers may project less)
-EXTRACT_SCHEMA = (
-    "url string, encoding string, title string, main_text string, "
-    "inner_text string, text_content string, n_nodes bigint, n_elements bigint, "
-    "spans array<struct<node_id: bigint, begin: bigint, length: bigint>>"
-)
-
-
-def parse_document(html, parser_encoding: str | None = None) -> Document:
-    """bytes|str → Document via the encoding-sniffing pipeline
-    (reference utils.c:620-649 semantics).
-
-    Uses the optimistic fast-lane builder (dom/fastparse.py) which
-    bails to the full insertion-mode machine on anything unusual —
-    spec-identical by the differential test suite."""
-    encoding, text = enc.sniff_and_decode(html, encoding=parser_encoding)
-    doc = fastparse.parse(text)
-    doc.encoding = encoding
-    return doc
-
-
+#: Spark type of every extraction field (callers may project less)
 _FIELD_TYPES = {
     "url": "string", "encoding": "string", "title": "string",
     "main_text": "string", "inner_text": "string", "text_content": "string",
@@ -228,6 +216,12 @@ _FIELD_TYPES = {
     "err": "string",
 }
 ALL_FIELDS = tuple(f for f in _FIELD_TYPES if f != "err")
+
+#: what a null or failed document extracts to
+_EMPTY_ROW = {
+    "encoding": "", "title": "", "main_text": "", "inner_text": "",
+    "text_content": "", "n_nodes": 0, "n_elements": 0, "spans": [],
+}
 
 
 def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
@@ -265,89 +259,105 @@ def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
     return out
 
 
-def extract_pages(df, span_selector: str | None = "a[href]",
-                  fields: tuple | list | None = None,
-                  max_html_bytes: int | None = None,
-                  on_error: str = "contain"):
-    """DataFrame(url, html [, ...]) → DataFrame of requested fields
-    (default: EXTRACT_SCHEMA).
+def map_documents(df, payload: str, body: Callable, columns: dict, *,
+                  empty_row: dict | None = None,
+                  max_bytes: int | None = None, on_error: str = "raise"):
+    """DataFrame(url, <payload>) → DataFrame(``columns``): ``body`` run
+    once per distinct non-null payload of each Arrow batch.
 
-    The selector is compiled ONCE here on the driver; the compiled plan
-    rides the task closure to every executor (reference precompiled
-    selectors, DOM.pod:2544-2551).
+    ``columns`` maps output name → Spark type in output order; it starts
+    with ``url`` and may hold ``err`` (per-document operators only).
+    The runner fills those two; ``body(payload)`` returns the rest:
 
-    Containment (the 10^12-document policy — one pathological page must
-    not fail a task, 4 retries, then the whole job):
+    * per-document operators pass ``empty_row`` (column → value, the row
+      a null or failed payload emits) and ``body`` returns one such
+      mapping;
+    * per-match operators pass no ``empty_row`` and ``body`` returns
+      ``(n, {column: list of n values})``; a null or failed payload
+      emits no rows.
 
-    * ``on_error="contain"`` (default) wraps the per-document kernel in
-      try/except; a raising parse emits an empty row instead of killing
-      the task.  ``on_error="raise"`` restores fail-fast for tests and
-      differential fuzzing.
-    * ``max_html_bytes`` truncates oversized documents before parsing
-      (HTML5 parsing is total, so a truncated prefix still parses) so
-      one 1 GiB page can't straggle a partition.
-    * Request the ``"err"`` field to surface what happened per row:
-      null = clean, ``truncated: ...`` and/or ``Type: message`` —
-      the lineage layer (plans/pipeline.py) aggregates it per bucket.
-    """
-    fields = tuple(f for f in (fields or ALL_FIELDS) if f != "url")
-    want_err = "err" in fields
-    kfields = tuple(f for f in fields if f != "err")
-    schema = "url string, " + ", ".join(
-        f"{f} {_FIELD_TYPES[f]}" for f in fields)
-    compiled = (
-        matcher.compile_selector(span_selector) if span_selector else None
-    )
+    Output is built column by column, so a memo hit costs one append
+    (one list extend per match column) per output column.  Memo, null,
+    truncation and containment policy: see the module docstring."""
+    names = list(columns)
+    sinks = [c for c in names if c not in ("url", "err")]
+    schema = ", ".join(f"{c} {t}" for c, t in columns.items())
+    empty = (empty_row if empty_row is not None else (0, {}), None)
 
-    empty_row = {
-        "encoding": "", "title": "", "main_text": "", "inner_text": "",
-        "text_content": "", "n_nodes": 0, "n_elements": 0, "spans": [],
-    }
+    def one(data):
+        err = None
+        if max_bytes is not None and len(data) > max_bytes:
+            err = f"truncated: {len(data)} > {max_bytes} bytes"
+            data = data[:max_bytes]
+        try:
+            return body(data), err
+        except Exception as exc:  # noqa: BLE001 — containment
+            if on_error == "raise":
+                raise
+            msg = f"{type(exc).__name__}: {exc}"
+            return empty[0], (f"{err}; {msg}" if err else msg)
 
     def run(batches: Iterable) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            out = {k: [] for k in ("url",) + fields}
-            # batch-local exact-duplicate collapse: web corpora carry
-            # 30-50% byte-identical pages (mirrors, re-crawls, session
-            # urls) and the kernel output is a pure function of the html
-            # bytes — so each DISTINCT document is parsed once per Arrow
-            # batch and replicas reuse the result.  The memo dies with
-            # the batch (bounded memory: <= one batch of rows), and on
-            # an all-distinct corpus it costs one dict probe per row.
+            out = {c: [] for c in names}
+            urls, errs = out["url"], out.get("err")
+            cols = [(out[c], c) for c in sinks]
             memo: dict = {}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                # real corpora carry null/empty html rows — emit an
-                # empty extraction instead of failing the task
-                if html is None:
-                    r, err = empty_row, None
+            for url, data in zip(pdf["url"], pdf[payload]):
+                if data is None:
+                    r, err = empty
                 else:
-                    hit = memo.get(html)
+                    hit = memo.get(data)
                     if hit is None:
-                        err = None
-                        h = html
-                        if (max_html_bytes is not None
-                                and len(h) > max_html_bytes):
-                            err = (f"truncated: {len(h)} > "
-                                   f"{max_html_bytes} bytes")
-                            h = h[:max_html_bytes]
-                        try:
-                            r = extract_one(h, compiled, kfields)
-                        except Exception as exc:  # noqa: BLE001 — containment
-                            if on_error == "raise":
-                                raise
-                            r = empty_row
-                            msg = f"{type(exc).__name__}: {exc}"
-                            err = f"{err}; {msg}" if err else msg
-                        memo[html] = (r, err)
-                    else:
-                        r, err = hit
-                out["url"].append(url)
-                for k in kfields:
-                    out[k].append(r[k])
-                if want_err:
-                    out["err"].append(err)
-            yield pd.DataFrame(out)
+                        hit = memo[data] = one(data)
+                    r, err = hit
+                if empty_row is not None:
+                    urls.append(url)
+                    for col, c in cols:
+                        col.append(r[c])
+                    if errs is not None:
+                        errs.append(err)
+                elif r[0]:
+                    n, d = r
+                    urls.extend([url] * n)
+                    for col, c in cols:
+                        col.extend(d[c])
+            yield pd.DataFrame(out, columns=names)
 
-    return df.select("url", "html").mapInPandas(run, schema=schema)
+    return df.select("url", payload).mapInPandas(run, schema=schema)
+
+
+def extract_pages(df, span_selector: str | None = "a[href]",
+                  fields: tuple | list | None = None,
+                  max_html_bytes: int | None = None,
+                  on_error: str = "contain"):
+    """DataFrame(url, html [, ...]) → DataFrame of requested fields
+    (default: ``url`` and ``ALL_FIELDS``).
+
+    The selector is compiled ONCE here on the driver; the compiled plan
+    rides the task closure to every executor (reference precompiled
+    selectors, DOM.pod:2544-2551).
+
+    Containment is on by default (the 10^12-document policy — one
+    pathological page must not fail a task, 4 retries, then the whole
+    job): ``max_html_bytes`` truncates oversized pages, a raising parse
+    emits an empty row, and the ``"err"`` field says what happened per
+    row (module docstring); the lineage layer (plans/pipeline.py)
+    aggregates it per bucket.  ``on_error="raise"`` restores fail-fast
+    for tests and differential fuzzing.
+    """
+    fields = tuple(f for f in (fields or ALL_FIELDS) if f != "url")
+    kfields = tuple(f for f in fields if f != "err")
+    compiled = (
+        matcher.compile_selector(span_selector) if span_selector else None
+    )
+
+    def body(html):
+        return extract_one(html, compiled, kfields)
+
+    return map_documents(
+        df, "html", body,
+        {"url": "string", **{f: _FIELD_TYPES[f] for f in fields}},
+        empty_row=_EMPTY_ROW, max_bytes=max_html_bytes, on_error=on_error)

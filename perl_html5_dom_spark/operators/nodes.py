@@ -20,10 +20,8 @@ with plain Catalyst-optimizable DataFrame ops.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from ..dom.constants import ELEMENT_NODE
-from .extract import parse_document
+from .extract import map_documents, parse_document
 
 NODES_SCHEMA = (
     "url string, node_id bigint, parent_id bigint, ord bigint, "
@@ -33,36 +31,15 @@ NODES_SCHEMA = (
     "raw_begin bigint, raw_length bigint, elem_begin bigint, elem_length bigint"
 )
 
-_COLS = [c.split(" ")[0] for c in NODES_SCHEMA.split(", ")]
+_TYPES = dict(p.split(" ", 1) for p in NODES_SCHEMA.split(", "))
 
-
-def doc_node_rows(url: str, html) -> list[tuple]:
-    """Row-tuple form of one document's node table (tests/debug)."""
-    doc = parse_document(html)
-    order = doc.order
-    pos = doc.order_pos
-    end = doc.subtree_end
-    depth = {doc.root: 0}
-    paths = [""] * len(doc.parent)
-    rows = []
-    for nid in order:
-        p = doc.parent[nid]
-        d = depth.get(p, -1) + 1
-        depth[nid] = d
-        if doc.node_type[nid] == ELEMENT_NODE:
-            paths[nid] = (paths[p] + ">" + doc.tag[nid]
-                          if p != -1 and paths[p] else doc.tag[nid])
-        rows.append((
-            url, nid, p if p != -1 else None, pos[nid], end[nid], d,
-            doc.tag[nid], doc.ns[nid], doc.node_type[nid],
-            paths[nid] if doc.node_type[nid] == ELEMENT_NODE else None,
-            doc.text[nid],
-            dict(doc.attrs[nid]) if doc.attrs[nid] is not None else None,
-            bool(doc.self_closed[nid]),
-            doc.raw_begin[nid], doc.raw_length[nid],
-            doc.elem_begin[nid], doc.elem_length[nid],
-        ))
-    return rows
+#: columns copied straight from a Document array (column → attribute)
+_ARRAY_COLUMNS = {
+    "ord": "order_pos", "subtree_end": "subtree_end", "tag": "tag",
+    "ns": "ns", "node_type": "node_type", "text": "text", "attrs": "attrs",
+    "raw_begin": "raw_begin", "raw_length": "raw_length",
+    "elem_begin": "elem_begin", "elem_length": "elem_length",
+}
 
 
 def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
@@ -73,19 +50,16 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
     queries that never read ``attrs``/``text`` skip building the
     expensive map/string Arrow columns entirely.
 
-    Construction is COLUMNAR: the kernel appends straight into per-column
-    lists (the Document already stores struct-of-arrays), so unrequested
-    columns cost nothing and pandas never pivots a row list."""
-    keep = (_COLS if columns is None
-            else [c for c in _COLS if c in set(columns) | {"url"}])
-    schema = (NODES_SCHEMA if columns is None else ", ".join(
-        p for p in NODES_SCHEMA.split(", ") if p.split(" ")[0] in set(keep)))
-    want = set(keep)
-
-    doc_cols = [c for c in keep if c != "url"]
+    Construction is COLUMNAR: the body builds one list per requested
+    column (the Document already stores struct-of-arrays) and the runner
+    extends the batch's columns with them, so unrequested columns cost
+    nothing and pandas never pivots a row list."""
+    keep = {c: t for c, t in _TYPES.items()
+            if columns is None or c == "url" or c in columns}
 
     def one_doc(html) -> tuple[int, dict[str, list]]:
-        """Per-document column lists (everything except url)."""
+        """Per-document column lists (everything except url); the
+        runner's memo replays them for byte-identical documents."""
         doc = parse_document(html)
         order = doc.order
         if elements_only:
@@ -94,18 +68,12 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
         else:
             nids = order
         d: dict[str, list] = {}
-        if "node_id" in want:
+        if "node_id" in keep:
             d["node_id"] = nids
-        if "parent_id" in want:
+        if "parent_id" in keep:
             par = doc.parent
             d["parent_id"] = [par[n] if par[n] != -1 else None for n in nids]
-        if "ord" in want:
-            pos = doc.order_pos
-            d["ord"] = [pos[n] for n in nids]
-        if "subtree_end" in want:
-            end = doc.subtree_end
-            d["subtree_end"] = [end[n] for n in nids]
-        if "depth" in want:
+        if "depth" in keep:
             # depth needs every ancestor; pre-order guarantees a
             # parent is filled before its children, so a flat
             # list (no dict hashing) suffices
@@ -115,16 +83,7 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
                 p = par[n]
                 depth[n] = depth[p] + 1 if p != -1 else 0
             d["depth"] = [depth[n] for n in nids]
-        if "tag" in want:
-            tag = doc.tag
-            d["tag"] = [tag[n] for n in nids]
-        if "ns" in want:
-            ns = doc.ns
-            d["ns"] = [ns[n] for n in nids]
-        if "node_type" in want:
-            nt = doc.node_type
-            d["node_type"] = [nt[n] for n in nids]
-        if "path" in want:
+        if "path" in keep:
             # root-to-node tag chain ('html>body>div'); like
             # depth, pre-order fills parents first.  The
             # site-template detector groups on this column.
@@ -140,53 +99,16 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
                             if p != -1 and paths[p] else tag[n])
             d["path"] = [paths[n] if nt2[n] == ELEMENT_NODE else None
                          for n in nids]
-        if "text" in want:
-            text = doc.text
-            d["text"] = [text[n] for n in nids]
-        if "attrs" in want:
-            attrs = doc.attrs
-            d["attrs"] = [attrs[n] for n in nids]
-        if "self_closed" in want:
+        if "self_closed" in keep:
             sc = doc.self_closed
             d["self_closed"] = [bool(sc[n]) for n in nids]
-        if "raw_begin" in want:
-            rb = doc.raw_begin
-            d["raw_begin"] = [rb[n] for n in nids]
-        if "raw_length" in want:
-            rl = doc.raw_length
-            d["raw_length"] = [rl[n] for n in nids]
-        if "elem_begin" in want:
-            eb = doc.elem_begin
-            d["elem_begin"] = [eb[n] for n in nids]
-        if "elem_length" in want:
-            el = doc.elem_length
-            d["elem_length"] = [el[n] for n in nids]
+        for c, attr in _ARRAY_COLUMNS.items():
+            if c in keep:
+                arr = getattr(doc, attr)
+                d[c] = [arr[n] for n in nids]
         return len(nids), d
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            data: dict[str, list] = {c: [] for c in keep}
-            # batch-local exact-duplicate collapse (see extract_pages):
-            # the node table of a document is a pure function of its
-            # html bytes, so each distinct document is parsed and
-            # column-built once per batch; replicas pay one C-level
-            # list extend per column
-            memo: dict = {}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    hit = one_doc(html)
-                    memo[html] = hit
-                n, d = hit
-                if "url" in want:
-                    data["url"].extend([url] * n)
-                for c in doc_cols:
-                    data[c].extend(d[c])
-            yield pd.DataFrame(data, columns=keep)
-
-    return df.select("url", "html").mapInPandas(run, schema=schema)
+    return map_documents(df, "html", one_doc, keep)
 
 
 def frequent_paths(pages, min_frac: float = 0.9):

@@ -1,46 +1,38 @@
 """Spark operator: PDF text + layout extraction over a binary column.
 
-Mirrors :mod:`.extract` for HTML: an Arrow ``mapInPandas`` kernel over
-``(url, pdf binary)`` running the from-scratch parser in
-:mod:`..dom.pdf`.  One document = one task unit (same data-parallelism
-rationale as HTML parse; reference guidance on intra-parse threading,
+Mirrors :mod:`.extract` for HTML: the from-scratch parser in
+:mod:`..dom.pdf` is the body of the shared document runner
+(``extract.map_documents``) over ``(url, pdf binary)``.  One document =
+one task unit (same data-parallelism rationale as HTML parse; reference
+guidance on intra-parse threading,
 /root/reference/lib/HTML5/DOM.pod:3228-3230), so throughput scales with
 executors and the 100 TB plan is a pruned binary-column scan feeding
 the kernel — no shuffle, no driver data movement.
 
-Malformed PDFs are a fact of crawl corpora: parse failures emit a row
-with ``n_pages = 0`` and the error class in ``err`` instead of failing
-the task (the lineage pipeline counts them per partition).
+Malformed PDFs are a fact of crawl corpora, so the runner contains
+errors: a failing document emits ``n_pages = 0``, empty text and
+``err`` = ``Type: message`` instead of failing the task; a null one
+emits the same empty row with a null ``err``; byte-identical PDFs of a
+batch are parsed once (runner policy: see :mod:`.extract`).  PDFs are
+never truncated — a prefix has no xref table.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from ..dom.pdf import extract_pdf_text
+from .extract import map_documents
 
-PDF_SCHEMA = "url string, n_pages int, text string, err string"
+PDF_COLUMNS = {
+    "url": "string", "n_pages": "int", "text": "string", "err": "string"}
 
 
 def extract_pdfs(df, pdf_col: str = "pdf"):
     """DataFrame(url, pdf) → DataFrame(url, n_pages, text, err)."""
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    def body(data):
+        n, text = extract_pdf_text(bytes(data))
+        return {"n_pages": n, "text": text}
 
-        for pdf in batches:
-            out = {"url": [], "n_pages": [], "text": [], "err": []}
-            for url, data in zip(pdf["url"], pdf[pdf_col]):
-                n, text, err = 0, "", None
-                if data is not None:
-                    try:
-                        n, text = extract_pdf_text(bytes(data))
-                    except Exception as exc:  # noqa: BLE001 — crawl-grade
-                        err = type(exc).__name__
-                out["url"].append(url)
-                out["n_pages"].append(n)
-                out["text"].append(text)
-                out["err"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select("url", pdf_col).mapInPandas(run, schema=PDF_SCHEMA)
+    return map_documents(df, pdf_col, body, PDF_COLUMNS,
+                         empty_row={"n_pages": 0, "text": ""},
+                         on_error="contain")

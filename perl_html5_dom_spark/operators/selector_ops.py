@@ -10,9 +10,10 @@ the CSS engine, /root/reference/DOM.xs:286-359):
    whole plan: predicate pushdown, whole-stage codegen, no Python in the
    match loop.
 2. **Kernel** — anything structural (combinators, :nth-*, :not/:has,
-   comma lists) is evaluated by the full matcher inside a mapInPandas
-   pass over ``(url, html)``, compiled once on the driver and shipped in
-   the closure (reference precompiled selectors, DOM.pod:2544-2551).
+   comma lists) is evaluated by the full matcher as the body of the
+   shared document runner (``extract.map_documents``) over ``(url,
+   html)``, compiled once on the driver and shipped in the closure
+   (reference precompiled selectors, DOM.pod:2544-2551).
 
 Both return the same shape: ``(url, node_id, ord, tag, begin, length)``
 — matched node handles + open-tag source spans, document order via
@@ -21,17 +22,17 @@ Both return the same shape: ``(url, node_id, ord, tag, begin, length)``
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from pyspark.sql import functions as F
 
+from ..dom import innertext, serializer
 from ..selector import matcher
 from ..selector.parser import parse_selector
+from .extract import map_documents, parse_document
 
-MATCHES_SCHEMA = (
-    "url string, node_id bigint, ord bigint, tag string, "
-    "begin bigint, length bigint"
-)
+MATCH_COLUMNS = {
+    "url": "string", "node_id": "bigint", "ord": "bigint", "tag": "string",
+    "begin": "bigint", "length": "bigint",
+}
 
 
 # ---------------------------------------------------------------------------
@@ -123,138 +124,76 @@ def css_find(df, selector: str, first: bool = False):
     kernel (reference utils.c:248-254)."""
     compiled = matcher.compile_selector(selector)
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    def body(html):
+        doc = parse_document(html)
+        nids = matcher.find(doc, compiled, first=first)
+        pos, tag = doc.order_pos, doc.tag
+        begin, length = doc.elem_begin, doc.elem_length
+        return len(nids), {
+            "node_id": nids, "ord": [pos[n] for n in nids],
+            "tag": [tag[n] for n in nids],
+            "begin": [begin[n] for n in nids],
+            "length": [length[n] for n in nids]}
 
-        from .extract import parse_document
-
-        cols = ["url", "node_id", "ord", "tag", "begin", "length"]
-        for pdf in batches:
-            rows = []
-            # batch-local exact-duplicate collapse (see extract_pages):
-            # matches are a pure function of the html bytes, so each
-            # distinct document is parsed+matched once per batch
-            memo: dict = {}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    doc = parse_document(html)
-                    pos = doc.order_pos
-                    hit = [
-                        (nid, pos[nid], doc.tag[nid],
-                         doc.elem_begin[nid], doc.elem_length[nid])
-                        for nid in matcher.find(doc, compiled, first=first)]
-                    memo[html] = hit
-                rows.extend((url,) + t for t in hit)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("url", "html").mapInPandas(run, schema=MATCHES_SCHEMA)
+    return map_documents(df, "html", body, MATCH_COLUMNS)
 
 
 def css_at(df, selector: str):
     return css_find(df, selector, first=True)
 
 
-def css_extract(df, selector: str, what: str = "text"):
-    """Per-match scalar extraction: text | html | inner_html | inner_text
-    | attr:<name> (None when the attribute is absent).
+#: per-match sinks of css_extract_multi: (doc, node) → string
+_SINKS = {
+    "text": serializer.text_content,
+    "html": serializer.serialize,
+    "inner_html": lambda doc, n: serializer.serialize(doc, n, inner=True),
+    "inner_text": innertext.inner_text,
+}
 
-    The Collection sinks of the reference (Collection.pm:117-131) —
-    returns (url, node_id, ord, value)."""
-    compiled = matcher.compile_selector(selector)
-    attr_name = what[5:] if what.startswith("attr:") else None
-    if attr_name is None and what not in (
-            "text", "html", "inner_html", "inner_text"):
-        raise ValueError(what)
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+def _attr_sink(name: str):
+    def sink(doc, n):
+        a = doc.attrs[n]
+        return a.get(name) if a else None
 
-        from ..dom import innertext, serializer
-        from .extract import parse_document
-
-        cols = ["url", "node_id", "ord", "value"]
-        for pdf in batches:
-            rows = []
-            memo: dict = {}   # batch-local exact-dup collapse (see css_find)
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    doc = parse_document(html)
-                    pos = doc.order_pos
-                    hit = []
-                    for nid in matcher.find(doc, compiled):
-                        if attr_name is not None:
-                            a = doc.attrs[nid]
-                            v = a.get(attr_name) if a else None
-                        elif what == "text":
-                            v = serializer.text_content(doc, nid)
-                        elif what == "html":
-                            v = serializer.serialize(doc, nid)
-                        elif what == "inner_html":
-                            v = serializer.serialize(doc, nid, inner=True)
-                        else:
-                            v = innertext.inner_text(doc, nid)
-                        hit.append((nid, pos[nid], v))
-                    memo[html] = hit
-                rows.extend((url,) + t for t in hit)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("url", "html").mapInPandas(
-        run, schema="url string, node_id bigint, ord bigint, value string")
+    return sink
 
 
 def css_extract_multi(df, selector: str, whats: tuple = ("text",)):
-    """Like :func:`css_extract` but pulls SEVERAL sinks per match in
-    ONE parse — at crawl scale the parse dominates, so chaining
-    css_extract calls (one parse per sink) doubles/triples the kernel
-    cost that this fuses away.  Returns (url, node_id, ord, <one
-    column per sink>); ``attr:name`` sinks become ``attr_name``
-    columns (None when absent)."""
+    """Per-match extraction of SEVERAL sinks in ONE parse — at crawl
+    scale the parse dominates, so one parse per sink would double/triple
+    the kernel cost.  Sinks: text | html | inner_html | inner_text |
+    attr:<name> (None when the attribute is absent), the Collection
+    sinks of the reference (Collection.pm:117-131).  Returns (url,
+    node_id, ord, <one column per sink>); ``attr:name`` sinks become
+    ``attr_name`` columns."""
     compiled = matcher.compile_selector(selector)
+    sinks = []
     for w in whats:
-        if not w.startswith("attr:") and w not in (
-                "text", "html", "inner_html", "inner_text"):
+        if w.startswith("attr:"):
+            sinks.append(("attr_" + w[5:].replace(":", "_"),
+                          _attr_sink(w[5:])))
+        elif w in _SINKS:
+            sinks.append((w, _SINKS[w]))
+        else:
             raise ValueError(w)
-    colnames = [w.replace("attr:", "attr_").replace(":", "_")
-                for w in whats]
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    def body(html):
+        doc = parse_document(html)
+        nids = matcher.find(doc, compiled)
+        pos = doc.order_pos
+        cols = {"node_id": nids, "ord": [pos[n] for n in nids]}
+        for name, sink in sinks:
+            cols[name] = [sink(doc, n) for n in nids]
+        return len(nids), cols
 
-        from ..dom import innertext, serializer
-        from .extract import parse_document
+    return map_documents(df, "html", body, {
+        "url": "string", "node_id": "bigint", "ord": "bigint",
+        **{name: "string" for name, _ in sinks}})
 
-        cols = ["url", "node_id", "ord"] + colnames
-        for pdf in batches:
-            rows = []
-            memo: dict = {}   # batch-local exact-dup collapse (see css_find)
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    doc = parse_document(html)
-                    pos = doc.order_pos
-                    hit = []
-                    for nid in matcher.find(doc, compiled):
-                        vals = []
-                        for what in whats:
-                            if what.startswith("attr:"):
-                                a = doc.attrs[nid]
-                                vals.append(a.get(what[5:]) if a else None)
-                            elif what == "text":
-                                vals.append(serializer.text_content(doc, nid))
-                            elif what == "html":
-                                vals.append(serializer.serialize(doc, nid))
-                            elif what == "inner_html":
-                                vals.append(serializer.serialize(
-                                    doc, nid, inner=True))
-                            else:
-                                vals.append(innertext.inner_text(doc, nid))
-                        hit.append((nid, pos[nid], *vals))
-                    memo[html] = hit
-                rows.extend((url,) + t for t in hit)
-            yield pd.DataFrame(rows, columns=cols)
 
-    schema = ("url string, node_id bigint, ord bigint, "
-              + ", ".join(f"{c} string" for c in colnames))
-    return df.select("url", "html").mapInPandas(run, schema=schema)
+def css_extract(df, selector: str, what: str = "text"):
+    """:func:`css_extract_multi` with one sink, named ``value``:
+    (url, node_id, ord, value)."""
+    return css_extract_multi(df, selector, (what,)).toDF(
+        "url", "node_id", "ord", "value")

@@ -316,47 +316,33 @@ def q_first_link_begin(spark, sf_dir):
 
 
 def q_detect_encoding(spark, sf_dir):
-    return pg.encoded_pages_df(spark, sf_dir).select("url", "html").mapInPandas(
-        _detect_encoding_kernel, schema="url string, encoding string")
-
-
-def _detect_encoding_kernel(batches):
-    import pandas as pd
-
     from .dom import encoding as enc
 
-    for pdf in batches:
-        out = {"url": [], "encoding": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            out["url"].append(url)
-            out["encoding"].append(enc.sniff_and_decode(bytes(html))[0])
-        yield pd.DataFrame(out)
+    def body(html):
+        return {"encoding": enc.sniff_and_decode(html)[0]}
+
+    return ex.map_documents(
+        pg.encoded_pages_df(spark, sf_dir), "html", body,
+        {"url": "string", "encoding": "string"}, empty_row={"encoding": None})
 
 
 def q_binary_meta(spark, sf_dir):
     """Multimodal plumbing: opaque binary column → typed metadata via
     Arrow-batched kernel (magic sniff + size)."""
-    return pg.encoded_pages_df(spark, sf_dir).select("url", "html").mapInPandas(
-        _binary_meta_kernel, schema="url string, n_bytes bigint, kind string")
 
+    def body(b):
+        if b[:2] in (b"\xff\xfe", b"\xfe\xff"):
+            kind = "utf16-bom"
+        elif b[:9] == b"<!DOCTYPE":
+            kind = "html"
+        else:
+            kind = "unknown"
+        return {"n_bytes": len(b), "kind": kind}
 
-def _binary_meta_kernel(batches):
-    import pandas as pd
-
-    for pdf in batches:
-        out = {"url": [], "n_bytes": [], "kind": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            b = bytes(html)
-            if b[:2] in (b"\xff\xfe", b"\xfe\xff"):
-                kind = "utf16-bom"
-            elif b[:9] == b"<!DOCTYPE":
-                kind = "html"
-            else:
-                kind = "unknown"
-            out["url"].append(url)
-            out["n_bytes"].append(len(b))
-            out["kind"].append(kind)
-        yield pd.DataFrame(out)
+    return ex.map_documents(
+        pg.encoded_pages_df(spark, sf_dir), "html", body,
+        {"url": "string", "n_bytes": "bigint", "kind": "string"},
+        empty_row={"n_bytes": None, "kind": None})
 
 
 def q_multimodal_meta(spark, sf_dir):
@@ -599,23 +585,20 @@ def _hostile_pages(spark, sf_dir):
 def q_hostile_serialize(spark, sf_dir):
     """serialize(parse(hostile_html)) vs the hand-derived spec tree —
     pins adoption-agency + fostering + tbody + foreign-content shape."""
-    return _hostile_pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(_hostile_pages(spark, sf_dir))
 
 
-def _serialize_kernel(batches):
-    import pandas as pd
-
+def _serialized(pages):
+    """(url, html_out = serialize(parse(html)))."""
     from .dom.serializer import serialize
-    from .operators.extract import parse_document
 
-    for pdf in batches:
-        out = {"url": [], "html_out": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            doc = parse_document(bytes(html))
-            out["url"].append(url)
-            out["html_out"].append(serialize(doc, doc.root))
-        yield pd.DataFrame(out)
+    def body(html):
+        doc = ex.parse_document(html)
+        return {"html_out": serialize(doc, doc.root)}
+
+    return ex.map_documents(pages, "html", body,
+                            {"url": "string", "html_out": "string"},
+                            empty_row={"html_out": None})
 
 
 def q_hostile_inner_text(spark, sf_dir):
@@ -641,8 +624,7 @@ def q_hostile2_serialize(spark, sf_dir):
     """serialize(parse(hostile2_html)) vs the hand-derived spec tree —
     pins template content, caption/colgroup, select-in-table fostering,
     attribute character-reference rules, MathML/SVG integration points."""
-    return _hostile2_pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(_hostile2_pages(spark, sf_dir))
 
 
 def q_hostile2_inner_text(spark, sf_dir):
@@ -668,8 +650,7 @@ def q_messy_serialize(spark, sf_dir):
     """The realistic frameless page (implied frames, form/select/
     marquee/template/pre/textarea/button) round-tripped against the
     hand-derived spec serialization."""
-    return _messy_pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(_messy_pages(spark, sf_dir))
 
 
 def q_messy_inner_text(spark, sf_dir):
@@ -698,8 +679,7 @@ def q_entity_text(spark, sf_dir):
 def q_entity_serialize(spark, sf_dir):
     """Entity re-escaping on serialization: text & < > re-escape (quotes
     don't), attrs re-escape & and double quote."""
-    return pg.entity_pages_df(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(pg.entity_pages_df(spark, sf_dir))
 
 
 def q_compat_mode(spark, sf_dir):
@@ -708,22 +688,15 @@ def q_compat_mode(spark, sf_dir):
     docs = pg.read_docs(spark, sf_dir)
     df = ut.sql_over(
         lambda v: pg.doctype_variant_select_sql(pg.SPARK, v), docs)
-    return df.selectExpr("url", "encode(html_str, 'utf-8') as html").mapInPandas(
-        _compat_kernel, schema="url string, compat string")
 
+    def body(html):
+        doc = ex.parse_document(html)
+        return {"compat": "BackCompat" if doc.quirks else "CSS1Compat"}
 
-def _compat_kernel(batches):
-    import pandas as pd
-
-    from .operators.extract import parse_document
-
-    for pdf in batches:
-        out = {"url": [], "compat": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            doc = parse_document(bytes(html))
-            out["url"].append(url)
-            out["compat"].append("BackCompat" if doc.quirks else "CSS1Compat")
-        yield pd.DataFrame(out)
+    return ex.map_documents(
+        df.selectExpr("url", "encode(html_str, 'utf-8') as html"), "html",
+        body, {"url": "string", "compat": "string"},
+        empty_row={"compat": None})
 
 
 # ---------------------------------------------------------------------------

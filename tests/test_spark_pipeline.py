@@ -250,6 +250,107 @@ def test_sql_function_registration(spark, pages):
         assert r.n_links >= 2
 
 
+def test_sql_functions_null_html(spark):
+    """A NULL html gives SQL NULL from every css_* function; the other
+    rows of the batch are unaffected."""
+    from perl_html5_dom_spark.functions.register import register_all
+
+    register_all(spark)
+    spark.createDataFrame(
+        [("null", None),
+         ("page", b'<title>T</title><p><a href="/x">l</a></p>')],
+        "url string, html binary").coalesce(1).createOrReplaceTempView(
+            "null_html_v")
+    rows = {r.url: r.asDict() for r in spark.sql("""
+        select url,
+               css_text(html, 'title') as text,
+               css_count(html, 'a') as n,
+               css_html(html, 'a') as html,
+               css_inner_text(html) as inner_text,
+               css_main_text(html) as main_text,
+               css_attr(html, 'a', 'href') as href
+        from null_html_v
+    """).collect()}
+    assert rows["null"] == {"url": "null", "text": None, "n": None,
+                            "html": None, "inner_text": None,
+                            "main_text": None, "href": None}
+    assert rows["page"] == {"url": "page", "text": "T", "n": 1,
+                            "html": '<a href="/x">l</a>',
+                            "inner_text": "l\n\n", "main_text": "l",
+                            "href": "/x"}
+
+
+_RUNNER_HTML = [
+    b'<title>One</title><div id="m"><p>alpha <a href="/a">x</a></p>'
+    b"<ul><li>1<li>2</ul></div>",
+    b'<!DOCTYPE html><body><p class="c">beta <b>bold</b></p>'
+    b'<a href="/b" title="t">y</a></body>',
+]
+
+
+def _runner_case(name):
+    """(operator over DataFrame(url, <payload>), payload column, distinct
+    payloads, the row a null payload emits — None for per-match
+    operators, which emit no rows)."""
+    from perl_html5_dom_spark import queries
+    from perl_html5_dom_spark.operators import selector_ops as so
+    from perl_html5_dom_spark.operators.extract import (
+        ALL_FIELDS, extract_pages)
+    from perl_html5_dom_spark.operators.nodes import nodes_df
+    from perl_html5_dom_spark.operators.pdfextract import extract_pdfs
+    from perl_html5_dom_spark.sources.pdfs import pdf_bytes
+
+    html = "html", _RUNNER_HTML
+    return {
+        "extract_pages": (
+            lambda d: extract_pages(d, fields=ALL_FIELDS + ("err",)), *html,
+            {"encoding": "", "title": "", "main_text": "", "inner_text": "",
+             "text_content": "", "n_nodes": 0, "n_elements": 0, "spans": [],
+             "err": None}),
+        "css_find": (lambda d: so.css_find(d, "div a, p"), *html, None),
+        "css_at": (lambda d: so.css_at(d, "p"), *html, None),
+        "css_extract": (
+            lambda d: so.css_extract(d, "a", "attr:href"), *html, None),
+        "css_extract_multi": (
+            lambda d: so.css_extract_multi(
+                d, "p, a", ("text", "html", "inner_html", "inner_text",
+                            "attr:title")), *html, None),
+        "nodes_df": (nodes_df, *html, None),
+        "extract_pdfs": (
+            extract_pdfs, "pdf", [pdf_bytes(1, "one"), pdf_bytes(2, "two")],
+            {"n_pages": 0, "text": "", "err": None}),
+        "serialize": (lambda d: queries._serialized(d), *html,
+                      {"html_out": None}),
+    }[name]
+
+
+@pytest.mark.parametrize("name", [
+    "extract_pages", "css_find", "css_at", "css_extract",
+    "css_extract_multi", "nodes_df", "extract_pdfs", "serialize"])
+def test_runner_null_and_duplicate_rows(spark, name):
+    """Every operator on the shared document runner: a duplicated row
+    gets its original's result (through the batch memo — one partition,
+    one Arrow batch) and a null payload gets the empty result instead of
+    failing the task."""
+    op, payload, docs, empty = _runner_case(name)
+    schema = f"url string, {payload} binary"
+    base = [(f"u{i}", d) for i, d in enumerate(docs)]
+    want = [r.asDict() for r in op(spark.createDataFrame(base, schema))
+            .collect()]
+    assert want
+    want += [{**r, "url": "dup"} for r in want if r["url"] == "u0"]
+    if empty is not None:
+        want.append({"url": "null", **empty})
+    noisy = spark.createDataFrame(
+        base + [("dup", docs[0]), ("null", None)], schema).coalesce(1)
+    got = [r.asDict() for r in op(noisy).collect()]
+
+    def key(r):
+        return r["url"], r.get("node_id", -1)
+
+    assert sorted(got, key=key) == sorted(want, key=key)
+
+
 def test_nodes_column_pruning(spark, pages):
     from perl_html5_dom_spark.operators.nodes import nodes_df
 
