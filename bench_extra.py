@@ -127,11 +127,8 @@ def main() -> None:
             noop(sh)
         bench("minhash_shingles_hashed_noop", _sh)
 
-        def _sig():
-            sh = dedup._shingles(corpus, 3).selectExpr(
-                "doc_id", f"{dedup.H('shingle')} as hs")
-            noop(dedup._band_keys(dedup._minhash_wide(sh, 16), 16, 4))
-        bench("minhash_sig_bands_noop", _sig)
+        bench("minhash_sig_bands_noop", lambda: noop(dedup._band_keys(
+            dedup._doc_minhash_sets(corpus, 16, 3), 16, 4)))
 
         bench("minhash_near_dups", lambda: dedup.minhash_near_dups(
             corpus, 0.5).count())

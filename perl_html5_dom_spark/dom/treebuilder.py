@@ -48,10 +48,6 @@ MARKER = ("MARKER",)
 _CLOSE_P_BLOCKS = BLOCK_START  # same list for the end-tag variant
 
 
-def _is_ws(text: str) -> bool:
-    return not text.strip(_WS)
-
-
 class TreeBuilder:
     def __init__(self, scripts: bool = True, ignore_whitespace: bool = False,
                  ignore_doctype: bool = False) -> None:

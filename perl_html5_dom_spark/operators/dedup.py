@@ -1,9 +1,11 @@
 """Deduplication operators for web-scale training-data pipelines.
 
-Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard —
-all as declarative DataFrame plans (shuffle only on their group keys, no
-Python in the hot path).  Every hash is derived from ``md5`` so DuckDB
-oracles can reproduce results bit-for-bit:
+Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard.
+The per-document signatures (MinHash, SimHash) run as zero-shuffle
+Arrow ``mapInPandas`` kernels; everything keyed across documents
+(grouping, bucket self-joins, verification) is a declarative plan that
+shuffles only on its join/group keys.  Every hash is derived from
+``md5`` so DuckDB oracles can reproduce results bit-for-bit:
 
     H(s)  = first 60 bits of md5(s) as bigint        (cross-engine)
     Spark:  cast(conv(substr(md5(s),1,15),16,10) as bigint)
@@ -11,14 +13,17 @@ oracles can reproduce results bit-for-bit:
 
 Scale notes (100 TB):
   * exact dedup — one shuffle on the 128-bit digest; AQE handles skew.
-  * MinHash — shingle explode is map-side; signature = groupBy(doc, perm)
-    min() with partial aggregation; LSH banding turns the O(n²) pair
-    search into an equi-join on (band, key).  Common-shingle blowup is
-    bounded by ``max_df`` (drop shingles appearing in more docs — the
-    standard stop-shingle cut).
-  * SimHash — 32-bit fingerprint via one explode + two partial-agg
-    groupBys; near-dup search joins on 8-bit chunks (pigeonhole: any pair
-    with hamming ≤ 3 shares one of 4 chunks).
+  * MinHash — one kernel (``_doc_minhash_sets``) computes each doc's
+    signature with no exchange; ``_band_keys`` projects it to LSH band
+    buckets, and the O(n²) pair search becomes an equi-join on
+    (band, key).  Batch, LSH-only and streaming near-dup all bucket
+    documents through these two functions.
+  * Shingle Jaccard — common-shingle blowup is bounded by ``max_df``
+    (drop shingles appearing in more docs — the standard stop-shingle
+    cut).
+  * SimHash — 32-bit fingerprint per doc from one kernel; near-dup
+    search joins on multi-index group keys (pigeonhole: any pair within
+    ``max_hamming`` agrees on some group up to one bit).
 """
 
 from __future__ import annotations
@@ -86,42 +91,9 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _minhash_wide(sh: DataFrame, num_perm: int = 16) -> DataFrame:
-    """(doc_id, mh0..mh{n-1}): all minhash rows in ONE partial-agg groupBy.
-
-    ``sh`` is the (doc_id, shingle) table.  md5 is computed once per
-    shingle in the projection below the aggregate; the ``num_perm`` mins
-    ride the same map-side combine — the shuffle carries one narrow row
-    per doc, not num_perm fan-out rows (the SimHash conditional-sum
-    pattern; replaces the round-1 broadcast-join fan-out that cost 54%
-    of the bench suite).
-
-    Accepts either (doc_id, shingle) strings or an already-hashed
-    (doc_id, hs) table — minhash_near_dups hashes once up front so the
-    verify join rides the same materialization."""
-    if "hs" in sh.columns:
-        hashed = sh.selectExpr("doc_id", f"hs % {P} as hs")
-    else:
-        hashed = sh.selectExpr("doc_id", f"{H('shingle')} % {P} as hs")
-    aggs = []
-    for j in range(num_perm):
-        a, b = perm_params(j)
-        aggs.append(F.min(F.expr(f"({a} * hs + {b}) % {P}")).alias(f"mh{j}"))
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures(docs: DataFrame, num_perm: int = 16, k: int = 3) -> DataFrame:
-    """(doc_id, j, mh): minhash row j of each doc's shingle set."""
-    wide = _minhash_wide(_shingles(docs, k), num_perm)
-    pairs = ", ".join(f"'{j}', mh{j}" for j in range(num_perm))
-    return wide.selectExpr(
-        "doc_id", f"stack({num_perm}, {pairs}) as (j, mh)"
-    ).selectExpr("doc_id", "cast(j as int) as j", "mh")
-
-
 def _band_keys(wide: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(doc_id, band, bk1, bk2) from the wide signature — a pure
-    projection + explode(bands), no aggregation.  Band keys are
+    """(doc_id, band, bk1, bk2) from a ``_doc_minhash_sets`` signature
+    (mh0..mh{n-1}) — a pure projection + explode(bands), no aggregation.  Band keys are
     order-insensitive weighted sums matching the DuckDB oracle
     (sum(mh*(j+1)), sum(mh) over the band's global j range)."""
     rows = num_perm // bands
@@ -142,8 +114,13 @@ def _band_keys(wide: DataFrame, num_perm: int, bands: int) -> DataFrame:
 def lsh_candidate_pairs(docs: DataFrame, num_perm: int = 16, bands: int = 4,
                         k: int = 3) -> DataFrame:
     """(a, b) doc pairs sharing at least one LSH band bucket (a < b)."""
-    buckets = _materialize(  # self-joined below
-        _band_keys(_minhash_wide(_shingles(docs, k), num_perm), num_perm, bands))
+    return _bucket_pairs(_materialize(  # the kernel runs once
+        _band_keys(_doc_minhash_sets(docs, num_perm, k), num_perm, bands)))
+
+
+def _bucket_pairs(buckets: DataFrame) -> DataFrame:
+    """(a, b) with a < b for every two docs sharing a (band, bk1, bk2)
+    bucket — the LSH candidate self-join."""
     l, r = buckets.alias("l"), buckets.alias("r")
     return (
         l.join(r, ["band", "bk1", "bk2"])
@@ -209,8 +186,11 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
     set, so nothing needs an exchange (the declarative form paid the
     shingle explode plus two aggregate exchanges for the same rows).
 
-    Bit-exact twin of ``_minhash_wide(_shingles(docs,k) hashed)`` +
-    ``collect_set(hs)``: same distinct shingle STRINGS (whole text
+    The only production MinHash signature: batch near-dup, LSH-only
+    candidates and the streaming near-dup operator all call it.
+    Bit-exact with the declarative shingle-explode + 16-min aggregate +
+    ``collect_set(hs)`` form (kept as the SQL twin in the tests) and
+    the DuckDB oracle: same distinct shingle STRINGS (whole text
     when < k tokens), same H() (first 15 md5 hex digits as int), same
     (a·(h%P)+b)%P permutation mins — all integer arithmetic.  Null
     text mirrors the SQL twin: its only hs is null, so mins are null
@@ -335,28 +315,14 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
             .select("doc_id", "rep"))
         docs = docs.join(
             classes.where("doc_id = rep").select("doc_id"), "doc_id")
-    # Round-6: signatures AND verify hash-sets are PER-DOCUMENT
-    # functions of the shingle set, so one zero-shuffle Arrow kernel
-    # computes both — replacing the shingle explode (4M rows at sf1),
-    # the 16-min wide-aggregate exchange and the collect_set exchange
-    # with a single map pass (bit-exact: same H(), same % P perms, all
-    # integer; pinned by test_minhash_wide_sets_match_sql).  The small
-    # (doc_id, mh*, hset) table is parquet-CHECKPOINTED — it feeds the
-    # bucket self-join and both verify sides, and the A/B at sf1 reads
-    # persist 3.17s / parquet 2.68s / none 3.49s (util.checkpoint_parquet
-    # rationale: repeated InMemoryRelation scans lose to vectorized
-    # parquet reads, and the array column makes the rows wide-ish).
+    # the kernel's (doc_id, mh*, hset) table feeds the bucket self-join
+    # and both verify sides, so it is parquet-CHECKPOINTED: the A/B at
+    # sf1 reads persist 3.17s / parquet 2.68s / none 3.49s (repeated
+    # InMemoryRelation scans lose to vectorized parquet reads).
     from ..util import checkpoint_parquet
     wide = checkpoint_parquet(_doc_minhash_sets(docs, num_perm, k),
                               "minhash_wide")
-    buckets = _band_keys(wide, num_perm, bands)
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(r, ["band", "bk1", "bk2"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(_band_keys(wide, num_perm, bands))
     # verify rides per-doc hash ARRAYS, not an exploded equi-join: the
     # old (cand x shingles) join shuffled one row per (pair, shingle) —
     # ~200x the candidate count — and its giant sort + hash-agg was
@@ -711,7 +677,7 @@ def dedup_keep(docs: DataFrame, pairs: DataFrame,
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
-                      bits: int = 32, chunks: int = 4) -> DataFrame:
+                      bits: int = 32) -> DataFrame:
     """(a, b, hamming ≤ max_hamming): SimHash near-dup pairs.
 
     Round-6 shape — two exact reductions on top of the plain
@@ -735,9 +701,8 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
        requiring (width-1)-of-width bit agreement — far more selective
        than 8-bit chunk equality (sf1: 68M candidate rows vs 618M).
 
-    The ``chunks`` parameter of the legacy chunk join is kept for API
-    compatibility; exactness now rests on the group count derived from
-    ``max_hamming`` alone.  The bit_count filter runs map-side before
+    Exactness rests on the group count derived from ``max_hamming``
+    alone.  The bit_count filter runs map-side before
     the value-pair distinct (filter∘distinct = distinct∘filter), so
     the only wide exchanges carry value pairs and the output itself."""
     sh = _materialize(simhash(docs, bits))   # (doc_id, simhash): reused

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .dedup import _materialize
+
 COS = (
     "round(aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
     "cast(0.0 as double), (acc, v) -> acc + v) / "
@@ -154,7 +156,7 @@ def cosine_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
     nested-loop join and no all-pairs shuffle."""
     cand = None
     for t in range(tables):
-        b = _materialize_small(lsh_buckets(emb, bits, t))
+        b = _materialize(lsh_buckets(emb, bits, t))
         l = b.selectExpr("vec_id as a", "bucket")
         r = b.selectExpr("vec_id as b", "bucket")
         c = l.join(r, "bucket").filter(F.col("a") < F.col("b")).select("a", "b")
@@ -175,13 +177,6 @@ def cosine_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
 cosine_near_dups = cosine_near_dups_lsh
 
 
-def _materialize_small(df: DataFrame) -> DataFrame:
-    """persist + count a self-joined DataFrame (see dedup._materialize)."""
-    df = df.persist()
-    df.count()
-    return df
-
-
 def ann_topk_lsh(emb: DataFrame, query_ids: list[int], k: int = 5,
                  bits: int = 8, tables: int = 2) -> DataFrame:
     """Approximate top-k: union candidates from ``tables`` LSH tables,
@@ -190,7 +185,7 @@ def ann_topk_lsh(emb: DataFrame, query_ids: list[int], k: int = 5,
     oracle (queries.ann_topk_lsh_oracle_sql) checks this row-for-row."""
     cand = None
     for t in range(tables):
-        b = _materialize_small(lsh_buckets(emb, bits, t))  # both join sides
+        b = _materialize(lsh_buckets(emb, bits, t))  # both join sides
         q = b.filter(F.col("vec_id").isin(query_ids)).selectExpr(
             "vec_id as query_id", "bucket")
         c = (

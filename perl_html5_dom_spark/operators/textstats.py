@@ -329,42 +329,6 @@ GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 GOPHER_DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
-def _rep_fold(n: int) -> str:
-    """SQL expression: struct(bc, bl, dup) for word n-grams of ``t``.
-
-    Sorted-run scan, all inside whole-stage codegen: sort the n-gram
-    array once, then a single ``aggregate`` fold walks the runs and
-    keeps (bc, bl) = (count, charlen) of the most frequent n-gram
-    (ties broken by charlen, so the output fraction is deterministic)
-    and ``dup`` = occurrence-weighted char mass of n-grams appearing
-    more than once.  O(w log w) per document, no shuffle, no Python.
-    """
-    grams = (f"case when size(t) >= {n} then "
-             f"transform(sequence(1, size(t) - {n - 1}), "
-             f"i -> concat_ws(' ', slice(t, i, {n}))) "
-             "else array() end")
-    z = "cast(0 as bigint)"
-    one = "cast(1 as bigint)"
-    close_better = ("(s.prev is not null and (s.run > s.bc or "
-                    "(s.run = s.bc and length(s.prev) > s.bl)))")
-    close_bc = f"if({close_better}, s.run, s.bc)"
-    close_bl = f"if({close_better}, cast(length(s.prev) as bigint), s.bl)"
-    close_dup = (f"s.dup + if(s.prev is not null and s.run >= 2, "
-                 f"s.run * cast(length(s.prev) as bigint), {z})")
-    return (
-        f"aggregate(array_sort({grams}), "
-        f"named_struct('prev', cast(null as string), 'run', {z}, "
-        f"'bc', {z}, 'bl', {z}, 'dup', {z}), "
-        "(s, x) -> if(s.prev is not null and x = s.prev, "
-        f"named_struct('prev', x, 'run', s.run + {one}, "
-        "'bc', s.bc, 'bl', s.bl, 'dup', s.dup), "
-        f"named_struct('prev', x, 'run', {one}, "
-        f"'bc', {close_bc}, 'bl', {close_bl}, 'dup', {close_dup})), "
-        f"s -> named_struct('bc', {close_bc}, 'bl', {close_bl}, "
-        f"'dup', {close_dup}))"
-    )
-
-
 def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The Gopher within-document n-gram repetition rules (Rae et al.
     2021 appendix A1.1) that ``gopher_quality`` (line-level rules)
@@ -383,10 +347,10 @@ def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     At 100 TB this is a pure projection — no shuffle, no explode: the
     per-document counting runs as an Arrow ``mapInPandas`` kernel over
     C-accelerated ``collections.Counter`` (the round-6 measurement:
-    the previous whole-stage-codegen sorted-run fold, ``_rep_fold``,
-    evaluates its lambda per array element through Catalyst's
-    INTERPRETED HigherOrderFunction path at ~7 ms/doc; the Counter
-    kernel is ~0.13 ms/doc — 50x).  The kernel emits only bit-exact
+    the previous sorted-run ``aggregate`` fold, now the SQL twin in
+    the operator tests, evaluates its lambda per array element through
+    Catalyst's INTERPRETED HigherOrderFunction path at ~7 ms/doc; the
+    Counter kernel is ~0.13 ms/doc — 50x).  The kernel emits only bit-exact
     INTEGER counts (best count, best charlen, duplicated char mass,
     total chars); every float division and round stays in the SAME
     Spark SQL expressions as before, so the output is bit-identical

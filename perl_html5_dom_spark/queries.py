@@ -1243,8 +1243,8 @@ def q_ngram_repetition(spark, sf_dir):
     char fraction + the published keep conjunction.  Spark side is a
     zero-shuffle Arrow Counter kernel emitting integer counts, with
     the float fractions computed in SQL (round-6 optimization; the
-    sorted-run fold textstats._rep_fold is kept as the differential
-    twin); the DuckDB twin re-derives the same fractions RELATIONALLY
+    sorted-run SQL fold it replaced is the differential twin in the
+    operator tests); the DuckDB twin re-derives the same fractions RELATIONALLY
     (unnest n-grams -> group by -> row_number argmax / filtered sum),
     so the two engines share no code path at all."""
     return ts.ngram_repetition(_docs(spark, sf_dir))

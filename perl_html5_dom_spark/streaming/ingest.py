@@ -106,11 +106,12 @@ def near_dup_stream(docs: DataFrame, num_perm: int = 16,
     document from ANY earlier micro-batch (or earlier in this batch, by
     doc_id) already claimed that bucket.  A doc with any(dup) is a
     near-dup CANDIDATE — the same recall contract as the batch
-    ``lsh_candidate_pairs`` (same signatures, same band keys, so a pair
-    the batch path buckets together is flagged here once its second
-    member arrives).  Precision filtering (exact-jaccard verify) stays
-    a batch concern: per-bucket state holds ONE long, not shingle sets,
-    which is what keeps 10^12-document state viable.
+    ``lsh_candidate_pairs``: both bucket documents through the same
+    ``_doc_minhash_sets`` kernel and ``_band_keys`` projection, so a
+    pair the batch path buckets together is flagged here once its
+    second member arrives.  Precision filtering (exact-jaccard verify)
+    stays a batch concern: per-bucket state holds ONE long, not shingle
+    sets, which is what keeps 10^12-document state viable.
 
     Roll up per document downstream (e.g. in foreachBatch):
     ``flagged.groupBy("doc_id").agg(max(col("dup")))``.
@@ -120,43 +121,13 @@ def near_dup_stream(docs: DataFrame, num_perm: int = 16,
     checkpoint."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..operators.dedup import H, P, perm_params, tokens_expr
+    from ..operators.dedup import _band_keys, _doc_minhash_sets
 
-    # signatures as a PURE PROJECTION (array_min over the per-doc
-    # shingle array) — numerically identical to the batch explode +
-    # partial-agg path, but stateless, so the only stateful operator in
-    # the streaming plan is the bucket store below.  (The batch path
-    # keeps the explode because its materialized shingle table also
-    # feeds the exact-jaccard verify join.)
-    parts = " || ' ' || ".join(f"element_at(t, i + {d})" for d in range(k))
-    sigs = []
-    for j in range(num_perm):
-        a, b = perm_params(j)
-        sigs.append(f"array_min(transform(sh, s -> "
-                    f"({a} * ({H('s')} % {P}) + {b}) % {P})) as mh{j}")
-    wide = (
-        docs.selectExpr("doc_id", "text as _txt", f"{tokens_expr()} as t")
-        .selectExpr(
-            "doc_id",
-            f"array_distinct(case when size(t) >= {k} then "
-            f"transform(sequence(1, size(t) - {k - 1}), i -> {parts}) "
-            "else array(_txt) end) as sh")
-        .selectExpr("doc_id", *sigs)
-    )
-    rows = num_perm // bands
-    entries = []
-    for b in range(bands):
-        js = range(b * rows, (b + 1) * rows)
-        bk1 = " + ".join(f"mh{j} * {j + 1}" for j in js)
-        bk2 = " + ".join(f"mh{j}" for j in js)
-        entries.append(f"struct({b} as band, cast({bk1} as bigint) as bk1, "
-                       f"cast({bk2} as bigint) as bk2)")
-    buckets = (
-        wide.selectExpr("doc_id",
-                        f"explode(array({', '.join(entries)})) as s")
-        .selectExpr("doc_id", "s.band as band", "s.bk1 as bk1",
-                    "s.bk2 as bk2")
-    )
+    # the batch operators' signature kernel and band keys: stateless
+    # per-document map work (mapInPandas runs unchanged on a stream), so
+    # the only stateful operator in the plan is the bucket store below
+    buckets = _band_keys(_doc_minhash_sets(docs, num_perm, k),
+                         num_perm, bands)
     return (
         buckets.groupBy("band", "bk1", "bk2")
         .applyInPandasWithState(

@@ -10,8 +10,12 @@ DataFrame no longer needs the view).
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import itertools
+import os
+import tempfile
+import uuid
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -59,22 +63,45 @@ def sql_over(builder: Callable[..., str], *dfs: DataFrame,
             spark.catalog.dropTempView(n)
 
 
+#: (FileSystem, Path) of every checkpoint_parquet dir this process made
+_checkpoints: list = []
+
+
+def _delete_checkpoints() -> None:
+    """atexit hook, registered on first use: a session exists by then,
+    so PySpark's gateway-kill hook was registered earlier, and atexit
+    runs hooks in reverse order — the JVM still answers here, even
+    after ``spark.stop()``."""
+    for fs, jpath in _checkpoints:
+        fs.delete(jpath, True)
+
+
 def checkpoint_parquet(df: DataFrame, prefix: str = "ckpt") -> DataFrame:
-    """Materialize ``df`` to a fresh session-temp parquet dir and read
-    it back — the intra-query intermediate for frames that several
-    later stages SCAN repeatedly.
+    """Materialize ``df`` to a fresh parquet dir and read it back — the
+    intra-query intermediate for frames that several later stages SCAN
+    repeatedly.
 
     Rationale (round 6, measured): a ``persist()`` stores deserialized
     InMemoryRelation batches whose repeated scans cost ~3x a
     vectorized parquet read on this engine (the bench.py corpus
     checkpoint documents the same); swapping the webtext pipeline's
     two persists for parquet round-trips took the capstone from
-    12.4 s to 7.4 s at sf1.  A fresh ``mkdtemp`` per call means
-    nothing is ever reused across invocations — every run recomputes
-    from its own inputs (this is plan truncation, not result caching).
-    At 100 TB the analog is a reliable checkpoint/staging table."""
-    import tempfile
+    12.4 s to 7.4 s at sf1.  A fresh directory per call means nothing
+    is ever reused across invocations — every run recomputes from its
+    own inputs (this is plan truncation, not result caching).
 
-    path = tempfile.mkdtemp(prefix=f"spark_graft_{prefix}_") + "/data"
-    df.write.parquet(path)
-    return df.sparkSession.read.parquet(path)
+    The directory lives under the session's checkpoint dir
+    (``SparkContext.setCheckpointDir``, which a cluster points at
+    storage every executor can write) when one is set, else under the
+    local temp dir.  Every directory made here is deleted through the
+    session's Hadoop ``FileSystem`` when the interpreter exits."""
+    sc = df.sparkSession.sparkContext
+    path = os.path.join(sc.getCheckpointDir() or tempfile.gettempdir(),
+                        f"spark_graft_{prefix}_{uuid.uuid4().hex}")
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not _checkpoints:
+        atexit.register(_delete_checkpoints)
+    _checkpoints.append(
+        (jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath))
+    df.write.parquet(path + "/data")
+    return df.sparkSession.read.parquet(path + "/data")

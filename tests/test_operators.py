@@ -457,15 +457,52 @@ def test_token_logfreq_hand_computed(spark):
     assert (rows[3]["n_tok"], rows[3]["logfreq_permille"]) == (1, 0)
 
 
+def _rep_fold(n: int) -> str:
+    """SQL twin of the ngram_repetition kernel: struct(bc, bl, dup) for
+    word n-grams of ``t``.
+
+    Sorted-run scan, all inside whole-stage codegen: sort the n-gram
+    array once, then a single ``aggregate`` fold walks the runs and
+    keeps (bc, bl) = (count, charlen) of the most frequent n-gram
+    (ties broken by charlen, so the output fraction is deterministic)
+    and ``dup`` = occurrence-weighted char mass of n-grams appearing
+    more than once.  O(w log w) per document, no shuffle, no Python.
+    """
+    grams = (f"case when size(t) >= {n} then "
+             f"transform(sequence(1, size(t) - {n - 1}), "
+             f"i -> concat_ws(' ', slice(t, i, {n}))) "
+             "else array() end")
+    z = "cast(0 as bigint)"
+    one = "cast(1 as bigint)"
+    close_better = ("(s.prev is not null and (s.run > s.bc or "
+                    "(s.run = s.bc and length(s.prev) > s.bl)))")
+    close_bc = f"if({close_better}, s.run, s.bc)"
+    close_bl = f"if({close_better}, cast(length(s.prev) as bigint), s.bl)"
+    close_dup = (f"s.dup + if(s.prev is not null and s.run >= 2, "
+                 f"s.run * cast(length(s.prev) as bigint), {z})")
+    return (
+        f"aggregate(array_sort({grams}), "
+        f"named_struct('prev', cast(null as string), 'run', {z}, "
+        f"'bc', {z}, 'bl', {z}, 'dup', {z}), "
+        "(s, x) -> if(s.prev is not null and x = s.prev, "
+        f"named_struct('prev', x, 'run', s.run + {one}, "
+        "'bc', s.bc, 'bl', s.bl, 'dup', s.dup), "
+        f"named_struct('prev', x, 'run', {one}, "
+        f"'bc', {close_bc}, 'bl', {close_bl}, 'dup', {close_dup})), "
+        f"s -> named_struct('bc', {close_bc}, 'bl', {close_bl}, "
+        f"'dup', {close_dup}))"
+    )
+
+
 def test_ngram_repetition_matches_sql_fold(spark, docs):
     """Round-6: the Arrow Counter kernel must be BIT-identical to the
-    whole-stage-codegen sorted-run fold it replaced — ``_rep_fold``
-    stays in the module as the differential twin this test runs."""
+    whole-stage-codegen sorted-run fold it replaced (``_rep_fold``,
+    kept here as the differential twin)."""
     from perl_html5_dom_spark.operators import textstats as ts
 
     def fold_impl(d, text_col="text"):
-        tops = {n: ts._rep_fold(n) for n in ts.GOPHER_TOP_NGRAM_MAX}
-        dups = {n: ts._rep_fold(n) for n in ts.GOPHER_DUP_NGRAM_MAX}
+        tops = {n: _rep_fold(n) for n in ts.GOPHER_TOP_NGRAM_MAX}
+        dups = {n: _rep_fold(n) for n in ts.GOPHER_DUP_NGRAM_MAX}
         top_cols = [
             f"round(if(tc = 0, 0.0, _r{n}.bc * _r{n}.bl / tc), 6) "
             f"as top{n}_frac" for n in sorted(tops)]
@@ -580,12 +617,25 @@ def test_simhash_matches_sql_form(spark, corpus):
     assert got == want
 
 
+def _minhash_wide(hashed, num_perm=16):
+    """SQL twin of the minhash kernel: (doc_id, mh0..mh{n-1}) from the
+    (doc_id, hs) shingle-hash table in ONE partial-agg groupBy — the
+    num_perm mins ride the same map-side combine."""
+    from perl_html5_dom_spark.operators.dedup import P, perm_params
+
+    hashed = hashed.selectExpr("doc_id", f"hs % {P} as hs")
+    aggs = []
+    for j in range(num_perm):
+        a, b = perm_params(j)
+        aggs.append(F.min(F.expr(f"({a} * hs + {b}) % {P}")).alias(f"mh{j}"))
+    return hashed.groupBy("doc_id").agg(*aggs)
+
+
 def test_minhash_wide_sets_match_sql(spark, corpus):
     """Round-6: the per-doc minhash kernel (_doc_minhash_sets) must be
     BIT-identical to the declarative shingle-explode + wide-aggregate
-    + collect_set form it replaced."""
-    from pyspark.sql import functions as F
-
+    + collect_set form it replaced (``_minhash_wide`` + collect_set,
+    kept here as the twin)."""
     from perl_html5_dom_spark.operators import dedup as dd
 
     edge = spark.createDataFrame(
@@ -597,7 +647,7 @@ def test_minhash_wide_sets_match_sql(spark, corpus):
     sh = dd._shingles(sample, 3).selectExpr(
         "doc_id", f"{dd.H('shingle')} as hs")
     want_wide = {r["doc_id"]: r.asDict()
-                 for r in dd._minhash_wide(sh, 16).collect()}
+                 for r in _minhash_wide(sh, 16).collect()}
     want_sets = {r.doc_id: sorted(r.hset) for r in
                  sh.groupBy("doc_id").agg(
                      F.collect_set("hs").alias("hset")).collect()}

@@ -1,0 +1,87 @@
+"""Static checks on the scripts around the package: the tools, the
+stage benchmark, the Spark job and the frozen harness entry points.
+
+No test runs these scripts, so a name deleted from the package would
+break them silently.  This parses each one with ``ast`` and checks that
+every ``perl_html5_dom_spark`` name it imports, and every ``alias.attr``
+it reads from an imported package module, still exists.
+"""
+
+import ast
+import importlib
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "perl_html5_dom_spark"
+SCRIPTS = sorted(
+    [*ROOT.glob("tools/*.py")]
+    + [ROOT / f for f in ("bench_extra.py", "spark_job.py", "bench.py",
+                          "__spark_entry__.py")])
+
+
+def _is_module(name: str) -> bool:
+    try:
+        importlib.import_module(name)
+    except ModuleNotFoundError:
+        return False
+    return True
+
+
+def _dangling(path: Path) -> list[str]:
+    """Imported package names and ``alias.attr`` reads that do not
+    resolve, as ``line: dotted.name`` strings."""
+    tree = ast.parse(path.read_text(), str(path))
+    aliases: dict[str, set[str]] = {}   # local name -> package modules
+    missing = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] != PKG:
+                    continue
+                if not _is_module(a.name):
+                    missing.append(f"{node.lineno}: {a.name}")
+                elif a.asname:
+                    aliases.setdefault(a.asname, set()).add(a.name)
+        elif isinstance(node, ast.ImportFrom) and node.module and (
+                node.module.split(".")[0] == PKG):
+            if not _is_module(node.module):
+                missing.append(f"{node.lineno}: {node.module}")
+                continue
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                full = f"{node.module}.{a.name}"
+                if _is_module(full):
+                    aliases.setdefault(a.asname or a.name, set()).add(full)
+                elif not hasattr(mod, a.name):
+                    missing.append(f"{node.lineno}: {full}")
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in aliases):
+            mods = aliases[node.value.id]
+            if not any(hasattr(importlib.import_module(m), node.attr)
+                       for m in mods):
+                missing.append(
+                    f"{node.lineno}: {'|'.join(sorted(mods))}.{node.attr}")
+    return missing
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: p.name)
+def test_script_package_references_resolve(path):
+    assert _dangling(path) == []
+
+
+def test_dangling_reference_is_caught(tmp_path):
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from perl_html5_dom_spark.operators import dedup\n"
+        "from perl_html5_dom_spark.util import checkpoint_parquet, gone\n"
+        "from perl_html5_dom_spark.no_such_module import x\n"
+        "dedup._doc_minhash_sets\n"
+        "dedup._no_such_kernel\n")
+    assert _dangling(script) == [
+        "2: perl_html5_dom_spark.util.gone",
+        "3: perl_html5_dom_spark.no_such_module",
+        "5: perl_html5_dom_spark.operators.dedup._no_such_kernel"]

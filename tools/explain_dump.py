@@ -79,12 +79,13 @@ def main() -> None:
          "parquet is ONE row group = one scan task); real-scale inputs "
          "pass through with no extra Exchange.")
 
-    grab("MinHash signatures: single-pass partial aggregation",
-         dedup.minhash_signatures(docs.selectExpr("doc_id", "text")),
-         "explode(shingles) + md5 hash are map-side; ONE groupBy(doc_id) "
-         "computes all 16 per-permutation mins as columns (partial_min "
-         "before the exchange) — no perm fan-out join; the (j, mh) rows "
-         "are a stack() of the wide result.")
+    grab("MinHash signatures: one Arrow kernel, band-key projection",
+         dedup._band_keys(dedup._doc_minhash_sets(
+             docs.selectExpr("doc_id", "text"), 16, 3), 16, 4),
+         "Shingling, md5 hashing and all 16 per-permutation mins run in "
+         "ONE MapInPandas kernel per document (no Exchange); the LSH "
+         "band keys are a projection + explode(bands) over its output. "
+         "Batch, LSH-only and streaming near-dup all bucket through it.")
 
     grab("LSH buckets: engine-side planes, broadcast join",
          similarity.lsh_buckets(emb),
@@ -246,8 +247,8 @@ def main() -> None:
          "counting now runs as one MapInPandas Counter kernel "
          "(~0.13 ms/doc) emitting bit-exact INTEGERS, with every "
          "float division and round in the same SQL projections as "
-         "before (textstats._rep_fold stays as the differential twin "
-         "that test_ngram_repetition_matches_sql_fold runs).  Still "
+         "before (the replaced fold is the differential twin that "
+         "test_ngram_repetition_matches_sql_fold runs).  Still "
          "no shuffle beyond the caller's repartition, no explode: "
          "scan → kernel → two codegen projections.  The relational "
          "DuckDB oracle (9-way unnest + group by) is unchanged, so "
@@ -282,7 +283,7 @@ def main() -> None:
          "The end-to-end curation chain (r4 #4 audit; restructured in "
          "rounds 5 and 6).  Round-6 shape: ONE wide-text frame — the "
          "quality-filtered kept corpus — is parquet-CHECKPOINTED "
-         "inside the query (util.checkpoint_parquet: fresh mkdtemp "
+         "inside the query (util.checkpoint_parquet: fresh directory "
          "per invocation, recomputed every run — plan truncation, not "
          "result caching), because repeated scans of a deserialized "
          "InMemoryRelation cost ~3x a vectorized parquet read "
