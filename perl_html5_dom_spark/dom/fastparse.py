@@ -1539,9 +1539,9 @@ def try_parse(src: str) -> Document | None:
         return None
     try:
         return _Fast(src).run()
-    except _Bail:
-        return None
-    except IndexError:
+    except (_Bail, IndexError, RecursionError):
+        # RecursionError: nesting deeper than the recursive table
+        # sub-parser reaches; the full machine is iterative
         return None
 
 

@@ -664,7 +664,11 @@ class PdfParser:
         return self._cache[num]
 
     def resolve(self, obj):
+        seen = set()
         while isinstance(obj, Ref):
+            if obj.num in seen:
+                raise PdfError(f"reference cycle at object {obj.num}")
+            seen.add(obj.num)
             obj = self.get(obj.num)
         return obj
 
@@ -678,6 +682,7 @@ class PdfParser:
         if not isinstance(root, dict):
             raise PdfError("bad /Root")
         out: list[dict] = []
+        seen: set[int] = set()   # ids of the /Pages nodes walked
         stack = [root.get("Pages")]
         while stack:
             node = self.resolve(stack.pop())
@@ -687,6 +692,9 @@ class PdfParser:
             if t == "Page":
                 out.append(node)
             else:  # Pages (or typeless intermediate): preserve order
+                if id(node) in seen:
+                    raise PdfError("page tree cycle")
+                seen.add(id(node))
                 kids = self.resolve(node.get("Kids")) or []
                 for kid in reversed(list(kids)):
                     stack.append(kid)

@@ -2,7 +2,11 @@
 
 Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard.
 The per-document signatures (MinHash, SimHash) run as zero-shuffle
-Arrow ``mapInPandas`` kernels; everything keyed across documents
+Arrow ``mapInPandas`` kernels — the package's only two outside the
+shared per-row runner (``util.map_documents``): each hashes the
+distinct texts of a batch first and then runs ONE numpy pass over all
+of them (``reduceat`` per text), which a per-document body would split
+into one small array pass per text.  Everything keyed across documents
 (grouping, bucket self-joins, verification) is a declarative plan that
 shuffles only on its join/group keys.  Every hash is derived from
 ``md5`` so DuckDB oracles can reproduce results bit-for-bit:

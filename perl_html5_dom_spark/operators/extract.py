@@ -21,37 +21,21 @@ Design for 100 TB:
     executors inside the closure — the analog of the reference's
     precompiled-selector reuse (DOM.pod:2544-2551).
 
-One runner, :func:`map_documents`, owns everything around the
-per-document body of every HTML and PDF operator (``extract_pages``, the
-``css_*`` kernels, ``nodes_df``, ``extract_pdfs`` and the ``(url,
-html)`` kernels of ``queries.py``):
-
-  * **memo** — web corpora carry 30-50% byte-identical pages (mirrors,
-    re-crawls, session urls) and every body is a pure function of the
-    payload bytes, so each DISTINCT payload runs once per Arrow batch and
-    replicas reuse its result.  The memo dies with the batch (bounded
-    memory: at most one batch of results); on an all-distinct corpus it
-    costs one dict probe per row;
-  * **null payloads** — a per-document operator emits its empty row
-    (``err`` null), a per-match operator emits no rows;
-  * **containment** — ``max_bytes`` truncates an oversized payload
-    before the body runs (HTML5 parsing is total, so the prefix still
-    parses) and ``on_error="contain"`` turns a raising body into the
-    empty result instead of failing the task; the ``err`` column, where
-    an operator has one, says ``truncated: N > M bytes`` and/or
-    ``Type: message``.  Operators without an ``err`` column fail fast.
+Everything around the per-document body — memo, null payloads,
+truncation and containment — is the shared runner's job
+(:func:`..util.map_documents`; policy in the :mod:`..util` docstring).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable, Iterable, Iterator
 
 from ..dom import innertext, serializer
 from ..dom.constants import ELEMENT_NODE, TEXT_NODE
 from ..dom.document import Document
 from ..dom.fastparse import parse_document
 from ..selector import matcher
+from ..util import map_documents
 
 # ---------------------------------------------------------------------------
 # Boilerplate heuristics (Phase 3 of SURVEY.md §7)
@@ -259,76 +243,6 @@ def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
     return out
 
 
-def map_documents(df, payload: str, body: Callable, columns: dict, *,
-                  empty_row: dict | None = None,
-                  max_bytes: int | None = None, on_error: str = "raise"):
-    """DataFrame(url, <payload>) → DataFrame(``columns``): ``body`` run
-    once per distinct non-null payload of each Arrow batch.
-
-    ``columns`` maps output name → Spark type in output order; it starts
-    with ``url`` and may hold ``err`` (per-document operators only).
-    The runner fills those two; ``body(payload)`` returns the rest:
-
-    * per-document operators pass ``empty_row`` (column → value, the row
-      a null or failed payload emits) and ``body`` returns one such
-      mapping;
-    * per-match operators pass no ``empty_row`` and ``body`` returns
-      ``(n, {column: list of n values})``; a null or failed payload
-      emits no rows.
-
-    Output is built column by column, so a memo hit costs one append
-    (one list extend per match column) per output column.  Memo, null,
-    truncation and containment policy: see the module docstring."""
-    names = list(columns)
-    sinks = [c for c in names if c not in ("url", "err")]
-    schema = ", ".join(f"{c} {t}" for c, t in columns.items())
-    empty = (empty_row if empty_row is not None else (0, {}), None)
-
-    def one(data):
-        err = None
-        if max_bytes is not None and len(data) > max_bytes:
-            err = f"truncated: {len(data)} > {max_bytes} bytes"
-            data = data[:max_bytes]
-        try:
-            return body(data), err
-        except Exception as exc:  # noqa: BLE001 — containment
-            if on_error == "raise":
-                raise
-            msg = f"{type(exc).__name__}: {exc}"
-            return empty[0], (f"{err}; {msg}" if err else msg)
-
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {c: [] for c in names}
-            urls, errs = out["url"], out.get("err")
-            cols = [(out[c], c) for c in sinks]
-            memo: dict = {}
-            for url, data in zip(pdf["url"], pdf[payload]):
-                if data is None:
-                    r, err = empty
-                else:
-                    hit = memo.get(data)
-                    if hit is None:
-                        hit = memo[data] = one(data)
-                    r, err = hit
-                if empty_row is not None:
-                    urls.append(url)
-                    for col, c in cols:
-                        col.append(r[c])
-                    if errs is not None:
-                        errs.append(err)
-                elif r[0]:
-                    n, d = r
-                    urls.extend([url] * n)
-                    for col, c in cols:
-                        col.extend(d[c])
-            yield pd.DataFrame(out, columns=names)
-
-    return df.select("url", payload).mapInPandas(run, schema=schema)
-
-
 def extract_pages(df, span_selector: str | None = "a[href]",
                   fields: tuple | list | None = None,
                   max_html_bytes: int | None = None,
@@ -358,6 +272,5 @@ def extract_pages(df, span_selector: str | None = "a[href]",
         return extract_one(html, compiled, kfields)
 
     return map_documents(
-        df, "html", body,
-        {"url": "string", **{f: _FIELD_TYPES[f] for f in fields}},
+        df, ("url",), "html", body, {f: _FIELD_TYPES[f] for f in fields},
         empty_row=_EMPTY_ROW, max_bytes=max_html_bytes, on_error=on_error)

@@ -21,7 +21,8 @@ with plain Catalyst-optimizable DataFrame ops.
 from __future__ import annotations
 
 from ..dom.constants import ELEMENT_NODE
-from .extract import map_documents, parse_document
+from ..util import map_documents
+from .extract import parse_document
 
 NODES_SCHEMA = (
     "url string, node_id bigint, parent_id bigint, ord bigint, "
@@ -55,7 +56,7 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
     extends the batch's columns with them, so unrequested columns cost
     nothing and pandas never pivots a row list."""
     keep = {c: t for c, t in _TYPES.items()
-            if columns is None or c == "url" or c in columns}
+            if c != "url" and (columns is None or c in columns)}
 
     def one_doc(html) -> tuple[int, dict[str, list]]:
         """Per-document column lists (everything except url); the
@@ -108,7 +109,7 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
                 d[c] = [arr[n] for n in nids]
         return len(nids), d
 
-    return map_documents(df, "html", one_doc, keep)
+    return map_documents(df, ("url",), "html", one_doc, keep)
 
 
 def frequent_paths(pages, min_frac: float = 0.9):

@@ -2,7 +2,7 @@
 
 Mirrors :mod:`.extract` for HTML: the from-scratch parser in
 :mod:`..dom.pdf` is the body of the shared document runner
-(``extract.map_documents``) over ``(url, pdf binary)``.  One document =
+(``util.map_documents``) over ``(url, pdf binary)``.  One document =
 one task unit (same data-parallelism rationale as HTML parse; reference
 guidance on intra-parse threading,
 /root/reference/lib/HTML5/DOM.pod:3228-3230), so throughput scales with
@@ -13,17 +13,16 @@ Malformed PDFs are a fact of crawl corpora, so the runner contains
 errors: a failing document emits ``n_pages = 0``, empty text and
 ``err`` = ``Type: message`` instead of failing the task; a null one
 emits the same empty row with a null ``err``; byte-identical PDFs of a
-batch are parsed once (runner policy: see :mod:`.extract`).  PDFs are
+batch are parsed once (runner policy: see :mod:`..util`).  PDFs are
 never truncated — a prefix has no xref table.
 """
 
 from __future__ import annotations
 
 from ..dom.pdf import extract_pdf_text
-from .extract import map_documents
+from ..util import map_documents
 
-PDF_COLUMNS = {
-    "url": "string", "n_pages": "int", "text": "string", "err": "string"}
+PDF_COLUMNS = {"n_pages": "int", "text": "string", "err": "string"}
 
 
 def extract_pdfs(df, pdf_col: str = "pdf"):
@@ -33,6 +32,6 @@ def extract_pdfs(df, pdf_col: str = "pdf"):
         n, text = extract_pdf_text(bytes(data))
         return {"n_pages": n, "text": text}
 
-    return map_documents(df, pdf_col, body, PDF_COLUMNS,
+    return map_documents(df, ("url",), pdf_col, body, PDF_COLUMNS,
                          empty_row={"n_pages": 0, "text": ""},
                          on_error="contain")

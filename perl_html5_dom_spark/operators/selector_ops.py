@@ -11,7 +11,7 @@ the CSS engine, /root/reference/DOM.xs:286-359):
    match loop.
 2. **Kernel** — anything structural (combinators, :nth-*, :not/:has,
    comma lists) is evaluated by the full matcher as the body of the
-   shared document runner (``extract.map_documents``) over ``(url,
+   shared document runner (``util.map_documents``) over ``(url,
    html)``, compiled once on the driver and shipped in the closure
    (reference precompiled selectors, DOM.pod:2544-2551).
 
@@ -27,10 +27,11 @@ from pyspark.sql import functions as F
 from ..dom import innertext, serializer
 from ..selector import matcher
 from ..selector.parser import parse_selector
-from .extract import map_documents, parse_document
+from ..util import map_documents
+from .extract import parse_document
 
 MATCH_COLUMNS = {
-    "url": "string", "node_id": "bigint", "ord": "bigint", "tag": "string",
+    "node_id": "bigint", "ord": "bigint", "tag": "string",
     "begin": "bigint", "length": "bigint",
 }
 
@@ -135,7 +136,7 @@ def css_find(df, selector: str, first: bool = False):
             "begin": [begin[n] for n in nids],
             "length": [length[n] for n in nids]}
 
-    return map_documents(df, "html", body, MATCH_COLUMNS)
+    return map_documents(df, ("url",), "html", body, MATCH_COLUMNS)
 
 
 def css_at(df, selector: str):
@@ -187,8 +188,8 @@ def css_extract_multi(df, selector: str, whats: tuple = ("text",)):
             cols[name] = [sink(doc, n) for n in nids]
         return len(nids), cols
 
-    return map_documents(df, "html", body, {
-        "url": "string", "node_id": "bigint", "ord": "bigint",
+    return map_documents(df, ("url",), "html", body, {
+        "node_id": "bigint", "ord": "bigint",
         **{name: "string" for name, _ in sinks}})
 
 

@@ -1,16 +1,23 @@
 """Text analysis operators: language ID, quality scoring, token
 counting, document fingerprinting.
 
-All pure Spark SQL expressions (whole-stage codegen, no Python), each
-designed to be reproducible in DuckDB for the oracle gate:
+Each is designed to be reproducible in DuckDB for the oracle gate:
 regexp-free where dialects differ, md5-based hashes where hashing is
-needed (see operators/dedup.py H()).
+needed (see operators/dedup.py H()).  Most are pure Spark SQL
+expressions (whole-stage codegen, no Python).  The two whose per-row
+counting Catalyst can only interpret — ``quality_scores`` and
+``ngram_repetition`` — count integers in a per-document body run by the
+shared runner (``util.map_documents``: batch memo, null rows, key
+columns), and keep every float division and ``round`` in SQL.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
+from ..util import map_documents
 from .dedup import H, P, tokens_expr
 
 #: tiny per-language stopword marker sets for the n-gram/stopword
@@ -54,9 +61,10 @@ def quality_scores(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     the standard cheap quality filters for web text.
 
     ``carry`` names extra input columns to pass through (the
-    corpus_split pattern): a pipeline that filters on ``quality`` then
-    needs NO id-join back to the text — the webtext capstone saves a
-    full corpus recompute plus the join exchange this way.
+    corpus_split pattern; the runner's ``keys``, so they may include
+    ``text``): a pipeline that filters on ``quality`` then needs NO
+    id-join back to the text — the webtext capstone saves a full corpus
+    recompute plus the join exchange this way.
 
     Round-6 shape: the per-document counting (char/token/stopword/
     alpha counts — all INTEGERS) runs as an Arrow kernel; the previous
@@ -67,57 +75,21 @@ def quality_scores(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     columns, so the floats — and the DuckDB oracle hash — are
     bit-identical (same pattern as :func:`ngram_repetition`)."""
     markers = set(LANG_MARKERS["en"])
-    carry = tuple(carry)
+    non_alpha = re.compile("[^a-zA-Z]+")
 
-    def run(batches):
-        import re
+    def counts(text):
+        t = text.split(" ")
+        return {"n_chars": len(text), "n_tokens": len(t),
+                "stop_hits": sum(1 for w in t if w in markers),
+                "alpha_chars": len(text) - sum(
+                    len(m.group()) for m in non_alpha.finditer(text))}
 
-        import pandas as pd
-
-        non_alpha = re.compile("[^a-zA-Z]+")
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_chars": [], "n_tokens": [],
-                "stop_hits": [], "alpha_chars": []}
-            # batch-local exact-dup memo (round-6 kernel recipe): the
-            # counts are pure functions of the text, so duplicate rows
-            # in a batch reuse them; the memo dies with the batch
-            memo: dict = {}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(did)
-                if text is None:
-                    # mirrors SQL null semantics: length(null) = null,
-                    # size(split(null)) = null, hits over null = null
-                    out["n_chars"].append(None)
-                    out["n_tokens"].append(None)
-                    out["stop_hits"].append(None)
-                    out["alpha_chars"].append(None)
-                    continue
-                hit = memo.get(text)
-                if hit is None:
-                    t = text.split(" ")
-                    hit = (len(text), len(t),
-                           sum(1 for w in t if w in markers),
-                           len(text) - sum(len(m.group())
-                                           for m in
-                                           non_alpha.finditer(text)))
-                    memo[text] = hit
-                out["n_chars"].append(hit[0])
-                out["n_tokens"].append(hit[1])
-                out["stop_hits"].append(hit[2])
-                out["alpha_chars"].append(hit[3])
-            df = pd.DataFrame(out)
-            for c in carry:
-                df[c] = pdf[c].values
-            yield df
-
-    types = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
-    carry_schema = "".join(f", {c} {types[c]}" for c in carry)
-    in_cols = ["doc_id", "text"] + [c for c in carry
-                                    if c not in ("doc_id", "text")]
-    kern = docs.select(*in_cols).mapInPandas(
-        run, schema="doc_id bigint, n_chars bigint, n_tokens bigint, "
-                    "stop_hits bigint, alpha_chars bigint" + carry_schema)
+    # null text mirrors SQL null semantics: length(null) = null,
+    # size(split(null)) = null, hits over null = null
+    cols = ("n_chars", "n_tokens", "stop_hits", "alpha_chars")
+    kern = map_documents(docs, ("doc_id", *carry), "text", counts,
+                         dict.fromkeys(cols, "bigint"),
+                         empty_row=dict.fromkeys(cols))
     return kern.selectExpr(
         "doc_id",
         "n_chars",
@@ -345,7 +317,7 @@ def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
       (top: 0.20/0.18/0.16; dup: 0.15 down to 0.10).
 
     At 100 TB this is a pure projection — no shuffle, no explode: the
-    per-document counting runs as an Arrow ``mapInPandas`` kernel over
+    per-document counting runs in the shared runner over
     C-accelerated ``collections.Counter`` (the round-6 measurement:
     the previous sorted-run ``aggregate`` fold, now the SQL twin in
     the operator tests, evaluates its lambda per array element through
@@ -359,41 +331,28 @@ def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     dups = sorted(GOPHER_DUP_NGRAM_MAX)
     int_cols = (["tc"] + [c for n in tops for c in (f"bc{n}", f"bl{n}")]
                 + [f"dup{n}" for n in dups])
-    schema = "doc_id bigint, " + ", ".join(f"{c} bigint" for c in int_cols)
 
-    def run(batches):
+    def counts(text):
         from collections import Counter
 
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in ["doc_id"] + int_cols}
-            for did, text in zip(pdf["doc_id"], pdf[text_col]):
-                # null text mirrors the SQL fold: concat_ws(' ', null)
-                # = '' -> tc 0; size(null) >= n is never true -> no
-                # grams -> all counts 0
-                t = text.split(" ") if text is not None else []
-                w = len(t)
-                out["doc_id"].append(did)
-                out["tc"].append(len(" ".join(t)))
-                for n in tops + dups:
-                    if w >= n:
-                        cnt = Counter(
-                            " ".join(t[i:i + n]) for i in range(w - n + 1))
-                    else:
-                        cnt = None
-                    if n in GOPHER_TOP_NGRAM_MAX:
-                        # fold ties break on (count, charlen) — max over
-                        # the same pair is value-identical
-                        bc, bl = (max((c, len(g)) for g, c in cnt.items())
-                                  if cnt else (0, 0))
-                        out[f"bc{n}"].append(bc)
-                        out[f"bl{n}"].append(bl)
-                    else:
-                        out[f"dup{n}"].append(sum(
-                            c * len(g) for g, c in cnt.items() if c > 1)
-                            if cnt else 0)
-            yield pd.DataFrame(out)
+        t = text.split(" ")
+        w = len(t)
+        out = {"tc": len(text)}
+        for n in tops + dups:
+            if w >= n:
+                cnt = Counter(" ".join(t[i:i + n]) for i in range(w - n + 1))
+            else:
+                cnt = None
+            if n in GOPHER_TOP_NGRAM_MAX:
+                # fold ties break on (count, charlen) — max over the
+                # same pair is value-identical
+                out[f"bc{n}"], out[f"bl{n}"] = (
+                    max((c, len(g)) for g, c in cnt.items())
+                    if cnt else (0, 0))
+            else:
+                out[f"dup{n}"] = (sum(c * len(g) for g, c in cnt.items()
+                                      if c > 1) if cnt else 0)
+        return out
 
     top_cols = [
         f"round(if(tc = 0, 0.0, bc{n} * bl{n} / tc), 6) as top{n}_frac"
@@ -407,8 +366,12 @@ def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
         [f"top{n}_frac < {v}" for n, v in sorted(GOPHER_TOP_NGRAM_MAX.items())]
         + [f"dup{n}_frac < {v}" for n, v in sorted(GOPHER_DUP_NGRAM_MAX.items())]
     )
+    # null text mirrors the SQL fold: concat_ws(' ', null) = '' -> tc 0;
+    # size(null) >= n is never true -> no grams -> all counts 0
     return (
-        docs.select("doc_id", text_col).mapInPandas(run, schema=schema)
+        map_documents(docs, ("doc_id",), text_col, counts,
+                      dict.fromkeys(int_cols, "bigint"),
+                      empty_row=dict.fromkeys(int_cols, 0))
         .selectExpr("doc_id", *top_cols, *dup_cols)
         .selectExpr("*", f"{keep} as keep_rep")
     )

@@ -321,9 +321,9 @@ def q_detect_encoding(spark, sf_dir):
     def body(html):
         return {"encoding": enc.sniff_and_decode(html)[0]}
 
-    return ex.map_documents(
-        pg.encoded_pages_df(spark, sf_dir), "html", body,
-        {"url": "string", "encoding": "string"}, empty_row={"encoding": None})
+    return ut.map_documents(
+        pg.encoded_pages_df(spark, sf_dir), ("url",), "html", body,
+        {"encoding": "string"}, empty_row={"encoding": None})
 
 
 def q_binary_meta(spark, sf_dir):
@@ -339,9 +339,9 @@ def q_binary_meta(spark, sf_dir):
             kind = "unknown"
         return {"n_bytes": len(b), "kind": kind}
 
-    return ex.map_documents(
-        pg.encoded_pages_df(spark, sf_dir), "html", body,
-        {"url": "string", "n_bytes": "bigint", "kind": "string"},
+    return ut.map_documents(
+        pg.encoded_pages_df(spark, sf_dir), ("url",), "html", body,
+        {"n_bytes": "bigint", "kind": "string"},
         empty_row={"n_bytes": None, "kind": None})
 
 
@@ -349,64 +349,46 @@ def q_multimodal_meta(spark, sf_dir):
     """Image-decode stub: deterministic fake image assets; the Spark-side
     plumbing (binary col, Arrow batches, typed metadata out) is real, the
     pixel decode is stubbed (no imaging libs in this container)."""
-    assets = _docs(spark, sf_dir).select("doc_id").mapInPandas(
-        _fake_image_kernel, schema="doc_id bigint, image binary")
-    return assets.mapInPandas(
-        _decode_image_kernel,
-        schema="doc_id bigint, width bigint, height bigint, n_bytes bigint")
+    assets = ut.map_documents(
+        _docs(spark, sf_dir), ("doc_id",), "doc_id", _fake_image,
+        {"image": "binary"}, empty_row={"image": None})
+    return ut.map_documents(
+        assets, ("doc_id",), "image", _decode_image,
+        {"width": "bigint", "height": "bigint", "n_bytes": "bigint"},
+        empty_row=dict.fromkeys(("width", "height", "n_bytes")))
 
 
-def _fake_image_kernel(batches):
-    import pandas as pd
-
-    for pdf in batches:
-        out = {"doc_id": [], "image": []}
-        for did in pdf["doc_id"]:
-            did = int(did)
-            w, h = did % 640 + 1, did % 480 + 1
-            header = f"FAKEIMG1;w={w};h={h};".encode()
-            out["doc_id"].append(did)
-            out["image"].append(header + b"\x00" * (did % 256))
-        yield pd.DataFrame(out)
+def _fake_image(did):
+    did = int(did)
+    w, h = did % 640 + 1, did % 480 + 1
+    header = f"FAKEIMG1;w={w};h={h};".encode()
+    return {"image": header + b"\x00" * (did % 256)}
 
 
 #: real-image magics the decode kernel recognizes; decoding them needs
-#: Pillow (try-imported per executor — absent in this container, so the
+#: Pillow (imported at the first real image — absent in this container, so the
 #: guard below stays the honest NotImplementedError)
 _IMAGE_MAGICS = (b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"GIF87a", b"GIF89a")
 
 
-def _decode_image_kernel(batches):
+def _decode_image(b):
+    """Image payload → ``{width, height, n_bytes}``."""
     import io
 
-    import pandas as pd
-
-    try:
-        from PIL import Image as _pil_image  # optional dep (VERDICT r3 #6)
-    except ImportError:
-        _pil_image = None
-
-    for pdf in batches:
-        out = {"doc_id": [], "width": [], "height": [], "n_bytes": []}
-        for did, img in zip(pdf["doc_id"], pdf["image"]):
-            b = bytes(img)
-            if b.startswith(b"FAKEIMG1;"):
-                fields = dict(p.decode().split("=") for p in b.split(b";")[1:3])
-                w, h = int(fields["w"]), int(fields["h"])
-            elif b.startswith(_IMAGE_MAGICS):
-                if _pil_image is None:
-                    raise NotImplementedError(
-                        "real image decode needs Pillow (not installed)")
-                with _pil_image.open(io.BytesIO(b)) as im:
-                    w, h = im.size
-            else:
-                raise NotImplementedError(
-                    f"unrecognized image payload ({b[:8]!r})")
-            out["doc_id"].append(int(did))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_bytes"].append(len(b))
-        yield pd.DataFrame(out)
+    if b.startswith(b"FAKEIMG1;"):
+        fields = dict(p.decode().split("=") for p in b.split(b";")[1:3])
+        w, h = int(fields["w"]), int(fields["h"])
+    elif b.startswith(_IMAGE_MAGICS):
+        try:
+            from PIL import Image as _pil_image  # optional dep (VERDICT r3 #6)
+        except ImportError:
+            raise NotImplementedError(
+                "real image decode needs Pillow (not installed)") from None
+        with _pil_image.open(io.BytesIO(b)) as im:
+            w, h = im.size
+    else:
+        raise NotImplementedError(f"unrecognized image payload ({b[:8]!r})")
+    return {"width": w, "height": h, "n_bytes": len(b)}
 
 
 # ---------------------------------------------------------------------------
@@ -552,24 +534,18 @@ def q_serialize_roundtrip(spark, sf_dir):
     """Serializer fidelity: serialize(parse(html)) must reproduce the
     source bytes for the template corpus (tokenizer positions + attr
     quoting + void rules together)."""
-    return _pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _roundtrip_kernel, schema="url string, roundtrip_ok boolean")
+    return ut.map_documents(
+        _pages(spark, sf_dir), ("url",), "html", _roundtrip_ok,
+        {"roundtrip_ok": "boolean"}, empty_row={"roundtrip_ok": None})
 
 
-def _roundtrip_kernel(batches):
-    import pandas as pd
-
+def _roundtrip_ok(html):
     from .dom.serializer import serialize
     from .dom.treebuilder import TreeBuilder
 
-    for pdf in batches:
-        out = {"url": [], "roundtrip_ok": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            src = bytes(html).decode("utf-8")
-            doc = TreeBuilder().parse(src)
-            out["url"].append(url)
-            out["roundtrip_ok"].append(serialize(doc, doc.root) == src)
-        yield pd.DataFrame(out)
+    src = bytes(html).decode("utf-8")
+    doc = TreeBuilder().parse(src)
+    return {"roundtrip_ok": serialize(doc, doc.root) == src}
 
 
 # ---------------------------------------------------------------------------
@@ -596,8 +572,8 @@ def _serialized(pages):
         doc = ex.parse_document(html)
         return {"html_out": serialize(doc, doc.root)}
 
-    return ex.map_documents(pages, "html", body,
-                            {"url": "string", "html_out": "string"},
+    return ut.map_documents(pages, ("url",), "html", body,
+                            {"html_out": "string"},
                             empty_row={"html_out": None})
 
 
@@ -693,10 +669,9 @@ def q_compat_mode(spark, sf_dir):
         doc = ex.parse_document(html)
         return {"compat": "BackCompat" if doc.quirks else "CSS1Compat"}
 
-    return ex.map_documents(
-        df.selectExpr("url", "encode(html_str, 'utf-8') as html"), "html",
-        body, {"url": "string", "compat": "string"},
-        empty_row={"compat": None})
+    return ut.map_documents(
+        df.selectExpr("url", "encode(html_str, 'utf-8') as html"), ("url",),
+        "html", body, {"compat": "string"}, empty_row={"compat": None})
 
 
 # ---------------------------------------------------------------------------

@@ -39,7 +39,7 @@ every downstream operator is unchanged.
 """
 
 from __future__ import annotations
-from ..util import sql_over
+from ..util import map_documents, sql_over
 
 SPARK = "spark"
 DUCK = "duck"
@@ -533,33 +533,23 @@ def encoded_pages_df(spark, sf_dir: str):
     docs = read_docs(spark, sf_dir)
     df = sql_over(lambda v: pages_select_sql(SPARK, v), docs)
 
-    def run(batches):
+    def body(did, s):
         import codecs
 
-        import pandas as pd
+        _, label, codec = ENCODING_VARIANTS[int(did) % len(ENCODING_VARIANTS)]
+        if label is None:
+            bom = (codecs.BOM_UTF16_LE if codec == "utf-16-le"
+                   else codecs.BOM_UTF16_BE)
+            b = bom + s.encode(codec)
+        elif codec == "utf-8":
+            b = s.encode("utf-8")
+        else:
+            # errors='replace': a real corpus has chars outside the
+            # legacy charsets; '?' is 1 byte so the binary_meta
+            # oracle's size arithmetic is unchanged
+            b = s.replace('charset="utf-8"',
+                          f'charset="{label}"').encode(codec, errors="replace")
+        return {"html": b}
 
-        for pdf in batches:
-            out = {"doc_id": [], "url": [], "html": []}
-            for did, url, s in zip(pdf["doc_id"], pdf["url"], pdf["html_str"]):
-                _, label, codec = ENCODING_VARIANTS[
-                    int(did) % len(ENCODING_VARIANTS)]
-                if label is None:
-                    bom = (codecs.BOM_UTF16_LE if codec == "utf-16-le"
-                           else codecs.BOM_UTF16_BE)
-                    b = bom + s.encode(codec)
-                elif codec == "utf-8":
-                    b = s.encode("utf-8")
-                else:
-                    # errors='replace': a real corpus has chars outside
-                    # the legacy charsets; '?' is 1 byte so the
-                    # binary_meta oracle's size arithmetic is unchanged
-                    b = s.replace('charset="utf-8"',
-                                  f'charset="{label}"').encode(
-                        codec, errors="replace")
-                out["doc_id"].append(int(did))
-                out["url"].append(url)
-                out["html"].append(b)
-            yield pd.DataFrame(out)
-
-    return df.select("doc_id", "url", "html_str").mapInPandas(
-        run, schema="doc_id bigint, url string, html binary")
+    return map_documents(df, ("doc_id", "url"), ("doc_id", "html_str"),
+                         body, {"html": "binary"}, empty_row={"html": None})

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import zlib
 
+from ..util import map_documents
 from .pages import cast_str, read_docs
 
 #: number of file-structure variants (doc_id % N_VARIANTS)
@@ -227,20 +228,14 @@ def pdf_docs_df(spark, sf_dir: str):
     data rule, and runs inside the Arrow kernel (no driver loop)."""
     docs = read_docs(spark, sf_dir)
 
-    def run(batches):
-        import pandas as pd
+    def body(did, text):
+        did = int(did)
+        return {"url": f"https://example.org/pdf/{did}",
+                "pdf": pdf_bytes(did, str(text))}
 
-        for pdf in batches:
-            out = {"doc_id": [], "url": [], "pdf": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                out["doc_id"].append(did)
-                out["url"].append(f"https://example.org/pdf/{did}")
-                out["pdf"].append(pdf_bytes(did, str(text)))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(
-        run, schema="doc_id bigint, url string, pdf binary")
+    return map_documents(docs, ("doc_id",), ("doc_id", "text"), body,
+                         {"url": "string", "pdf": "binary"},
+                         empty_row={"url": None, "pdf": None})
 
 
 def expected_text_expr(id_col: str = "doc_id",

@@ -16,13 +16,19 @@ one record independently.  This module implements:
   ``(url, warc_ts, html binary)`` feeding the extraction operators
   unchanged.
 
+Every Spark decoder here (the WARC/WET sources, the CDX index and the
+in-flight round trips) is a per-file or per-page body of the shared
+runner (``util.map_documents``): a file body returns its records as
+per-match rows, a round trip returns one row per page.
+
 Scale note: one WARC file = one task.  Common Crawl segments a crawl
 into ~64k files of ~1 GB per dump, so a 1000-executor cluster gets its
 parallelism from the file count — no in-file splitting is needed, and
 per-record gzip keeps memory flat while streaming members.  The
 ``binaryFile`` source prunes on path glob; at petabyte scale the same
 kernel runs over an Iceberg manifest of (path, offset, length) member
-ranges instead.
+ranges instead.  The member walk feeds the inflater bounded chunks, so
+splitting a file costs time linear in its size.
 """
 
 from __future__ import annotations
@@ -31,6 +37,8 @@ import gzip
 import io
 import zlib
 from typing import Iterable, Iterator
+
+from ..util import map_documents
 
 _CRLF = b"\r\n"
 
@@ -44,24 +52,34 @@ class WarcError(ValueError):
 # ---------------------------------------------------------------------------
 
 
-def _split_gzip_members(data: bytes) -> Iterator[bytes]:
-    """Inflate a multi-member gzip stream, yielding one decompressed
-    blob per member (the CC per-record layout)."""
+#: compressed bytes fed to the inflater per call: bounds the copy that
+#: ``unused_data`` makes at each member end, so a member walk is linear
+#: in the file size
+_GZIP_CHUNK = 1 << 14
+
+
+def _gzip_members(data: bytes) -> Iterator[tuple[int, int, bytes]]:
+    """Inflate a multi-member gzip stream (the CC per-record layout),
+    yielding ``(offset, compressed length, decompressed blob)`` per
+    member.  A truncated last member yields what inflates of it."""
+    view = memoryview(data)
     pos = 0
     n = len(data)
     while pos < n:
         if data[pos:pos + 2] != b"\x1f\x8b":
             raise WarcError(f"not a gzip member at offset {pos}")
         d = zlib.decompressobj(wbits=31)
+        parts = []
+        end = pos
         try:
-            out = d.decompress(data[pos:])
+            while not d.eof and end < n:
+                parts.append(d.decompress(view[end:end + _GZIP_CHUNK]))
+                end = min(end + _GZIP_CHUNK, n)
         except zlib.error as exc:
             raise WarcError(f"corrupt gzip member at {pos}: {exc}") from exc
-        yield out
-        consumed = len(data) - pos - len(d.unused_data)
-        if consumed <= 0:
-            break
-        pos += consumed
+        length = end - pos - len(d.unused_data)
+        yield pos, length, b"".join(parts)
+        pos += length
 
 
 def _parse_headers(block: bytes) -> dict[str, str]:
@@ -123,7 +141,7 @@ def iter_warc_records(data: bytes) -> Iterator[dict]:
     ``date``, ``headers`` (WARC named fields, lower-cased), ``body``;
     response records additionally carry ``http_headers`` + ``payload``."""
     if data[:2] == b"\x1f\x8b":
-        blobs: Iterable[bytes] = _split_gzip_members(data)
+        blobs: Iterable[bytes] = (b for _, _, b in _gzip_members(data))
     else:
         blobs = (data,)
     for blob in blobs:
@@ -170,22 +188,8 @@ def iter_cdx_entries(data: bytes) -> Iterator[dict]:
             }
 
     if data[:2] == b"\x1f\x8b":
-        pos = 0
-        n = len(data)
-        while pos < n:
-            if data[pos:pos + 2] != b"\x1f\x8b":
-                raise WarcError(f"not a gzip member at offset {pos}")
-            d = zlib.decompressobj(wbits=31)
-            try:
-                blob = d.decompress(data[pos:])
-            except zlib.error as exc:
-                raise WarcError(
-                    f"corrupt gzip member at {pos}: {exc}") from exc
-            consumed = len(data) - pos - len(d.unused_data)
-            if consumed <= 0:
-                break
-            yield from entries(blob, pos, consumed)
-            pos += consumed
+        for offset, length, blob in _gzip_members(data):
+            yield from entries(blob, offset, length)
     else:
         # plain .warc (or whole-file gzip already inflated by a caller):
         # spans are the record's own byte range in the file
@@ -286,34 +290,26 @@ def roundtrip_df(df):
     ``warc_extract`` oracle query to prove the ingestion path without
     touching disk."""
 
-    def run(batches):
-        import pandas as pd
+    def body(url, html):
+        data = build_warc([build_response_record(url, bytes(html))])
+        (rec,) = (r for r in iter_warc_records(data)
+                  if r["warc_type"] == "response")
+        return {"url": rec["target_uri"], "html": rec["payload"]}
 
-        for pdf in batches:
-            out = {"url": [], "html": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = build_warc(
-                    [build_response_record(url, bytes(html))])
-                (rec,) = (r for r in iter_warc_records(data)
-                          if r["warc_type"] == "response")
-                out["url"].append(rec["target_uri"])
-                out["html"].append(rec["payload"])
-            yield pd.DataFrame(out)
-
-    return df.select("url", "html").mapInPandas(
-        run, schema="url string, html binary")
+    return map_documents(df, (), ("url", "html"), body,
+                         {"url": "string", "html": "binary"},
+                         empty_row={"url": None, "html": None})
 
 
 _CDX_COLS = ("url", "warc_ts", "offset", "length",
              "status", "mime", "payload_len", "payload_md5")
-_CDX_SCHEMA = ("url string, warc_ts string, offset bigint, length bigint, "
-               "status bigint, mime string, payload_len bigint, "
-               "payload_md5 string")
+_CDX_TYPES = dict(zip(_CDX_COLS, ("string", "string", "bigint", "bigint",
+                                   "bigint", "string", "bigint", "string")))
 
 
 def cdx_index_df(spark, path: str):
     """``*.warc[.gz]`` files → CDX-style capture index DataFrame
-    (:data:`_CDX_SCHEMA` plus a leading ``file`` column): the queryable
+    (:data:`_CDX_COLS` plus a leading ``file`` column): the queryable
     index Common Crawl publishes beside every crawl, built with the same
     one-file-one-task parallelism as :func:`warc_pages_df`.
 
@@ -323,23 +319,15 @@ def cdx_index_df(spark, path: str):
     for targeted member range-reads."""
     import os as _os
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict = {"file": []}
-            out.update({k: [] for k in _CDX_COLS})
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                base = _os.path.basename(str(pth))
-                for e in iter_cdx_entries(bytes(content)):
-                    out["file"].append(base)
-                    for k in _CDX_COLS:
-                        out[k].append(e[k])
-            yield pd.DataFrame(out)
+    def body(path, content):
+        es = list(iter_cdx_entries(content))
+        base = _os.path.basename(str(path))
+        return len(es), {"file": [base] * len(es),
+                         **{k: [e[k] for e in es] for k in _CDX_COLS}}
 
     files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(
-        run, schema="file string, " + _CDX_SCHEMA)
+    return map_documents(files, (), ("path", "content"), body,
+                         {"file": "string", **_CDX_TYPES})
 
 
 def cdx_roundtrip_df(df):
@@ -351,27 +339,16 @@ def cdx_roundtrip_df(df):
     so a DuckDB oracle can re-derive every value from the page template;
     member offsets/lengths are pinned by pytest on real multi-record
     files instead (compressed layout isn't SQL-derivable)."""
+    cols = ("url", "status", "mime", "payload_len", "payload_md5")
 
-    def run(batches):
-        import pandas as pd
+    def body(url, html):
+        (e,) = iter_cdx_entries(
+            build_warc([build_response_record(url, bytes(html))]))
+        return {k: e[k] for k in cols}
 
-        for pdf in batches:
-            out = {"url": [], "status": [], "mime": [],
-                   "payload_len": [], "payload_md5": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = build_warc(
-                    [build_response_record(url, bytes(html))])
-                (e,) = iter_cdx_entries(data)
-                out["url"].append(e["url"])
-                out["status"].append(e["status"])
-                out["mime"].append(e["mime"])
-                out["payload_len"].append(e["payload_len"])
-                out["payload_md5"].append(e["payload_md5"])
-            yield pd.DataFrame(out)
-
-    return df.select("url", "html").mapInPandas(
-        run, schema="url string, status bigint, mime string, "
-                    "payload_len bigint, payload_md5 string")
+    return map_documents(df, (), ("url", "html"), body,
+                         {k: _CDX_TYPES[k] for k in cols},
+                         empty_row=dict.fromkeys(cols))
 
 
 def wet_roundtrip_df(df):
@@ -383,48 +360,44 @@ def wet_roundtrip_df(df):
     disk (any framing bug — headers, Content-Length over multi-byte
     UTF-8, gzip member boundaries — surfaces as a value mismatch)."""
 
-    def run(batches):
-        import pandas as pd
+    def body(url, text):
+        data = build_wet([build_conversion_record(url, text)])
+        (rec,) = (r for r in iter_warc_records(data)
+                  if r["warc_type"] == "conversion")
+        return {"url": rec["target_uri"], "text": rec["body"].decode("utf-8")}
 
-        for pdf in batches:
-            out = {"url": [], "text": []}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                data = build_wet([build_conversion_record(url, text)])
-                (rec,) = (r for r in iter_warc_records(data)
-                          if r["warc_type"] == "conversion")
-                out["url"].append(rec["target_uri"])
-                out["text"].append(rec["body"].decode("utf-8"))
-            yield pd.DataFrame(out)
-
-    return df.select("url", "text").mapInPandas(
-        run, schema="url string, text string")
+    return map_documents(df, (), ("url", "text"), body,
+                         {"url": "string", "text": "string"},
+                         empty_row={"url": None, "text": None})
 
 
-def _pages_kernel(batches):
-    """Arrow kernel shared by the batch and streaming WARC sources:
-    (content binary) batches → one row per ``response`` record."""
-    import pandas as pd
-
-    for pdf in batches:
-        out = {"url": [], "warc_ts": [], "html": []}
-        for content in pdf["content"]:
-            for rec in iter_warc_records(bytes(content)):
-                if rec["warc_type"] != "response":
-                    continue
-                out["url"].append(rec["target_uri"])
-                out["warc_ts"].append(rec["date"])
-                out["html"].append(rec["payload"])
-        yield pd.DataFrame(out)
+#: record type → (output column, its Spark type, its value for a record)
+_RECORD_VALUES = {
+    "response": ("html", "binary", lambda rec: rec["payload"]),
+    "conversion": ("text", "string", lambda rec: rec["body"].decode("utf-8")),
+}
 
 
-_PAGES_KERNEL_SCHEMA = "url string, warc_ts string, html binary"
+def _records_df(files, warc_type: str):
+    """(content binary) files → one row per ``warc_type`` record:
+    ``(url, warc_ts timestamp, html | text)``.  The kernel behind the
+    batch and streaming WARC sources and the WET source."""
+    col, col_type, value = _RECORD_VALUES[warc_type]
 
+    def body(content):
+        recs = [r for r in iter_warc_records(content)
+                if r["warc_type"] == warc_type]
+        return len(recs), {"url": [r["target_uri"] for r in recs],
+                           "warc_ts": [r["date"] for r in recs],
+                           col: [value(r) for r in recs]}
 
-def _finish_pages(df):
-    return df.selectExpr(
+    return map_documents(
+        files, (), "content", body,
+        {"url": "string", "warc_ts": "string", col: col_type},
+    ).selectExpr(
         "url",
         "to_timestamp(replace(replace(warc_ts, 'T', ' '), 'Z', '')) as warc_ts",
-        "html")
+        col)
 
 
 def warc_pages_df(spark, path: str):
@@ -433,25 +406,8 @@ def warc_pages_df(spark, path: str):
     ``binaryFile`` yields (path, content); the Arrow kernel inflates
     members and emits one row per ``response`` record.  Parallelism =
     file count (CC segments a crawl into tens of thousands of files)."""
-    files = spark.read.format("binaryFile").load(path)
-    return _finish_pages(files.select("content").mapInPandas(
-        _pages_kernel, schema=_PAGES_KERNEL_SCHEMA))
-
-
-def _wet_kernel(batches):
-    """(content binary) batches → one row per ``conversion`` record."""
-    import pandas as pd
-
-    for pdf in batches:
-        out = {"url": [], "warc_ts": [], "text": []}
-        for content in pdf["content"]:
-            for rec in iter_warc_records(bytes(content)):
-                if rec["warc_type"] != "conversion":
-                    continue
-                out["url"].append(rec["target_uri"])
-                out["warc_ts"].append(rec["date"])
-                out["text"].append(rec["body"].decode("utf-8"))
-        yield pd.DataFrame(out)
+    return _records_df(spark.read.format("binaryFile").load(path),
+                       "response")
 
 
 def wet_docs_df(spark, path: str):
@@ -462,13 +418,8 @@ def wet_docs_df(spark, path: str):
     start from conversion records and skip the HTML parse entirely —
     every downstream text operator (quality, dedup, split, pack) takes
     this frame unchanged."""
-    files = spark.read.format("binaryFile").load(path)
-    df = files.select("content").mapInPandas(
-        _wet_kernel, schema="url string, warc_ts string, text string")
-    return df.selectExpr(
-        "url",
-        "to_timestamp(replace(replace(warc_ts, 'T', ' '), 'Z', '')) as warc_ts",
-        "text")
+    return _records_df(spark.read.format("binaryFile").load(path),
+                       "conversion")
 
 
 def read_warc_stream(spark, path: str, max_files_per_trigger: int = 4):
@@ -486,5 +437,4 @@ def read_warc_stream(spark, path: str, max_files_per_trigger: int = 4):
              .option("maxFilesPerTrigger", max_files_per_trigger)
              .option("pathGlobFilter", "*.warc*")
              .load(path))
-    return _finish_pages(files.select("content").mapInPandas(
-        _pages_kernel, schema=_PAGES_KERNEL_SCHEMA))
+    return _records_df(files, "response")

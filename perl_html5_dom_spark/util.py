@@ -1,4 +1,38 @@
-"""Session-shared SparkSession hygiene helpers.
+"""Shared plumbing: the per-row kernel runner and SparkSession hygiene.
+
+One runner, :func:`map_documents`, owns everything around the per-row
+body of every Arrow kernel in the package — the HTML and PDF operators
+(``extract_pages``, the ``css_*`` kernels, ``nodes_df``,
+``extract_pdfs``), the text statistics (``quality_scores``,
+``ngram_repetition``), the WARC/WET/CDX decoders, the catalog kernels
+of ``queries.py`` and the corpus generators of ``sources/``.  It is
+the analog of the reference's single Perl↔C binding layer (DOM.xs):
+one ``mapInPandas`` pass whose batches cross the JVM→Python boundary
+via Arrow, so batch, null, memo and containment policy live here once
+and every operator keeps only its body.  Only the two MinHash/SimHash
+signature kernels of ``operators/dedup.py`` keep their own
+``mapInPandas``: their numpy step runs once per batch across all
+distinct texts (``reduceat``), which a per-row body cannot express.
+
+  * **memo** — web corpora carry 30-50% byte-identical pages (mirrors,
+    re-crawls, session urls) and every body is a pure function of its
+    payload, so each DISTINCT payload runs once per Arrow batch and
+    replicas reuse its result.  The memo dies with the batch (bounded
+    memory: at most one batch of results); on an all-distinct input it
+    costs one dict probe per row;
+  * **keys** — the ``keys`` columns are copied from the input onto
+    every output row, never through the memo, so two rows sharing a
+    payload keep their own key values;
+  * **null payloads** — a row with a null payload value emits the
+    operator's ``empty_row`` (``err`` null; all-``None`` mirrors SQL
+    NULL, zeros mirror a count over nothing); a per-match operator emits
+    no rows;
+  * **containment** — ``max_bytes`` truncates an oversized payload
+    before the body runs (HTML5 parsing is total, so the prefix still
+    parses) and ``on_error="contain"`` turns a raising body into the
+    empty result instead of failing the task; the ``err`` column, where
+    an operator has one, says ``truncated: N > M bytes`` and/or
+    ``Type: message``.  Operators without an ``err`` column fail fast.
 
 Several operators lower dialect-portable SQL (the same text a DuckDB
 oracle runs) onto Spark via temp views.  A fixed view name is fine for
@@ -16,11 +50,96 @@ import itertools
 import os
 import tempfile
 import uuid
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
 _counter = itertools.count()
+
+
+def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
+                  columns: dict, *, empty_row: dict | None = None,
+                  max_bytes: int | None = None,
+                  on_error: str = "raise") -> DataFrame:
+    """DataFrame(*keys, *payload) → DataFrame(*keys, *columns): ``body``
+    run once per distinct non-null payload of each Arrow batch.
+
+    ``keys`` names the input columns copied onto every output row, with
+    their Spark types from ``df.schema``; they may overlap the payload.
+    ``payload`` names one input column or a tuple of them: their values
+    are the memo key and ``body``'s arguments (``max_bytes`` applies to
+    a single payload column).  ``columns`` maps each column ``body``
+    returns, plus ``err`` for per-document operators, to its Spark type
+    in output order:
+
+    * per-document operators pass ``empty_row`` (column → value, the row
+      a null or failed payload emits) and ``body`` returns one such
+      mapping;
+    * per-match operators pass no ``empty_row`` and ``body`` returns
+      ``(n, {column: list of n values})``; a null or failed payload
+      emits no rows.
+
+    Output is built column by column: keys are copied (per match:
+    repeated) as whole arrays, and a memo hit costs one append (one
+    list extend per match column) per body column.  Policy: see the
+    module docstring."""
+    keys = tuple(keys)
+    payload = (payload,) if isinstance(payload, str) else tuple(payload)
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    names = [*keys, *columns]
+    sinks = [c for c in columns if c != "err"]
+    schema = ", ".join([f"{k} {types[k]}" for k in keys]
+                       + [f"{c} {t}" for c, t in columns.items()])
+    empty = (empty_row if empty_row is not None else (0, {}), None)
+
+    def one(data):
+        err = None
+        if max_bytes is not None and len(data[0]) > max_bytes:
+            err = f"truncated: {len(data[0])} > {max_bytes} bytes"
+            data = (data[0][:max_bytes],)
+        try:
+            return body(*data), err
+        except Exception as exc:  # noqa: BLE001 — containment
+            if on_error == "raise":
+                raise
+            msg = f"{type(exc).__name__}: {exc}"
+            return empty[0], (f"{err}; {msg}" if err else msg)
+
+    def run(batches: Iterable) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            out = {c: [] for c in columns}
+            errs = out.get("err")
+            cols = [(out[c], c) for c in sinks]
+            counts = []   # per-match: output rows of each input row
+            memo: dict = {}
+            for data in zip(*(pdf[p] for p in payload)):
+                if None in data:
+                    r, err = empty
+                else:
+                    hit = memo.get(data)
+                    if hit is None:
+                        hit = memo[data] = one(data)
+                    r, err = hit
+                if empty_row is not None:
+                    for col, c in cols:
+                        col.append(r[c])
+                    if errs is not None:
+                        errs.append(err)
+                else:
+                    n, d = r
+                    counts.append(n)
+                    if n:
+                        for col, c in cols:
+                            col.extend(d[c])
+            for k in keys:
+                v = pdf[k].values
+                out[k] = v if empty_row is not None else v.repeat(counts)
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select(*dict.fromkeys(keys + payload)).mapInPandas(
+        run, schema=schema)
 
 
 @contextlib.contextmanager

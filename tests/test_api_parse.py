@@ -103,3 +103,13 @@ def test_default_parse_loads_one_builder():
         "HTML5DOM().parseFragment('<td>x', 'tr')\n"
         "assert 'perl_html5_dom_spark.dom.treebuilder' in sys.modules\n")
     subprocess.run([sys.executable, "-c", code], check=True, timeout=60)
+
+
+@pytest.mark.parametrize("depth", [400, 1000])
+def test_api_parse_deep_tables(depth):
+    # the fast lane's table sub-parser recurses per nesting level; past
+    # the interpreter's limit it bails to the full machine, which parses
+    # any depth, instead of raising RecursionError
+    src = "<!DOCTYPE html><html><body>" + "<table><tr><td>" * depth + "x"
+    tree = assert_api_equals_full(src.encode())
+    assert len(tree.doc.parent) > 3 * depth

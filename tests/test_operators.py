@@ -328,31 +328,27 @@ _PNG_1X1 = bytes.fromhex(
 
 
 def test_decode_image_kernel_fake_and_real():
-    import pandas as pd
     import pytest
 
-    from perl_html5_dom_spark.queries import _decode_image_kernel
+    from perl_html5_dom_spark.queries import _decode_image
 
     fake = b"FAKEIMG1;w=12;h=7;" + b"\x00" * 3
-    [out] = list(_decode_image_kernel(
-        [pd.DataFrame({"doc_id": [1], "image": [fake]})]))
-    assert (out.width[0], out.height[0], out.n_bytes[0]) == (12, 7, len(fake))
+    assert _decode_image(fake) == {
+        "width": 12, "height": 7, "n_bytes": len(fake)}
 
     # real PNG magic: decodes via Pillow when present, otherwise the
     # honest NotImplementedError guard fires
-    batch = [pd.DataFrame({"doc_id": [2], "image": [_PNG_1X1]})]
     try:
         import PIL  # noqa: F401
-        [out] = list(_decode_image_kernel(batch))
-        assert (out.width[0], out.height[0]) == (1, 1)
+        out = _decode_image(_PNG_1X1)
+        assert (out["width"], out["height"]) == (1, 1)
     except ImportError:
         with pytest.raises(NotImplementedError):
-            list(_decode_image_kernel(batch))
+            _decode_image(_PNG_1X1)
 
     # unknown payloads never decode silently
     with pytest.raises(NotImplementedError):
-        list(_decode_image_kernel(
-            [pd.DataFrame({"doc_id": [3], "image": [b"garbage"]})]))
+        _decode_image(b"garbage")
 
 
 def test_duplicated_ngrams(spark):
@@ -577,6 +573,36 @@ def test_quality_scores_matches_sql_form(spark, docs):
     got = {r["doc_id"]: r.asDict()
            for r in ts.quality_scores(sample).collect()}
     assert got == want
+
+
+def test_runner_keys_stay_aligned_with_memo(spark):
+    """One partition, so all rows share one Arrow batch and one memo:
+    a text repeated under other keys is counted once, but every row
+    keeps its own key values, and a null text keeps its row."""
+    from perl_html5_dom_spark.operators import textstats as ts
+
+    df = spark.createDataFrame(
+        [(1, "a b a b a b c d", "x", 10), (2, "a b a b a b c d", "y", 20),
+         (3, None, "z", 30), (4, "solo", "w", 40),
+         (5, "a b a b a b c d", "v", 50)],
+        "doc_id long, text string, tag string, n long").coalesce(1)
+
+    q = {r.doc_id: r for r in ts.quality_scores(
+        df, carry=("tag", "n", "text")).collect()}
+    assert {d: (r.tag, r.n, r.text) for d, r in q.items()} == {
+        1: ("x", 10, "a b a b a b c d"), 2: ("y", 20, "a b a b a b c d"),
+        3: ("z", 30, None), 4: ("w", 40, "solo"),
+        5: ("v", 50, "a b a b a b c d")}
+    assert [q[d].n_tokens for d in (1, 2, 4, 5)] == [8, 8, 1, 8]
+    assert q[3].n_chars is None and q[3].quality is None
+
+    rep = ts.ngram_repetition(df).collect()
+    assert sorted(r.doc_id for r in rep) == [1, 2, 3, 4, 5]
+    rep = {r.doc_id: r for r in rep}
+    # "a b" x3 over 15 chars (hand computation in the test above)
+    assert [rep[d].top2_frac for d in (1, 2, 5)] == [0.6] * 3
+    for d in (3, 4):   # null and single-token text: zero signal
+        assert rep[d].top2_frac == 0.0 and rep[d].keep_rep
 
 
 def test_simhash_matches_sql_form(spark, corpus):

@@ -470,3 +470,45 @@ def test_trailing_comment_yields_no_token():
     # a commented-out show operator after the last real token stays dead
     assert _spans_from_content(
         b"BT 10 700 Td (a) Tj ET %BT (b) Tj") == [(700.0, 10.0, "a")]
+
+
+# ---------------------------------------------------------------------------
+# termination: reference cycles raise PdfError instead of looping.  Each
+# shape runs in a child interpreter under a wall-clock bound, so a
+# regression fails on the timeout instead of hanging the suite.
+# ---------------------------------------------------------------------------
+
+#: source text building ``objs`` in the child (``one_page`` in scope)
+_CYCLES = {
+    # 1 0 obj 1 0 R endobj, used as /Root
+    "self_ref_root": "objs = {1: b'1 0 R'}",
+    # /Root -> 2 -> 3 -> 2
+    "two_object_cycle": "objs = {1: b'2 0 R', 2: b'3 0 R', 3: b'2 0 R'}",
+    # a /Pages node whose /Kids contains itself
+    "self_containing_kids": (
+        "objs = one_page(b'BT 10 700 Td (x) Tj ET')\n"
+        "objs[2] = b'<< /Type /Pages /Kids [3 0 R 2 0 R] /Count 1 >>'"),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_CYCLES))
+def test_reference_cycles_terminate(shape):
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys; sys.path.insert(0, 'tests')\n"
+        "from test_pdf import build_pdf, one_page\n"
+        "from perl_html5_dom_spark.dom.pdf import PdfError, extract_pdf_text\n"
+        + _CYCLES[shape] + "\n"
+        "try:\n"
+        "    extract_pdf_text(build_pdf(objs))\n"
+        "except PdfError as e:\n"
+        "    print(e)\n"
+        "else:\n"
+        "    raise AssertionError('no error')\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=30, check=True, cwd=root)
+    assert "cycle" in out.stdout

@@ -1,10 +1,15 @@
-"""Static checks on the scripts around the package: the tools, the
-stage benchmark, the Spark job and the frozen harness entry points.
+"""Static checks on the package and the scripts around it.
 
-No test runs these scripts, so a name deleted from the package would
-break them silently.  This parses each one with ``ast`` and checks that
-every ``perl_html5_dom_spark`` name it imports, and every ``alias.attr``
-it reads from an imported package module, still exists.
+No test runs the scripts (the tools, the stage benchmark, the Spark job
+and the frozen harness entry points), so a name deleted from the
+package would break them silently.  This parses each one with ``ast``
+and checks that every ``perl_html5_dom_spark`` name it imports, and
+every ``alias.attr`` it reads from an imported package module, still
+exists.
+
+The package itself is checked to keep one per-row kernel runner: only
+``util.map_documents`` and the two batch-wide dedup signature kernels
+call ``mapInPandas``.
 """
 
 import ast
@@ -85,3 +90,46 @@ def test_dangling_reference_is_caught(tmp_path):
         "2: perl_html5_dom_spark.util.gone",
         "3: perl_html5_dom_spark.no_such_module",
         "5: perl_html5_dom_spark.operators.dedup._no_such_kernel"]
+
+
+#: the only functions allowed to call ``mapInPandas``: the per-row
+#: runner, and the two dedup kernels whose numpy step spans a whole batch
+MAP_IN_PANDAS_CALLERS = {
+    "util.map_documents",
+    "operators.dedup._doc_minhash_sets",
+    "operators.dedup.simhash",
+}
+
+
+def _map_in_pandas_callers(pkg: Path) -> list[str]:
+    """``module.function`` of every ``mapInPandas`` call under ``pkg``,
+    named by the enclosing top-level function (``<module>`` outside
+    one)."""
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            name = (top.name if isinstance(
+                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                else "<module>")
+            found += [f"{mod}.{name}" for node in ast.walk(top)
+                      if isinstance(node, ast.Call)
+                      and isinstance(node.func, ast.Attribute)
+                      and node.func.attr == "mapInPandas"]
+    return found
+
+
+def test_one_per_row_runner():
+    callers = _map_in_pandas_callers(ROOT / PKG)
+    assert sorted(callers) == sorted(MAP_IN_PANDAS_CALLERS)
+
+
+def test_map_in_pandas_caller_is_caught(tmp_path):
+    (tmp_path / "ops").mkdir()
+    (tmp_path / "ops" / "k.py").write_text(
+        "def kernel(df):\n"
+        "    return df.mapInPandas(run, schema='x long')\n"
+        "df.mapInPandas(run, schema='x long')\n")
+    assert _map_in_pandas_callers(tmp_path) == [
+        "ops.k.kernel", "ops.k.<module>"]

@@ -126,6 +126,46 @@ def test_cdx_entries_range_read():
         assert e["payload_md5"] == hashlib.md5(bodies[i]).hexdigest()
 
 
+def test_gzip_member_walk_is_linear():
+    """Splitting a per-record-gzip file into members must not copy the
+    rest of the file per member: 4x the records may take at most 6x the
+    time (the quadratic walk took ~20x)."""
+    import time
+
+    from perl_html5_dom_spark.sources.warc import iter_cdx_entries
+
+    def best(n):
+        data = build_warc(make_records(1) * n)
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            assert sum(1 for _ in iter_warc_records(data)) == n + 1
+            assert sum(1 for _ in iter_cdx_entries(data)) == n
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    assert best(6000) / best(1500) <= 6
+
+
+def test_gzip_member_larger_than_inflate_chunk():
+    import random
+
+    from perl_html5_dom_spark.sources.warc import (
+        _GZIP_CHUNK, iter_cdx_entries)
+
+    body = random.Random(0).randbytes(3 * _GZIP_CHUNK)
+    recs = [build_response_record("https://x.org/big", body),
+            *make_records(1)]
+    data = build_warc(recs)
+    got = [r["payload"] for r in iter_warc_records(data)
+           if r["warc_type"] == "response"]
+    assert got == [body, b"<h1>t0</h1><p>doc 0</p>"]
+    big, small = iter_cdx_entries(data)
+    assert big["length"] > 3 * _GZIP_CHUNK
+    assert big["offset"] + big["length"] == small["offset"]
+    assert small["offset"] + small["length"] == len(data)
+
+
 def test_spark_cdx_index(spark, tmp_path):
     """cdx_index_df over a two-file drop: every capture indexed with
     its file, monotonic member spans per file, envelope fields parsed."""
