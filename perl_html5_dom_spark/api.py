@@ -5,14 +5,10 @@ The reference's entry point is ``HTML5::DOM->new(\\%opts)->parse($html)``
 Accepts str or bytes; bytes go through the encoding sniffing pipeline
 (meta prescan → BOM → heuristic → default, utils.c:620-649).
 
-Which tree builder runs: with the tree options at their defaults,
-``parse`` builds through the fast lane (``dom.fastparse.parse``, the
-same call the Spark extraction kernel makes), which falls back to the
-full insertion-mode machine (``dom.treebuilder.TreeBuilder``) whenever
-a document leaves its common subset; either way the tree is the one the
-full machine builds.  Non-default tree options, ``parseFragment`` and
-chunked parsing always run the full machine, which is imported only
-when one of them is used or the fast lane bails.
+Every document, fragment and chunked parse builds with the one tree
+builder, the insertion-mode machine ``dom.treebuilder.TreeBuilder``.
+``parse`` runs ``dom.fastparse.parse_document`` — the same sniff-then-
+build sequence the Spark extraction kernel runs.
 """
 
 from __future__ import annotations
@@ -20,6 +16,7 @@ from __future__ import annotations
 from .dom import encoding as _enc
 from .dom import fastparse
 from .dom.node import Collection, Element, Fragment, Node, TokenList, Tree, _wrap
+from .dom.treebuilder import TreeBuilder
 from .selector.parser import SelectorList, parse_selector
 
 
@@ -43,13 +40,15 @@ class HTML5DOM:
         #: parser options (reference DOM.pod:3234-3244): scripts=1 means
         #: <noscript> contents become one text node; ignore_whitespace
         #: drops whitespace-only text tokens; ignore_doctype drops the
-        #: doctype token (document stays quirks, no doctype node)
-        self._tb_opts = dict(scripts=scripts,
-                             ignore_whitespace=ignore_whitespace,
-                             ignore_doctype=ignore_doctype)
-        #: the fast lane implements the default tree options only
-        self._fast = (scripts and not ignore_whitespace
-                      and not ignore_doctype)
+        #: doctype token (document stays quirks, no doctype node).  Only
+        #: the ones that differ from TreeBuilder's defaults are kept.
+        self._tb_opts: dict = {}
+        if not scripts:
+            self._tb_opts["scripts"] = False
+        if ignore_whitespace:
+            self._tb_opts["ignore_whitespace"] = True
+        if ignore_doctype:
+            self._tb_opts["ignore_doctype"] = True
 
     def _sniff(self, encoding: str | None) -> dict:
         """Keyword arguments of ``encoding.sniff_and_decode``."""
@@ -65,22 +64,16 @@ class HTML5DOM:
         return _enc.sniff_and_decode(html, **self._sniff(encoding))
 
     def parse(self, html, encoding: str | None = None) -> Tree:
-        """Decode ``html`` and build its tree (``fastparse.parse_document``,
-        the same sequence the Spark kernels run).  Default tree options
-        take the fast lane (falling back to the full machine on a bail);
-        any non-default option runs the full machine directly."""
-        build = None
-        if not self._fast:
-            from .dom.treebuilder import TreeBuilder
-
-            build = TreeBuilder(**self._tb_opts).parse
+        """Decode ``html`` and build its tree (``fastparse.parse_document``).
+        With the default tree options the build is ``fastparse.parse``,
+        the call the Spark kernels make; other options get a
+        ``TreeBuilder`` of their own."""
+        build = TreeBuilder(**self._tb_opts).parse if self._tb_opts else None
         return Tree(fastparse.parse_document(
             html, build, **self._sniff(encoding)))
 
     def parseFragment(self, html, tag: str = "div",
                       encoding: str | None = None) -> Fragment:
-        from .dom.treebuilder import TreeBuilder
-
         enc, text = self._decode(html, encoding)
         doc, frag = TreeBuilder(**self._tb_opts).parse_fragment(text, tag)
         doc.encoding = enc

@@ -25,7 +25,6 @@ Cross-chunk details handled here:
 from __future__ import annotations
 
 from .document import Document
-from .tokenizer import Tokenizer
 from .treebuilder import TreeBuilder
 
 
@@ -39,14 +38,8 @@ class ChunkedParser:
     """One in-progress document parse fed by successive text chunks."""
 
     def __init__(self) -> None:
-        tb = TreeBuilder()
-        tb.doc = Document()
-        tb.doc.scripting = tb.scripts
-        tb.tok = Tokenizer("")
-        tb.stack = []
-        tb.mode = "initial"
-        tb.done = False
-        self.tb = tb
+        self.tb = TreeBuilder()
+        self.tb.begin("")
         self._raw_tail_cr = False
         self._base = 0   # chars trimmed off the front of tok.src
         self.ended = False
@@ -68,7 +61,7 @@ class ChunkedParser:
         # Amortized buffer maintenance: everything before tok.pos is
         # fully consumed (the held-back token, if any, starts AT pos),
         # so drop it before appending — an N-chunk feed is O(total),
-        # not O(total^2).  Token positions are re-based in _pump.
+        # not O(total^2).  Token positions are re-based in _pull.
         if tok.pos > 8192 and tok.pos * 2 > len(tok.src):
             self._base += tok.pos
             tok.src = tok.src[tok.pos:]
@@ -76,44 +69,39 @@ class ChunkedParser:
         tok.src += chunk
         tok.n = len(tok.src)
         tok._done = False
-        self._pump(final=False)
+        self.tb.pump(self._pull)
         return self
 
     def end(self) -> Document:
         """Signal EOF; returns the completed Document."""
         if not self.ended:
             self.ended = True
-            self._pump(final=True)
+            self.tb.pump(self._pull)
         return self.tb.doc
 
     def tree(self) -> Document:
         """The (possibly in-progress) document — parseChunkTree analog."""
         return self.tb.doc
 
-    # -- pump -----------------------------------------------------------
-    def _pump(self, final: bool) -> None:
-        tb = self.tb
-        tok = tb.tok
-        while not tb.done:
-            if tb.pending:
-                tb._dispatch(tb.pending.pop())
-                continue
-            tok.allow_cdata = (
-                tb._has_foreign and tb._in_foreign_cdata_context())
-            save = (tok.pos, tok._done, tok._raw_mode, tok._raw_tag)
-            token = tok.next_token()
-            if not final and (token[0] == "eof" or tok.pos >= tok.n):
-                # possibly-truncated token: hold it back until more input
-                tok.pos, tok._done, tok._raw_mode, tok._raw_tag = save
-                return
-            if self._base:
-                fields = _POS_FIELDS.get(token[0])
-                if fields:
-                    token = list(token)
-                    for i in fields:
-                        token[i] += self._base
-                    token = tuple(token)
-            tb._dispatch(token)
+    # -- token source ---------------------------------------------------
+    def _pull(self):
+        """The next token for ``TreeBuilder.pump``, or None to wait for
+        more input."""
+        tok = self.tb.tok
+        save = (tok.pos, tok._done, tok._raw_mode, tok._raw_tag)
+        token = tok.next_token()
+        if not self.ended and (token[0] == "eof" or tok.pos >= tok.n):
+            # possibly-truncated token: hold it back until more input
+            tok.pos, tok._done, tok._raw_mode, tok._raw_tag = save
+            return None
+        if self._base:
+            fields = _POS_FIELDS.get(token[0])
+            if fields:
+                token = list(token)
+                for i in fields:
+                    token[i] += self._base
+                token = tuple(token)
+        return token
 
 
 def parse_chunked(chunks, encoding_name: str | None = None) -> Document:

@@ -12,31 +12,41 @@ text node — matching the reference's ``scripts`` option default
 ``<noscript>`` contents as child nodes via the spec's "in head noscript"
 insertion mode; ``ignore_whitespace`` / ``ignore_doctype`` mirror the
 reference's remaining parser flags (DOM.pod:3234-3238).
+
+This is the package's one tree builder: every document, fragment and
+chunked parse runs through :meth:`TreeBuilder.pump`.  Its hot path is
+specialised in place — per-tag open-element counts (``_open``) let the
+scope checks and stack walks return at once when the target is not open,
+"in body" dispatches start and end tags through rule tables, elements
+and text are appended straight onto the Document's arrays, and a table
+rule that reprocesses a tag calls the next mode directly.
 """
 
 from __future__ import annotations
 
 from .constants import (
     BLOCK_START,
-    ELEMENT_NODE,
-    FOREIGN_ATTR_ADJUSTMENTS,
+    BUTTON_SCOPE_EXTRA,
     FOREIGN_BREAKOUT,
     FORMATTING_TAGS,
     HEADING_TAGS,
     HTML_INTEGRATION_SVG,
     IMPLIED_END_TAGS,
     IMPLIED_END_TAGS_THOROUGH,
+    LIST_ITEM_SCOPE_EXTRA,
     MATHML_TEXT_INTEGRATION,
     NS_HTML,
     NS_MATHML,
     NS_SVG,
     RAWTEXT_TAGS,
     RCDATA_TAGS,
+    SCOPE_BASE,
+    SELECT_SCOPE_INVERT,
     SPECIAL_HTML,
     SPECIAL_MATHML,
     SPECIAL_SVG,
     SVG_TAG_ADJUSTMENTS,
-    VOID_TAGS,
+    TABLE_SCOPE,
     adjust_foreign_attrs,
 )
 from .document import NULL, Document
@@ -45,10 +55,52 @@ from .tokenizer import Tokenizer
 _WS = "\t\n\x0c "
 MARKER = ("MARKER",)
 
-_CLOSE_P_BLOCKS = BLOCK_START  # same list for the end-tag variant
+#: "has an element in scope" boundaries, per scope flavour and namespace
+_LIST_SCOPE = SCOPE_BASE | LIST_ITEM_SCOPE_EXTRA
+_BUTTON_SCOPE = SCOPE_BASE | BUTTON_SCOPE_EXTRA
+_MATHML_SCOPE = MATHML_TEXT_INTEGRATION | frozenset(("annotation-xml",))
+_TABLE_PARTS = frozenset(("table", "tbody", "tfoot", "thead", "tr"))
+_CELLS = frozenset(("td", "th"))
+_SECTIONS = frozenset(("tbody", "thead", "tfoot"))
+_TABLE = frozenset(("table",))
+#: "clear the stack back to a table / table body / table row context"
+_TABLE_CONTEXT = frozenset(("table", "template", "html"))
+_TBODY_CONTEXT = _SECTIONS | _TABLE_CONTEXT - {"table"}
+_ROW_CONTEXT = frozenset(("tr", "template", "html"))
+#: "in table" start tags that open a table part: tag -> (mode, the
+#: element inserted first and the token reprocessed, or None)
+_TABLE_SECTION_START = {
+    "caption": ("in_caption", None), "colgroup": ("in_column_group", None),
+    "col": ("in_column_group", "colgroup"), "tbody": ("in_table_body", None),
+    "thead": ("in_table_body", None), "tfoot": ("in_table_body", None),
+    "tr": ("in_table_body", "tbody"), "td": ("in_table_body", "tbody"),
+    "th": ("in_table_body", "tbody")}
+#: start tags that close a caption or a cell
+_TABLE_STRUCTURE = frozenset(_TABLE_SECTION_START)
+_TABLE_HEAD_START = frozenset(("caption", "col", "colgroup")) | _SECTIONS
+_ROW_CLOSERS = _TABLE_HEAD_START | {"tr"}
+#: end tags each table mode ignores
+_TABLE_END_IGNORED = frozenset(
+    ("body", "caption", "col", "colgroup", "html", "tbody", "td", "tfoot",
+     "th", "thead", "tr"))
+_CAPTION_END_IGNORED = _TABLE_END_IGNORED - {"caption"}
+_TABLE_BODY_END_IGNORED = frozenset(
+    ("body", "caption", "col", "colgroup", "html", "td", "th", "tr"))
+_ROW_END_IGNORED = _TABLE_BODY_END_IGNORED - {"tr"}
+_CELL_END_IGNORED = frozenset(("body", "caption", "col", "colgroup", "html"))
+_SELECT_IN_TABLE_CLOSERS = frozenset(
+    ("caption", "table", "tbody", "tfoot", "thead", "tr", "td", "th"))
 
 
 class TreeBuilder:
+    __slots__ = (
+        "scripts", "ignore_whitespace", "ignore_doctype", "doc", "tok",
+        "stack", "_open", "afe", "mode", "original_mode",
+        "template_modes", "head_id", "form_id", "frameset_ok",
+        "foster_parenting", "pending_table_text", "skip_newline",
+        "fragment_context_tag", "fragment_context_ns", "done", "pending",
+        "_has_foreign", "_arrays")
+
     def __init__(self, scripts: bool = True, ignore_whitespace: bool = False,
                  ignore_doctype: bool = False) -> None:
         #: reference parser options (DOM.pod:3234-3244)
@@ -58,6 +110,10 @@ class TreeBuilder:
         self.doc: Document = None  # type: ignore[assignment]
         self.tok: Tokenizer = None  # type: ignore[assignment]
         self.stack: list[int] = []
+        #: open elements per tag name (any namespace): "in scope" and
+        #: the other stack walks return at once when the target is not
+        #: open, so deep nesting costs O(1) per token instead of O(depth)
+        self._open: dict[str, int] = {}
         self.afe: list = []  # entries: [node_id, tag, attrs] lists or MARKER
         self.mode = "initial"
         self.original_mode = ""
@@ -73,26 +129,22 @@ class TreeBuilder:
         self.done = False
         self.pending: list = []  # reprocess queue (LIFO)
         # sticky flag: any foreign (SVG/MathML) element ever entered the
-        # tree/stack; false ⇒ allow_cdata is trivially false (hot loop)
+        # tree/stack; false ⇒ the current node is HTML without a look
         self._has_foreign = False
 
     # ==================================================================
     # public API
     # ==================================================================
     def parse(self, src: str) -> Document:
-        self.doc = Document()
-        self.doc.scripting = self.scripts
-        self.tok = Tokenizer(src)
-        self._run()
+        self.begin(src)
+        self.pump(self.tok.next_token)
         return self.doc
 
     def parse_fragment(self, src: str, context_tag: str = "div",
                        context_ns: int = NS_HTML,
                        doc: Document | None = None) -> tuple[Document, int]:
         """Fragment parsing (WHATWG §13.4). Returns (doc, fragment_node)."""
-        self.doc = doc if doc is not None else Document()
-        self.doc.scripting = self.scripts
-        self.tok = Tokenizer(src)
+        self.begin(src, doc)
         self.fragment_context_tag = context_tag
         self.fragment_context_ns = context_ns
         if context_ns != NS_HTML:
@@ -100,7 +152,7 @@ class TreeBuilder:
         frag = self.doc.new_fragment()
         root = self.doc.new_element("html")
         self.doc.append_child(frag, root)
-        self.stack = [root]
+        self._push(root)
         if context_ns == NS_HTML:
             if context_tag in RCDATA_TAGS:
                 self.tok.set_rawtext(context_tag, "rcdata")
@@ -118,7 +170,7 @@ class TreeBuilder:
                 # stack of template insertion modes with "in template"
                 self.template_modes.append("in_template")
         self._reset_insertion_mode()
-        self._run(fragment=True)
+        self.pump(self.tok.next_token)
         # re-home children from the synthetic root onto the fragment node
         for c in self.doc.children(root):
             self.doc.append_child(frag, c)
@@ -129,83 +181,115 @@ class TreeBuilder:
     # ==================================================================
     # main loop
     # ==================================================================
-    def _run(self, fragment: bool = False) -> None:
+    def begin(self, src: str, doc: Document | None = None) -> None:
+        """Start a parse of ``src`` into ``doc`` (a new Document if None)
+        in the "initial" insertion mode; :meth:`pump` feeds it."""
+        d = self.doc = doc if doc is not None else Document()
+        d.scripting = self.scripts
+        self.tok = Tokenizer(src)
+        self.stack = []
+        self._open = {}
+        self.mode = "initial"
         self.done = False
-        if not fragment:
-            self.stack = []
-            self.mode = "initial"
+        # the Document's arrays, for node creation without method hops
+        self._arrays = (
+            d.parent, d.first_child, d.last_child, d.next_sib, d.prev_sib,
+            d.tag, d.ns, d.node_type, d.text, d.attrs, d.self_closed,
+            d.raw_begin, d.raw_length, d.elem_begin, d.elem_length)
+
+    def pump(self, pull) -> None:
+        """Run tokens through the tree constructor until EOF is processed
+        or ``pull`` returns None (the chunked parser's "need more
+        input").  Reprocessed tokens go first; ``pull`` is asked for a
+        new one only after ``allow_cdata`` is set for the adjusted
+        current node.  This is the one token loop of every document,
+        fragment and chunked parse."""
         pending = self.pending
         tok = self.tok
-        dispatch = self._dispatch
+        skip_ws = self.ignore_whitespace
+        stack = self.stack
+        nss = self.doc.ns
+        modes = _MODES
+        # nodes are appended to the arrays directly, not through the
+        # Document's methods: mark its document order stale once here
+        self.doc._dirty = True
+        # a fragment parsed in a foreign context: its root stands for the
+        # context element, so the dispatcher decides there too
+        foreign_root = (self.fragment_context_tag is not None
+                        and self.fragment_context_ns != NS_HTML)
         while not self.done:
+            # the adjusted current node is foreign: CDATA sections are
+            # recognised and the dispatcher picks HTML or foreign rules
+            foreign = (self._has_foreign and nss[stack[-1]] != NS_HTML
+                       if stack else False)
             if pending:
                 token = pending.pop()
             else:
-                # allow_cdata can only be true with a foreign element on
-                # the stack; _has_foreign is a sticky cheap pre-filter
-                tok.allow_cdata = (
-                    self._has_foreign and self._in_foreign_cdata_context())
-                token = tok.next_token()
-            if self.ignore_whitespace and token[0] == "char" \
-                    and not token[1].strip(_WS):
+                tok.allow_cdata = foreign
+                token = pull()
+                if token is None:
+                    return
+            if skip_ws and token[0] == "char" and not token[1].strip(_WS):
                 continue
-            dispatch(token)
+            if foreign or (foreign_root and len(stack) == 1):
+                self._dispatch(token)
+            else:
+                modes[self.mode](self, token)
 
     def _reprocess(self, token) -> None:
         self.pending.append(token)
 
-    def _in_foreign_cdata_context(self) -> bool:
-        node = self._adjusted_current_node()
-        return node != NULL and self.doc.ns[node] != NS_HTML
-
-    def _adjusted_current_node(self) -> int:
-        if not self.stack:
-            return NULL
-        if len(self.stack) == 1 and self.fragment_context_tag is not None:
-            # fragment case: adjusted current node = context element
-            return self.stack[0] if self.fragment_context_ns == NS_HTML else self.stack[0]
-        return self.stack[-1]
+    def _reprocess_now(self, token) -> None:
+        """Reprocess ``token`` at once rather than through the queue: the
+        same thing, as the table rules call it last, unless the
+        dispatcher would send it to the foreign content rules."""
+        stack = self.stack
+        if self._has_foreign and (
+                self.doc.ns[stack[-1]] != NS_HTML or (
+                    len(stack) == 1 and self.fragment_context_tag is not None)):
+            self.pending.append(token)
+        else:
+            _MODES[self.mode](self, token)
 
     # ==================================================================
     # dispatcher (HTML vs foreign content)
     # ==================================================================
     def _dispatch(self, token) -> None:
+        """The tree construction dispatcher (WHATWG §13.2.6): HTML rules
+        for an HTML adjusted current node and at integration points,
+        the rules for foreign content otherwise."""
         tt = token[0]
         stack = self.stack
         if not stack or tt == "eof":
             self._process(token)
             return
-        doc = self.doc
         node = stack[-1]
-        ns = doc.ns[node]
-        # hot path: plain HTML context, no fragment override
-        if ns == NS_HTML and (
-            self.fragment_context_tag is None or len(stack) != 1
-        ):
-            self._process(token)
-            return
-        tag = doc.tag[node]
         if len(stack) == 1 and self.fragment_context_tag is not None:
             ns, tag = self.fragment_context_ns, self.fragment_context_tag
-        if ns == NS_HTML:
+        else:
+            ns, tag = self.doc.ns[node], self.doc.tag[node]
+        if ns == NS_HTML or (ns == NS_SVG and tag in HTML_INTEGRATION_SVG
+                             and (tt == "char" or tt == "start")):
             self._process(token)
             return
-        # integration points
-        if ns == NS_MATHML and tag in MATHML_TEXT_INTEGRATION:
-            if tt == "char" or (tt == "start" and token[1] not in ("mglyph", "malignmark")):
+        if ns == NS_MATHML:
+            if tag in MATHML_TEXT_INTEGRATION:
+                if tt == "char" or (tt == "start" and token[1] not in (
+                        "mglyph", "malignmark")):
+                    self._process(token)
+                    return
+            elif tag == "annotation-xml" and tt == "start" \
+                    and token[1] == "svg":
                 self._process(token)
                 return
-        if ns == NS_MATHML and tag == "annotation-xml" and tt == "start" and token[1] == "svg":
-            self._process(token)
-            return
-        if self._is_html_integration(node, ns, tag):
-            if tt in ("char", "start"):
+            elif tag == "annotation-xml" and (tt == "char" or tt == "start") \
+                    and self._is_html_integration(node, ns, tag):
                 self._process(token)
                 return
         self._foreign(token)
 
     def _is_html_integration(self, node: int, ns: int, tag: str) -> bool:
-        if ns == NS_SVG and tag in ("foreignObject", "desc", "title"):
+        if ns == NS_SVG and tag in HTML_INTEGRATION_SVG:
             return True
         if ns == NS_MATHML and tag == "annotation-xml":
             attrs = self.doc.attrs[node] or {}
@@ -220,9 +304,7 @@ class TreeBuilder:
         """(parent, before_node|NULL) honoring foster parenting."""
         doc = self.doc
         target = self.stack[-1]
-        if self.foster_parenting and doc.tag[target] in (
-            "table", "tbody", "tfoot", "thead", "tr",
-        ):
+        if self.foster_parenting and doc.tag[target] in _TABLE_PARTS:
             # find last table in stack
             for i in range(len(self.stack) - 1, -1, -1):
                 n = self.stack[i]
@@ -248,134 +330,255 @@ class TreeBuilder:
     def _insert_element(self, token, ns: int = NS_HTML,
                         tag_override: str | None = None,
                         attrs_override: dict | None = None) -> int:
-        doc = self.doc
-        tag = tag_override if tag_override is not None else token[1]
+        """Create the element for a start tag (a tokenizer token carries
+        its source positions in fields 4-7), insert it at the
+        appropriate place and push it.  The node is appended to the
+        Document's arrays here, without the Document's method hops:
+        this is the hottest call of a parse."""
+        tag = token[1] if tag_override is None else tag_override
         if attrs_override is not None:
-            attrs = attrs_override
+            attrs = attrs_override or None
         else:
             attrs = dict(token[2]) if token[2] else None
         if ns != NS_HTML:
             self._has_foreign = True
-        nid = doc.new_element(tag, ns, attrs)
-        doc.self_closed[nid] = bool(token[3]) if len(token) > 3 else False
-        if len(token) >= 8:
-            doc.raw_begin[nid] = token[4]
-            doc.raw_length[nid] = token[5]
-            doc.elem_begin[nid] = token[6]
-            doc.elem_length[nid] = token[7]
-        self._insert_node(nid)
-        self.stack.append(nid)
+        (parent, first, last, nxt, prev, tags, nss, types, texts, attrss,
+         closed, rb, rl, eb, el) = self._arrays
+        nid = len(tags)
+        tags.append(tag)
+        nss.append(ns)
+        types.append(1)
+        texts.append(None)
+        attrss.append(attrs)
+        first.append(NULL)
+        last.append(NULL)
+        nxt.append(NULL)
+        closed.append(token[3])
+        if len(token) > 4:
+            rb.append(token[4])
+            rl.append(token[5])
+            eb.append(token[6])
+            el.append(token[7])
+        else:  # a start tag the rules imply: no source position
+            rb.append(0)
+            rl.append(0)
+            eb.append(0)
+            el.append(0)
+        stack = self.stack
+        if self.foster_parenting:
+            parent.append(NULL)
+            prev.append(NULL)
+            self._insert_node(nid)
+        else:
+            p = stack[-1]
+            lc = last[p]
+            parent.append(p)
+            prev.append(lc)
+            if lc != NULL:
+                nxt[lc] = nid
+            else:
+                first[p] = nid
+            last[p] = nid
+        stack.append(nid)
+        o = self._open
+        o[tag] = o.get(tag, 0) + 1
         return nid
 
     def _insert_text(self, text: str) -> None:
         if not text:
             return
         doc = self.doc
-        parent, before = self._insert_location()
-        # merge with adjacent text node (myhtml merges runs too)
-        if before != NULL:
-            prev = doc.prev_sib[before]
+        if self.foster_parenting:
+            parent, before = self._insert_location()
+            prev = (doc.prev_sib[before] if before != NULL
+                    else doc.last_child[parent])
         else:
+            parent, before = self.stack[-1], NULL
             prev = doc.last_child[parent]
+        # merge with adjacent text node (myhtml merges runs too)
         if prev != NULL and doc.node_type[prev] == 3:
             doc.text[prev] = (doc.text[prev] or "") + text
             return
-        nid = doc.new_text(text)
         if before != NULL:
-            doc.insert_before(before, nid)
+            doc.insert_before(before, doc.new_text(text))
+            return
+        # a new last child of ``parent`` (``prev``), appended inline
+        (parents, first, last, nxt, prevs, tags, nss, types, texts, attrss,
+         closed, rb, rl, eb, el) = self._arrays
+        nid = len(tags)
+        tags.append("-text")
+        nss.append(NS_HTML)
+        types.append(3)
+        texts.append(text)
+        attrss.append(None)
+        closed.append(False)
+        rb.append(0)
+        rl.append(0)
+        eb.append(0)
+        el.append(0)
+        first.append(NULL)
+        last.append(NULL)
+        nxt.append(NULL)
+        parents.append(parent)
+        prevs.append(prev)
+        if prev != NULL:
+            nxt[prev] = nid
         else:
-            doc.append_child(parent, nid)
+            first[parent] = nid
+        last[parent] = nid
 
     def _insert_comment(self, token, parent: int | None = None) -> None:
         nid = self.doc.new_comment(token[1])
+        if parent is not None:
+            self.doc.append_child(parent, nid)
+        else:
+            self._insert_node(nid)
         if len(token) >= 6:
             self.doc.raw_begin[nid] = token[2]
             self.doc.raw_length[nid] = token[3]
             self.doc.elem_begin[nid] = token[4]
             self.doc.elem_length[nid] = token[5]
-        if parent is not None:
-            self.doc.append_child(parent, nid)
-        else:
-            self._insert_node(nid)
 
     # ==================================================================
-    # stack / scope utilities
+    # stack of open elements (every push and pop keeps ``_open``)
     # ==================================================================
+    def _push(self, nid: int) -> None:
+        self.stack.append(nid)
+        tag = self.doc.tag[nid]
+        self._open[tag] = self._open.get(tag, 0) + 1
+
+    def _pop(self) -> int:
+        nid = self.stack.pop()
+        self._open[self.doc.tag[nid]] -= 1
+        return nid
+
+    def _pop_to(self, i: int) -> None:
+        """Pop every element above stack index ``i - 1``."""
+        tags, o = self.doc.tag, self._open
+        for n in self.stack[i:]:
+            o[tags[n]] -= 1
+        del self.stack[i:]
+
+    def _unstack(self, nid: int) -> None:
+        """Remove ``nid`` from the stack wherever it is."""
+        self.stack.remove(nid)
+        self._open[self.doc.tag[nid]] -= 1
+
+    def _any_open(self, tags) -> bool:
+        o = self._open
+        for t in tags:
+            if o.get(t):
+                return True
+        return False
+
+    def _template_open(self) -> bool:
+        """An HTML template element is on the stack."""
+        if self._open.get("template"):
+            tags, nss = self.doc.tag, self.doc.ns
+            for n in self.stack:
+                if tags[n] == "template" and nss[n] == NS_HTML:
+                    return True
+        return False
+
     def _current_tag(self) -> str:
         n = self.stack[-1]
         return self.doc.tag[n]
 
-    def _has_in_scope(self, target, extra: frozenset = frozenset(),
-                      invert: bool = False) -> bool:
-        """WHATWG 'has an element in scope'. target: str or set."""
-        targets = {target} if isinstance(target, str) else target
-        doc = self.doc
+    def _has_in_scope(self, target, stops: frozenset = SCOPE_BASE) -> bool:
+        """WHATWG 'has an element in scope': ``target`` is a tag name or a
+        set of them, ``stops`` the HTML boundaries of the scope flavour."""
+        one = isinstance(target, str)
+        if not (self._open.get(target) if one else self._any_open(target)):
+            return False
+        tags, nss = self.doc.tag, self.doc.ns
         for n in reversed(self.stack):
-            tag, ns = doc.tag[n], doc.ns[n]
-            if ns == NS_HTML and tag in targets:
-                return True
-            if invert:
-                if not (ns == NS_HTML and tag in ("optgroup", "option")):
+            tag, ns = tags[n], nss[n]
+            if ns == NS_HTML:
+                if (tag == target) if one else (tag in target):
+                    return True
+                if tag in stops:
                     return False
-            else:
-                if ns == NS_HTML and (
-                    tag in ("applet", "caption", "html", "table", "td", "th",
-                            "marquee", "object", "template") or tag in extra
-                ):
+            elif ns == NS_MATHML:
+                if tag in _MATHML_SCOPE:
                     return False
-                if ns == NS_MATHML and tag in MATHML_TEXT_INTEGRATION | {"annotation-xml"}:
-                    return False
-                if ns == NS_SVG and tag in HTML_INTEGRATION_SVG:
-                    return False
+            elif ns == NS_SVG and tag in HTML_INTEGRATION_SVG:
+                return False
         return False
 
     def _in_scope(self, t):
         return self._has_in_scope(t)
 
     def _in_list_scope(self, t):
-        return self._has_in_scope(t, extra=frozenset(("ol", "ul")))
+        return self._has_in_scope(t, _LIST_SCOPE)
 
     def _in_button_scope(self, t):
-        return self._has_in_scope(t, extra=frozenset(("button",)))
+        return self._has_in_scope(t, _BUTTON_SCOPE)
 
     def _in_table_scope(self, t):
-        targets = {t} if isinstance(t, str) else t
-        doc = self.doc
+        one = isinstance(t, str)
+        if not (self._open.get(t) if one else self._any_open(t)):
+            return False
+        tags, nss = self.doc.tag, self.doc.ns
         for n in reversed(self.stack):
-            tag, ns = doc.tag[n], doc.ns[n]
-            if ns != NS_HTML:
+            if nss[n] != NS_HTML:
                 continue
-            if tag in targets:
+            tag = tags[n]
+            if (tag == t) if one else (tag in t):
                 return True
-            if tag in ("html", "table", "template"):
+            if tag in TABLE_SCOPE:
                 return False
         return False
 
     def _in_select_scope(self, t):
-        return self._has_in_scope(t, invert=True)
+        if not self._open.get(t):
+            return False
+        tags, nss = self.doc.tag, self.doc.ns
+        for n in reversed(self.stack):
+            if nss[n] != NS_HTML:
+                return False
+            tag = tags[n]
+            if tag == t:
+                return True
+            if tag not in SELECT_SCOPE_INVERT:
+                return False
+        return False
 
     def _pop_until(self, target) -> None:
-        targets = {target} if isinstance(target, str) else target
-        doc = self.doc
-        while self.stack:
-            n = self.stack.pop()
-            if doc.ns[n] == NS_HTML and doc.tag[n] in targets:
+        """Pop up to and including the first HTML element named
+        ``target`` (a tag name or a set of them)."""
+        one = isinstance(target, str)
+        stack, o = self.stack, self._open
+        tags, nss = self.doc.tag, self.doc.ns
+        while stack:
+            n = stack.pop()
+            tag = tags[n]
+            o[tag] -= 1
+            if nss[n] == NS_HTML and ((tag == target) if one
+                                      else (tag in target)):
                 return
 
     def _generate_implied_end_tags(self, exclude: str | None = None,
                                    thorough: bool = False) -> None:
-        tags = IMPLIED_END_TAGS_THOROUGH if thorough else IMPLIED_END_TAGS
-        doc = self.doc
-        while self.stack:
-            n = self.stack[-1]
-            t = doc.tag[n]
-            if doc.ns[n] == NS_HTML and t in tags and t != exclude:
-                self.stack.pop()
+        implied = IMPLIED_END_TAGS_THOROUGH if thorough else IMPLIED_END_TAGS
+        stack, o = self.stack, self._open
+        tags, nss = self.doc.tag, self.doc.ns
+        while stack:
+            n = stack[-1]
+            t = tags[n]
+            if nss[n] == NS_HTML and t in implied and t != exclude:
+                stack.pop()
+                o[t] -= 1
             else:
                 return
 
     def _close_p(self) -> None:
-        if self._in_button_scope("p"):
+        if not self._open.get("p"):
+            return
+        top = self.stack[-1]
+        if self.doc.tag[top] == "p" and self.doc.ns[top] == NS_HTML:
+            self.stack.pop()  # the p is the current node
+            self._open["p"] -= 1
+        elif self._has_in_scope("p", _BUTTON_SCOPE):
             self._generate_implied_end_tags(exclude="p")
             self._pop_until("p")
 
@@ -395,11 +598,14 @@ class TreeBuilder:
     # ==================================================================
     def _afe_push(self, nid: int, tag: str, attrs: dict | None) -> None:
         # Noah's Ark clause: max 3 identical entries since last marker
+        # (entries and element attributes hold None, never {}, when
+        # there are no attributes)
+        attrs = attrs or None
         count = 0
         for entry in reversed(self.afe):
             if entry is MARKER:
                 break
-            if entry[1] == tag and (entry[2] or {}) == (attrs or {}):
+            if entry[1] == tag and entry[2] == attrs:
                 count += 1
                 if count == 3:
                     self.afe.remove(entry)
@@ -424,7 +630,9 @@ class TreeBuilder:
         if not afe:
             return
         last = afe[-1]
-        if last is MARKER or last[0] in self.stack:
+        # the last entry is usually the current node: test it first
+        if last is MARKER or last[0] == self.stack[-1] or \
+                last[0] in self.stack:
             return
         i = len(afe) - 1
         while i > 0:
@@ -439,7 +647,7 @@ class TreeBuilder:
             nid = self.doc.new_element(entry[1], NS_HTML,
                                        dict(entry[2]) if entry[2] else None)
             self._insert_node(nid)
-            self.stack.append(nid)
+            self._push(nid)
             entry[0] = nid
             i += 1
 
@@ -452,9 +660,17 @@ class TreeBuilder:
         if self.stack:
             cur = self.stack[-1]
             if doc.tag[cur] == tag and doc.ns[cur] == NS_HTML:
+                entry = self._afe_find(tag)
+                if entry is not None and entry[0] == cur:
+                    # the outer loop's first round: no furthest block
+                    # above the current node, so pop it and its entry
+                    doc.misnested = True
+                    self._pop()
+                    self.afe.remove(entry)
+                    return
                 in_afe = any(e is not MARKER and e[0] == cur for e in self.afe)
                 if not in_afe:
-                    self.stack.pop()
+                    self._pop()
                     return
         self.doc.misnested = True
         for _ in range(8):  # outer loop
@@ -478,7 +694,7 @@ class TreeBuilder:
                     break
             if furthest is None:
                 # pop up to and including fmt element; remove from afe
-                del self.stack[idx:]
+                self._pop_to(idx)
                 self.afe.remove(entry)
                 return
             common_ancestor = self.stack[idx - 1]
@@ -508,7 +724,7 @@ class TreeBuilder:
                         bookmark -= 1
                     node_entry = None
                 if node_entry is None:
-                    self.stack.remove(node)
+                    self._unstack(node)
                     continue
                 # create clone of node
                 clone = doc.new_element(doc.tag[node], doc.ns[node],
@@ -536,6 +752,7 @@ class TreeBuilder:
             self.afe.remove(entry)
             self.afe.insert(bookmark, [clone, entry[1], entry[2]])
             # stack: remove fmt elt; insert clone after furthest block
+            # (the clone has the element's tag: ``_open`` is unchanged)
             self.stack.remove(fmt_elt)
             self.stack.insert(self.stack.index(fb) + 1, clone)
 
@@ -543,8 +760,7 @@ class TreeBuilder:
         """Appropriate place for inserting relative to a given target
         (used by AAA step 14) — honors foster parenting for tables."""
         doc = self.doc
-        if doc.tag[target] in ("table", "tbody", "tfoot", "thead", "tr") and \
-                doc.ns[target] == NS_HTML:
+        if doc.tag[target] in _TABLE_PARTS and doc.ns[target] == NS_HTML:
             # foster parent
             for i in range(len(self.stack) - 1, -1, -1):
                 n = self.stack[i]
@@ -560,12 +776,14 @@ class TreeBuilder:
         doc.append_child(target, node)
 
     def _any_other_end_tag(self, tag: str) -> None:
+        if not self._open.get(tag):
+            return  # the walk below can only stop at a special element
         doc = self.doc
         for i in range(len(self.stack) - 1, -1, -1):
             n = self.stack[i]
             if doc.tag[n] == tag and doc.ns[n] == NS_HTML:
                 self._generate_implied_end_tags(exclude=tag)
-                del self.stack[i:]
+                self._pop_to(i)
                 return
             if self._is_special(n):
                 return
@@ -573,28 +791,20 @@ class TreeBuilder:
     # ==================================================================
     # insertion-mode machinery
     # ==================================================================
-    # insertion mode: assignments resolve the handler once (hot path —
-    # _process runs per token; getattr+concat there measured ~4% of parse)
-    @property
-    def mode(self) -> str:
-        return self._mode
-
-    @mode.setter
-    def mode(self, m: str) -> None:
-        self._mode = m
-        self._mode_fn = getattr(self, "_mode_" + m)
-
+    # ``mode`` names the insertion mode; _MODES maps it to its handler
     def _process(self, token) -> None:
-        self._mode_fn(token)
+        _MODES[self.mode](self, token)
 
     def _reset_insertion_mode(self) -> None:
         doc = self.doc
-        for i in range(len(self.stack) - 1, -1, -1):
-            n = self.stack[i]
+        stack = self.stack
+        context = self.fragment_context_tag
+        for i in range(len(stack) - 1, -1, -1):
+            n = stack[i]
             last = i == 0
             tag = doc.tag[n]
-            if last and self.fragment_context_tag is not None:
-                tag = self.fragment_context_tag
+            if last and context is not None:
+                tag = context
             elif doc.ns[n] != NS_HTML:
                 # every case below names an HTML element; a foreign node
                 # (e.g. a MathML <template>) matches none of them and
@@ -604,46 +814,29 @@ class TreeBuilder:
                     self.mode = "in_body"
                     return
                 continue
+            mode = _RESET_MODES.get(tag)
+            if mode is not None:
+                self.mode = mode
+                return
             if tag == "select":
                 self.mode = "in_select"
                 if not last:
                     for j in range(i - 1, 0, -1):
-                        at = doc.tag[self.stack[j]]
+                        at = doc.tag[stack[j]]
                         if at == "template":
                             break
                         if at == "table":
                             self.mode = "in_select_in_table"
                             break
                 return
-            if tag in ("td", "th") and not last:
+            if tag in _CELLS and not last:
                 self.mode = "in_cell"
-                return
-            if tag == "tr":
-                self.mode = "in_row"
-                return
-            if tag in ("tbody", "thead", "tfoot"):
-                self.mode = "in_table_body"
-                return
-            if tag == "caption":
-                self.mode = "in_caption"
-                return
-            if tag == "colgroup":
-                self.mode = "in_column_group"
-                return
-            if tag == "table":
-                self.mode = "in_table"
                 return
             if tag == "template":
                 self.mode = self.template_modes[-1] if self.template_modes else "in_template"
                 return
             if tag == "head" and not last:
                 self.mode = "in_head"
-                return
-            if tag == "body":
-                self.mode = "in_body"
-                return
-            if tag == "frameset":
-                self.mode = "in_frameset"
                 return
             if tag == "html":
                 self.mode = "before_head" if self.head_id == NULL else "after_head"
@@ -751,7 +944,7 @@ class TreeBuilder:
             doc.elem_length[nid] = token[7]
         doc.append_child(doc.root, nid)
         doc.html_node = nid
-        self.stack.append(nid)
+        self._push(nid)
         return nid
 
     def _mode_before_head(self, token) -> None:
@@ -797,7 +990,7 @@ class TreeBuilder:
             if not rest:
                 return
             token = ("char", rest, pos, len(rest))
-            self.stack.pop()  # head
+            self._pop()  # head
             self.mode = "after_head"
             self._reprocess(token)
             return
@@ -813,7 +1006,7 @@ class TreeBuilder:
                 return
             if tag in ("base", "basefont", "bgsound", "link", "meta"):
                 self._insert_element(token)
-                self.stack.pop()
+                self._pop()
                 return
             if tag == "title":
                 self._insert_element(token)
@@ -851,7 +1044,7 @@ class TreeBuilder:
         if tt == "end":
             tag = token[1]
             if tag == "head":
-                self.stack.pop()
+                self._pop()
                 self.mode = "after_head"
                 return
             if tag == "template":
@@ -859,7 +1052,7 @@ class TreeBuilder:
                 return
             if tag not in ("body", "html", "br"):
                 return
-        self.stack.pop()
+        self._pop()
         self.mode = "after_head"
         self._reprocess(token)
 
@@ -893,19 +1086,18 @@ class TreeBuilder:
                 return
         elif tt == "end":
             if token[1] == "noscript":
-                self.stack.pop()
+                self._pop()
                 self.mode = "in_head"
                 return
             if token[1] != "br":
                 return
         # anything else: pop the noscript, reprocess in head
-        self.stack.pop()
+        self._pop()
         self.mode = "in_head"
         self._reprocess(token)
 
     def _end_template(self) -> None:
-        if not any(self.doc.tag[n] == "template" and self.doc.ns[n] == NS_HTML
-                       for n in self.stack):
+        if not self._template_open():
             return
         self._generate_implied_end_tags(thorough=True)
         if self.stack and not (
@@ -956,10 +1148,10 @@ class TreeBuilder:
                 return
             if tag in ("base", "basefont", "bgsound", "link", "meta", "noframes",
                        "script", "style", "template", "title"):
-                self.stack.append(self.head_id)
+                self._push(self.head_id)
                 self._mode_in_head(token)
                 if self.head_id in self.stack:
-                    self.stack.remove(self.head_id)
+                    self._unstack(self.head_id)
                 return
             if tag == "head":
                 return
@@ -985,7 +1177,6 @@ class TreeBuilder:
     # ------------------------------------------------------------------
     def _mode_in_body(self, token) -> None:
         tt = token[0]
-        doc = self.doc
         if tt == "char":
             text = token[1]
             if self.skip_newline:
@@ -998,18 +1189,42 @@ class TreeBuilder:
                 text = text.replace("\x00", "")
                 if not text:
                     return
-            self._reconstruct_afe()
+            afe = self.afe
+            if afe and afe[-1] is not MARKER and afe[-1][0] != self.stack[-1]:
+                self._reconstruct_afe()
             self._insert_text(text)
-            if text.strip(_WS):
+            if self.frameset_ok and text.strip(_WS):
                 self.frameset_ok = False
             return
         self.skip_newline = False
-        if tt == "comment":
+        if tt == "start":
+            start = _BODY_START.get(token[1])
+            if start is not None:
+                start(self, token)
+            else:  # any other start tag: an ordinary element
+                afe = self.afe
+                if afe and afe[-1] is not MARKER and \
+                        afe[-1][0] != self.stack[-1]:
+                    self._reconstruct_afe()
+                self._insert_element(token)
+        elif tt == "end":
+            tag = token[1]
+            top = self.stack[-1]
+            if tag not in _BODY_END_SPECIAL and self.doc.tag[top] == tag \
+                    and self.doc.ns[top] == NS_HTML:
+                # the end tag of the current node: every rule it can take
+                # here (block, p, list item, heading, any other) pops it
+                self.stack.pop()
+                self._open[tag] -= 1
+            else:
+                end = _BODY_END.get(tag)
+                if end is not None:
+                    end(self, token)
+                else:
+                    self._any_other_end_tag(tag)
+        elif tt == "comment":
             self._insert_comment(token)
-            return
-        if tt == "doctype":
-            return
-        if tt == "eof":
+        elif tt == "eof":
             if self.template_modes:
                 # spec: process per the "in template" rules — its
                 # no-template-on-stack branch is the fragment-case
@@ -1018,355 +1233,294 @@ class TreeBuilder:
                 self._mode_in_template(token)
                 return
             self.done = True
-            return
-        if tt == "start":
-            self._in_body_start(token)
-        else:
-            self._in_body_end(token)
 
-    def _in_body_start(self, token) -> None:
+    # "in body" start tags, one handler per rule (table: _BODY_START)
+    def _start_html(self, token) -> None:
+        if not self._template_open():
+            self._merge_attrs(self.stack[0], token)
+
+    def _merge_attrs(self, nid: int, token) -> None:
         doc = self.doc
-        tag = token[1]
-        if tag == "html":
-            if any(doc.tag[n] == "template" and doc.ns[n] == NS_HTML
-                              for n in self.stack):
-                return
-            top = self.stack[0]
-            attrs = doc.attrs[top]
-            for k, v in token[2]:
-                if attrs is None:
-                    attrs = {}
-                    doc.attrs[top] = attrs
-                if k not in attrs:
-                    attrs[k] = v
-            return
-        if tag in ("base", "basefont", "bgsound", "link", "meta", "noframes",
-                   "script", "style", "template", "title", "noscript"):
-            if tag == "noscript" and not self.scripts:
-                # scripting disabled: ordinary element in body (WHATWG
-                # "in body", noscript branch applies only when enabled)
-                self._reconstruct_afe()
-                self._insert_element(token)
-                return
-            self._mode_in_head(token)
-            return
-        if tag == "body":
-            if len(self.stack) < 2 or doc.tag[self.stack[1]] != "body" or \
-                    any(doc.tag[n] == "template" and doc.ns[n] == NS_HTML
-                              for n in self.stack):
-                return
-            self.frameset_ok = False
-            body = self.stack[1]
-            attrs = doc.attrs[body]
-            for k, v in token[2]:
-                if attrs is None:
-                    attrs = {}
-                    doc.attrs[body] = attrs
-                if k not in attrs:
-                    attrs[k] = v
-            return
-        if tag == "frameset":
-            if len(self.stack) < 2 or doc.tag[self.stack[1]] != "body" or \
-                    not self.frameset_ok:
-                return
-            body = self.stack[1]
-            if doc.parent[body] != NULL:
-                doc.remove(body)
-            del self.stack[1:]
-            self._insert_element(token)
-            self.mode = "in_frameset"
-            return
-        if tag in BLOCK_START:
-            self._close_p()
+        attrs = doc.attrs[nid]
+        for k, v in token[2]:
+            if attrs is None:
+                attrs = {}
+                doc.attrs[nid] = attrs
+            if k not in attrs:
+                attrs[k] = v
+
+    def _start_head_content(self, token) -> None:
+        if token[1] == "noscript" and not self.scripts:
+            # scripting disabled: ordinary element in body (WHATWG
+            # "in body", noscript branch applies only when enabled)
+            self._reconstruct_afe()
             self._insert_element(token)
             return
-        if tag in HEADING_TAGS:
-            self._close_p()
-            if self._current_tag() in HEADING_TAGS:
-                self.stack.pop()
-            self._insert_element(token)
+        self._mode_in_head(token)
+
+    def _start_body(self, token) -> None:
+        stack = self.stack
+        if len(stack) < 2 or self.doc.tag[stack[1]] != "body" or \
+                self._template_open():
             return
-        if tag in ("pre", "listing"):
-            self._close_p()
-            self._insert_element(token)
-            self.skip_newline = True
-            self.frameset_ok = False
+        self.frameset_ok = False
+        self._merge_attrs(stack[1], token)
+
+    def _start_frameset(self, token) -> None:
+        doc = self.doc
+        if len(self.stack) < 2 or doc.tag[self.stack[1]] != "body" or \
+                not self.frameset_ok:
             return
-        if tag == "form":
-            in_template = any(doc.tag[n] == "template" and doc.ns[n] == NS_HTML
-                              for n in self.stack)
-            if self.form_id != NULL and not in_template:
-                return
-            self._close_p()
-            nid = self._insert_element(token)
-            if not in_template:
-                self.form_id = nid
+        body = self.stack[1]
+        if doc.parent[body] != NULL:
+            doc.remove(body)
+        self._pop_to(1)
+        self._insert_element(token)
+        self.mode = "in_frameset"
+
+    def _start_block(self, token) -> None:
+        self._close_p()
+        self._insert_element(token)
+
+    def _start_heading(self, token) -> None:
+        self._close_p()
+        if self._current_tag() in HEADING_TAGS:
+            self._pop()
+        self._insert_element(token)
+
+    def _start_pre(self, token) -> None:
+        self._close_p()
+        self._insert_element(token)
+        self.skip_newline = True
+        self.frameset_ok = False
+
+    def _start_form(self, token) -> None:
+        in_template = self._template_open()
+        if self.form_id != NULL and not in_template:
             return
-        if tag == "li":
-            self.frameset_ok = False
+        self._close_p()
+        nid = self._insert_element(token)
+        if not in_template:
+            self.form_id = nid
+
+    def _start_list_item(self, token) -> None:
+        self.frameset_ok = False
+        group = ("li",) if token[1] == "li" else ("dd", "dt")
+        doc = self.doc
+        top = self.stack[-1]
+        t = doc.tag[top]
+        if t in group and doc.ns[top] == NS_HTML:
+            self.stack.pop()  # the open item is the current node
+            self._open[t] -= 1
+        elif self._any_open(group):
             for n in reversed(self.stack):
                 t = doc.tag[n]
-                if t == "li" and doc.ns[n] == NS_HTML:
-                    self._generate_implied_end_tags(exclude="li")
-                    self._pop_until("li")
-                    break
-                if self._is_special(n) and t not in ("address", "div", "p"):
-                    break
-            self._close_p()
-            self._insert_element(token)
-            return
-        if tag in ("dd", "dt"):
-            self.frameset_ok = False
-            for n in reversed(self.stack):
-                t = doc.tag[n]
-                if t in ("dd", "dt") and doc.ns[n] == NS_HTML:
+                if t in group and doc.ns[n] == NS_HTML:
                     self._generate_implied_end_tags(exclude=t)
                     self._pop_until(t)
                     break
                 if self._is_special(n) and t not in ("address", "div", "p"):
                     break
+        self._close_p()
+        self._insert_element(token)
+
+    def _start_plaintext(self, token) -> None:
+        self._close_p()
+        self._insert_element(token)
+        self.tok.set_rawtext("plaintext", "plaintext")
+
+    def _start_button(self, token) -> None:
+        if self._in_scope("button"):
+            self._generate_implied_end_tags()
+            self._pop_until("button")
+        self._reconstruct_afe()
+        self._insert_element(token)
+        self.frameset_ok = False
+
+    def _start_a(self, token) -> None:
+        entry = self._afe_find("a")
+        if entry is not None:
+            self._adoption_agency("a")
+            if entry in self.afe:
+                self.afe.remove(entry)
+            if entry[0] in self.stack:
+                self._unstack(entry[0])
+        self._start_formatting(token)
+
+    def _start_formatting(self, token) -> None:
+        if self.afe:
+            self._reconstruct_afe()
+        nid = self._insert_element(token)
+        self._afe_push(nid, token[1], self.doc.attrs[nid])
+
+    def _start_nobr(self, token) -> None:
+        self._reconstruct_afe()
+        if self._in_scope("nobr"):
+            self._adoption_agency("nobr")
+            self._reconstruct_afe()
+        self._start_formatting(token)
+
+    def _start_marker(self, token) -> None:
+        self._reconstruct_afe()
+        self._insert_element(token)
+        self.afe.append(MARKER)
+        self.frameset_ok = False
+
+    def _start_table(self, token) -> None:
+        if not self.doc.quirks:
             self._close_p()
-            self._insert_element(token)
-            return
-        if tag == "plaintext":
-            self._close_p()
-            self._insert_element(token)
-            self.tok.set_rawtext(tag, "plaintext")
-            return
-        if tag == "button":
-            if self._in_scope("button"):
-                self._generate_implied_end_tags()
-                self._pop_until("button")
-            self._reconstruct_afe()
-            self._insert_element(token)
+        self._insert_element(token)
+        self.frameset_ok = False
+        self.mode = "in_table"
+
+    def _start_void(self, token) -> None:
+        self._reconstruct_afe()
+        self._insert_element(token)
+        self._pop()
+        self.frameset_ok = False
+
+    def _start_input(self, token) -> None:
+        self._reconstruct_afe()
+        nid = self._insert_element(token)
+        self._pop()
+        attrs = self.doc.attrs[nid] or {}
+        if attrs.get("type", "").lower() != "hidden":
             self.frameset_ok = False
-            return
-        if tag == "a":
-            entry = self._afe_find("a")
-            if entry is not None:
-                self._adoption_agency("a")
-                if entry in self.afe:
-                    self.afe.remove(entry)
-                if entry[0] in self.stack:
-                    self.stack.remove(entry[0])
-            self._reconstruct_afe()
-            nid = self._insert_element(token)
-            self._afe_push(nid, tag, doc.attrs[nid])
-            return
-        if tag in ("b", "big", "code", "em", "font", "i", "s", "small",
-                   "strike", "strong", "tt", "u"):
-            self._reconstruct_afe()
-            nid = self._insert_element(token)
-            self._afe_push(nid, tag, doc.attrs[nid])
-            return
-        if tag == "nobr":
-            self._reconstruct_afe()
-            if self._in_scope("nobr"):
-                self._adoption_agency("nobr")
-                self._reconstruct_afe()
-            nid = self._insert_element(token)
-            self._afe_push(nid, tag, doc.attrs[nid])
-            return
-        if tag in ("applet", "marquee", "object"):
-            self._reconstruct_afe()
-            self._insert_element(token)
-            self.afe.append(MARKER)
-            self.frameset_ok = False
-            return
-        if tag == "table":
-            if not doc.quirks:
-                self._close_p()
-            self._insert_element(token)
-            self.frameset_ok = False
-            self.mode = "in_table"
-            return
-        if tag in ("area", "br", "embed", "img", "keygen", "wbr"):
-            self._reconstruct_afe()
-            self._insert_element(token)
-            self.stack.pop()
-            self.frameset_ok = False
-            return
-        if tag == "input":
-            self._reconstruct_afe()
-            nid = self._insert_element(token)
-            self.stack.pop()
-            attrs = doc.attrs[nid] or {}
-            if attrs.get("type", "").lower() != "hidden":
-                self.frameset_ok = False
-            return
-        if tag in ("param", "source", "track"):
-            self._insert_element(token)
-            self.stack.pop()
-            return
-        if tag == "hr":
-            self._close_p()
-            self._insert_element(token)
-            self.stack.pop()
-            self.frameset_ok = False
-            return
-        if tag == "image":
-            self._in_body_start(("start", "img") + token[2:])
-            return
-        if tag == "textarea":
-            self._insert_element(token)
-            self.tok.set_rawtext(tag, "rcdata")
-            self.skip_newline = True
-            self.frameset_ok = False
-            self.original_mode = self.mode
-            self.mode = "text"
-            return
+
+    def _start_param(self, token) -> None:
+        self._insert_element(token)
+        self._pop()
+
+    def _start_hr(self, token) -> None:
+        self._close_p()
+        self._start_param(token)
+        self.frameset_ok = False
+
+    def _start_image(self, token) -> None:
+        self._mode_in_body(("start", "img") + token[2:])
+
+    def _start_textarea(self, token) -> None:
+        self._insert_element(token)
+        self.tok.set_rawtext("textarea", "rcdata")
+        self.skip_newline = True
+        self.frameset_ok = False
+        self.original_mode = self.mode
+        self.mode = "text"
+
+    def _start_rawtext(self, token) -> None:
+        tag = token[1]
         if tag == "xmp":
             self._close_p()
             self._reconstruct_afe()
+        if tag != "noembed":
             self.frameset_ok = False
-            self._insert_element(token)
-            self.tok.set_rawtext(tag, "rawtext")
-            # generic rawtext algorithm: original mode = CURRENT mode
-            # (in-table delegation must restore the table mode, or the
-            # following text skips foster parenting — round-4 fuzz find)
-            self.original_mode = self.mode
-            self.mode = "text"
-            return
-        if tag == "iframe":
-            self.frameset_ok = False
-            self._insert_element(token)
-            self.tok.set_rawtext(tag, "rawtext")
-            self.original_mode = self.mode
-            self.mode = "text"
-            return
-        if tag == "noembed":
-            self._insert_element(token)
-            self.tok.set_rawtext(tag, "rawtext")
-            self.original_mode = self.mode
-            self.mode = "text"
-            return
-        if tag == "select":
+        self._insert_element(token)
+        self.tok.set_rawtext(tag, "rawtext")
+        # generic rawtext algorithm: original mode = CURRENT mode
+        # (in-table delegation must restore the table mode, or the
+        # following text skips foster parenting — round-4 fuzz find)
+        self.original_mode = self.mode
+        self.mode = "text"
+
+    def _start_select(self, token) -> None:
+        if self.afe:
             self._reconstruct_afe()
-            self._insert_element(token)
-            self.frameset_ok = False
-            if self.mode in ("in_table", "in_caption", "in_table_body",
-                             "in_row", "in_cell"):
-                self.mode = "in_select_in_table"
-            else:
-                self.mode = "in_select"
-            return
-        if tag in ("optgroup", "option"):
-            if self._current_tag() == "option":
-                self.stack.pop()
-            self._reconstruct_afe()
-            self._insert_element(token)
-            return
-        if tag in ("rb", "rtc"):
-            if self._in_scope("ruby"):
-                self._generate_implied_end_tags()
-            self._insert_element(token)
-            return
-        if tag in ("rp", "rt"):
-            if self._in_scope("ruby"):
-                self._generate_implied_end_tags(exclude="rtc")
-            self._insert_element(token)
-            return
-        if tag == "math":
-            self._reconstruct_afe()
-            attrs = adjust_foreign_attrs(token[2], mathml=True)
-            self._insert_element(token, ns=NS_MATHML, attrs_override=attrs)
-            if token[3]:
-                self.stack.pop()
-            return
-        if tag == "svg":
-            self._reconstruct_afe()
-            attrs = adjust_foreign_attrs(token[2], svg=True)
-            self._insert_element(token, ns=NS_SVG, attrs_override=attrs)
-            if token[3]:
-                self.stack.pop()
-            return
-        if tag in ("caption", "col", "colgroup", "frame", "head", "tbody",
-                   "td", "tfoot", "th", "thead", "tr"):
-            return
+        self._insert_element(token)
+        self.frameset_ok = False
+        if self.mode in ("in_table", "in_caption", "in_table_body",
+                         "in_row", "in_cell"):
+            self.mode = "in_select_in_table"
+        else:
+            self.mode = "in_select"
+
+    def _start_option(self, token) -> None:
+        if self._current_tag() == "option":
+            self._pop()
         self._reconstruct_afe()
         self._insert_element(token)
 
-    def _in_body_end(self, token) -> None:
-        doc = self.doc
-        tag = token[1]
-        if tag == "template":
-            self._end_template()
-            return
-        if tag == "body":
-            if self._in_scope("body"):
-                self.mode = "after_body"
-            return
-        if tag == "html":
-            if self._in_scope("body"):
-                self.mode = "after_body"
+    def _start_ruby_text(self, token) -> None:
+        if self._in_scope("ruby"):
+            self._generate_implied_end_tags(
+                exclude="rtc" if token[1] in ("rp", "rt") else None)
+        self._insert_element(token)
+
+    def _start_foreign(self, token) -> None:
+        if self.afe:
+            self._reconstruct_afe()
+        svg = token[1] == "svg"
+        attrs = adjust_foreign_attrs(token[2], svg=svg, mathml=not svg)
+        self._insert_element(token, ns=NS_SVG if svg else NS_MATHML,
+                             attrs_override=attrs)
+        if token[3]:
+            self._pop()
+
+    def _start_ignored(self, token) -> None:
+        pass
+
+    # "in body" end tags (table: _BODY_END; any other: _any_other_end_tag)
+    def _end_template_tag(self, token) -> None:
+        self._end_template()
+
+    def _end_body(self, token) -> None:
+        if self._in_scope("body"):
+            self.mode = "after_body"
+            if token[1] == "html":
                 self._reprocess(token)
-            return
-        if tag == "p":
-            if not self._in_button_scope("p"):
-                self._insert_element(("start", "p", [], False))
-            self._close_p()
-            return
-        if tag == "li":
-            if not self._in_list_scope("li"):
-                return
-            self._generate_implied_end_tags(exclude="li")
-            self._pop_until("li")
-            return
-        if tag in ("dd", "dt"):
-            if not self._in_scope(tag):
-                return
+
+    def _end_p(self, token) -> None:
+        if not self._in_button_scope("p"):
+            self._insert_element(("start", "p", [], False))
+        self._close_p()
+
+    def _end_list_item(self, token) -> None:
+        tag = token[1]
+        if self._in_list_scope(tag) if tag == "li" else self._in_scope(tag):
             self._generate_implied_end_tags(exclude=tag)
             self._pop_until(tag)
-            return
-        if (tag in _CLOSE_P_BLOCKS and tag != "p") or \
-                tag in ("button", "listing", "pre"):
-            if not self._in_scope(tag):
-                return
+
+    def _end_block(self, token) -> None:
+        tag = token[1]
+        if self._in_scope(tag):
             self._generate_implied_end_tags()
             self._pop_until(tag)
-            return
-        if tag == "form":
-            in_template = any(doc.tag[n] == "template" and doc.ns[n] == NS_HTML
-                              for n in self.stack)
-            if not in_template:
-                node = self.form_id
-                self.form_id = NULL
-                if node == NULL or node not in self.stack or not self._in_scope("form"):
-                    return
-                self._generate_implied_end_tags()
-                if self.stack[-1] != node:
-                    # remove-without-popping left elements above the
-                    # form open: the tree cannot round-trip through
-                    # serialization (the explicit close tags re-parse
-                    # differently) — same family as nested forms
-                    doc.misnested = True
-                self.stack.remove(node)
-            else:
-                if not self._in_scope("form"):
-                    return
-                self._generate_implied_end_tags()
-                self._pop_until("form")
-            return
-        if tag in HEADING_TAGS:
-            if not self._in_scope(HEADING_TAGS):
+
+    def _end_form(self, token) -> None:
+        if not self._template_open():
+            node = self.form_id
+            self.form_id = NULL
+            if node == NULL or node not in self.stack or \
+                    not self._in_scope("form"):
                 return
             self._generate_implied_end_tags()
+            if self.stack[-1] != node:
+                # remove-without-popping left elements above the
+                # form open: the tree cannot round-trip through
+                # serialization (the explicit close tags re-parse
+                # differently) — same family as nested forms
+                self.doc.misnested = True
+            self._unstack(node)
+        elif self._in_scope("form"):
+            self._generate_implied_end_tags()
+            self._pop_until("form")
+
+    def _end_heading(self, token) -> None:
+        if self._in_scope(HEADING_TAGS):
+            self._generate_implied_end_tags()
             self._pop_until(HEADING_TAGS)
-            return
-        if tag in FORMATTING_TAGS:
-            self._adoption_agency(tag)
-            return
-        if tag in ("applet", "marquee", "object"):
-            if not self._in_scope(tag):
-                return
+
+    def _end_formatting(self, token) -> None:
+        self._adoption_agency(token[1])
+
+    def _end_marker(self, token) -> None:
+        tag = token[1]
+        if self._in_scope(tag):
             self._generate_implied_end_tags()
             self._pop_until(tag)
             self._afe_clear_to_marker()
-            return
-        if tag == "br":
-            self._in_body_start(("start", "br", [], False))
-            return
-        self._any_other_end_tag(tag)
+
+    def _end_br(self, token) -> None:
+        self._mode_in_body(("start", "br", [], False))
 
     # ------------------------------------------------------------------
     # text mode (rawtext/rcdata/script bodies)
@@ -1383,75 +1537,62 @@ class TreeBuilder:
             return
         self.skip_newline = False
         if tt == "eof":
-            self.stack.pop()
+            self._pop()
             self.mode = self.original_mode
             self._reprocess(token)
             return
         # end tag
-        self.stack.pop()
+        self._pop()
         self.mode = self.original_mode
 
     # ------------------------------------------------------------------
     # tables
     # ------------------------------------------------------------------
-    def _clear_back_to(self, tags: tuple) -> None:
-        doc = self.doc
-        while self.stack and not (
-            doc.ns[self.stack[-1]] == NS_HTML and doc.tag[self.stack[-1]] in tags
-        ):
-            self.stack.pop()
+    def _clear_back_to(self, tags: frozenset) -> None:
+        """Pop until the current node is an HTML element in ``tags``."""
+        stack, o = self.stack, self._open
+        names, nss = self.doc.tag, self.doc.ns
+        while stack:
+            n = stack[-1]
+            t = names[n]
+            if nss[n] == NS_HTML and t in tags:
+                return
+            stack.pop()
+            o[t] -= 1
 
     def _mode_in_table(self, token) -> None:
         tt = token[0]
-        doc = self.doc
-        if tt == "char" and doc.tag[self.stack[-1]] in (
-            "table", "tbody", "tfoot", "thead", "tr",
-        ):
-            self.pending_table_text = []
-            self.original_mode = self.mode
-            self.mode = "in_table_text"
-            self._reprocess(token)
-            return
-        if tt == "comment":
-            self._insert_comment(token)
-            return
-        if tt == "doctype":
-            return
-        if tt == "start":
+        if tt == "char":
+            if self.doc.tag[self.stack[-1]] in _TABLE_PARTS:
+                # "in table text", entered with this token already taken
+                text = token[1].replace("\x00", "")
+                self.pending_table_text = [text] if text else []
+                self.original_mode = self.mode
+                self.mode = "in_table_text"
+                return
+        elif tt == "start":
             tag = token[1]
-            if tag == "caption":
-                self._clear_back_to(("table", "template", "html"))
-                self.afe.append(MARKER)
-                self._insert_element(token)
-                self.mode = "in_caption"
-                return
-            if tag == "colgroup":
-                self._clear_back_to(("table", "template", "html"))
-                self._insert_element(token)
-                self.mode = "in_column_group"
-                return
-            if tag == "col":
-                self._clear_back_to(("table", "template", "html"))
-                self._insert_element(("start", "colgroup", [], False))
-                self.mode = "in_column_group"
-                self._reprocess(token)
-                return
-            if tag in ("tbody", "tfoot", "thead"):
-                self._clear_back_to(("table", "template", "html"))
-                self._insert_element(token)
-                self.mode = "in_table_body"
-                return
-            if tag in ("td", "th", "tr"):
-                self._clear_back_to(("table", "template", "html"))
-                self._insert_element(("start", "tbody", [], False))
-                self.mode = "in_table_body"
-                self._reprocess(token)
+            section = _TABLE_SECTION_START.get(tag)
+            if section is not None:
+                # caption/colgroup/col/tbody/thead/tfoot/tr/td/th: clear
+                # to the table, insert the section (or the implied one
+                # and reprocess the token in its mode)
+                mode, implied = section
+                self._clear_back_to(_TABLE_CONTEXT)
+                if tag == "caption":
+                    self.afe.append(MARKER)
+                self.mode = mode
+                if implied is None:
+                    self._insert_element(token)
+                else:
+                    self._insert_element(("start", implied, [], False))
+                    self._reprocess_now(token)
                 return
             if tag == "table":
                 if self._in_table_scope("table"):
                     self._pop_until("table")
                     self._reset_insertion_mode()
-                    self._reprocess(token)
+                    self._reprocess_now(token)
                 return
             if tag in ("style", "script", "template"):
                 self._mode_in_head(token)
@@ -1460,30 +1601,34 @@ class TreeBuilder:
                 attrs = dict(token[2])
                 if attrs.get("type", "").lower() == "hidden":
                     self._insert_element(token)
-                    self.stack.pop()
+                    self._pop()
                     return
-            if tag == "form":
+            elif tag == "form":
+                doc = self.doc
                 if self.form_id == NULL and not any(
                     doc.tag[n] == "template" for n in self.stack
                 ):
                     nid = self._insert_element(token)
                     self.form_id = nid
-                    self.stack.pop()
+                    self._pop()
                 return
-        if tt == "end":
+        elif tt == "end":
             tag = token[1]
             if tag == "table":
-                if self._in_table_scope("table"):
-                    self._pop_until("table")
+                if self._close_table_part("table", _TABLE):
                     self._reset_insertion_mode()
                 return
-            if tag in ("body", "caption", "col", "colgroup", "html", "tbody",
-                       "td", "tfoot", "th", "thead", "tr"):
+            if tag in _TABLE_END_IGNORED:
                 return
             if tag == "template":
                 self._end_template()
                 return
-        if tt == "eof":
+        elif tt == "comment":
+            self._insert_comment(token)
+            return
+        elif tt == "doctype":
+            return
+        elif tt == "eof":
             self._mode_in_body(token)
             return
         # anything else: foster parenting
@@ -1503,40 +1648,47 @@ class TreeBuilder:
         if text:
             if text.strip(_WS):
                 self.foster_parenting = True
-                self._reconstruct_afe()
+                if self.afe:
+                    self._reconstruct_afe()
                 self._insert_text(text)
                 self.frameset_ok = False
                 self.foster_parenting = False
             else:
                 self._insert_text(text)
         self.mode = self.original_mode
-        self._reprocess(token)
+        self._reprocess_now(token)
 
     def _mode_in_caption(self, token) -> None:
         tt = token[0]
-        if tt == "end" and token[1] == "caption":
-            self._close_caption()
-            return
-        if (tt == "start" and token[1] in (
-            "caption", "col", "colgroup", "tbody", "td", "tfoot", "th",
-            "thead", "tr",
-        )) or (tt == "end" and token[1] == "table"):
+        if tt == "end":
+            tag = token[1]
+            if tag == "caption":
+                self._close_caption()
+                return
+            if tag == "table":
+                if self._in_table_scope("caption"):
+                    self._close_caption()
+                    self._reprocess_now(token)
+                return
+            if tag in _CAPTION_END_IGNORED:
+                return
+        elif tt == "start" and token[1] in _TABLE_STRUCTURE:
             if self._in_table_scope("caption"):
                 self._close_caption()
-                self._reprocess(token)
-            return
-        if tt == "end" and token[1] in (
-            "body", "col", "colgroup", "html", "tbody", "td", "tfoot",
-            "th", "thead", "tr",
-        ):
+                self._reprocess_now(token)
             return
         self._mode_in_body(token)
 
     def _close_caption(self) -> None:
-        if not self._in_table_scope("caption"):
+        top = self.stack[-1]
+        if self.doc.tag[top] == "caption" and self.doc.ns[top] == NS_HTML:
+            self.stack.pop()  # the caption is the current node
+            self._open["caption"] -= 1
+        elif self._in_table_scope("caption"):
+            self._generate_implied_end_tags()
+            self._pop_until("caption")
+        else:
             return
-        self._generate_implied_end_tags()
-        self._pop_until("caption")
         self._afe_clear_to_marker()
         self.mode = "in_table"
 
@@ -1560,7 +1712,7 @@ class TreeBuilder:
                 return
             if token[1] == "col":
                 self._insert_element(token)
-                self.stack.pop()
+                self._pop()
                 return
             if token[1] == "template":
                 self._mode_in_head(token)
@@ -1568,7 +1720,7 @@ class TreeBuilder:
         if tt == "end":
             if token[1] == "colgroup":
                 if self._current_tag() == "colgroup":
-                    self.stack.pop()
+                    self._pop()
                     self.mode = "in_table"
                 return
             if token[1] == "col":
@@ -1580,49 +1732,61 @@ class TreeBuilder:
             self._mode_in_body(token)
             return
         if self._current_tag() == "colgroup":
-            self.stack.pop()
+            self._pop()
             self.mode = "in_table"
-            self._reprocess(token)
+            self._reprocess_now(token)
+
+    def _close_table_part(self, target, context: frozenset) -> bool:
+        """If ``target`` (a tag name or a set) is in table scope, clear
+        the stack back to ``context`` and pop the element reached; False
+        if not in scope.  A current node matching ``target`` is popped
+        without the walks."""
+        stack = self.stack
+        top = stack[-1]
+        tag = self.doc.tag[top]
+        if self.doc.ns[top] == NS_HTML and (
+                tag == target if isinstance(target, str) else tag in target):
+            stack.pop()
+            self._open[tag] -= 1
+            return True
+        if not self._in_table_scope(target):
+            return False
+        self._clear_back_to(context)
+        self._pop()
+        return True
 
     def _mode_in_table_body(self, token) -> None:
         tt = token[0]
         if tt == "start":
             tag = token[1]
             if tag == "tr":
-                self._clear_back_to(("tbody", "tfoot", "thead", "template", "html"))
+                self._clear_back_to(_TBODY_CONTEXT)
                 self._insert_element(token)
                 self.mode = "in_row"
                 return
-            if tag in ("th", "td"):
-                self._clear_back_to(("tbody", "tfoot", "thead", "template", "html"))
+            if tag in _CELLS:
+                self._clear_back_to(_TBODY_CONTEXT)
                 self._insert_element(("start", "tr", [], False))
                 self.mode = "in_row"
-                self._reprocess(token)
+                self._reprocess_now(token)
                 return
-            if tag in ("caption", "col", "colgroup", "tbody", "tfoot", "thead"):
-                if self._in_table_scope({"tbody", "thead", "tfoot"}):
-                    self._clear_back_to(("tbody", "tfoot", "thead", "template", "html"))
-                    self.stack.pop()
+            if tag in _TABLE_HEAD_START:
+                if self._close_table_part(_SECTIONS, _TBODY_CONTEXT):
                     self.mode = "in_table"
-                    self._reprocess(token)
+                    self._reprocess_now(token)
                 return
-        if tt == "end":
+        elif tt == "end":
             tag = token[1]
-            if tag in ("tbody", "tfoot", "thead"):
-                if self._in_table_scope(tag):
-                    self._clear_back_to(("tbody", "tfoot", "thead", "template", "html"))
-                    self.stack.pop()
+            if tag in _SECTIONS:
+                if self._close_table_part(tag, _TBODY_CONTEXT):
                     self.mode = "in_table"
                 return
             if tag == "table":
-                if self._in_table_scope({"tbody", "thead", "tfoot"}):
-                    self._clear_back_to(("tbody", "tfoot", "thead", "template", "html"))
-                    self.stack.pop()
+                if self._close_table_part(_SECTIONS, _TBODY_CONTEXT):
                     self.mode = "in_table"
-                    self._reprocess(token)
+                    self._reprocess_now(token)
                 return
-            if tag in ("body", "caption", "col", "colgroup", "html", "td",
-                       "th", "tr"):
+            if tag in _TABLE_BODY_END_IGNORED:
                 return
         self._mode_in_table(token)
 
@@ -1630,44 +1794,32 @@ class TreeBuilder:
         tt = token[0]
         if tt == "start":
             tag = token[1]
-            if tag in ("th", "td"):
-                self._clear_back_to(("tr", "template", "html"))
+            if tag in _CELLS:
+                self._clear_back_to(_ROW_CONTEXT)
                 self._insert_element(token)
                 self.mode = "in_cell"
                 self.afe.append(MARKER)
                 return
-            if tag in ("caption", "col", "colgroup", "tbody", "tfoot",
-                       "thead", "tr"):
-                if self._in_table_scope("tr"):
-                    self._clear_back_to(("tr", "template", "html"))
-                    self.stack.pop()
+            if tag in _ROW_CLOSERS:
+                if self._close_table_part("tr", _ROW_CONTEXT):
                     self.mode = "in_table_body"
-                    self._reprocess(token)
+                    self._reprocess_now(token)
                 return
-        if tt == "end":
+        elif tt == "end":
             tag = token[1]
-            if tag == "tr":
-                if self._in_table_scope("tr"):
-                    self._clear_back_to(("tr", "template", "html"))
-                    self.stack.pop()
+            if tag == "tr" or tag == "table":
+                if self._close_table_part("tr", _ROW_CONTEXT):
                     self.mode = "in_table_body"
+                    if tag == "table":
+                        self._reprocess_now(token)
                 return
-            if tag == "table":
-                if self._in_table_scope("tr"):
-                    self._clear_back_to(("tr", "template", "html"))
-                    self.stack.pop()
-                    self.mode = "in_table_body"
-                    self._reprocess(token)
-                return
-            if tag in ("tbody", "tfoot", "thead"):
+            if tag in _SECTIONS:
                 if self._in_table_scope(tag):
-                    if self._in_table_scope("tr"):
-                        self._clear_back_to(("tr", "template", "html"))
-                        self.stack.pop()
+                    if self._close_table_part("tr", _ROW_CONTEXT):
                         self.mode = "in_table_body"
-                    self._reprocess(token)
+                    self._reprocess_now(token)
                 return
-            if tag in ("body", "caption", "col", "colgroup", "html", "td", "th"):
+            if tag in _ROW_END_IGNORED:
                 return
         self._mode_in_table(token)
 
@@ -1675,33 +1827,42 @@ class TreeBuilder:
         tt = token[0]
         if tt == "end":
             tag = token[1]
-            if tag in ("td", "th"):
-                if self._in_table_scope(tag):
+            if tag in _CELLS:
+                top = self.stack[-1]
+                if self.doc.tag[top] == tag and self.doc.ns[top] == NS_HTML:
+                    self.stack.pop()  # the cell is the current node
+                    self._open[tag] -= 1
+                elif self._in_table_scope(tag):
                     self._generate_implied_end_tags()
                     self._pop_until(tag)
-                    self._afe_clear_to_marker()
-                    self.mode = "in_row"
+                else:
+                    return
+                self._afe_clear_to_marker()
+                self.mode = "in_row"
                 return
-            if tag in ("body", "caption", "col", "colgroup", "html"):
+            if tag in _CELL_END_IGNORED:
                 return
-            if tag in ("table", "tbody", "tfoot", "thead", "tr"):
+            if tag in _TABLE_PARTS:
                 if self._in_table_scope(tag):
                     self._close_cell()
-                    self._reprocess(token)
+                    self._reprocess_now(token)
                 return
-        if tt == "start" and token[1] in (
-            "caption", "col", "colgroup", "tbody", "td", "tfoot", "th",
-            "thead", "tr",
-        ):
-            if self._in_table_scope({"td", "th"}):
+        elif tt == "start" and token[1] in _TABLE_STRUCTURE:
+            if self._in_table_scope(_CELLS):
                 self._close_cell()
-                self._reprocess(token)
+                self._reprocess_now(token)
             return
         self._mode_in_body(token)
 
     def _close_cell(self) -> None:
-        self._generate_implied_end_tags()
-        self._pop_until({"td", "th"})
+        top = self.stack[-1]
+        tag = self.doc.tag[top]
+        if tag in _CELLS and self.doc.ns[top] == NS_HTML:
+            self.stack.pop()  # the cell is the current node
+            self._open[tag] -= 1
+        else:
+            self._generate_implied_end_tags()
+            self._pop_until(_CELLS)
         self._afe_clear_to_marker()
         self.mode = "in_row"
 
@@ -1712,9 +1873,10 @@ class TreeBuilder:
         tt = token[0]
         doc = self.doc
         if tt == "char":
-            text = token[1].replace("\x00", "")
-            if text:
-                self._insert_text(text)
+            text = token[1]
+            if "\x00" in text:
+                text = text.replace("\x00", "")
+            self._insert_text(text)
             return
         if tt == "comment":
             self._insert_comment(token)
@@ -1728,25 +1890,25 @@ class TreeBuilder:
                 return
             if tag == "option":
                 if self._current_tag() == "option":
-                    self.stack.pop()
+                    self._pop()
                 self._insert_element(token)
                 return
             if tag == "optgroup":
                 if self._current_tag() == "option":
-                    self.stack.pop()
+                    self._pop()
                 if self._current_tag() == "optgroup":
-                    self.stack.pop()
+                    self._pop()
                 self._insert_element(token)
                 return
             if tag == "hr":
                 # current spec (hr-in-select, 2023): pop an open
                 # option/optgroup, insert the hr, pop it (void)
                 if self._current_tag() == "option":
-                    self.stack.pop()
+                    self._pop()
                 if self._current_tag() == "optgroup":
-                    self.stack.pop()
+                    self._pop()
                 self._insert_element(token)
-                self.stack.pop()
+                self._pop()
                 return
             if tag == "select":
                 if self._in_select_scope("select"):
@@ -1767,13 +1929,13 @@ class TreeBuilder:
             if tag == "optgroup":
                 if self._current_tag() == "option" and len(self.stack) >= 2 \
                         and doc.tag[self.stack[-2]] == "optgroup":
-                    self.stack.pop()
+                    self._pop()
                 if self._current_tag() == "optgroup":
-                    self.stack.pop()
+                    self._pop()
                 return
             if tag == "option":
                 if self._current_tag() == "option":
-                    self.stack.pop()
+                    self._pop()
                 return
             if tag == "select":
                 if self._in_select_scope("select"):
@@ -1789,16 +1951,12 @@ class TreeBuilder:
 
     def _mode_in_select_in_table(self, token) -> None:
         tt = token[0]
-        if tt == "start" and token[1] in (
-            "caption", "table", "tbody", "tfoot", "thead", "tr", "td", "th",
-        ):
+        if tt == "start" and token[1] in _SELECT_IN_TABLE_CLOSERS:
             self._pop_until("select")
             self._reset_insertion_mode()
             self._reprocess(token)
             return
-        if tt == "end" and token[1] in (
-            "caption", "table", "tbody", "tfoot", "thead", "tr", "td", "th",
-        ):
+        if tt == "end" and token[1] in _SELECT_IN_TABLE_CLOSERS:
             if self._in_table_scope(token[1]):
                 self._pop_until("select")
                 self._reset_insertion_mode()
@@ -1820,37 +1978,17 @@ class TreeBuilder:
                        "noframes", "script", "style", "template", "title"):
                 self._mode_in_head(token)
                 return
-            if tag in ("caption", "colgroup", "tbody", "tfoot", "thead"):
-                self.template_modes[-1] = "in_table"
-                self.mode = "in_table"
-                self._reprocess(token)
-                return
-            if tag == "col":
-                self.template_modes[-1] = "in_column_group"
-                self.mode = "in_column_group"
-                self._reprocess(token)
-                return
-            if tag == "tr":
-                self.template_modes[-1] = "in_table_body"
-                self.mode = "in_table_body"
-                self._reprocess(token)
-                return
-            if tag in ("td", "th"):
-                self.template_modes[-1] = "in_row"
-                self.mode = "in_row"
-                self._reprocess(token)
-                return
-            self.template_modes[-1] = "in_body"
-            self.mode = "in_body"
-            self._reprocess(token)
+            mode = _TEMPLATE_START_MODES.get(tag, "in_body")
+            self.template_modes[-1] = mode
+            self.mode = mode
+            self._reprocess_now(token)
             return
         if tt == "end":
             if token[1] == "template":
                 self._end_template()
             return
         if tt == "eof":
-            if not any(self.doc.tag[n] == "template" and self.doc.ns[n] == NS_HTML
-                       for n in self.stack):
+            if not self._template_open():
                 self.done = True
                 return
             self._end_template()
@@ -1910,14 +2048,14 @@ class TreeBuilder:
                 return
             if tag == "frame":
                 self._insert_element(token)
-                self.stack.pop()
+                self._pop()
                 return
             if tag == "noframes":
                 self._mode_in_head(token)
                 return
         if tt == "end" and token[1] == "frameset":
             if self._current_tag() != "html":
-                self.stack.pop()
+                self._pop()
             if self.fragment_context_tag is None and self._current_tag() != "frameset":
                 self.mode = "after_frameset"
             return
@@ -2000,9 +2138,11 @@ class TreeBuilder:
         tt = token[0]
         doc = self.doc
         if tt == "char":
-            text = token[1].replace("\x00", "�")
+            text = token[1]
+            if "\x00" in text:
+                text = text.replace("\x00", "\ufffd")
             self._insert_text(text)
-            if text.strip(_WS):
+            if self.frameset_ok and text.strip(_WS):
                 self.frameset_ok = False
             return
         if tt == "comment":
@@ -2027,13 +2167,19 @@ class TreeBuilder:
                         break
                     if self._is_html_integration(n, ns, t):
                         break
-                    self.stack.pop()
+                    self._pop()
                 self._process(token)
                 return
-            cur_ns = doc.ns[self._adjusted_current_node()]
+            # the adjusted current node's namespace
             if len(self.stack) == 1 and self.fragment_context_tag is not None:
                 cur_ns = self.fragment_context_ns
-            if cur_ns == NS_SVG:
+            else:
+                cur_ns = doc.ns[self.stack[-1]]
+            if not token[2]:
+                attrs = {}
+                if cur_ns == NS_SVG:
+                    tag = SVG_TAG_ADJUSTMENTS.get(tag, tag)
+            elif cur_ns == NS_SVG:
                 tag = SVG_TAG_ADJUSTMENTS.get(tag, tag)
                 attrs = adjust_foreign_attrs(token[2], svg=True)
             elif cur_ns == NS_MATHML:
@@ -2043,7 +2189,7 @@ class TreeBuilder:
             self._insert_element(token, ns=cur_ns, tag_override=tag,
                                  attrs_override=attrs)
             if token[3]:
-                self.stack.pop()
+                self._pop()
             return
         if tt == "end":
             tag = token[1]
@@ -2062,17 +2208,18 @@ class TreeBuilder:
                         break
                     if self._is_html_integration(n, ns, t):
                         break
-                    self.stack.pop()
+                    self._pop()
                 self._process(token)
                 return
-            node_i = len(self.stack) - 1
-            node = self.stack[node_i]
-            if doc.tag[node].lower() != tag:
-                pass  # parse error
+            stack = self.stack
+            node_i = len(stack) - 1
+            if node_i > 0 and doc.tag[stack[-1]].lower() == tag:
+                self._pop()  # the end tag of the current node
+                return
             while node_i > 0:
                 node = self.stack[node_i]
                 if doc.tag[node].lower() == tag:
-                    del self.stack[node_i:]
+                    self._pop_to(node_i)
                     return
                 node_i -= 1
                 if doc.ns[self.stack[node_i]] == NS_HTML:
@@ -2081,6 +2228,86 @@ class TreeBuilder:
             return
         if tt == "eof":
             self._process(token)
+
+
+#: "in template" start tags that pick the template's insertion mode
+#: (any other start tag: "in body")
+_TEMPLATE_START_MODES = {
+    "caption": "in_table", "colgroup": "in_table", "tbody": "in_table",
+    "tfoot": "in_table", "thead": "in_table", "col": "in_column_group",
+    "tr": "in_table_body", "td": "in_row", "th": "in_row"}
+#: "reset the insertion mode": elements that select a mode by tag alone
+_RESET_MODES = {
+    "tr": "in_row", "tbody": "in_table_body", "thead": "in_table_body",
+    "tfoot": "in_table_body", "caption": "in_caption",
+    "colgroup": "in_column_group", "table": "in_table", "body": "in_body",
+    "frameset": "in_frameset"}
+#: insertion mode name -> handler
+_MODES = {name[6:]: fn for name, fn in vars(TreeBuilder).items()
+          if name.startswith("_mode_")}
+
+
+def _rule_table(rules) -> dict:
+    """tag -> handler; rules are listed in the spec's order, so a tag
+    named by two rules takes the first."""
+    table: dict = {}
+    for tags, handler in rules:
+        for tag in tags:
+            table.setdefault(tag, handler)
+    return table
+
+
+_TB = TreeBuilder
+#: "in body" start-tag rules; a tag in none of them is an ordinary element
+_BODY_START = _rule_table((
+    (("html",), _TB._start_html),
+    (("base", "basefont", "bgsound", "link", "meta", "noframes", "script",
+      "style", "template", "title", "noscript"), _TB._start_head_content),
+    (("body",), _TB._start_body),
+    (("frameset",), _TB._start_frameset),
+    (BLOCK_START, _TB._start_block),
+    (HEADING_TAGS, _TB._start_heading),
+    (("pre", "listing"), _TB._start_pre),
+    (("form",), _TB._start_form),
+    (("li", "dd", "dt"), _TB._start_list_item),
+    (("plaintext",), _TB._start_plaintext),
+    (("button",), _TB._start_button),
+    (("a",), _TB._start_a),
+    (("b", "big", "code", "em", "font", "i", "s", "small", "strike",
+      "strong", "tt", "u"), _TB._start_formatting),
+    (("nobr",), _TB._start_nobr),
+    (("applet", "marquee", "object"), _TB._start_marker),
+    (("table",), _TB._start_table),
+    (("area", "br", "embed", "img", "keygen", "wbr"), _TB._start_void),
+    (("input",), _TB._start_input),
+    (("param", "source", "track"), _TB._start_param),
+    (("hr",), _TB._start_hr),
+    (("image",), _TB._start_image),
+    (("textarea",), _TB._start_textarea),
+    (("xmp", "iframe", "noembed"), _TB._start_rawtext),
+    (("select",), _TB._start_select),
+    (("optgroup", "option"), _TB._start_option),
+    (("rb", "rtc", "rp", "rt"), _TB._start_ruby_text),
+    (("math", "svg"), _TB._start_foreign),
+    (("caption", "col", "colgroup", "frame", "head", "tbody", "td", "tfoot",
+      "th", "thead", "tr"), _TB._start_ignored),
+))
+#: end tags whose "in body" rule does more than pop a matching current node
+_BODY_END_SPECIAL = FORMATTING_TAGS | frozenset(
+    ("body", "html", "template", "form", "br", "applet", "marquee", "object"))
+#: "in body" end-tag rules; any other end tag: _any_other_end_tag
+_BODY_END = _rule_table((
+    (("template",), _TB._end_template_tag),
+    (("body", "html"), _TB._end_body),
+    (("p",), _TB._end_p),
+    (("li", "dd", "dt"), _TB._end_list_item),
+    (BLOCK_START | {"button", "listing", "pre"}, _TB._end_block),
+    (("form",), _TB._end_form),
+    (HEADING_TAGS, _TB._end_heading),
+    (FORMATTING_TAGS, _TB._end_formatting),
+    (("applet", "marquee", "object"), _TB._end_marker),
+    (("br",), _TB._end_br),
+))
 
 
 def _split_leading_ws(token) -> tuple[str, str, int]:

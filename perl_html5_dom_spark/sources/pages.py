@@ -326,8 +326,8 @@ def hostile2_pages_cte(docs_rel: str = DOCUMENTS) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Messy family — the realistic frameless page: every construct the round-3
-# fast lane covers, under oracle check.  No doctype (quirks mode), no
+# Messy family — the realistic frameless page: the tree builder's common
+# constructs beyond plain blocks, under oracle check.  No doctype (quirks mode), no
 # <html>/<body> tags (implied frames), form/input/button, select with
 # implied option closes, marquee (AFE marker), template (content in the
 # arena, excluded from innerText), pre and textarea with the

@@ -1,11 +1,8 @@
-"""The public parse path: ``HTML5DOM().parse`` builds through the fast lane
-when the tree options are at their defaults, and must give the tree the
-full insertion-mode machine gives on every input; non-default options
-must keep running the full machine."""
+"""The public parse path: ``HTML5DOM().parse`` builds with the tree
+builder through the document-parse entry, gives the recorded tree of
+every shared input, and honours the non-default tree options."""
 
 import random
-import subprocess
-import sys
 
 import duckdb
 import pytest
@@ -15,7 +12,8 @@ from perl_html5_dom_spark.dom import fastparse
 from perl_html5_dom_spark.dom.treebuilder import TreeBuilder
 from perl_html5_dom_spark.sources import pages as pg
 
-from test_fastparse import CASES, project
+from parse_cases import (CASES, DEEP_TABLE_DEPTHS, assert_recorded, deep_table,
+                         digest, goldens, project)
 
 
 def assert_api_equals_full(html: bytes, **opts):
@@ -30,7 +28,8 @@ def assert_api_equals_full(html: bytes, **opts):
 
 @pytest.mark.parametrize("src", CASES)
 def test_api_parse_equals_full_machine(src):
-    assert_api_equals_full(src.encode())
+    # the recorded tree is the insertion-mode machine's
+    assert_recorded(src, HTML5DOM().parse(src.encode()).doc)
 
 
 def _body(html: str) -> str:
@@ -65,14 +64,14 @@ def library_pages(n_docs: int = 240) -> list:
 
 def test_api_parse_library_pages():
     pages = library_pages()
-    for html in pages:
-        assert_api_equals_full(html.encode())
-    # these pages are the fast lane's shape: none may bail
-    assert all(fastparse.try_parse(html) is not None for html in pages)
+    want = goldens()["library_pages"]
+    assert len(pages) == len(want)
+    for html, d in zip(pages, want):
+        assert digest(assert_api_equals_full(html.encode()).doc) == d
 
 
-#: inputs each option changes, so running the fast lane (which knows only
-#: the defaults) in its place would show
+#: inputs each option changes, so building with the default options in
+#: its place would show
 OPTION_CASES = [
     ({"scripts": False},
      "<!DOCTYPE html><html><head><noscript><link rel=a></noscript></head>"
@@ -93,23 +92,35 @@ def test_api_non_default_options_run_full_machine(opts, src):
         assert_api_equals_full(case.encode(), **opts)
 
 
-def test_default_parse_loads_one_builder():
-    code = (
-        "import sys\n"
-        "from perl_html5_dom_spark.api import HTML5DOM\n"
-        "HTML5DOM().parse(b'<p>x')\n"
-        "assert 'perl_html5_dom_spark.dom.fastparse' in sys.modules\n"
-        "assert 'perl_html5_dom_spark.dom.treebuilder' not in sys.modules\n"
-        "HTML5DOM().parseFragment('<td>x', 'tr')\n"
-        "assert 'perl_html5_dom_spark.dom.treebuilder' in sys.modules\n")
-    subprocess.run([sys.executable, "-c", code], check=True, timeout=60)
+def test_default_parse_loads_one_builder(monkeypatch):
+    """Every parse surface builds with TreeBuilder's one token loop."""
+    from perl_html5_dom_spark.operators.extract import parse_document
+
+    calls = []
+    pump = TreeBuilder.pump
+
+    def counted(self, pull):
+        calls.append(self)
+        return pump(self, pull)
+
+    monkeypatch.setattr(TreeBuilder, "pump", counted)
+    for run in (lambda: HTML5DOM().parse(b"<p>x"),
+                lambda: HTML5DOM(scripts=False).parse("<p>x"),
+                lambda: HTML5DOM().parseFragment("<td>x", "tr"),
+                lambda: HTML5DOM().parseChunkStart().parseChunk("<p>x")
+                .parseChunkEnd(),
+                lambda: parse_document(b"<p>x"),
+                lambda: fastparse.parse("<p>x")):
+        calls.clear()
+        run()
+        assert calls and all(isinstance(tb, TreeBuilder) for tb in calls)
 
 
-@pytest.mark.parametrize("depth", [400, 1000])
+@pytest.mark.parametrize("depth", DEEP_TABLE_DEPTHS)
 def test_api_parse_deep_tables(depth):
-    # the fast lane's table sub-parser recurses per nesting level; past
-    # the interpreter's limit it bails to the full machine, which parses
-    # any depth, instead of raising RecursionError
-    src = "<!DOCTYPE html><html><body>" + "<table><tr><td>" * depth + "x"
+    # nesting depth is bounded by nothing but memory: the tree builder is
+    # iterative
+    src = deep_table(depth)
     tree = assert_api_equals_full(src.encode())
     assert len(tree.doc.parent) > 3 * depth
+    assert digest(tree.doc) == goldens()["deep_tables"][str(depth)]

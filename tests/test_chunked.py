@@ -10,8 +10,8 @@ from perl_html5_dom_spark.api import HTML5DOM
 from perl_html5_dom_spark.dom.chunked import parse_chunked
 from perl_html5_dom_spark.dom.treebuilder import TreeBuilder
 
-from test_fastparse import CASES as FAST_CASES
-from test_fastparse import project
+from parse_cases import CASES as FAST_CASES
+from parse_cases import project
 
 
 def chunks_of(src: str, cuts: list[int]):
@@ -123,7 +123,7 @@ def test_chunked_corpus():
 @settings(max_examples=200, deadline=None)
 @given(st.data())
 def test_chunked_fuzz(data):
-    from test_fastparse import soup
+    from parse_cases import soup
 
     src = data.draw(soup())
     if not src:

@@ -1,8 +1,8 @@
 """Cross-surface invariant fuzzes, distilled from the round-3 hunting
-session that found six real bugs (fast-lane AFE retention across
-container close, form-in-template rules, li/dd/dt special-stop drift,
-template fragment mode seeding, in-body EOF template loop, relative
-:has(), the mutation hierarchy guard).  Each runs a few hundred cases
+session that found six real bugs (AFE retention across container close
+in a since-deleted second tree builder, form-in-template rules, li/dd/dt
+special-stop drift, template fragment mode seeding, in-body EOF
+template loop, relative :has(), the mutation hierarchy guard).  Each runs a few hundred cases
 per CI pass; the session-scale versions ran 10^5+.
 """
 
@@ -14,6 +14,8 @@ from perl_html5_dom_spark.dom import fastparse
 from perl_html5_dom_spark.dom.chunked import ChunkedParser
 from perl_html5_dom_spark.dom.treebuilder import TreeBuilder, parse_fragment
 from perl_html5_dom_spark.dom.treedump import tree_format
+
+from parse_cases import digest, goldens
 
 _TAGS = ("template", "marquee", "object", "applet", "b", "i", "a", "nobr",
          "table", "tr", "td", "th", "caption", "colgroup", "col", "select",
@@ -35,23 +37,29 @@ def _alphabet():
     return a
 
 
-def test_fastparse_full_machine_differential():
-    """The fast lane and the insertion-mode machine agree (or the fast
-    lane bails) on random mixed-vocabulary soup, in standards, quirks
-    (no doctype) and limited-quirks (legacy public id) modes."""
-    random.seed(0xF457)
+def mixed_vocabulary_docs() -> list:
+    """Random mixed-vocabulary soup in standards, quirks (no doctype) and
+    limited-quirks (legacy public id) modes."""
+    rnd = random.Random(0xF457)
     alpha = _alphabet()
     prefixes = ("<!DOCTYPE html>", "",
                 '<!DOCTYPE html PUBLIC '
                 '"-//W3C//DTD HTML 4.01 Transitional//EN">')
-    for i in range(700):
-        src = prefixes[i % 3] + "<body>" + "".join(
-            random.choice(alpha) for _ in range(random.randint(2, 16)))
-        try:
-            fast = fastparse.parse(src)
-        except Exception:
-            continue                       # bail to the slow lane is fine
-        assert tree_format(fast) == tree_format(TreeBuilder().parse(src)), src
+    return [prefixes[i % 3] + "<body>" + "".join(
+        rnd.choice(alpha) for _ in range(rnd.randint(2, 16)))
+        for i in range(700)]
+
+
+def test_fastparse_full_machine_differential():
+    """The document-parse entry builds the recorded tree (built when a
+    second, fast-lane builder still existed and agreed with the
+    insertion-mode machine) of every mixed-vocabulary soup document."""
+    want = goldens()["mixed_vocabulary"]
+    docs = mixed_vocabulary_docs()
+    assert len(docs) == len(want)
+    bad = [src for src, d in zip(docs, want)
+           if digest(fastparse.parse(src)) != d]
+    assert not bad, bad[:5]
 
 
 def test_chunked_whole_parse_equivalence():

@@ -222,3 +222,34 @@ def test_reset_insertion_mode_skips_foreign_nodes():
 
     TreeBuilder().parse("<math><template ><mi ><select ><textarea>")
     TreeBuilder().parse("<svg><desc><table><select><input>")
+
+
+@pytest.mark.parametrize("unit", ["<div>", "<b><i><u>x"])
+def test_deep_nesting_parses_in_linear_time(unit):
+    """n to 4n nested elements cost at most 5x the time (linear is 4x).
+    Per-tag open-element counts answer "has a p element in button
+    scope" without walking the stack when no p is open, and the
+    reconstruction check looks at the current node first; a walk over
+    the whole stack on every token makes the parse quadratic.  Timed in
+    a child interpreter with a wall-clock bound, best of three per
+    size."""
+    import subprocess
+    import sys
+
+    code = (
+        "import time\n"
+        "from perl_html5_dom_spark.dom.treebuilder import TreeBuilder\n"
+        f"unit = {unit!r}\n"
+        "def best(n):\n"
+        "    src = unit * n\n"
+        "    times = []\n"
+        "    for _ in range(3):\n"
+        "        t0 = time.perf_counter()\n"
+        "        TreeBuilder().parse(src)\n"
+        "        times.append(time.perf_counter() - t0)\n"
+        "    return min(times)\n"
+        "best(500)\n"
+        "print(best(4000) / best(1000))\n")
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True, timeout=120)
+    assert float(out.stdout) <= 5
