@@ -32,68 +32,72 @@ text rotation are ignored — spans use the text-matrix translation only;
 CID/Type0 fonts would need CMap tables, so strings decode as
 PDFDocEncoding≈Latin-1 (exact for the ASCII corpus); unsupported
 filters raise ``PdfError``.  A damaged or missing xref falls back to a
-whole-file ``N G obj`` repair scan (what real crawl extractors do).
+whole-file ``N G obj`` repair scan (what real crawl extractors do); the
+same one-pass index serves offsets that an incremental update left
+stale.  Inflation stops at ``_INFLATE_BUDGET`` bytes per document, with
+a ``PdfError``.
+
+Lexer.  Object syntax and content streams share the lexical rules of
+§7.2 and one token regex, ``_TOK``.  ``findall`` over a window of the
+data gives one tuple per token — (name, number, keyword, string,
+delimiter, whitespace after), one of the first five set — and two
+loops dispatch on the tuples: ``_object`` (open containers on an
+explicit stack, ``INT INT R`` by looking two tuples ahead) and
+``_spans_from_content``.  No position is kept per token: the tuples
+tile the window, so an offset is the window start plus the lengths
+before it.  The few readers that need one (``stream`` after a dict,
+``BI`` … ``EI``, a string nested deeper than the regex's two levels or
+cut by the window edge) reposition there, and the scan restarts with a
+``_SCAN_MIN``-byte window that doubles, up to ``_SCAN_MAX``, while it
+is consumed: a restart rescans at most about twice what it consumes
+next, so lexing stays linear in the data.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+from operator import add
 
 __all__ = ["PdfError", "PdfParser", "extract_pdf_text", "pdf_page_count"]
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
+# single bytes are tested as ints below: ``0x2E in tok`` is a memchr,
+# ``b"." in tok`` costs ten times as much
 
 _NAME_HASH = re.compile(rb"#([0-9A-Fa-f]{2})")
-# C-speed scanners for the lexer hot loops (round 6): one regex match
-# replaces the per-byte Python loop.  Semantics identical by
-# construction — the whitespace run also swallows %-comments to EOL
-# exactly as the old loop did (an unterminated trailing comment runs to
-# end of data), and the keyword class is the complement of WS ∪ DELIM.
-_WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*")
-_KW_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
-# literal-string fast path: a run with no backslash and no parens,
-# ending at the closing ')'
-_LIT_PLAIN_RE = re.compile(rb"[^\\()]*\)")
-# content-stream master token: leading whitespace/comments + ONE token,
-# classified by group — one C-level match replaces the skip_ws / peek /
-# read_keyword call triple per token in the §9.4 interpreter.  Group
-# coverage is total: every byte is ws, '%' (comment), keyword-class
-# (num/op, split on the numeric start set, or the run after '/'), or a
-# delimiter — so a non-match can only mean trailing ws/comments.
-# The ws/comment prefix is an atomic group: no token alternative starts
-# with ws or '%', so giving any of it back can never help a match —
-# backtracking into it only splits whitespace runs (exponential in the
-# run length) or restarts a token inside a comment.
-_CS_TOK = re.compile(
-    rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*)"
-    rb"(?:(?P<num>[+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|/(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
-    rb"|(?P<delim>[()<>\[\]{}])"
-    rb")")
-# object-syntax master token (§7.3): same idea for read_object.  The
-# ref alternative folds the common ws-separated ``INT INT R`` lookahead
-# into the single match (it must precede num in the alternation); a
-# digit-led token that is NOT a ws-separated ref (int arrays, refs
-# split by comments) falls back to the old explicit lookahead, so the
-# parse is bit-identical on every input.
-_OBJ_TOK = re.compile(
-    rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*)"
-    rb"(?:(?P<rnum>\d+)[\x00\t\n\x0c\r ]+(?P<rgen>\d+)"
-    rb"[\x00\t\n\x0c\r ]+R(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$)"
-    rb"|(?P<num>[+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|/(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
-    rb"|(?P<delim><<|[(<\[])"
-    rb")")
-# dict-body fast step: ws/comments + either the closing '>>' or a name
-# key — one match per dict entry instead of skip_ws + two-byte slice
-# compare + full read_object for the key
-_DICT_KEY = re.compile(
-    rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*)"
-    rb"(?:(?P<end>>>)|/(?P<key>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))")
+_NOT_HEX = re.compile(rb"[^0-9A-Fa-f]")
+# a whitespace/comment run (§7.2.3; an unterminated trailing comment
+# runs to the end of the data), possessive so it never backtracks
+_WSC = rb"[\x00\t\n\x0c\r ]*+(?:%[^\n]*+\n?[\x00\t\n\x0c\r ]*+)*+"
+_WS_RE = re.compile(_WSC)
+# the token scan (see "Lexer" above): every byte outside a
+# whitespace/comment run starts exactly one alternative, and each token
+# takes the run after it, so findall yields the tokens back to back
+_REG = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+# a literal string nested at most two levels deep
+_STR = rb"\((?:[^\\()]++|\\.|\((?:[^\\()]++|\\.)*+\))*+\)"
+_TOK = re.compile(
+    rb"(?:(/" + _REG + rb"*+)"                  # 1 name, with its '/'
+    rb"|([+\-.0-9]" + _REG + rb"*+)"            # 2 number
+    rb"|(" + _REG + rb"++)"                     # 3 keyword / operator
+    rb"|(" + _STR + rb"|<[^<>]*+>)"             # 4 string
+    rb"|(<<|>>|[()<>\[\]{}]))"                  # 5 delimiter
+    rb"(" + _WSC + rb")", re.S)                 # 6 whitespace after
+_END = (b"",) * 6       # past the last token: every group empty
+_ESC = re.compile(rb"\\([0-7]{1,3}|\r\n?|.)", re.S)
+_ESC_BYTE = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b",
+             b"f": b"\f", b"\r": b"", b"\n": b"", b"\r\n": b""}
+# inside a deeper literal string: text, escapes and whole shallow
+# strings, up to the next parenthesis
+_LIT_STEP = re.compile(rb"(?:[^\\()]++|\\.|" + _STR + rb")*+([()]?)", re.S)
+# window sizes: the first after a reposition, and the cap once tokens
+# are flowing (a token longer than the window doubles it past the cap)
+_SCAN_MIN, _SCAN_MAX = 32, 1 << 16
+# decompressed bytes one document may inflate, over all its streams: a
+# deflate stream expands up to ~1000x, so without a bound a few hundred
+# KB of input could exhaust a worker's memory
+_INFLATE_BUDGET = 64 << 20
 
 
 class PdfError(ValueError):
@@ -138,215 +142,241 @@ class Stream:
 # ---------------------------------------------------------------------------
 
 
+_LIST = object()    # the pending "key" of an open array
+_BAD = object()     # a dict key that is not a name: raised once read
+
+
+def _scan(data: bytes, pos: int, size: int):
+    """One token window ``(toks, lim, base, end)``: the tokens of
+    ``data[base:end]``, ``base`` being ``pos`` past whitespace.  Tokens
+    before ``lim`` are whole; the last window ends in two ``_END``s,
+    any other in a token that the window may have cut short."""
+    base = _WS_RE.match(data, pos).end()
+    end = base + size
+    if end >= len(data):
+        end = len(data)
+        toks = _TOK.findall(data, base, end)
+        toks += (_END, _END)
+        return toks, len(toks), base, end
+    toks = _TOK.findall(data, base, end)
+    return toks, len(toks) - 1, base, end
+
+
+def _at(toks: list, i: int, base: int, end: int) -> int:
+    """Byte offset of token ``i``: the tokens (with their trailing
+    whitespace) tile ``data[base:end]``, so sum the lengths on the
+    shorter side of ``i``."""
+    if not i:
+        return base
+    if 2 * i <= len(toks):
+        return base + len(b"".join(map(b"".join, toks[:i])))
+    return end - len(b"".join(map(b"".join, toks[i:])))
+
+
+def _rescan(data: bytes, toks: list, i: int, base: int, end: int):
+    """The cursor ``(toks, 0, lim, base, end)`` of a new window from token
+    ``i`` on: twice the old window while it held nothing whole before
+    ``i`` (so any token fits eventually), else at most ``_SCAN_MAX``."""
+    size = end - base
+    size = max(_SCAN_MIN, 2 * size if i == 0 else min(2 * size, _SCAN_MAX))
+    toks, lim, base, end = _scan(data, _at(toks, i, base, end), size)
+    return toks, 0, lim, base, end
+
+
+def _name(tok: bytes) -> str:
+    nm = tok[1:]
+    if 0x23 in nm:  # "#xx"
+        nm = _NAME_HASH.sub(lambda h: bytes([int(h.group(1), 16)]), nm)
+    return nm.decode("latin-1")
+
+
+def _esc_byte(m) -> bytes:
+    e = m.group(1)
+    if 0x30 <= e[0] <= 0x37:  # octal, up to 3 digits
+        return bytes([int(e, 8) & 0xFF])
+    return _ESC_BYTE.get(e, e)  # \n \r \t \b \f, line continuations
+
+
+def _unescape(body: bytes) -> bytes:
+    return _ESC.sub(_esc_byte, body) if 0x5C in body else body
+
+
+def _unhex(body: bytes) -> bytes:
+    digits = _NOT_HEX.sub(b"", body)
+    if len(digits) % 2:
+        digits += b"0"
+    return bytes.fromhex(digits.decode("ascii"))
+
+
+def _string(tok: bytes) -> bytes:
+    """The value of a string token, ``(literal)`` or ``<hex>``."""
+    if tok[0] == 0x28:
+        return _unescape(tok[1:-1])
+    return _unhex(tok[1:-1])
+
+
+def _literal(data: bytes, p: int):
+    """``(value, end)`` of the literal string at ``data[p] == '('`` that
+    the token scan could not take whole (deeper nesting, or cut by the
+    window)."""
+    depth, q = 1, p + 1
+    while True:
+        m = _LIT_STEP.match(data, q)
+        c = m.group(1)
+        if not c:
+            raise PdfError("unterminated literal string")
+        q = m.end()
+        depth += 1 if c == b"(" else -1
+        if not depth:
+            return _unescape(data[p + 1:q - 1]), q
+
+
+def _hex(data: bytes, p: int):
+    """``(value, end)`` of the hex string at ``data[p] == '<'``."""
+    j = data.find(b">", p)
+    if j < 0:
+        raise PdfError("unterminated hex string")
+    return _unhex(data[p + 1:j]), j + 1
+
+
+def _real(tok: bytes):
+    return (float(tok) if 0x2E in tok or 0x65 in tok or 0x45 in tok
+            else int(tok))
+
+
+def _bad(tok: bytes, toks: list, i: int, base: int, end: int) -> PdfError:
+    """The error for the token ``toks[i - 1]`` that is not a number."""
+    at = _at(toks, i - 1, base, end) + len(tok)
+    return PdfError(f"bad token {tok!r} at {at}")
+
+
+def _object(data: bytes, toks: list, i: int, lim: int, base: int, end: int):
+    """Read the object starting at token ``i``: ``(obj, toks, i, lim,
+    base, end)`` with the cursor past it.  Open containers live on an
+    explicit stack, so nesting depth costs no Python stack."""
+    stack = []                  # enclosing (container, key) pairs
+    top, key = None, _LIST      # innermost open container, its pending key
+    while True:
+        while i >= lim:
+            toks, i, lim, base, end = _rescan(data, toks, i, base, end)
+        name, num, kw, s, d, _ = toks[i]
+        i += 1
+        if key is None:         # a dict key, or the '>>' closing it
+            if name:
+                key = (name[1:].decode("latin-1") if 0x23 not in name
+                       else _name(name))
+                continue
+            if d != b">>":      # read the object as a value, then refuse it
+                key = _BAD
+                i -= 1
+                continue
+            if i >= lim:        # the stream check needs the next token
+                toks, i, lim, base, end = _rescan(data, toks, i - 1, base,
+                                                  end)
+                continue
+            v = top
+            top, key = stack.pop()
+            if toks[i][2][:6] == b"stream":
+                p = _at(toks, i, base, end) + 6
+                if data[p:p + 2] == b"\r\n":
+                    p += 2
+                elif data[p:p + 1] in (b"\n", b"\r"):
+                    p += 1
+                v = Stream(v, b"")  # raw filled in by caller (needs /Length)
+                toks, i, lim, base, end = [], 0, 0, p, p
+        elif num:
+            try:
+                v = int(num) if num.isdigit() else _real(num)
+            except ValueError as exc:
+                raise _bad(num, toks, i, base, end) from exc
+            if type(v) is int:  # INT INT R is an indirect reference
+                if i + 1 >= lim:
+                    toks, i, lim, base, end = _rescan(data, toks, i - 1,
+                                                      base, end)
+                    continue
+                n1 = toks[i][1]
+                if n1 and 0x2F < n1[0] < 0x3A and toks[i + 1][2] == b"R":
+                    v = Ref(v, int(n1))
+                    i += 2
+        elif name:
+            v = Name(name[1:].decode("latin-1") if 0x23 not in name
+                     else _name(name))
+        elif d:
+            if d == b"<<" or d == b"[":
+                stack.append((top, key))
+                top, key = ({}, None) if d == b"<<" else ([], _LIST)
+                continue
+            if d == b"]" and key is _LIST and top is not None:
+                v = top
+                top, key = stack.pop()
+            elif d == b"(" or d == b"<":
+                v, p = (_literal if d == b"(" else _hex)(
+                    data, _at(toks, i - 1, base, end))
+                toks, i, lim, base, end = [], 0, 0, p, p
+            else:
+                at = _at(toks, i - 1, base, end)
+                raise PdfError(f"lex error at byte {at}")
+        elif s:
+            v = _string(s)
+        elif kw == b"true":
+            v = True
+        elif kw == b"false":
+            v = False
+        elif kw == b"null":
+            v = None
+        elif kw:
+            try:
+                v = _real(kw)
+            except ValueError as exc:
+                raise _bad(kw, toks, i, base, end) from exc
+        else:
+            raise PdfError("unexpected end of data")
+        if top is None:
+            return v, toks, i, lim, base, end
+        if key is _LIST:
+            top.append(v)
+        elif key is not _BAD:
+            top[key] = v
+            key = None
+        else:
+            raise PdfError("dict key is not a name")
+
+
 class _Lexer:
+    """Reads objects from ``data`` at ``pos``, which then sits past the
+    object and the whitespace after it."""
+
     def __init__(self, data: bytes, pos: int = 0):
         self.data = data
         self.pos = pos
 
-    def skip_ws(self) -> None:
-        self.pos = _WS_RE.match(self.data, self.pos).end()
-
-    def peek(self) -> int:
-        return self.data[self.pos] if self.pos < len(self.data) else -1
-
-    def read_keyword(self) -> bytes:
-        m = _KW_RE.match(self.data, self.pos)
-        self.pos = m.end()
-        return m.group()
-
-    # -- object kinds ------------------------------------------------------
-
-    def read_literal_string(self) -> bytes:
-        data, n = self.data, len(self.data)
-        self.pos += 1  # '('
-        # fast path: no escapes, no nested parens — one regex match
-        # lands exactly on the closing ')' (fails to match, and falls
-        # through to the full state machine, the moment the next
-        # special byte is '\\' or '(')
-        m = _LIT_PLAIN_RE.match(data, self.pos)
-        if m:
-            self.pos = m.end()
-            return m.group()[:-1]
-        out = bytearray()
-        depth = 1
-        while self.pos < n:
-            c = data[self.pos]
-            self.pos += 1
-            if c == 0x5C:  # backslash
-                if self.pos >= n:
-                    break
-                e = data[self.pos]
-                self.pos += 1
-                if e in b"nrtbf":
-                    out.append({0x6E: 10, 0x72: 13, 0x74: 9,
-                                0x62: 8, 0x66: 12}[e])
-                elif e in b"()\\":
-                    out.append(e)
-                elif 0x30 <= e <= 0x37:  # octal, up to 3 digits
-                    val = e - 0x30
-                    for _ in range(2):
-                        if self.pos < n and 0x30 <= data[self.pos] <= 0x37:
-                            val = val * 8 + (data[self.pos] - 0x30)
-                            self.pos += 1
-                        else:
-                            break
-                    out.append(val & 0xFF)
-                elif e == 0x0D:  # line continuation \CR[LF]
-                    if self.pos < n and data[self.pos] == 0x0A:
-                        self.pos += 1
-                elif e == 0x0A:
-                    pass
-                else:
-                    out.append(e)
-            elif c == 0x28:
-                depth += 1
-                out.append(c)
-            elif c == 0x29:
-                depth -= 1
-                if depth == 0:
-                    return bytes(out)
-                out.append(c)
-            else:
-                out.append(c)
-        raise PdfError("unterminated literal string")
-
-    def read_hex_string(self) -> bytes:
-        self.pos += 1  # '<'
-        j = self.data.find(b">", self.pos)
-        if j < 0:
-            raise PdfError("unterminated hex string")
-        hexdigits = re.sub(rb"[^0-9A-Fa-f]", b"", self.data[self.pos:j])
-        self.pos = j + 1
-        if len(hexdigits) % 2:
-            hexdigits += b"0"
-        return bytes.fromhex(hexdigits.decode("ascii"))
-
     def read_object(self):
-        data = self.data
-        m = _OBJ_TOK.match(data, self.pos)
-        if m is None:
-            # distinguish end-of-data from a stray close-delimiter,
-            # exactly as the old skip_ws + peek + read_keyword path did
-            self.pos = _WS_RE.match(data, self.pos).end()
-            if self.pos >= len(data):
-                raise PdfError("unexpected end of data")
-            raise PdfError(f"lex error at byte {self.pos}")
-        # dispatch on the matched alternative (group indices: 1 rnum,
-        # 2 rgen, 3 num, 4 name, 5 kw, 6 delim); lastindex counts an
-        # empty name match, so bare '/' still lands on 4
-        li = m.lastindex
-        if li == 3:  # number (or the non-ws-separated-ref fallback)
-            kw = m.group(3)
-            self.pos = m.end()
-            try:
-                if b"." in kw or b"e" in kw or b"E" in kw:
-                    return float(kw)
-                num = int(kw)
-            except ValueError as exc:
-                raise PdfError(f"bad token {kw!r} at {self.pos}") from exc
-            # possible indirect reference the master regex did not fold
-            # (int arrays, or refs separated by comments): the old
-            # explicit INT INT R lookahead, verbatim
-            save = self.pos
-            self.skip_ws()
-            c2 = self.peek()
-            if 0x30 <= c2 <= 0x39:
-                kw2 = self.read_keyword()
-                save2 = self.pos
-                self.skip_ws()
-                kw3 = self.read_keyword()
-                if kw3 == b"R":
-                    return Ref(num, int(kw2))
-                self.pos = save2
-                # second int was a separate object; rewind to before it
-                self.pos = save
-                return num
-            self.pos = save
-            return num
-        if li == 4:  # name
-            nm = m.group(4)
-            self.pos = m.end()
-            if b"#" in nm:
-                nm = _NAME_HASH.sub(
-                    lambda h: bytes([int(h.group(1), 16)]), nm)
-            return Name(nm.decode("latin-1"))
-        if li == 2:  # ws-separated INT INT R folded into one match
-            self.pos = m.end()
-            return Ref(int(m.group(1)), int(m.group(2)))
-        if li == 6:  # delimiter-led object
-            d = m.group(6)
-            self.pos = m.start(6)
-            if d == b"<<":
-                return self._read_dict_or_stream()
-            if d == b"(":
-                return self.read_literal_string()
-            if d == b"<":
-                return self.read_hex_string()
-            # '['
-            self.pos += 1
-            arr = []
-            while True:
-                self.skip_ws()
-                if self.peek() == 0x5D:
-                    self.pos += 1
-                    return arr
-                arr.append(self.read_object())
-        kw = m.group(5)
-        self.pos = m.end()
-        if kw == b"true":
-            return True
-        if kw == b"false":
-            return False
-        if kw == b"null":
-            return None
-        try:
-            if b"." in kw or b"e" in kw or b"E" in kw:
-                return float(kw)
-            num = int(kw)
-        except ValueError as exc:
-            raise PdfError(f"bad token {kw!r} at {self.pos}") from exc
-        return num
+        toks, lim, base, end = _scan(self.data, self.pos, _SCAN_MIN)
+        obj, toks, i, _lim, base, _end = _object(self.data, toks, 0, lim,
+                                                 base, end)
+        self.pos = _at(toks, i, base, end)
+        return obj
 
-    def _read_dict_or_stream(self):
-        self.pos += 2  # '<<'
-        d: dict = {}
-        while True:
-            m = _DICT_KEY.match(self.data, self.pos)
-            if m is None:
-                # not '>>' and not a name key: reproduce the old error
-                # path (read_object raises its lex error, or yields a
-                # non-Name object)
-                self.skip_ws()
-                key = self.read_object()
-                if not isinstance(key, Name):
-                    raise PdfError("dict key is not a name")
-                d[str(key)] = self.read_object()
-                continue
-            if m.group("end") is not None:
-                self.pos = m.end()
-                break
-            key = m.group("key")
-            self.pos = m.end()
-            if b"#" in key:
-                key = _NAME_HASH.sub(
-                    lambda h: bytes([int(h.group(1), 16)]), key)
-            d[key.decode("latin-1")] = self.read_object()
-        save = self.pos
-        self.skip_ws()
-        if self.data[self.pos:self.pos + 6] == b"stream":
-            self.pos += 6
-            if self.data[self.pos:self.pos + 2] == b"\r\n":
-                self.pos += 2
-            elif self.pos < len(self.data) and self.data[self.pos] in b"\n\r":
-                self.pos += 1
-            return Stream(d, b"")  # raw filled in by caller (needs /Length)
-        self.pos = save
-        return d
+
+def _body(data: bytes, pos: int):
+    """``(obj, start)`` for the object after an ``N G obj`` header at
+    ``pos``, ``start`` being where a stream's data begins.  The first
+    window ends just past the object's ``stream`` or ``endobj``."""
+    j = data.find(b"endobj", pos, pos + 4096)
+    k = data.find(b"stream", pos, j if j >= 0 else pos + 4096)
+    stop = k if k >= 0 else j
+    toks, lim, base, end = _scan(
+        data, pos, stop + 14 - pos if stop >= 0 else _SCAN_MIN)
+    obj, toks, i, _lim, base, _end = _object(data, toks, 0, lim, base, end)
+    return obj, _at(toks, i, base, end) if isinstance(obj, Stream) else None
 
 
 # ---------------------------------------------------------------------------
 # filters
 # ---------------------------------------------------------------------------
+
+
+_BYTE_SUM = bytes(range(256)) * 2  # _BYTE_SUM[a + b] == (a + b) & 0xFF
 
 
 def _png_unpredict(data: bytes, columns: int, colors: int = 1,
@@ -367,8 +397,7 @@ def _png_unpredict(data: bytes, columns: int, colors: int = 1,
             for i in range(bpp, len(row)):
                 row[i] = (row[i] + row[i - bpp]) & 0xFF
         elif ftype == 2:  # Up
-            for i in range(len(row)):
-                row[i] = (row[i] + prev[i]) & 0xFF
+            row = bytearray(map(_BYTE_SUM.__getitem__, map(add, row, prev)))
         elif ftype == 3:  # Average
             for i in range(len(row)):
                 left = row[i - bpp] if i >= bpp else 0
@@ -389,46 +418,14 @@ def _png_unpredict(data: bytes, columns: int, colors: int = 1,
     return bytes(out)
 
 
-def _apply_filters(stream: Stream, resolve) -> bytes:
-    filt = resolve(stream.dict.get("Filter"))
-    parms = resolve(stream.dict.get("DecodeParms"))
-    if filt is None:
-        return stream.raw
-    if not isinstance(filt, list):
-        filt, parms = [filt], [parms]
-    elif not isinstance(parms, list):
-        parms = [parms] * len(filt)
-    data = stream.raw
-    for f, p in zip(filt, parms):
-        f = str(resolve(f))
-        p = resolve(p) or {}
-        if f == "FlateDecode":
-            data = zlib.decompress(data)
-            pred = int(resolve(p.get("Predictor", 1)) or 1)
-            if pred >= 10:
-                data = _png_unpredict(
-                    data,
-                    int(resolve(p.get("Columns", 1)) or 1),
-                    int(resolve(p.get("Colors", 1)) or 1),
-                    int(resolve(p.get("BitsPerComponent", 8)) or 8))
-            elif pred != 1:
-                raise PdfError(f"unsupported predictor {pred}")
-        elif f == "ASCIIHexDecode":
-            body = data.split(b">")[0]
-            hexdigits = re.sub(rb"[^0-9A-Fa-f]", b"", body)
-            if len(hexdigits) % 2:
-                hexdigits += b"0"
-            data = bytes.fromhex(hexdigits.decode("ascii"))
-        else:
-            raise PdfError(f"unsupported filter {f}")
-    return data
-
-
 # ---------------------------------------------------------------------------
 # document parser
 # ---------------------------------------------------------------------------
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+_OBJ_AT = re.compile(_WSC + rb"(\d+)\s+(\d+)\s+obj\b")  # at an xref offset
+_STARTXREF = re.compile(rb"startxref\s+(\d+)")
+_XREF_ENTRY = re.compile(rb"(\d{10})\s+(\d{5})\s+([nf])")
 
 
 class PdfParser:
@@ -443,6 +440,8 @@ class PdfParser:
         self.trailer: dict = {}
         self._cache: dict[int, object] = {}
         self._objstm_cache: dict[int, dict[int, object]] = {}
+        self._objects: dict[int, int] | None = None  # see _object_offsets
+        self._inflated = 0  # bytes inflated so far (_INFLATE_BUDGET)
         try:
             self._load_xref()
             if "Root" not in self.trailer:
@@ -455,7 +454,7 @@ class PdfParser:
     def _load_xref(self) -> None:
         tail = self.data[-2048:]
         m = None
-        for m in re.finditer(rb"startxref\s+(\d+)", tail):
+        for m in _STARTXREF.finditer(tail):
             pass
         if m is None:
             raise PdfError("startxref not found")
@@ -465,22 +464,23 @@ class PdfParser:
             seen.add(offset)
             if offset >= len(self.data):
                 raise PdfError("startxref beyond EOF")
-            lex = _Lexer(self.data, offset)
-            lex.skip_ws()
-            if self.data[lex.pos:lex.pos + 4] == b"xref":
-                trailer = self._load_xref_table(lex)
+            pos = _WS_RE.match(self.data, offset).end()
+            if self.data[pos:pos + 4] == b"xref":
+                trailer = self._load_xref_table(pos + 4)
             else:
-                trailer = self._load_xref_stream(lex)
+                trailer = self._load_xref_stream(pos)
             for k, v in trailer.items():
                 self.trailer.setdefault(k, v)
             nxt = trailer.get("Prev")
             offset = int(nxt) if nxt is not None else 0
 
-    def _load_xref_table(self, lex: _Lexer) -> dict:
-        lex.pos += 4  # 'xref'
+    def _load_xref_table(self, pos: int) -> dict:
+        data = self.data
+        lex = _Lexer(data, pos)
         while True:
-            lex.skip_ws()
-            if self.data[lex.pos:lex.pos + 7] == b"trailer":
+            pos = _WS_RE.match(data, lex.pos).end()
+            lex.pos = pos
+            if data[pos:pos + 7] == b"trailer":
                 lex.pos += 7
                 t = lex.read_object()
                 if not isinstance(t, dict):
@@ -488,50 +488,52 @@ class PdfParser:
                 # hybrid-reference files: /XRefStm points at an xref
                 # stream carrying the compressed-object entries
                 if "XRefStm" in t:
-                    sub = _Lexer(self.data, int(t["XRefStm"]))
-                    self._load_xref_stream(sub)
+                    self._load_xref_stream(int(t["XRefStm"]))
                 return t
             first = lex.read_object()
             count = lex.read_object()
             if not isinstance(first, int) or not isinstance(count, int):
                 raise PdfError("bad xref subsection header")
-            lex.skip_ws()
+            pos = _WS_RE.match(data, lex.pos).end()
             for i in range(count):
-                entry = self.data[lex.pos:lex.pos + 20]
-                em = re.match(rb"(\d{10})\s+(\d{5})\s+([nf])", entry)
+                entry = data[pos:pos + 20]
+                em = _XREF_ENTRY.match(entry)
                 if not em:
                     raise PdfError("bad xref entry")
                 if em.group(3) == b"n":
                     self.xref.setdefault(first + i, int(em.group(1)))
-                lex.pos += 20 if entry[18:19] in (b"\r", b"\n", b" ") else 19
-                lex.skip_ws()
+                pos += 20 if entry[18:19] in (b"\r", b"\n", b" ") else 19
+                pos = _WS_RE.match(data, pos).end()
+            lex.pos = pos
 
-    def _load_xref_stream(self, lex: _Lexer) -> dict:
+    def _load_xref_stream(self, pos: int) -> dict:
+        lex = _Lexer(self.data, pos)
         num = lex.read_object()
         gen = lex.read_object()
-        kw = lex.read_keyword() if lex.skip_ws() is None else b""
-        if not isinstance(num, int) or not isinstance(gen, int) or kw != b"obj":
+        m = _TOK.match(self.data, lex.pos)
+        if not isinstance(num, int) or not isinstance(gen, int) or \
+                not m or m.group(3) != b"obj":
             raise PdfError("xref stream: not an indirect object")
-        obj = lex.read_object()
+        obj, start = _body(self.data, m.end())
         if not isinstance(obj, Stream):
             raise PdfError("xref stream: object is not a stream")
-        self._fill_raw(obj, lex)
+        self._fill_raw(obj, start)
         d = obj.dict
         if str(d.get("Type")) != "XRef":
             raise PdfError("xref stream: /Type is not /XRef")
-        data = _apply_filters(obj, self._resolve_direct)
+        data = self._apply_filters(obj, self._resolve_direct)
         w = [int(x) for x in d["W"]]
         size = int(d["Size"])
         index = d.get("Index", [0, size])
         rowlen = sum(w)
         pos = 0
 
+        starts = [sum(w[:k]) for k in range(len(w))]
+
         def field(row: bytes, k: int) -> int:
-            start = sum(w[:k])
-            chunk = row[start:start + w[k]]
             if w[k] == 0:
                 return 1 if k == 0 else 0  # default type 1
-            return int.from_bytes(chunk, "big")
+            return int.from_bytes(row[starts[k]:starts[k] + w[k]], "big")
 
         for s in range(0, len(index), 2):
             first, count = int(index[s]), int(index[s + 1])
@@ -553,9 +555,7 @@ class PdfParser:
         recovery for files with damaged/missing xref)."""
         self.xref.clear()
         self._cache.clear()
-        for m in _OBJ_RE.finditer(self.data):
-            # later occurrences win: incremental updates append
-            self.xref[int(m.group(1))] = m.start()
+        self.xref.update(self._object_offsets())
         trailer: dict = {}
         for tm in re.finditer(rb"trailer", self.data):
             lex = _Lexer(self.data, tm.end())
@@ -581,20 +581,17 @@ class PdfParser:
 
     # -- object resolution -------------------------------------------------
 
-    def _fill_raw(self, stream: Stream, lex: _Lexer) -> None:
+    def _fill_raw(self, stream: Stream, start: int) -> None:
         length = self.resolve(stream.dict.get("Length"))
-        start = lex.pos
         if isinstance(length, int) and \
                 self.data[start + length:start + length + 32].lstrip(
                     _WS).startswith(b"endstream"):
             stream.raw = self.data[start:start + length]
-            lex.pos = start + length
         else:  # wrong/missing /Length: scan for endstream
             j = self.data.find(b"endstream", start)
             if j < 0:
                 raise PdfError("unterminated stream")
             stream.raw = self.data[start:j].rstrip(b"\r\n")
-            lex.pos = j
 
     def _resolve_direct(self, obj):
         # resolver usable while loading xref streams (no recursion into
@@ -607,23 +604,27 @@ class PdfParser:
         return obj
 
     def _load_at(self, offset: int, expect_num: int):
-        lex = _Lexer(self.data, offset)
-        lex.skip_ws()
-        m = _OBJ_RE.match(self.data, lex.pos)
+        m = _OBJ_AT.match(self.data, offset)
         if not m or int(m.group(1)) != expect_num:
-            # offsets may be stale (incremental updates); fall back to scan
-            found = None
-            for om in _OBJ_RE.finditer(self.data):
-                if int(om.group(1)) == expect_num:
-                    found = om
-            if not found:
+            # offsets may be stale (incremental updates): use the file's
+            # last ``N G obj`` for this number
+            found = self._object_offsets().get(expect_num)
+            if found is None:
                 raise PdfError(f"object {expect_num} not at offset {offset}")
-            m = found
-        lex.pos = m.end()
-        obj = lex.read_object()
+            m = _OBJ_RE.match(self.data, found)
+        obj, start = _body(self.data, m.end())
         if isinstance(obj, Stream):
-            self._fill_raw(obj, lex)
+            self._fill_raw(obj, start)
         return obj
+
+    def _object_offsets(self) -> dict[int, int]:
+        """Object number -> offset of its last ``N G obj`` in the file
+        (incremental updates append, so the later one wins); one scan
+        per document, shared by stale offsets and the repair scan."""
+        if self._objects is None:
+            self._objects = {int(m.group(1)): m.start()
+                             for m in _OBJ_RE.finditer(self.data)}
+        return self._objects
 
     def _load_objstm(self, stm_num: int) -> dict[int, object]:
         if stm_num in self._objstm_cache:
@@ -631,7 +632,7 @@ class PdfParser:
         stm = self.get(stm_num)
         if not isinstance(stm, Stream) or str(stm.dict.get("Type")) != "ObjStm":
             raise PdfError(f"object {stm_num} is not an ObjStm")
-        data = _apply_filters(stm, self.resolve)
+        data = self._apply_filters(stm, self.resolve)
         n = int(self.resolve(stm.dict["N"]))
         first = int(self.resolve(stm.dict["First"]))
         head = _Lexer(data[:first])
@@ -664,6 +665,8 @@ class PdfParser:
         return self._cache[num]
 
     def resolve(self, obj):
+        if not isinstance(obj, Ref):
+            return obj
         seen = set()
         while isinstance(obj, Ref):
             if obj.num in seen:
@@ -673,7 +676,46 @@ class PdfParser:
         return obj
 
     def decoded(self, stream: Stream) -> bytes:
-        return _apply_filters(stream, self.resolve)
+        return self._apply_filters(stream, self.resolve)
+
+    def _apply_filters(self, stream: Stream, resolve) -> bytes:
+        filt = resolve(stream.dict.get("Filter"))
+        parms = resolve(stream.dict.get("DecodeParms"))
+        if filt is None:
+            return stream.raw
+        if not isinstance(filt, list):
+            filt, parms = [filt], [parms]
+        elif not isinstance(parms, list):
+            parms = [parms] * len(filt)
+        data = stream.raw
+        for f, p in zip(filt, parms):
+            f = str(resolve(f))
+            p = resolve(p) or {}
+            if f == "FlateDecode":
+                left = _INFLATE_BUDGET - self._inflated
+                z = zlib.decompressobj()
+                data = z.decompress(data, left + 1)
+                if len(data) > left:
+                    raise PdfError(f"streams inflate past the "
+                                   f"{_INFLATE_BUDGET}-byte budget")
+                if not z.eof:  # what zlib.decompress would raise
+                    raise zlib.error("Error -5 while decompressing data: "
+                                     "incomplete or truncated stream")
+                self._inflated += len(data)
+                pred = int(resolve(p.get("Predictor", 1)) or 1)
+                if pred >= 10:
+                    data = _png_unpredict(
+                        data,
+                        int(resolve(p.get("Columns", 1)) or 1),
+                        int(resolve(p.get("Colors", 1)) or 1),
+                        int(resolve(p.get("BitsPerComponent", 8)) or 8))
+                elif pred != 1:
+                    raise PdfError(f"unsupported predictor {pred}")
+            elif f == "ASCIIHexDecode":
+                data = _unhex(data.split(b">")[0])
+            else:
+                raise PdfError(f"unsupported filter {f}")
+        return data
 
     # -- page tree ---------------------------------------------------------
 
@@ -705,9 +747,8 @@ class PdfParser:
         if contents is None:
             return b""
         if isinstance(contents, Stream):
-            streams = [contents]
-        else:
-            streams = [self.resolve(c) for c in contents]
+            return self.decoded(contents)
+        streams = [self.resolve(c) for c in contents]
         return b"\n".join(
             self.decoded(s) for s in streams if isinstance(s, Stream))
 
@@ -717,13 +758,19 @@ class PdfParser:
 # ---------------------------------------------------------------------------
 
 _LINE_TOL = 2.0
+#: the text operators the interpreter runs (every other one just
+#: clears the operand stack)
+_TEXT_OPS = {b"Td": 1, b"Tj": 2, b"TJ": 2, b"BT": 3, b"ET": 4, b"TD": 5,
+             b"Tm": 6, b"TL": 7, b"T*": 8, b"'": 9, b'"': 9, b"BI": 10}
 
 
 def _spans_from_content(content: bytes) -> list[tuple[float, float, str]]:
     """Run the text operators, emitting (y, x, text) spans at each show
     op's text-matrix origin.  Graphics-state ops are skipped; inline
     images (BI..EI) are jumped over."""
-    lex = _Lexer(content)
+    data = content
+    toks, lim, base, end = _scan(data, 0, _SCAN_MAX)
+    i = 0
     stack: list = []
     spans: list[tuple[float, float, str]] = []
     # text state
@@ -742,85 +789,83 @@ def _spans_from_content(content: bytes) -> list[tuple[float, float, str]]:
         if s:
             spans.append((tm[1], tm[0], s))
 
-    data = content
-    n = len(data)
-    pos = 0
     while True:
-        # one master-regex match per token (see _CS_TOK): same
-        # tokenization as the old skip_ws/peek/read_keyword triple,
-        # dispatched on the matched group
-        m = _CS_TOK.match(data, pos)
-        if m is None:
-            break  # only trailing whitespace/comments remain
-        pos = m.end()
-        li = m.lastindex  # 1 num, 2 name, 3 op, 4 delim
-        if li == 1:
-            # plain numeric operand — never an indirect ref in content
-            kw = m.group(1)
+        while i >= lim:
+            toks, i, lim, base, end = _rescan(data, toks, i, base, end)
+        name, num, op, s, d, _ = toks[i]
+        i += 1
+        if num:  # a plain operand: no indirect references in content
             try:
-                stack.append(float(kw) if b"." in kw else int(kw))
+                stack.append(float(num) if 0x2E in num else int(num))
             except ValueError:
                 stack.clear()
             continue
-        if li == 2:
-            nm = m.group(2)
-            if b"#" in nm:
-                nm = _NAME_HASH.sub(
-                    lambda h: bytes([int(h.group(1), 16)]), nm)
-            stack.append(Name(nm.decode("latin-1")))
+        if name:
+            stack.append(Name(name[1:].decode("latin-1") if 0x23 not in name
+                              else _name(name)))
             continue
-        if li == 4:
-            d = m.group(4)
-            if d == b"(" or d == b"[" or d == b"<":
-                # string / array / hex-or-dict: delegate to the object
-                # lexer from the delimiter (exactly what the old loop's
-                # read_object() dispatch did)
-                lex.pos = m.start(4)
-                stack.append(lex.read_object())
-                pos = lex.pos
-            # stray ')' ']' '{' '}': skip the byte, stack untouched
-            # (the old read_keyword-empty path)
+        if s:
+            if s[0] == 0x28 and 0x5C not in s:  # a plain literal string
+                stack.append(s[1:-1])
+            else:
+                stack.append(_string(s))
             continue
-        op = m.group(3)
-        try:
-            if op == b"BT":
-                tm = tlm = (0.0, 0.0)
-                in_text = True
-            elif op == b"ET":
-                in_text = False
-            elif op == b"Td":
-                tlm = (tlm[0] + float(stack[-2]), tlm[1] + float(stack[-1]))
-                tm = tlm
-            elif op == b"TD":
-                leading = -float(stack[-1])
-                tlm = (tlm[0] + float(stack[-2]), tlm[1] + float(stack[-1]))
-                tm = tlm
-            elif op == b"Tm":
-                tlm = (float(stack[-2]), float(stack[-1]))
-                tm = tlm
-            elif op == b"TL":
-                leading = float(stack[-1])
-            elif op == b"T*":
-                tlm = (tlm[0], tlm[1] - leading)
-                tm = tlm
-            elif op == b"Tj" or op == b"TJ":
-                if in_text and stack:
-                    show(stack[-1])
-            elif op == b"'":
-                tlm = (tlm[0], tlm[1] - leading)
-                tm = tlm
-                if in_text and stack:
-                    show(stack[-1])
-            elif op == b'"':
-                tlm = (tlm[0], tlm[1] - leading)
-                tm = tlm
-                if in_text and stack:
-                    show(stack[-1])
-            elif op == b"BI":  # inline image: skip to EI
-                j = data.find(b"EI", pos)
-                pos = n if j < 0 else j + 2
-        except (IndexError, TypeError, ValueError):
-            pass
+        if d:
+            # arrays and dicts are objects, and so are the strings the
+            # scan left whole-less; a stray ')' ']' '>' '{' '}' leaves
+            # the operands alone
+            if d == b"[" or d == b"<<":
+                v, toks, i, lim, base, end = _object(data, toks, i - 1, lim,
+                                                     base, end)
+                stack.append(v)
+            elif d == b"(" or d == b"<":
+                v, p = (_literal if d == b"(" else _hex)(
+                    data, _at(toks, i - 1, base, end))
+                stack.append(v)
+                toks, i, lim, base, end = [], 0, 0, p, p
+            continue
+        code = _TEXT_OPS.get(op)
+        if code is None:
+            if not op:
+                break  # past the last token
+        else:
+            try:
+                if code == 1:  # Td
+                    tlm = (tlm[0] + float(stack[-2]),
+                           tlm[1] + float(stack[-1]))
+                    tm = tlm
+                elif code == 2:  # Tj TJ
+                    if in_text and stack:
+                        show(stack[-1])
+                elif code == 3:  # BT
+                    tm = tlm = (0.0, 0.0)
+                    in_text = True
+                elif code == 4:  # ET
+                    in_text = False
+                elif code == 5:  # TD
+                    leading = -float(stack[-1])
+                    tlm = (tlm[0] + float(stack[-2]),
+                           tlm[1] + float(stack[-1]))
+                    tm = tlm
+                elif code == 6:  # Tm
+                    tlm = (float(stack[-2]), float(stack[-1]))
+                    tm = tlm
+                elif code == 7:  # TL
+                    leading = float(stack[-1])
+                elif code == 8:  # T*
+                    tlm = (tlm[0], tlm[1] - leading)
+                    tm = tlm
+                elif code == 9:  # ' "
+                    tlm = (tlm[0], tlm[1] - leading)
+                    tm = tlm
+                    if in_text and stack:
+                        show(stack[-1])
+                else:  # BI: an inline image, skipped to EI
+                    j = data.find(b"EI", _at(toks, i - 1, base, end) + 2)
+                    p = len(data) if j < 0 else j + 2
+                    toks, i, lim, base, end = [], 0, 0, p, p
+            except (IndexError, TypeError, ValueError):
+                pass
         stack.clear()
     return spans
 

@@ -390,9 +390,10 @@ def test_content_stream_stray_delims_and_dict_operand():
 
 
 # ---------------------------------------------------------------------------
-# termination: long whitespace/comment runs lex in linear time.  Each case
-# runs in a child interpreter, so a regression to exponential backtracking
-# fails on the timeout instead of hanging the suite.
+# termination: long whitespace/comment runs, and the shapes that restart
+# the token scan, lex in linear time.  Each case runs in a child
+# interpreter, so a regression to exponential backtracking fails on the
+# timeout instead of hanging the suite.
 # ---------------------------------------------------------------------------
 
 _N = 100_000
@@ -402,6 +403,15 @@ _RUNS = {
     "mixed_ws": f"b' \\t\\r\\n\\x0c\\x00' * {_N // 6}",
     "comments": f"b'% note\\n' * {_N // 7}",
     "comment_tail": f"b'\\n' * {_N} + b'% unterminated'",
+    # shapes that make the token scanner start a new window
+    "inline_images": "b'BI /W 1 ID x EI ' * 50_000",
+    "deep_strings": "b'(((x))) ' * 50_000",
+    "endobj_in_string": "b'(' + b'endobj ' * 20_000 + b')'",
+    "brackets": f"b'[' * {_N}",
+    "dict_opens": f"b'<<' * {_N // 2}",
+    "ints_no_r": "b'1 0 ' * 25_000",
+    "digits": f"b'7' * {_N}",
+    "open_paren": f"b'(' + b'x' * {_N}",
 }
 _TERMINATION_CASES = {
     # content streams: a text object followed by the run
@@ -435,11 +445,40 @@ _TERMINATION_CASES = {
         "    assert 'end of data' in str(e), e\n"
         "else:\n"
         "    raise AssertionError('no error')\n"),
+    # a page dictionary holding the run in an array
+    "value": (
+        "import sys; sys.path.insert(0, 'tests')\n"
+        "from test_pdf import build_pdf, one_page\n"
+        "from perl_html5_dom_spark.dom.pdf import extract_pdf_text\n"
+        "objs = one_page(b'BT 10 700 Td (x) Tj ET')\n"
+        "objs[3] = (b'<< /Type /Page /Parent 2 0 R /X [' + RUN"
+        " + b'] /Contents 4 0 R >>')\n"
+        "assert extract_pdf_text(build_pdf(objs)) == (1, 'x')\n"),
+    # a token that is no number, or a string that never closes
+    "bad_token": (
+        "from perl_html5_dom_spark.dom.pdf import PdfError, _Lexer\n"
+        "try:\n"
+        "    _Lexer(RUN).read_object()\n"
+        "except PdfError as e:\n"
+        "    assert str(e).startswith(('bad token', 'unterminated')), e\n"
+        "else:\n"
+        "    raise AssertionError('no error')\n"),
 }
+_WS_RUNS = ("comment_tail", "comments", "mixed_ws", "newlines")
+#: (where, run) pairs: every whitespace run everywhere, and each scanner
+#: shape where its outcome is known
+_TERMINATION_PAIRS = sorted(
+    [(w, r) for w in ("content", "dict", "object", "page") for r in _WS_RUNS]
+    + [(w, r) for r in ("inline_images", "deep_strings", "endobj_in_string",
+                        "ints_no_r", "digits") for w in ("content", "page")]
+    + [("value", r) for r in ("deep_strings", "endobj_in_string",
+                              "ints_no_r")]
+    + [(w, r) for r in ("brackets", "dict_opens") for w in ("object", "dict")]
+    + [("bad_token", r) for r in ("digits", "open_paren")])
 
 
-@pytest.mark.parametrize("run", sorted(_RUNS))
-@pytest.mark.parametrize("where", sorted(_TERMINATION_CASES))
+@pytest.mark.parametrize("where,run", _TERMINATION_PAIRS,
+                         ids=[f"{w}-{r}" for w, r in _TERMINATION_PAIRS])
 def test_lexer_terminates_on_long_runs(where, run):
     import os
     import subprocess
@@ -461,10 +500,9 @@ def test_lexer_terminates_on_long_runs(where, run):
 
 
 def test_trailing_comment_yields_no_token():
-    from perl_html5_dom_spark.dom.pdf import (
-        _CS_TOK, _DICT_KEY, _OBJ_TOK, _spans_from_content)
+    from perl_html5_dom_spark.dom.pdf import _TOK, _spans_from_content
 
-    for regex in (_CS_TOK, _OBJ_TOK, _DICT_KEY):
+    for regex in (_TOK,):
         assert regex.match(b"  %abc") is None
         assert regex.match(b"%/K 1 R >> (x)") is None
     # a commented-out show operator after the last real token stays dead
@@ -512,3 +550,128 @@ def test_reference_cycles_terminate(shape):
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, timeout=30, check=True, cwd=root)
     assert "cycle" in out.stdout
+
+
+# ---------------------------------------------------------------------------
+# recorded outcomes: every input of ``pdf_cases`` against what the
+# per-token lexer that preceded the one-scan lexer did with it
+# ---------------------------------------------------------------------------
+
+
+def test_recorded_outcomes():
+    from pdf_cases import RECURSION_CASES, _sha, cases, goldens, outcome
+
+    want = goldens()
+    inputs = cases()
+    assert sorted(inputs) == sorted(want)
+    assert sorted(k for k, v in want.items() if v[2] == "RecursionError") \
+        == sorted(RECURSION_CASES)
+    changed = [k for k, data in inputs.items() if _sha(data) != want[k][0]]
+    assert not changed, f"inputs changed, re-record: {changed[:5]}"
+    diff = {}
+    for name, data in inputs.items():
+        got = outcome(data)
+        if name in RECURSION_CASES:
+            # parsed on the explicit container stack now
+            if got[0] != "ok":
+                diff[name] = got
+        elif got != want[name][1:]:
+            diff[name] = (want[name][1:], got)
+    assert not diff, f"{len(diff)} differ: {list(diff.items())[:5]}"
+
+
+# ---------------------------------------------------------------------------
+# linear-time recovery and bounded inflation, each in a child interpreter
+# under a wall-clock bound
+# ---------------------------------------------------------------------------
+
+
+def _child(code: str, timeout: float = 120) -> str:
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=timeout, check=True,
+                          cwd=root).stdout
+
+
+def test_stale_xref_offsets_resolve_in_linear_time():
+    # every classic xref offset one byte off: each object falls back to
+    # the "N G obj" index, which is built once per document
+    out = _child(
+        "import re, sys, time; sys.path.insert(0, 'tests')\n"
+        "from test_pdf import build_pdf\n"
+        "from perl_html5_dom_spark.dom.pdf import PdfParser\n"
+        "def stale(n):\n"
+        "    objs = {1: b'<< /Type /Catalog /Pages 2 0 R >>',\n"
+        "            2: b'<< /Type /Pages /Kids [' + b' '.join(\n"
+        "                b'%d 0 R' % k for k in range(3, n + 3)) + b'] >>'}\n"
+        "    for k in range(3, n + 3):\n"
+        "        objs[k] = b'<< /Type /Page /Parent 2 0 R >>'\n"
+        "    return n, re.sub(rb'(\\d{10}) 00000 n', lambda m: b'%010d 00000 n'"
+        " % (int(m.group(1)) + 1), build_pdf(objs))\n"
+        "def cpu(n, data):\n"
+        "    t0 = time.process_time()\n"
+        "    assert len(PdfParser(data).pages()) == n\n"
+        "    return time.process_time() - t0\n"
+        "small, big = stale(500), stale(2000)\n"
+        "runs = [(cpu(*small), cpu(*big)) for _ in range(25)]\n"
+        "print(min(b for _, b in runs) / min(s for s, _ in runs))\n")
+    # linear: about 4 (best of 25 interleaved runs in CPU time, as the
+    # machine may be shared); the per-object whole-file scan it replaces
+    # is quadratic (8.2 s at 1,000 pages, 33.9 s at 2,000)
+    assert float(out) <= 5.0, out
+
+
+def test_inflate_budget_bounds_memory():
+    # a deflate stream that inflates to four budgets' worth of zeros,
+    # built chunk by chunk so neither side ever holds it inflated
+    out = _child(
+        "import sys, zlib; sys.path.insert(0, 'tests')\n"
+        "from test_pdf import build_pdf, one_page\n"
+        "from perl_html5_dom_spark.dom.pdf import (\n"
+        "    _INFLATE_BUDGET, PdfError, extract_pdf_text)\n"
+        "def hwm():\n"
+        "    return [int(ln.split()[1]) >> 10 for ln in open("
+        "'/proc/self/status')\n"
+        "            if ln.startswith('VmHWM')][0]\n"
+        "c = zlib.compressobj(1)\n"
+        "chunk = bytes(1 << 20)\n"
+        "bomb = b''.join([c.compress(chunk) for _ in range(\n"
+        "    4 * _INFLATE_BUDGET >> 20)] + [c.flush()])\n"
+        "before = hwm()\n"
+        "objs = one_page(b'')\n"
+        "objs[4] = (b'<< /Filter /FlateDecode /Length %d >>\\nstream\\n'\n"
+        "           % len(bomb) + bomb + b'\\nendstream')\n"
+        "try:\n"
+        "    extract_pdf_text(build_pdf(objs))\n"
+        "except PdfError as e:\n"
+        "    assert 'budget' in str(e), e\n"
+        "else:\n"
+        "    raise AssertionError('no error')\n"
+        "print(hwm() - before, _INFLATE_BUDGET >> 20)\n")
+    grew_mb, budget_mb = map(int, out.split())
+    # at most one budget of output, held twice while zlib joins its
+    # output blocks; an unbounded inflate would hold four budgets
+    assert grew_mb < 2 * budget_mb + 32, (grew_mb, budget_mb)
+
+
+def test_inflate_budget_is_per_document():
+    from perl_html5_dom_spark.dom import pdf
+
+    # two streams that fit the budget apart but not together
+    half = zlib.compress(bytes(pdf._INFLATE_BUDGET // 2 + 1))
+    objs = one_page(b"", contents_ref=b"[4 0 R 5 0 R]")
+    for num in (4, 5):
+        objs[num] = (b"<< /Filter /FlateDecode /Length %d >>\nstream\n"
+                     % len(half) + half + b"\nendstream")
+    with pytest.raises(PdfError, match="budget"):
+        extract_pdf_text(build_pdf(objs))
+    # and a truncated stream still fails the way zlib.decompress does
+    objs[5] = (b"<< /Filter /FlateDecode /Length 9 >>\nstream\n"
+               + zlib.compress(b"BT (x) Tj ET")[:9] + b"\nendstream")
+    objs[4] = objs[5]
+    with pytest.raises(zlib.error, match="incomplete or truncated"):
+        extract_pdf_text(build_pdf(objs))

@@ -8,10 +8,21 @@ doctypes, attribute junk — checked per document:
   2. chunked parse at a random split == whole-string parse
   3. inner_text / text_content never crash
 
+``pdf`` mode is a differential run of ``extract_pdf_text`` against
+another checkout (say, the parent commit): generated PDFs (the corpus
+generator, random content streams and page dictionaries from
+``tests/pdf_cases.py``) go through one to three of that module's
+mutations, and each document must give the same pages and text, or the
+same exception type and message, on both sides.  Every document runs
+under a wall-clock bound, so a hang is a finding too.  Inputs on which
+only the other side runs out of Python stack (``RecursionError``) are
+counted apart: the explicit-stack lexer parses them.
+
 Multiprocess over all cores with distinct seeds; failures are saved to
 /tmp/fuzz_failures/ for triage.  Usage:
 
   python tools/fuzz_campaign.py [seconds] [workers]
+  python tools/fuzz_campaign.py pdf <other checkout> [seconds] [workers]
 """
 
 from __future__ import annotations
@@ -176,20 +187,115 @@ def worker(seed: int, seconds: float, out_dir: str) -> tuple[int, int]:
     return n, fails
 
 
+#: wall-clock bound per PDF document and side
+PDF_BOUND_S = 2.0
+
+
+class _Hang(BaseException):
+    """Raised by the alarm; not an ``Exception``, so ``outcome`` lets it
+    through instead of recording it as the document's error."""
+
+
+def _bounded(fn, data: bytes) -> list:
+    """``pdf_cases.outcome`` of ``fn(data)``, or ``["hang"]`` when it
+    takes longer than ``PDF_BOUND_S``."""
+    import signal
+
+    from pdf_cases import outcome
+
+    def alarm(signum, frame):
+        raise _Hang
+
+    old = signal.signal(signal.SIGALRM, alarm)
+    signal.setitimer(signal.ITIMER_REAL, PDF_BOUND_S)
+    try:
+        return outcome(data, fn)
+    except _Hang:
+        return ["hang"]
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+
+
+def gen_pdf(rng: random.Random) -> bytes:
+    """A generated PDF after one to three seeded mutations."""
+    import pdf_cases
+    from test_pdf import build_pdf, one_page
+
+    from perl_html5_dom_spark.sources.pdfs import pdf_bytes
+
+    kind = rng.randrange(3)
+    if kind == 0:
+        doc_id = rng.randrange(10_000)
+        data = pdf_bytes(doc_id, pdf_cases.corpus_text(doc_id))
+    else:
+        objs = one_page(pdf_cases.random_content(rng))
+        if kind == 2:
+            objs[3] = pdf_cases.random_page_dict(rng)
+        data = build_pdf(objs)
+    for _ in range(rng.randint(1, 3)):
+        data = pdf_cases.mutate(rng, data)[1]
+    return data
+
+
+def pdf_worker(seed: int, seconds: float, out_dir: str,
+               other: str) -> tuple[int, int, int]:
+    """(documents, findings, inputs only the other side's stack ran out
+    on) for one seed."""
+    import importlib.util
+
+    _setup_paths()
+    from perl_html5_dom_spark.dom.pdf import extract_pdf_text
+
+    spec = importlib.util.spec_from_file_location(
+        "other_pdf", os.path.join(other, "perl_html5_dom_spark/dom/pdf.py"))
+    theirs = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(theirs)
+    rng = random.Random(seed)
+    t_end = time.time() + seconds
+    n = fails = recursion = 0
+    while time.time() < t_end:
+        data = gen_pdf(rng)
+        ours = _bounded(extract_pdf_text, data)
+        other_out = _bounded(theirs.extract_pdf_text, data)
+        if ours != other_out:
+            if other_out[:2] == ["err", "RecursionError"] and \
+                    ours[0] != "hang":
+                recursion += 1
+            else:
+                fails += 1
+                label = "hang" if "hang" in (ours[0], other_out[0]) \
+                    else "diff"
+                with open(f"{out_dir}/pdf-{label}-{seed}-{n}.pdf", "wb") as f:
+                    f.write(data)
+        n += 1
+    return n, fails, recursion
+
+
 def main() -> None:
-    seconds = float(sys.argv[1]) if len(sys.argv) > 1 else 300
-    workers = int(sys.argv[2]) if len(sys.argv) > 2 else (os.cpu_count() or 4)
+    args = sys.argv[1:]
+    pdf_mode = bool(args) and args[0] == "pdf"
+    if pdf_mode:
+        other, args = os.path.abspath(args[1]), args[2:]
+    seconds = float(args[0]) if args else 300
+    workers = int(args[1]) if len(args) > 1 else (os.cpu_count() or 4)
     out_dir = "/tmp/fuzz_failures"
     os.makedirs(out_dir, exist_ok=True)
     import multiprocessing as mp
 
     base = int(time.time())
     with mp.Pool(workers) as pool:
-        res = pool.starmap(
-            worker, [(base + i, seconds, out_dir) for i in range(workers)])
+        if pdf_mode:
+            res = pool.starmap(pdf_worker, [(base + i, seconds, out_dir, other)
+                                            for i in range(workers)])
+        else:
+            res = pool.starmap(
+                worker, [(base + i, seconds, out_dir) for i in range(workers)])
     total = sum(r[0] for r in res)
     fails = sum(r[1] for r in res)
-    print(f"campaign: {total} docs, {fails} failures "
+    extra = (f", {sum(r[2] for r in res)} only the other side's stack ran "
+             f"out on" if pdf_mode else "")
+    print(f"campaign: {total} docs, {fails} failures{extra} "
           f"({workers} workers x {seconds:.0f}s); failures in {out_dir}")
     sys.exit(1 if fails else 0)
 
