@@ -19,6 +19,21 @@ using default user-agent display types per tag
 
 This is the extraction backbone of the Spark pipeline (north_rule:
 "byte-identical extracted text per url").
+
+Paragraph hook: ``inner_text(doc, nid, paragraphs)`` with a dict also
+stores, for every HTML ``<p>`` the walk renders, that paragraph's own
+``inner_text`` — and the root's text under ``nid`` — so the main-content
+join (``operators.extract.main_text``) reuses one body render instead of
+rendering its paragraphs again.  A ``<p>``'s text is the output from its
+start (after its opening boundary) to just before its closing boundary,
+with trailing spaces stripped.  That equals a fresh render of the
+``<p>`` because the state at its start is a fresh render's: the opening
+boundary (or an earlier one) left ``last_br`` set, ``last_br`` implies
+``new_line``, and the last earlier chunk ends in ``\n`` or ``\t``, so
+neither a leading-space check nor an rtrim inside the paragraph reaches
+past its start.  ``<p>`` elements the walk skips (under display-none
+or ``textarea``/``input``/``audio``/``video``, or outside the root) are
+not stored.
 """
 
 from __future__ import annotations
@@ -35,151 +50,162 @@ from .constants import (
     ELEMENT_NODE,
     NS_HTML,
     TEXT_NODE,
+    UA_DISPLAY,
     ua_display,
 )
 from .document import NULL, Document
 
 # collapsible whitespace per the reference's isspace() minus NBSP
-_COLLAPSIBLE = frozenset(" \t\n\x0b\x0c")
 _WS_RUN_RE = re.compile(r"[ \t\n\x0b\x0c]+")
-_SKIP_TAGS = frozenset(("textarea", "input", "audio", "video"))
-_BOUNDARY = (DISPLAY_BLOCK, DISPLAY_TABLE, DISPLAY_TABLE_CAPTION)
 
-
-class _State:
-    __slots__ = ("out", "new_line", "last_br")
-
-    def __init__(self) -> None:
-        self.out: list[str] = []
-        self.new_line = True
-        self.last_br = True
+# what the walk does with an element, by tag: descend without a boundary
+# (``_INLINE``), skip the subtree, emit ``\n``, or descend between block,
+# paragraph, cell or row boundaries
+_INLINE, _SKIP, _BR, _BLOCK, _P, _CELL, _ROW = range(7)
+_BY_DISPLAY = {
+    DISPLAY_NONE: _SKIP, DISPLAY_BLOCK: _BLOCK, DISPLAY_TABLE: _BLOCK,
+    DISPLAY_TABLE_CAPTION: _BLOCK, DISPLAY_TABLE_CELL: _CELL,
+    DISPLAY_TABLE_ROW: _ROW,
+}
+#: kinds of elements outside the HTML namespace: by display only
+_FOREIGN_KIND = {tag: _BY_DISPLAY[d] for tag, d in UA_DISPLAY.items()
+                 if d in _BY_DISPLAY}
+#: kinds of HTML elements: textarea/input/audio/video are skipped too,
+#: and <br> and <p> have their own rules
+_HTML_KIND = dict(_FOREIGN_KIND)
+for _tag in ("textarea", "input", "audio", "video"):
+    _HTML_KIND[_tag] = _SKIP
+for _tag, _kind in (("br", _BR), ("p", _P)):
+    if _HTML_KIND.get(_tag) != _SKIP:
+        _HTML_KIND[_tag] = _kind
 
 
 def _rtrim_spaces(out: list[str]) -> None:
     while out:
-        chunk = out[-1]
-        stripped = chunk.rstrip(" ")
+        stripped = out[-1].rstrip(" ")
         if stripped:
             out[-1] = stripped
             return
         out.pop()
 
 
-def _last_char(out: list[str]) -> str:
-    return out[-1][-1] if out else ""
-
-
-def inner_text(doc: Document, nid: int) -> str:
+def inner_text(doc: Document, nid: int, paragraphs: dict | None = None) -> str:
     """innerText of the node's children (reference DOM.xs:1765-1783:
     the getter iterates children of self, then rtrims spaces).
 
-    Iterative (explicit stack): giant/adversarial web documents must not
-    hit Python's recursion limit.
-    """
-    st = _State()
-    # stack entries: (node, exiting)
-    stack = [(c, False) for c in reversed(doc.children(nid))]
-    while stack:
-        node, exiting = stack.pop()
-        if exiting:
-            _element_post(doc, node, st)
-            continue
-        nt = doc.node_type[node]
+    One iterative enter/exit walk over the child links (no recursion:
+    giant/adversarial web documents must not hit Python's recursion
+    limit).  Given a dict, ``paragraphs`` also receives the render root's
+    text and, for every HTML ``<p>`` the walk renders, that paragraph's
+    own innerText (module docstring)."""
+    node_type, tags, nss, texts = doc.node_type, doc.tag, doc.ns, doc.text
+    first_child, next_sib, parent = doc.first_child, doc.next_sib, doc.parent
+    html_kind, foreign_kind = _HTML_KIND.get, _FOREIGN_KIND.get
+    out: list[str] = []
+    append = out.append
+    new_line = last_br = True
+    kinds: list[int] = []   # the kinds of the open elements below ``nid``
+    starts: list[int] = []  # the first chunk of each open <p>
+    node = first_child[nid]
+    while node != NULL:
+        # -- enter ``node``; ``kind`` is set for an element entered
+        # without children, whose exit runs at once
+        kind = None
+        nt = node_type[node]
         if nt == TEXT_NODE:
-            _text_node(doc, node, st)
-            continue
-        if nt != ELEMENT_NODE:
-            continue
-        tag = doc.tag[node]
-        ns = doc.ns[node]
-        display = ua_display(tag, ns)
-        if display == DISPLAY_NONE:
-            continue
-        if ns == NS_HTML and tag in _SKIP_TAGS:
-            continue
-        if ns == NS_HTML and tag == "br":
-            st.out.append("\n")
-            st.new_line = True
-            st.last_br = True
-            continue
-        if display in _BOUNDARY and not st.last_br:
-            _rtrim_spaces(st.out)
-            st.out.append("\n")
-            st.new_line = True
-            st.last_br = True
-        stack.append((node, True))
-        for c in reversed(doc.children(node)):
-            stack.append((c, False))
-    _rtrim_spaces(st.out)
-    return "".join(st.out)
-
-
-def _text_node(doc: Document, node: int, st: _State) -> None:
-    # regex whitespace-run collapse — C-speed equivalent of the
-    # character loop in the reference (utils.c:451-463); \r dropped,
-    # NBSP NOT collapsible (excluded from the class)
-    text = doc.text[node] or ""
-    if not text:
-        return
-    if "\r" in text:
-        text = text.replace("\r", "")
-    collapsed = _WS_RUN_RE.sub(" ", text)
-    if not collapsed:
-        return
-    if collapsed == " ":
-        # all-collapsible run: emit at most one space
-        if not st.new_line and _last_char(st.out) != " ":
-            st.out.append(" ")
-        return
-    if collapsed[0] == " " and (st.new_line or _last_char(st.out) == " "):
-        collapsed = collapsed[1:]
-    st.out.append(collapsed)
-    st.new_line = False
-    st.last_br = False
-
-
-def _element_post(doc: Document, node: int, st: _State) -> None:
-    """Post-children boundary handling (second switch in utils.c:509-572)."""
-    tag = doc.tag[node]
-    ns = doc.ns[node]
-    display = ua_display(tag, ns)
-    if display in _BOUNDARY:
-        if not st.last_br:
-            _rtrim_spaces(st.out)
-            if ns == NS_HTML and tag == "p":
-                st.out.append("\n\n")
+            # regex whitespace-run collapse — C-speed equivalent of the
+            # character loop in the reference (utils.c:451-463); \r
+            # dropped, NBSP NOT collapsible (excluded from the class)
+            text = texts[node]
+            if text:
+                if "\r" in text:
+                    text = text.replace("\r", "")
+                text = _WS_RUN_RE.sub(" ", text)
+                if text == " ":
+                    # all-collapsible run: emit at most one space
+                    if not new_line and out[-1][-1] != " ":
+                        append(" ")
+                elif text:
+                    if text[0] == " " and (new_line or out[-1][-1] == " "):
+                        text = text[1:]
+                    append(text)
+                    new_line = last_br = False
+        elif nt == ELEMENT_NODE:
+            tag = tags[node]
+            kind = (html_kind(tag, _INLINE) if nss[node] == NS_HTML
+                    else foreign_kind(tag, _INLINE))
+            if kind == _SKIP:
+                kind = None
+            elif kind == _BR:
+                append("\n")
+                new_line = last_br = True
+                kind = None
             else:
-                st.out.append("\n")
-            st.new_line = True
-            st.last_br = True
-    elif display == DISPLAY_TABLE_CELL:
-        parent = doc.parent[node]
-        is_last_cell = False
-        if parent != NULL:
-            cell = doc.last_child[parent]
-            while cell != NULL:
-                if doc.node_type[cell] == ELEMENT_NODE and \
-                        ua_display(doc.tag[cell], doc.ns[cell]) == DISPLAY_TABLE_CELL:
-                    is_last_cell = cell == node
-                    break
-                cell = doc.prev_sib[cell]
-        if not is_last_cell:
-            _rtrim_spaces(st.out)
-            st.out.append("\t")
-        st.new_line = True
-    elif display == DISPLAY_TABLE_ROW:
-        parent = doc.parent[node]
-        is_last_row = False
-        if parent != NULL:
-            row = doc.last_child[parent]
-            while row != NULL:
-                if doc.node_type[row] == ELEMENT_NODE and \
-                        ua_display(doc.tag[row], doc.ns[row]) == DISPLAY_TABLE_ROW:
-                    is_last_row = row == node
-                    break
-                row = doc.prev_sib[row]
-        if not is_last_row:
-            _rtrim_spaces(st.out)
-            st.out.append("\n")
-            st.last_br = True
-        st.new_line = True
+                if kind == _BLOCK or kind == _P:
+                    if not last_br:
+                        _rtrim_spaces(out)
+                        append("\n")
+                        new_line = last_br = True
+                    if kind == _P:
+                        starts.append(len(out))
+                child = first_child[node]
+                if child != NULL:
+                    kinds.append(kind)
+                    node = child
+                    continue
+        # -- leave ``node``, then every ancestor whose last child it is
+        while True:
+            if kind is not None and kind != _INLINE:
+                # post-children boundary handling (second switch in
+                # utils.c:509-572)
+                if kind == _P or kind == _BLOCK:
+                    if kind == _P:
+                        start = starts.pop()
+                        if paragraphs is not None:
+                            # the state at the <p>'s start was a fresh
+                            # render's: its chunks are its own innerText
+                            paragraphs[node] = "".join(
+                                out[start:]).rstrip(" ")
+                    if not last_br:
+                        _rtrim_spaces(out)
+                        append("\n\n" if kind == _P else "\n")
+                        new_line = last_br = True
+                elif kind == _CELL:
+                    if _last_of(doc, node, DISPLAY_TABLE_CELL) != node:
+                        _rtrim_spaces(out)
+                        append("\t")
+                    new_line = True
+                else:
+                    if _last_of(doc, node, DISPLAY_TABLE_ROW) != node:
+                        _rtrim_spaces(out)
+                        append("\n")
+                        last_br = True
+                    new_line = True
+            sib = next_sib[node]
+            if sib != NULL:
+                node = sib
+                break
+            node = parent[node]
+            if node == nid:
+                node = NULL
+                break
+            kind = kinds.pop()
+    _rtrim_spaces(out)
+    text = "".join(out)
+    if paragraphs is not None:
+        paragraphs[nid] = text
+    return text
+
+
+def _last_of(doc: Document, node: int, display: int) -> int:
+    """The last element child of ``node``'s parent with ``display``."""
+    p = doc.parent[node]
+    if p == NULL:
+        return NULL
+    c = doc.last_child[p]
+    while c != NULL:
+        if doc.node_type[c] == ELEMENT_NODE and \
+                ua_display(doc.tag[c], doc.ns[c]) == display:
+            return c
+        c = doc.prev_sib[c]
+    return NULL

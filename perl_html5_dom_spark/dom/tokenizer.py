@@ -38,6 +38,7 @@ _TAG_NAME_RE = re.compile(r"[a-zA-Z][^\t\n\x0c />]*")
 _ATTR_NAME_RE = re.compile(r"[^\t\n\x0c />=][^\t\n\x0c />=]*|=[^\t\n\x0c />=]*")
 _UNQUOTED_VAL_RE = re.compile(r"[^\t\n\x0c >]*")
 _DOCTYPE_RE = re.compile(r"doctype", re.IGNORECASE)
+_COMMENT_END_RE = re.compile(r"--!?>")
 
 #: script-data escape scanner (WHATWG 13.2.5.18-29): the markers that
 #: change the escaped / double-escaped state or close the element
@@ -209,28 +210,62 @@ class Tokenizer:
 
     # -- main entry -----------------------------------------------------
     def next_token(self):
+        """The next token.  Character data and the common tag shapes
+        (``_FAST_START_RE``/``_FAST_END_RE``, tried once per tag) are
+        handled here; other markup goes through :meth:`_markup`.  A
+        dropped ``</>`` loops instead of recursing."""
         src, n = self.src, self.n
-        pos = self.pos
-        if self._raw_mode is not None:
-            return self._raw_token()
-        if pos >= n:
-            if self._done:
-                return ("eof",)
-            self._done = True
-            return ("eof",)
-        lt = src.find("<", pos)
-        if lt == -1:
-            self.pos = n
-            # NUL passes through: the data state EMITS U+0000 (with a
-            # parse error) and the tree stage decides — "in body"/"in
-            # table text"/"in select" ignore it, foreign content turns
-            # it into U+FFFD (WHATWG 13.2.5.1 + 13.2.6.5)
-            return ("char", _decode_text(src[pos:]), pos, n - pos)
-        if lt > pos:
-            self.pos = lt
-            return ("char", _decode_text(src[pos:lt]), pos, lt - pos)
-        # at '<'
-        return self._markup(lt)
+        while True:
+            if self._raw_mode is not None:
+                token = self._raw_token()
+            else:
+                pos = self.pos
+                if pos >= n:
+                    self._done = True
+                    return ("eof",)
+                lt = src.find("<", pos)
+                if lt == -1:
+                    self.pos = n
+                    # NUL passes through: the data state EMITS U+0000
+                    # (with a parse error) and the tree stage decides —
+                    # "in body"/"in table text"/"in select" ignore it,
+                    # foreign content turns it into U+FFFD (WHATWG
+                    # 13.2.5.1 + 13.2.6.5)
+                    text = src[pos:]
+                    if "&" in text:
+                        text = _decode_text(text)
+                    return ("char", text, pos, n - pos)
+                if lt > pos:
+                    self.pos = lt
+                    text = src[pos:lt]
+                    if "&" in text:
+                        text = _decode_text(text)
+                    return ("char", text, pos, lt - pos)
+                # at '<': the common tag shapes in one C call each
+                if src.startswith("/", lt + 1):
+                    fm = _FAST_END_RE.match(src, lt + 2)
+                    if fm is not None:
+                        name = fm.group(1)
+                        end = self.pos = fm.end()
+                        return ("end", name, lt + 2, len(name), lt, end - lt)
+                else:
+                    fm = _FAST_START_RE.match(src, lt + 1)
+                    if fm is not None:
+                        name, rawattrs, slash = fm.groups()
+                        attrs = []
+                        if rawattrs:
+                            seen = set()
+                            for aname, value in _FAST_ATTR_ITER.findall(
+                                    rawattrs):
+                                if aname not in seen:   # first one wins
+                                    seen.add(aname)
+                                    attrs.append((aname, value))
+                        end = self.pos = fm.end()
+                        return ("start", name, attrs, slash == "/",
+                                lt + 1, len(name), lt, end - lt)
+                token = self._markup(lt)
+            if token is not None:
+                return token
 
     # -- raw text (RCDATA / RAWTEXT / script data / PLAINTEXT) ----------
     def _raw_token(self):
@@ -267,9 +302,9 @@ class Tokenizer:
             if mode == "rcdata":
                 text = _decode_text(text)
             return ("char", text, pos, end - pos)
-        # at the end tag
+        # at the end tag: leave raw text; the caller tokenizes the tag
         self._raw_mode = None
-        return self._markup(pos)
+        return None
 
     def _script_end(self, pos: int):
         """Start of the ``</script`` end tag that really closes script
@@ -368,16 +403,12 @@ class Tokenizer:
         if src.startswith("->", ds):
             self.pos = ds + 2
             return ("comment", "", ds, 0, lt, ds + 2 - lt)
-        e1 = src.find("-->", ds)
-        e2 = src.find("--!>", ds)
-        if e2 != -1 and (e1 == -1 or e2 < e1):
-            data = src[ds:e2]
-            self.pos = e2 + 4
-            end = e2 + 4
-        elif e1 != -1:
-            data = src[ds:e1]
-            self.pos = e1 + 3
-            end = e1 + 3
+        # the first '-->' or '--!>' in one scan, so that no comment
+        # searches past its own end
+        m = _COMMENT_END_RE.search(src, ds)
+        if m is not None:
+            data = src[ds:m.start()]
+            self.pos = end = m.end()
         else:
             data = src[ds:]
             # EOF-in-comment: trailing dashes belong to data per spec resync
@@ -463,16 +494,11 @@ class Tokenizer:
             return ("char", "</", lt, 2)
         c = src[i]
         if c == ">":
-            # '</>' dropped entirely
+            # '</>' dropped entirely: no token
             self.pos = i + 1
-            return self.next_token()
+            return None
         if not (c.isalpha() and c.isascii()):
             return self._bogus_comment(lt, i)
-        fm = _FAST_END_RE.match(src, i)
-        if fm is not None:
-            name = fm.group(1)
-            self.pos = fm.end()
-            return ("end", name, i, len(name), lt, fm.end() - lt)
         m = _TAG_NAME_RE.match(src, i)
         name_raw = m.group(0)
         name = name_raw.lower()
@@ -487,22 +513,6 @@ class Tokenizer:
 
     def _start_tag(self, lt: int):
         src, n = self.src, self.n
-        fm = _FAST_START_RE.match(src, lt + 1)
-        if fm is not None:
-            name, rawattrs, slash = fm.groups()
-            if rawattrs:
-                attrs = []
-                seen = set()
-                for am in _FAST_ATTR_ITER.finditer(rawattrs):
-                    aname = am.group(1)
-                    if aname not in seen:       # first occurrence wins
-                        seen.add(aname)
-                        attrs.append((aname, am.group(2)))
-            else:
-                attrs = []
-            self.pos = fm.end()
-            return ("start", name, attrs, slash == "/",
-                    lt + 1, len(name), lt, fm.end() - lt)
         m = _TAG_NAME_RE.match(src, lt + 1)
         name_raw = m.group(0)
         name = name_raw.lower().replace("\x00", "�")

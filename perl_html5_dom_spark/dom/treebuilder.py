@@ -99,7 +99,7 @@ class TreeBuilder:
         "template_modes", "head_id", "form_id", "frameset_ok",
         "foster_parenting", "pending_table_text", "skip_newline",
         "fragment_context_tag", "fragment_context_ns", "done", "pending",
-        "_has_foreign", "_arrays")
+        "_has_foreign", "_arrays", "_text_run", "_text_parts")
 
     def __init__(self, scripts: bool = True, ignore_whitespace: bool = False,
                  ignore_doctype: bool = False) -> None:
@@ -131,6 +131,10 @@ class TreeBuilder:
         # sticky flag: any foreign (SVG/MathML) element ever entered the
         # tree/stack; false ⇒ the current node is HTML without a look
         self._has_foreign = False
+        #: the text node whose merged character tokens wait, as pieces,
+        #: to be joined once (``_flush_text``)
+        self._text_run = NULL
+        self._text_parts: list[str] = []
 
     # ==================================================================
     # public API
@@ -217,24 +221,29 @@ class TreeBuilder:
         # context element, so the dispatcher decides there too
         foreign_root = (self.fragment_context_tag is not None
                         and self.fragment_context_ns != NS_HTML)
-        while not self.done:
-            # the adjusted current node is foreign: CDATA sections are
-            # recognised and the dispatcher picks HTML or foreign rules
-            foreign = (self._has_foreign and nss[stack[-1]] != NS_HTML
-                       if stack else False)
-            if pending:
-                token = pending.pop()
-            else:
-                tok.allow_cdata = foreign
-                token = pull()
-                if token is None:
-                    return
-            if skip_ws and token[0] == "char" and not token[1].strip(_WS):
-                continue
-            if foreign or (foreign_root and len(stack) == 1):
-                self._dispatch(token)
-            else:
-                modes[self.mode](self, token)
+        try:
+            while not self.done:
+                # the adjusted current node is foreign: CDATA sections are
+                # recognised and the dispatcher picks HTML or foreign rules
+                foreign = (self._has_foreign and nss[stack[-1]] != NS_HTML
+                           if stack else False)
+                if pending:
+                    token = pending.pop()
+                else:
+                    tok.allow_cdata = foreign
+                    token = pull()
+                    if token is None:
+                        return
+                if skip_ws and token[0] == "char" and not token[1].strip(_WS):
+                    continue
+                if foreign or (foreign_root and len(stack) == 1):
+                    self._dispatch(token)
+                else:
+                    modes[self.mode](self, token)
+        finally:
+            # text runs merged during the loop are joined before anyone
+            # (a chunked parse's caller included) reads the document
+            self._flush_text()
 
     def _reprocess(self, token) -> None:
         self.pending.append(token)
@@ -395,9 +404,15 @@ class TreeBuilder:
         else:
             parent, before = self.stack[-1], NULL
             prev = doc.last_child[parent]
-        # merge with adjacent text node (myhtml merges runs too)
+        # merge with adjacent text node (myhtml merges runs too); the
+        # pieces are joined once, when the run is flushed, so n merged
+        # tokens cost O(n) rather than O(n^2)
         if prev != NULL and doc.node_type[prev] == 3:
-            doc.text[prev] = (doc.text[prev] or "") + text
+            if prev != self._text_run:
+                self._flush_text()
+                self._text_run = prev
+                self._text_parts = [doc.text[prev] or ""]
+            self._text_parts.append(text)
             return
         if before != NULL:
             doc.insert_before(before, doc.new_text(text))
@@ -426,6 +441,13 @@ class TreeBuilder:
         else:
             first[parent] = nid
         last[parent] = nid
+
+    def _flush_text(self) -> None:
+        """Join the pending text run into its node's text."""
+        if self._text_run != NULL:
+            self.doc.text[self._text_run] = "".join(self._text_parts)
+            self._text_run = NULL
+            self._text_parts = []
 
     def _insert_comment(self, token, parent: int | None = None) -> None:
         nid = self.doc.new_comment(token[1])

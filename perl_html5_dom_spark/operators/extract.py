@@ -24,6 +24,17 @@ Design for 100 TB:
 Everything around the per-document body — memo, null payloads,
 truncation and containment — is the shared runner's job
 (:func:`..util.map_documents`; policy in the :mod:`..util` docstring).
+
+One render per document: ``extract_one`` renders the body's innerText
+once with the paragraph hook (``innertext.inner_text(doc, body,
+paragraphs)``), which also records every rendered ``<p>``'s own
+innerText; ``main_text`` then makes one stats walk to pick the main
+container and joins its paragraphs' recorded texts.  A recorded text is
+byte-identical to rendering that ``<p>`` alone (the invariant is in the
+:mod:`..dom.innertext` docstring); a ``<p>`` the body render skipped
+(display-none, ``textarea``/``input``/``audio``/``video``, outside
+``<body>``) is rendered on its own, and a main container without
+paragraphs reuses the body's text when it is the body.
 """
 
 from __future__ import annotations
@@ -32,7 +43,7 @@ import re
 
 from ..dom import innertext, serializer
 from ..dom.constants import ELEMENT_NODE, TEXT_NODE
-from ..dom.document import Document
+from ..dom.document import NULL, Document
 from ..dom.fastparse import parse_document
 from ..selector import matcher
 from ..util import map_documents
@@ -59,129 +70,154 @@ BLOCK_CLASS_RE = re.compile(
 CANDIDATE_TAGS = frozenset("article main section div body td".split())
 
 
-def _blocked_array(doc: Document) -> list[bool]:
-    """blocked[] computed once per document — _subtree_stats, candidate
-    scoring and the paragraph walk all consult it (was the #1 cost of
-    select_main_node when evaluated per child per pass)."""
-    n = len(doc.parent)
-    out = [False] * n
-    tag, attrs_arr, node_type = doc.tag, doc.attrs, doc.node_type
-    block_tags, cls_re = BLOCK_TAGS, BLOCK_CLASS_RE
-    for nid in range(n):
-        if node_type[nid] != ELEMENT_NODE:
-            continue
-        if tag[nid] in block_tags:
-            out[nid] = True
-            continue
-        attrs = attrs_arr[nid]
-        if attrs:
-            blob = (attrs.get("class") or "") + " " + (attrs.get("id") or "")
-            if blob.strip() and cls_re.search(blob):
-                out[nid] = True
-    return out
+# what leaving an element does with its subtree's sums
+_PLAIN, _BLOCKED, _LINK, _PARA, _CANDIDATE = range(5)
 
 
-def _subtree_stats(doc: Document, blocked: list[bool]):
-    """Per-node (text_len, link_text_len, p_text_len) with blocked
-    subtrees contributing nothing — ONE bottom-up pass over the flat
-    arrays (reverse pre-order), so candidate scoring is O(n) total
-    instead of O(candidates × subtree)."""
-    n = len(doc.parent)
-    tl = [0] * n
-    ll = [0] * n
-    pl = [0] * n
-    node_type, tag, text = doc.node_type, doc.tag, doc.text
-    first_child, next_sib = doc.first_child, doc.next_sib
-    for nid in reversed(doc.order):
-        nt = node_type[nid]
-        if nt == TEXT_NODE:
-            tl[nid] = len(text[nid] or "")
-            continue
-        t = l = p = 0
-        c = first_child[nid]
-        while c != -1:
-            if not blocked[c]:
-                t += tl[c]
-                l += ll[c]
-                p += pl[c]
-            c = next_sib[c]
-        tl[nid] = t
-        if nt == ELEMENT_NODE and tag[nid] == "a":
-            ll[nid] = t
-        else:
-            ll[nid] = l
-        if nt == ELEMENT_NODE and tag[nid] == "p":
-            pl[nid] = t
-        else:
-            pl[nid] = p
-    return tl, ll, pl
+def _boilerplate_attrs(attrs: dict) -> bool:
+    """The element's class/id tokens mark a boilerplate subtree."""
+    blob = (attrs.get("class") or "") + " " + (attrs.get("id") or "")
+    return BLOCK_CLASS_RE.search(blob) is not None
 
 
-def select_main_node(doc: Document, blocked: list[bool] | None = None) -> int:
+def select_main_node(doc: Document) -> tuple[int, set[int]]:
     """Pick the main-content container: the candidate element with the
-    highest boilerplate-discounted text density score.
+    highest boilerplate-discounted text density score; returns it with
+    the set of blocked elements.
 
-    score = (text_len - link_text_len) * (1 + p_bonus), where p_bonus
-    favours paragraph-bearing containers; deeper (smaller) containers win
-    ties so we don't always answer <body>.
-    """
-    order = doc.order
-    parent = doc.parent
-    depth = [0] * len(parent)
-    for nid in order:
-        p = parent[nid]
-        depth[nid] = depth[p] + 1 if p != -1 else 0
-    if blocked is None:
-        blocked = _blocked_array(doc)
-    stats_tl, stats_ll, stats_pl = _subtree_stats(doc, blocked)
-    best, best_key = doc.body_node, (-1.0, -1)
-    for nid in order:
-        if doc.node_type[nid] != ELEMENT_NODE:
+    score = (text_len - link_text_len) * (1 + p_text_len / text_len),
+    where blocked subtrees count nothing towards their ancestors and
+    p_text_len favours paragraph-bearing containers; among candidates in
+    document order, a deeper container with ≥95% of the best score wins,
+    so we don't always answer <body>.
+
+    One enter/exit walk from the document node: blocked state and depth
+    on the way down, the three text sums handed to the parent on the
+    way up (the open ancestors' sums wait on a stack)."""
+    tags, attrs_arr = doc.tag, doc.attrs
+    node_type, texts = doc.node_type, doc.text
+    first_child, next_sib, parent = doc.first_child, doc.next_sib, doc.parent
+    block_tags, cand_tags = BLOCK_TAGS, CANDIDATE_TAGS
+    root = doc.root
+    blocked: set[int] = set()
+    cands: list = []        # (node, depth), document order
+    scores: dict = {}       # candidate -> score, when it holds text
+    frames: list = []       # per open ancestor: its sums so far, its role
+    t = l = p = 0           # text, link-text and <p>-text sums of the node
+    depth = 1
+    node = first_child[root]
+    while node != NULL:
+        nt = node_type[node]
+        if nt == TEXT_NODE:
+            text = texts[node]
+            if text:
+                t += len(text)
+            role = None
+        else:
+            role = _PLAIN
+            if nt == ELEMENT_NODE:
+                tag = tags[node]
+                attrs = attrs_arr[node]
+                if tag in block_tags or (attrs and _boilerplate_attrs(attrs)):
+                    blocked.add(node)
+                    role = _BLOCKED
+                elif tag == "a":
+                    role = _LINK
+                elif tag == "p":
+                    role = _PARA
+                elif tag in cand_tags:
+                    cands.append((node, depth))
+                    role = _CANDIDATE
+            child = first_child[node]
+            if child != NULL:
+                frames.append((t, l, p, role))
+                t = l = p = 0
+                depth += 1
+                node = child
+                continue
+            # no children: every sum is 0, the parent's stay as they are
+        while True:
+            sib = next_sib[node]
+            if sib != NULL:
+                node = sib
+                break
+            node = parent[node]
+            if node == root:
+                node = NULL
+                break
+            # leave ``node``: t, l, p are its subtree's sums
+            depth -= 1
+            pt, pl, pp, role = frames.pop()
+            if role == _BLOCKED:
+                t, l, p = pt, pl, pp
+                continue
+            if role == _LINK:
+                l = t
+            elif role == _PARA:
+                p = t
+            elif role == _CANDIDATE and t:
+                scores[node] = (t - l) * (1.0 + p / t)
+            t += pt
+            l += pl
+            p += pp
+    best, best_score, best_depth = doc.body_node, -1.0, -1
+    for node, depth in cands:
+        score = scores.get(node)
+        if score is None:
             continue
-        if doc.tag[nid] not in CANDIDATE_TAGS:
-            continue
-        if blocked[nid]:
-            continue
-        tl, ll, pl = stats_tl[nid], stats_ll[nid], stats_pl[nid]
-        if tl == 0:
-            continue
-        score = (tl - ll) * (1.0 + (pl / tl))
         # a deeper container with ≥95% of the best score is a tighter
         # main-content bound (body/main/article often tie exactly)
-        if score > best_key[0] * 1.0526 or (
-            score >= best_key[0] * 0.95 and depth[nid] > best_key[1]
-        ):
-            best, best_key = nid, (max(score, best_key[0]), depth[nid])
-    return best if best != -1 else doc.root
+        if score > best_score * 1.0526 or (
+                score >= best_score * 0.95 and depth > best_depth):
+            best, best_depth = node, depth
+            best_score = max(score, best_score)
+    return (best if best != NULL else root), blocked
 
 
-def main_text(doc: Document) -> str:
+def main_text(doc: Document, paragraphs: dict | None = None) -> str:
     """Extracted main content: innerText of each <p> descendant of the
-    best container joined by blank lines; falls back to the container's
-    own innerText when it holds no paragraphs."""
-    blocked = _blocked_array(doc)
-    root = select_main_node(doc, blocked)
+    best container (outside blocked subtrees, not inside another <p>)
+    joined by blank lines; falls back to the container's own innerText
+    when it holds no paragraphs.
+
+    ``paragraphs`` is what a render with the paragraph hook recorded
+    (``innertext.inner_text(doc, body, paragraphs)``): each text is
+    taken from it, and rendered here only when that render did not
+    reach it."""
+    root, blocked = select_main_node(doc)
+    if paragraphs is None:
+        paragraphs = {}
+    tags, node_type = doc.tag, doc.node_type
+    first_child, next_sib, parent = doc.first_child, doc.next_sib, doc.parent
     paras: list[str] = []
-    stack = [root]
-    while stack:
-        nid = stack.pop()
-        if doc.node_type[nid] == ELEMENT_NODE:
-            if nid != root and blocked[nid]:
+    node = first_child[root]
+    while node != NULL:
+        if node in blocked:
+            pass    # a boilerplate subtree
+        elif tags[node] == "p" and node_type[node] == ELEMENT_NODE:
+            text = paragraphs.get(node)
+            if text is None:
+                text = innertext.inner_text(doc, node)
+            if text:
+                paras.append(text)
+        else:
+            child = first_child[node]
+            if child != NULL:
+                node = child
                 continue
-            if doc.tag[nid] == "p":
-                t = innertext.inner_text(doc, nid)
-                if t:
-                    paras.append(t)
-                continue
-        kids = []
-        child = doc.first_child[nid]
-        while child != -1:
-            kids.append(child)
-            child = doc.next_sib[child]
-        stack.extend(reversed(kids))
+        while True:
+            sib = next_sib[node]
+            if sib != NULL:
+                node = sib
+                break
+            node = parent[node]
+            if node == root:
+                node = NULL
+                break
     if paras:
         return "\n\n".join(paras)
-    return innertext.inner_text(doc, root)
+    text = paragraphs.get(root)
+    return innertext.inner_text(doc, root) if text is None else text
 
 
 # ---------------------------------------------------------------------------
@@ -221,10 +257,12 @@ def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
         nid = matcher.at(doc, "title")
         out["title"] = serializer.text_content(doc, nid) if nid != -1 else ""
     body = doc.body_node if doc.body_node != -1 else doc.root
-    if "main_text" in fields:
-        out["main_text"] = main_text(doc)
+    # one body render: main_text takes its paragraphs from it
+    paragraphs: dict = {}
     if "inner_text" in fields:
-        out["inner_text"] = innertext.inner_text(doc, body)
+        out["inner_text"] = innertext.inner_text(doc, body, paragraphs)
+    if "main_text" in fields:
+        out["main_text"] = main_text(doc, paragraphs)
     if "text_content" in fields:
         out["text_content"] = serializer.text_content(doc, body)
     if "n_nodes" in fields:

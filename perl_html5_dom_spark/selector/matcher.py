@@ -69,12 +69,20 @@ def find(doc: Document, selector, scope: int | None = None,
         scope = doc.root
     comb = _COMBINATOR_ALIASES.get(combinator, "descendant")
     candidates = _candidates(doc, scope, comb)
+    tags = doc.tag
     out: list[int] = []
     seen_global: set[int] = set()
     for entry in sel.entries:
         steps = entry.steps
         k = len(steps) - 1
+        # the rightmost compound's type selector rejects most candidates
+        # before any simple selector runs
+        want = next((s[1] for s in steps[k][1] if s[0] == "tag"), None)
         for node in candidates:
+            if want is not None:
+                tag = tags[node]
+                if tag != want and tag.lower() != want:
+                    continue
             if node in seen_global:
                 continue
             if _match_compound(doc, node, steps[k][1], scope) and \
@@ -221,11 +229,33 @@ def _column_cells(doc: Document, el: int) -> list[int]:
 # ---------------------------------------------------------------------------
 # candidate enumeration per root combinator
 # ---------------------------------------------------------------------------
+def _descendants(doc: Document, scope: int) -> list[int]:
+    """The element descendants of ``scope`` in document order."""
+    nt, first_child, next_sib, parent = (
+        doc.node_type, doc.first_child, doc.next_sib, doc.parent)
+    out = []
+    node = first_child[scope]
+    while node != NULL:
+        if nt[node] == ELEMENT_NODE:
+            out.append(node)
+        child = first_child[node]
+        if child != NULL:
+            node = child
+            continue
+        while True:
+            sib = next_sib[node]
+            if sib != NULL:
+                node = sib
+                break
+            node = parent[node]
+            if node == scope:
+                node = NULL
+                break
+    return out
+
+
 def _candidates(doc: Document, scope: int, comb: str) -> list[int]:
     nt = doc.node_type
-    if comb == "descendant":
-        return [n for n in doc.iter_subtree(scope, include_self=False)
-                if nt[n] == ELEMENT_NODE]
     if comb == "column":
         return _column_cells(doc, scope)
     if comb == "child":
@@ -245,11 +275,9 @@ def _candidates(doc: Document, scope: int, comb: str) -> list[int]:
         return out
     if comb == "begin":
         out = [scope] if nt[scope] == ELEMENT_NODE else []
-        out.extend(n for n in doc.iter_subtree(scope, include_self=False)
-                   if nt[n] == ELEMENT_NODE)
+        out.extend(_descendants(doc, scope))
         return out
-    return [n for n in doc.iter_subtree(scope, include_self=False)
-            if nt[n] == ELEMENT_NODE]
+    return _descendants(doc, scope)
 
 
 # ---------------------------------------------------------------------------

@@ -29,3 +29,22 @@ def test_extract_one_fields_agree_with_standalone_calls():
     for src, rec in goldens()["shapes"].items():
         assert rec["extract"]["main_text"] == rec["main_text"], src
         assert rec["extract"]["inner_text"] == rec["inner_body"], src
+
+
+def test_paragraph_hook_records_fresh_renders():
+    """Each text the body render records for a ``<p>`` (and for the
+    render root) equals rendering that node on its own."""
+    from perl_html5_dom_spark.dom import innertext
+    from perl_html5_dom_spark.dom.fastparse import parse_document
+
+    n = 0
+    for srcs in [SHAPES, *generated_inputs().values()]:
+        for src in srcs:
+            doc = parse_document(src)
+            body = doc.body_node if doc.body_node != -1 else doc.root
+            paragraphs: dict = {}
+            innertext.inner_text(doc, body, paragraphs)
+            for nid, text in paragraphs.items():
+                assert innertext.inner_text(doc, nid) == text, (src, nid)
+            n += len(paragraphs)
+    assert n > 1000    # the inputs do reach the hook

@@ -157,6 +157,17 @@ def test_extraction_error_containment(spark, monkeypatch):
                          on_error="raise").collect()
 
 
+def test_empty_end_tags_extract_without_err(spark):
+    """400 consecutive ``</>`` once recursed the tokenizer out of stack
+    and came back as a ``RecursionError`` err row."""
+    from perl_html5_dom_spark.operators import extract as ex
+
+    df = spark.createDataFrame(
+        [("u/e", b"<body>a" + b"</>" * 400 + b"b")], "url string, html binary")
+    row = ex.extract_pages(df, None, fields=["url", "inner_text", "err"]).first()
+    assert row.err is None and row.inner_text == "ab"
+
+
 def test_lineage_counts_err_rows(spark, monkeypatch, tmp_path):
     """Per-bucket err counts flow into the lineage table."""
     from perl_html5_dom_spark.operators import extract as ex

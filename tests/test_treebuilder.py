@@ -5,6 +5,7 @@ Each case: input HTML → expected body.outerHTML after reserialization."""
 import pytest
 
 from perl_html5_dom_spark import HTML5DOM
+from perl_html5_dom_spark.dom.treebuilder import TreeBuilder
 
 
 def body_html(src: str) -> str:
@@ -224,32 +225,80 @@ def test_reset_insertion_mode_skips_foreign_nodes():
     TreeBuilder().parse("<svg><desc><table><select><input>")
 
 
+def _child(code: str, timeout: float = 120) -> str:
+    """stdout of ``code`` run in a child interpreter under a wall-clock
+    bound (a hang fails the test instead of the run)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=timeout, check=True,
+                          cwd=root).stdout
+
+
+def _cpu_ratio(unit: str, n: int, head: str = "") -> float:
+    """CPU time of parsing ``head + unit * 4n`` over that of ``head +
+    unit * n`` (linear is 4, a little more once the bigger tree outgrows
+    the caches): the best of 15 interleaved runs per size, in CPU time,
+    as the machine may be shared."""
+    return float(_child(
+        "import time\n"
+        "from perl_html5_dom_spark.dom.treebuilder import TreeBuilder\n"
+        f"small = {head!r} + {unit!r} * {n}\n"
+        f"big = {head!r} + {unit!r} * {4 * n}\n"
+        "def cpu(src):\n"
+        "    t0 = time.process_time()\n"
+        "    TreeBuilder().parse(src)\n"
+        "    return time.process_time() - t0\n"
+        "cpu(small)\n"
+        "runs = [(cpu(small), cpu(big)) for _ in range(15)]\n"
+        "print(min(b for _, b in runs) / min(s for s, _ in runs))\n"))
+
+
 @pytest.mark.parametrize("unit", ["<div>", "<b><i><u>x"])
 def test_deep_nesting_parses_in_linear_time(unit):
     """n to 4n nested elements cost at most 5x the time (linear is 4x).
     Per-tag open-element counts answer "has a p element in button
     scope" without walking the stack when no p is open, and the
     reconstruction check looks at the current node first; a walk over
-    the whole stack on every token makes the parse quadratic.  Timed in
-    a child interpreter with a wall-clock bound, best of three per
-    size."""
-    import subprocess
-    import sys
+    the whole stack on every token makes the parse quadratic."""
+    assert _cpu_ratio(unit, 1000) <= 5
 
-    code = (
-        "import time\n"
+
+def test_comments_tokenize_in_linear_time():
+    """Each comment's end is found by one scan for ``-->`` or ``--!>``;
+    searching ``--!>`` to the end of input for every comment made
+    ``x<!--c-->`` runs quadratic (2.3 s at 20,000, 34 s at 80,000)."""
+    assert _cpu_ratio("x<!--c-->", 20000, "<body>") <= 5
+
+
+def test_stray_lt_text_merges_in_linear_time():
+    """Every stray ``<`` is a one-character token merged into the text
+    node before it; the merged pieces are joined once, so ``x < `` runs
+    are linear (joining per token was quadratic: 0.13 s at 20,000, 1.12 s
+    at 80,000), and the token boundaries ``ignore_whitespace`` sees stay
+    as they were."""
+    assert _cpu_ratio("x < ", 20000, "<body>") <= 5
+    src = "<body>x < < <"
+    doc = TreeBuilder().parse(src)
+    assert doc.text[doc.first_child[doc.body_node]] == "x < < <"
+    ws = TreeBuilder(ignore_whitespace=True).parse(src)
+    assert ws.text[ws.first_child[ws.body_node]] == "x <<<"
+
+
+def test_empty_end_tags_do_not_recurse():
+    """``</>`` is dropped by a loop in the tokenizer, not by a recursive
+    call per tag: 100,000 of them parse through the builder, the public
+    API and the extraction kernel (400 used to raise RecursionError)."""
+    out = _child(
+        "from perl_html5_dom_spark import HTML5DOM\n"
         "from perl_html5_dom_spark.dom.treebuilder import TreeBuilder\n"
-        f"unit = {unit!r}\n"
-        "def best(n):\n"
-        "    src = unit * n\n"
-        "    times = []\n"
-        "    for _ in range(3):\n"
-        "        t0 = time.perf_counter()\n"
-        "        TreeBuilder().parse(src)\n"
-        "        times.append(time.perf_counter() - t0)\n"
-        "    return min(times)\n"
-        "best(500)\n"
-        "print(best(4000) / best(1000))\n")
-    out = subprocess.run([sys.executable, "-c", code], check=True,
-                         capture_output=True, text=True, timeout=120)
-    assert float(out.stdout) <= 5
+        "from perl_html5_dom_spark.operators.extract import extract_one\n"
+        "src = '<body>a' + '</>' * 100000 + 'b'\n"
+        "doc = TreeBuilder().parse(src)\n"
+        "print(doc.text[doc.first_child[doc.body_node]])\n"
+        "print(HTML5DOM().parse(src.encode()).body().text())\n"
+        "print(extract_one(src.encode())['inner_text'])\n", timeout=60)
+    assert out.split() == ["ab", "ab", "ab"]

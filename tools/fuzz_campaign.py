@@ -18,11 +18,18 @@ under a wall-clock bound, so a hang is a finding too.  Inputs on which
 only the other side runs out of Python stack (``RecursionError``) are
 counted apart: the explicit-stack lexer parses them.
 
+``extract`` mode is the same kind of differential run for the HTML
+extraction kernel: each tag soup goes through both checkouts'
+``extract_one`` (every field, ``a[href]`` spans) and ``inner_text`` of
+the document node, and must give the same values, or the same
+exception type and message, under the same per-document bound.
+
 Multiprocess over all cores with distinct seeds; failures are saved to
 /tmp/fuzz_failures/ for triage.  Usage:
 
   python tools/fuzz_campaign.py [seconds] [workers]
   python tools/fuzz_campaign.py pdf <other checkout> [seconds] [workers]
+  python tools/fuzz_campaign.py extract <other checkout> [seconds] [workers]
 """
 
 from __future__ import annotations
@@ -187,29 +194,27 @@ def worker(seed: int, seconds: float, out_dir: str) -> tuple[int, int]:
     return n, fails
 
 
-#: wall-clock bound per PDF document and side
-PDF_BOUND_S = 2.0
+#: wall-clock bound per document and side in the differential modes
+BOUND_S = 2.0
 
 
 class _Hang(BaseException):
-    """Raised by the alarm; not an ``Exception``, so ``outcome`` lets it
-    through instead of recording it as the document's error."""
+    """Raised by the alarm; not an ``Exception``, so an outcome function
+    lets it through instead of recording it as the document's error."""
 
 
-def _bounded(fn, data: bytes) -> list:
-    """``pdf_cases.outcome`` of ``fn(data)``, or ``["hang"]`` when it
-    takes longer than ``PDF_BOUND_S``."""
+def _bounded(outcome) -> list:
+    """``outcome()``, or ``["hang"]`` when it takes longer than
+    ``BOUND_S``."""
     import signal
-
-    from pdf_cases import outcome
 
     def alarm(signum, frame):
         raise _Hang
 
     old = signal.signal(signal.SIGALRM, alarm)
-    signal.setitimer(signal.ITIMER_REAL, PDF_BOUND_S)
+    signal.setitimer(signal.ITIMER_REAL, BOUND_S)
     try:
-        return outcome(data, fn)
+        return outcome()
     except _Hang:
         return ["hang"]
     finally:
@@ -245,6 +250,8 @@ def pdf_worker(seed: int, seconds: float, out_dir: str,
     import importlib.util
 
     _setup_paths()
+    from pdf_cases import outcome
+
     from perl_html5_dom_spark.dom.pdf import extract_pdf_text
 
     spec = importlib.util.spec_from_file_location(
@@ -256,8 +263,8 @@ def pdf_worker(seed: int, seconds: float, out_dir: str,
     n = fails = recursion = 0
     while time.time() < t_end:
         data = gen_pdf(rng)
-        ours = _bounded(extract_pdf_text, data)
-        other_out = _bounded(theirs.extract_pdf_text, data)
+        ours = _bounded(lambda: outcome(data, extract_pdf_text))
+        other_out = _bounded(lambda: outcome(data, theirs.extract_pdf_text))
         if ours != other_out:
             if other_out[:2] == ["err", "RecursionError"] and \
                     ours[0] != "hang":
@@ -272,10 +279,64 @@ def pdf_worker(seed: int, seconds: float, out_dir: str,
     return n, fails, recursion
 
 
+def _package(root: str, name: str):
+    """The ``perl_html5_dom_spark`` package of checkout ``root``, imported
+    as ``name`` (its modules import each other relatively)."""
+    import importlib.util
+
+    if name not in sys.modules:
+        pkg = os.path.join(root, "perl_html5_dom_spark")
+        spec = importlib.util.spec_from_file_location(
+            name, os.path.join(pkg, "__init__.py"),
+            submodule_search_locations=[pkg])
+        sys.modules[name] = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(sys.modules[name])
+    return name
+
+
+def _extract_outcome(pkg: str, src: str) -> list:
+    """``["ok", extract_one row, inner_text of the document node]`` of
+    package ``pkg`` on ``src``, or ``["err", type, message]``."""
+    import importlib
+
+    extract = importlib.import_module(pkg + ".operators.extract")
+    fastparse = importlib.import_module(pkg + ".dom.fastparse")
+    innertext = importlib.import_module(pkg + ".dom.innertext")
+    matcher = importlib.import_module(pkg + ".selector.matcher")
+    try:
+        row = extract.extract_one(src, matcher.compile_selector("a[href]"))
+        doc = fastparse.parse_document(src)
+        return ["ok", row, innertext.inner_text(doc, doc.root)]
+    except Exception as e:
+        return ["err", type(e).__name__, str(e)]
+
+
+def extract_worker(seed: int, seconds: float, out_dir: str,
+                   other: str) -> tuple[int, int]:
+    """(documents, findings) of the extraction kernel against the one of
+    checkout ``other``, for one seed."""
+    _setup_paths()
+    theirs = _package(other, "other_perl_html5_dom_spark")
+    rng = random.Random(seed)
+    t_end = time.time() + seconds
+    n = fails = 0
+    while time.time() < t_end:
+        src = gen_doc(rng)
+        ours = _bounded(lambda: _extract_outcome("perl_html5_dom_spark", src))
+        other_out = _bounded(lambda: _extract_outcome(theirs, src))
+        if ours != other_out:
+            fails += 1
+            label = "hang" if "hang" in (ours[0], other_out[0]) else "diff"
+            with open(f"{out_dir}/extract-{label}-{seed}-{n}.html", "w") as f:
+                f.write(src)
+        n += 1
+    return n, fails
+
+
 def main() -> None:
     args = sys.argv[1:]
-    pdf_mode = bool(args) and args[0] == "pdf"
-    if pdf_mode:
+    mode = args[0] if args and args[0] in ("pdf", "extract") else None
+    if mode:
         other, args = os.path.abspath(args[1]), args[2:]
     seconds = float(args[0]) if args else 300
     workers = int(args[1]) if len(args) > 1 else (os.cpu_count() or 4)
@@ -285,16 +346,17 @@ def main() -> None:
 
     base = int(time.time())
     with mp.Pool(workers) as pool:
-        if pdf_mode:
-            res = pool.starmap(pdf_worker, [(base + i, seconds, out_dir, other)
-                                            for i in range(workers)])
+        if mode:
+            fn = pdf_worker if mode == "pdf" else extract_worker
+            res = pool.starmap(fn, [(base + i, seconds, out_dir, other)
+                                    for i in range(workers)])
         else:
             res = pool.starmap(
                 worker, [(base + i, seconds, out_dir) for i in range(workers)])
     total = sum(r[0] for r in res)
     fails = sum(r[1] for r in res)
     extra = (f", {sum(r[2] for r in res)} only the other side's stack ran "
-             f"out on" if pdf_mode else "")
+             f"out on" if mode == "pdf" else "")
     print(f"campaign: {total} docs, {fails} failures{extra} "
           f"({workers} workers x {seconds:.0f}s); failures in {out_dir}")
     sys.exit(1 if fails else 0)
