@@ -42,6 +42,12 @@ NAMESPACE_NAMES = {
 }
 NAMESPACE_IDS = {v: k for k, v in NAMESPACE_NAMES.items()}
 
+#: ``str.translate`` table of ASCII lowercasing: the spec lowercases only
+#: ASCII upper alpha in tag, attribute and DOCTYPE names and in its
+#: ASCII case-insensitive compares (``str.lower`` also folds non-ASCII
+#: letters, turning ``İ`` into two code points and the Kelvin sign into k)
+ASCII_LOWER = {c: c + 32 for c in range(ord("A"), ord("Z") + 1)}
+
 # ---------------------------------------------------------------------------
 # Void elements (HTML spec; reference behavior DOM.xs:2145-2151)
 # ---------------------------------------------------------------------------

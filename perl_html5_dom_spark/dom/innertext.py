@@ -7,7 +7,9 @@ using default user-agent display types per tag
 (/root/reference/gen/tags_ua_style.c; default INLINE utils.c:225-230):
 
 * text: drop ``\r``; collapse runs of ASCII whitespace to one space, and
-  drop spaces right after a line break or at the start; NBSP is preserved;
+  drop spaces right after a line break or at the start; NBSP is preserved.
+  The collapse runs only on text that holds a run to collapse (a double
+  space, or any of ``\n \t \x0b \x0c``); other text is already collapsed;
 * elements with display:none (script/style/head/template/...) are skipped,
   as are textarea/input/audio/video;
 * ``<br>`` always emits ``\n``;
@@ -115,12 +117,17 @@ def inner_text(doc: Document, nid: int, paragraphs: dict | None = None) -> str:
         if nt == TEXT_NODE:
             # regex whitespace-run collapse — C-speed equivalent of the
             # character loop in the reference (utils.c:451-463); \r
-            # dropped, NBSP NOT collapsible (excluded from the class)
+            # dropped, NBSP NOT collapsible (excluded from the class).
+            # Text without a double space or a \n \t \x0b \x0c is
+            # already collapsed: the guard's substring tests skip the
+            # regex for almost every text node
             text = texts[node]
             if text:
                 if "\r" in text:
                     text = text.replace("\r", "")
-                text = _WS_RUN_RE.sub(" ", text)
+                if "\n" in text or "  " in text or "\t" in text or \
+                        "\x0c" in text or "\x0b" in text:
+                    text = _WS_RUN_RE.sub(" ", text)
                 if text == " ":
                     # all-collapsible run: emit at most one space
                     if not new_line and out[-1][-1] != " ":

@@ -502,8 +502,9 @@ class PdfParser:
                     raise PdfError("bad xref entry")
                 if em.group(3) == b"n":
                     self.xref.setdefault(first + i, int(em.group(1)))
-                pos += 20 if entry[18:19] in (b"\r", b"\n", b" ") else 19
-                pos = _WS_RE.match(data, pos).end()
+                # step over the entry as matched, then its EOL: 20-byte
+                # entries end in two bytes, 19-byte ones in one
+                pos = _WS_RE.match(data, pos + em.end()).end()
             lex.pos = pos
 
     def _load_xref_stream(self, pos: int) -> dict:

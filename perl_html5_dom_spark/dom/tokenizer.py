@@ -14,6 +14,15 @@ Token shapes (tuples, for speed):
     ("doctype", name, public_id, system_id, force_quirks)
     ("eof",)
 
+In the data state, one match of ``_TOKEN_RE`` per token reads a text run
+or a tag of a common shape: an ASCII name of letters, digits and ``-``
+(``annotation-xml``, ``foreignObject``; lowercased as read) with only
+double-quoted attributes, whose values may hold ``&`` references
+(decoded by :func:`decode_entities_attr`).  Every other shape at ``<`` —
+comments, doctypes, other quoting, NUL, bogus markup — goes through the
+character loop (:meth:`Tokenizer._markup`).  Names lowercase ASCII upper
+alpha only (``ASCII_LOWER``), as the spec and MyHTML do.
+
 Positions mirror the reference's token spans (/root/reference/DOM.xs:2161-2172,
 verified by t/0-api.t:709-713): ``raw_*`` covers the tag name as it appeared,
 ``elem_*`` covers ``<`` .. ``>`` inclusive.  Offsets are in code points of the
@@ -26,6 +35,8 @@ import html as _html
 import re
 from html.entities import html5 as _HTML5_ENTITIES
 
+from .constants import ASCII_LOWER
+
 __all__ = ["Tokenizer", "decode_entities_attr"]
 
 _WS = "\t\n\x0c "
@@ -37,28 +48,28 @@ _TAG_NAME_RE = re.compile(r"[a-zA-Z][^\t\n\x0c />]*")
 # `=+` form swallowed a second '=' plus quote chars, round-4 fuzz find)
 _ATTR_NAME_RE = re.compile(r"[^\t\n\x0c />=][^\t\n\x0c />=]*|=[^\t\n\x0c />=]*")
 _UNQUOTED_VAL_RE = re.compile(r"[^\t\n\x0c >]*")
-_DOCTYPE_RE = re.compile(r"doctype", re.IGNORECASE)
+_DOCTYPE_RE = re.compile(r"doctype", re.IGNORECASE | re.ASCII)
 _COMMENT_END_RE = re.compile(r"--!?>")
 
 #: script-data escape scanner (WHATWG 13.2.5.18-29): the markers that
 #: change the escaped / double-escaped state or close the element
 _SCRIPT_RE = re.compile(
     r"(<!--)|(-->)|(</script(?=[\t\n\x0c />]|$))|(<script(?=[\t\n\x0c />]|$))",
-    re.IGNORECASE)
+    re.IGNORECASE | re.ASCII)
 
-# -- fast paths: whole-tag regexes compiled to C --------------------------
-# Conservative shapes whose semantics are EXACTLY the slow loop's:
-# lowercase-ascii names, attrs only in `name="value"` form (no NUL, no
-# entities, no quotes-in-value), optional final '/'.  Anything else falls
-# back to the character loop.  Matched this way, the common case — the
-# overwhelming majority of real-web tags — is parsed in one C call.
-_FAST_START_RE = re.compile(
-    r"([a-z][a-z0-9]*)"
-    r"((?:[\t\n\x0c ]+[a-z][a-z0-9-]*=\"[^\"&\x00<>]*\")*)"
-    r"[\t\n\x0c ]*(/?)>"
+# -- the data state's one match per token (module docstring) --------------
+# Each tag shape here reads EXACTLY as the character loop reads it; the
+# common case — the overwhelming majority of real-web tokens — costs one
+# C call.
+_TOKEN_RE = re.compile(
+    r"([^<]+)"                                    # 1: text run
+    r"|<([a-zA-Z][a-zA-Z0-9-]*)"                  # 2: start tag name
+    r"((?:[\t\n\x0c ]+"                           # 3: its attributes
+    r"[a-zA-Z][a-zA-Z0-9_:.-]*=\"[^\"\x00]*\")*)"
+    r"[\t\n\x0c ]*(/?)>"                          # 4: self-closing slash
+    r"|</([a-zA-Z][a-zA-Z0-9-]*)[\t\n\x0c ]*>"    # 5: end tag name
 )
-_FAST_ATTR_ITER = re.compile(r'([a-z][a-z0-9-]*)="([^"]*)"')
-_FAST_END_RE = re.compile(r"([a-z][a-z0-9]*)[\t\n\x0c ]*>")
+_TOKEN_ATTR_ITER = re.compile(r'([a-zA-Z][a-zA-Z0-9_:.-]*)="([^"]*)"')
 
 # attribute-value character references: named refs without a trailing ';'
 # are NOT expanded when followed by [a-zA-Z0-9=] (WHATWG §13.2.5.73)
@@ -66,10 +77,9 @@ _ATTR_ENTITY_RE = re.compile(
     r"&(#[0-9]+;?|#[xX][0-9a-fA-F]+;?|[a-zA-Z][a-zA-Z0-9]{0,32};?)"
 )
 
-# longest-first legacy (no-semicolon) entity names
-_LEGACY_NAMES = sorted(
-    (n for n in _HTML5_ENTITIES if not n.endswith(";")), key=len, reverse=True
-)
+#: legacy (no-semicolon) entity names, and the longest one's length
+_LEGACY = {n: v for n, v in _HTML5_ENTITIES.items() if not n.endswith(";")}
+_LEGACY_MAX = max(map(len, _LEGACY))
 
 
 def decode_entities_attr(value: str) -> str:
@@ -78,7 +88,6 @@ def decode_entities_attr(value: str) -> str:
         return value
     out = []
     i = 0
-    n = len(value)
     while True:
         j = value.find("&", i)
         if j == -1:
@@ -102,23 +111,22 @@ def decode_entities_attr(value: str) -> str:
                 out.append("&" + body)
             else:
                 out.append(_decode_body(body))
-            i = end
         else:
-            # no semicolon: expand longest legacy prefix only if the char
-            # right after it is not alnum or '='
-            repl = None
-            for name in _LEGACY_NAMES:
-                if body.startswith(name):
-                    after = j + 1 + len(name)
-                    nxt = value[after] if after < len(value) else ""
+            # no semicolon: the longest legacy prefix (one dict probe per
+            # length) expands only if the char right after it is not
+            # alnum or '='
+            for k in range(min(len(body), _LEGACY_MAX), 0, -1):
+                repl = _LEGACY.get(body[:k])
+                if repl is not None:
+                    nxt = value[j + 1 + k: j + 2 + k]
                     if nxt.isalnum() or nxt == "=":
-                        break
-                    repl = _HTML5_ENTITIES[name]
-                    out.append(repl + value[j + 1 + len(name): end])
+                        repl = None
                     break
             if repl is None:
                 out.append("&" + body)
-            i = end
+            else:
+                out.append(repl + body[k:])
+        i = end
     return "".join(out)
 
 
@@ -210,60 +218,54 @@ class Tokenizer:
 
     # -- main entry -----------------------------------------------------
     def next_token(self):
-        """The next token.  Character data and the common tag shapes
-        (``_FAST_START_RE``/``_FAST_END_RE``, tried once per tag) are
-        handled here; other markup goes through :meth:`_markup`.  A
-        dropped ``</>`` loops instead of recursing."""
-        src, n = self.src, self.n
+        """The next token.  In the data state one ``_TOKEN_RE`` match per
+        token reads a text run or a tag of a common shape; other markup
+        goes through :meth:`_markup`.  A dropped ``</>`` loops instead of
+        recursing."""
+        src = self.src
         while True:
             if self._raw_mode is not None:
                 token = self._raw_token()
             else:
                 pos = self.pos
-                if pos >= n:
-                    self._done = True
-                    return ("eof",)
-                lt = src.find("<", pos)
-                if lt == -1:
-                    self.pos = n
-                    # NUL passes through: the data state EMITS U+0000
-                    # (with a parse error) and the tree stage decides —
-                    # "in body"/"in table text"/"in select" ignore it,
-                    # foreign content turns it into U+FFFD (WHATWG
-                    # 13.2.5.1 + 13.2.6.5)
-                    text = src[pos:]
-                    if "&" in text:
-                        text = _decode_text(text)
-                    return ("char", text, pos, n - pos)
-                if lt > pos:
-                    self.pos = lt
-                    text = src[pos:lt]
-                    if "&" in text:
-                        text = _decode_text(text)
-                    return ("char", text, pos, lt - pos)
-                # at '<': the common tag shapes in one C call each
-                if src.startswith("/", lt + 1):
-                    fm = _FAST_END_RE.match(src, lt + 2)
-                    if fm is not None:
-                        name = fm.group(1)
-                        end = self.pos = fm.end()
-                        return ("end", name, lt + 2, len(name), lt, end - lt)
+                m = _TOKEN_RE.match(src, pos)
+                if m is None:
+                    if pos >= self.n:
+                        self._done = True
+                        return ("eof",)
+                    token = self._markup(pos)
                 else:
-                    fm = _FAST_START_RE.match(src, lt + 1)
-                    if fm is not None:
-                        name, rawattrs, slash = fm.groups()
-                        attrs = []
-                        if rawattrs:
-                            seen = set()
-                            for aname, value in _FAST_ATTR_ITER.findall(
-                                    rawattrs):
-                                if aname not in seen:   # first one wins
-                                    seen.add(aname)
-                                    attrs.append((aname, value))
-                        end = self.pos = fm.end()
-                        return ("start", name, attrs, slash == "/",
-                                lt + 1, len(name), lt, end - lt)
-                token = self._markup(lt)
+                    end = self.pos = m.end()
+                    kind = m.lastindex
+                    if kind == 1:
+                        # NUL passes through: the data state EMITS U+0000
+                        # (with a parse error) and the tree stage decides —
+                        # "in body"/"in table text"/"in select" ignore it,
+                        # foreign content turns it into U+FFFD (WHATWG
+                        # 13.2.5.1 + 13.2.6.5)
+                        text = m.group(1)
+                        if "&" in text:
+                            text = _decode_text(text)
+                        return ("char", text, pos, end - pos)
+                    if kind == 5:
+                        name = m.group(5)
+                        # the names are ASCII: str.lower is ASCII lowercasing
+                        return ("end", name.lower(), pos + 2, len(name),
+                                pos, end - pos)
+                    name, rawattrs, slash = m.group(2, 3, 4)
+                    attrs = []
+                    if rawattrs:
+                        seen = set()
+                        for aname, value in _TOKEN_ATTR_ITER.findall(
+                                rawattrs):
+                            aname = aname.lower()
+                            if aname not in seen:   # first one wins
+                                seen.add(aname)
+                                if "&" in value:
+                                    value = decode_entities_attr(value)
+                                attrs.append((aname, value))
+                    return ("start", name.lower(), attrs, slash == "/",
+                            pos + 1, len(name), pos, end - pos)
             if token is not None:
                 return token
 
@@ -283,7 +285,7 @@ class Tokenizer:
         else:
             pat = re.compile(
                 r"</" + re.escape(self._raw_tag) + r"(?=[\t\n\x0c />]|$)",
-                re.IGNORECASE
+                re.IGNORECASE | re.ASCII
             )
             m = pat.search(src, pos)
             end = None if m is None else m.start()
@@ -432,7 +434,7 @@ class Tokenizer:
         j = i
         while j < n and src[j] not in _WS and src[j] != ">":
             j += 1
-        name = src[i:j].lower().replace("\x00", "�")
+        name = src[i:j].translate(ASCII_LOWER).replace("\x00", "�")
         public_id = None
         system_id = None
         quirks = False
@@ -440,7 +442,7 @@ class Tokenizer:
         while i < n and src[i] in _WS:
             i += 1
         if i < n and src[i] != ">":
-            kw = src[i: i + 6].lower()
+            kw = src[i: i + 6].translate(ASCII_LOWER)
             if kw == "public":
                 i += 6
                 public_id, i, ok = self._doctype_id(i)
@@ -501,7 +503,7 @@ class Tokenizer:
             return self._bogus_comment(lt, i)
         m = _TAG_NAME_RE.match(src, i)
         name_raw = m.group(0)
-        name = name_raw.lower()
+        name = name_raw.translate(ASCII_LOWER)
         i = m.end()
         # skip (and discard) any attributes on the end tag
         attrs, self_closing, i, ok = self._attrs(i)
@@ -515,7 +517,7 @@ class Tokenizer:
         src, n = self.src, self.n
         m = _TAG_NAME_RE.match(src, lt + 1)
         name_raw = m.group(0)
-        name = name_raw.lower().replace("\x00", "�")
+        name = name_raw.translate(ASCII_LOWER).replace("\x00", "�")
         i = m.end()
         attrs, self_closing, i, ok = self._attrs(i)
         if not ok:
@@ -552,7 +554,7 @@ class Tokenizer:
             if not m:
                 i += 1
                 continue
-            aname = m.group(0).lower().replace("\x00", "�")
+            aname = m.group(0).translate(ASCII_LOWER).replace("\x00", "�")
             i = m.end()
             while i < n and src[i] in _WS:
                 i += 1

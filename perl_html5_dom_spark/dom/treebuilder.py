@@ -25,6 +25,7 @@ rule that reprocesses a tag calls the next mode directly.
 from __future__ import annotations
 
 from .constants import (
+    ASCII_LOWER,
     BLOCK_START,
     BUTTON_SCOPE_EXTRA,
     FOREIGN_BREAKOUT,
@@ -99,7 +100,7 @@ class TreeBuilder:
         "template_modes", "head_id", "form_id", "frameset_ok",
         "foster_parenting", "pending_table_text", "skip_newline",
         "fragment_context_tag", "fragment_context_ns", "done", "pending",
-        "_has_foreign", "_arrays", "_text_run", "_text_parts")
+        "_has_foreign", "_arrays", "_text_run", "_text_parts", "_stack_pos")
 
     def __init__(self, scripts: bool = True, ignore_whitespace: bool = False,
                  ignore_doctype: bool = False) -> None:
@@ -114,6 +115,11 @@ class TreeBuilder:
         #: the other stack walks return at once when the target is not
         #: open, so deep nesting costs O(1) per token instead of O(depth)
         self._open: dict[str, int] = {}
+        #: each element's index in ``stack``, recorded when it is pushed:
+        #: pops leave stale entries (``_stack_index`` rejects them) and
+        #: the mid-stack edits re-record what they shift, so "is it open"
+        #: and "where" cost O(1) at any depth
+        self._stack_pos: dict[int, int] = {}
         self.afe: list = []  # entries: [node_id, tag, attrs] lists or MARKER
         self.mode = "initial"
         self.original_mode = ""
@@ -193,6 +199,7 @@ class TreeBuilder:
         self.tok = Tokenizer(src)
         self.stack = []
         self._open = {}
+        self._stack_pos = {}
         self.mode = "initial"
         self.done = False
         # the Document's arrays, for node creation without method hops
@@ -302,7 +309,7 @@ class TreeBuilder:
             return True
         if ns == NS_MATHML and tag == "annotation-xml":
             attrs = self.doc.attrs[node] or {}
-            enc = attrs.get("encoding", "").lower()
+            enc = attrs.get("encoding", "").translate(ASCII_LOWER)
             return enc in ("text/html", "application/xhtml+xml")
         return False
 
@@ -388,6 +395,7 @@ class TreeBuilder:
             else:
                 first[p] = nid
             last[p] = nid
+        self._stack_pos[nid] = len(stack)
         stack.append(nid)
         o = self._open
         o[tag] = o.get(tag, 0) + 1
@@ -465,6 +473,7 @@ class TreeBuilder:
     # stack of open elements (every push and pop keeps ``_open``)
     # ==================================================================
     def _push(self, nid: int) -> None:
+        self._stack_pos[nid] = len(self.stack)
         self.stack.append(nid)
         tag = self.doc.tag[nid]
         self._open[tag] = self._open.get(tag, 0) + 1
@@ -483,8 +492,25 @@ class TreeBuilder:
 
     def _unstack(self, nid: int) -> None:
         """Remove ``nid`` from the stack wherever it is."""
-        self.stack.remove(nid)
+        i = self._stack_index(nid)
+        del self.stack[i]
+        self._restack(i)
         self._open[self.doc.tag[nid]] -= 1
+
+    def _stack_index(self, nid: int) -> int:
+        """``nid``'s index in the stack of open elements, or -1."""
+        i = self._stack_pos.get(nid, -1)
+        stack = self.stack
+        if 0 <= i < len(stack) and stack[i] == nid:
+            return i
+        return -1
+
+    def _restack(self, i: int, end: int | None = None) -> None:
+        """Re-record the positions of stack entries ``i`` to ``end - 1``
+        (to the top by default), after an edit moved them."""
+        pos, stack = self._stack_pos, self.stack
+        for j in range(i, len(stack) if end is None else end):
+            pos[stack[j]] = j
 
     def _any_open(self, tags) -> bool:
         o = self._open
@@ -652,15 +678,13 @@ class TreeBuilder:
         if not afe:
             return
         last = afe[-1]
-        # the last entry is usually the current node: test it first
-        if last is MARKER or last[0] == self.stack[-1] or \
-                last[0] in self.stack:
+        if last is MARKER or self._stack_index(last[0]) >= 0:
             return
         i = len(afe) - 1
         while i > 0:
             i -= 1
             entry = afe[i]
-            if entry is MARKER or entry[0] in self.stack:
+            if entry is MARKER or self._stack_index(entry[0]) >= 0:
                 i += 1
                 break
         self.doc.misnested = True
@@ -701,17 +725,18 @@ class TreeBuilder:
                 self._any_other_end_tag(tag)
                 return
             fmt_elt = entry[0]
-            if fmt_elt not in self.stack:
+            idx = self._stack_index(fmt_elt)
+            if idx < 0:
                 self.afe.remove(entry)
                 return
             if not self._in_scope(tag):
                 return
             # find furthest block: lowest stack element above fmt_elt
             # that is special
-            idx = self.stack.index(fmt_elt)
+            stack = self.stack
             furthest = None
-            for i in range(idx + 1, len(self.stack)):
-                if self._is_special(self.stack[i]):
+            for i in range(idx + 1, len(stack)):
+                if self._is_special(stack[i]):
                     furthest = i
                     break
             if furthest is None:
@@ -719,19 +744,18 @@ class TreeBuilder:
                 self._pop_to(idx)
                 self.afe.remove(entry)
                 return
-            common_ancestor = self.stack[idx - 1]
+            common_ancestor = stack[idx - 1]
             bookmark = self.afe.index(entry)
             node_i = furthest
-            node = self.stack[node_i]
-            # the furthest block must be tracked by NODE: the inner loop
-            # removes stack entries, so the index goes stale
-            fb = self.stack[furthest]
-            last_node = fb
+            fb = last_node = stack[furthest]
+            # the inner loop removes stack entries below the furthest
+            # block: ``fb_i`` follows its index
+            fb_i = furthest
             inner = 0
             while True:  # inner loop
                 inner += 1
                 node_i -= 1
-                node = self.stack[node_i]
+                node = stack[node_i]
                 if node == fmt_elt:
                     break
                 node_entry = None
@@ -746,13 +770,15 @@ class TreeBuilder:
                         bookmark -= 1
                     node_entry = None
                 if node_entry is None:
-                    self._unstack(node)
+                    del stack[node_i]
+                    self._open[doc.tag[node]] -= 1
+                    fb_i -= 1
                     continue
                 # create clone of node
                 clone = doc.new_element(doc.tag[node], doc.ns[node],
                                         dict(doc.attrs[node]) if doc.attrs[node] else None)
                 node_entry[0] = clone
-                self.stack[self.stack.index(node)] = clone
+                stack[node_i] = clone
                 node = clone
                 if last_node == fb:
                     bookmark = self.afe.index(node_entry) + 1
@@ -774,9 +800,13 @@ class TreeBuilder:
             self.afe.remove(entry)
             self.afe.insert(bookmark, [clone, entry[1], entry[2]])
             # stack: remove fmt elt; insert clone after furthest block
-            # (the clone has the element's tag: ``_open`` is unchanged)
-            self.stack.remove(fmt_elt)
-            self.stack.insert(self.stack.index(fb) + 1, clone)
+            # (the clone has the element's tag: ``_open`` is unchanged),
+            # then re-record the positions that moved: from the format
+            # element's to the clone's, or to the top if the inner loop
+            # removed entries
+            del stack[idx]
+            stack.insert(fb_i, clone)
+            self._restack(idx, fb_i + 1 if fb_i == furthest else None)
 
     def _insert_relative_to(self, target: int, node: int) -> None:
         """Appropriate place for inserting relative to a given target
@@ -901,8 +931,8 @@ class TreeBuilder:
     def _doctype_quirks(name, public, system, force_quirks) -> bool:
         if force_quirks or name != "html":
             return True
-        pl = (public or "").lower()
-        sl = (system or "").lower()
+        pl = (public or "").translate(ASCII_LOWER)
+        sl = (system or "").translate(ASCII_LOWER)
         if public is None and system is None:
             return False
         if pl in ("-//w3o//dtd w3 html strict 3.0//en//",
@@ -1172,7 +1202,7 @@ class TreeBuilder:
                        "script", "style", "template", "title"):
                 self._push(self.head_id)
                 self._mode_in_head(token)
-                if self.head_id in self.stack:
+                if self._stack_index(self.head_id) >= 0:
                     self._unstack(self.head_id)
                 return
             if tag == "head":
@@ -1365,7 +1395,7 @@ class TreeBuilder:
             self._adoption_agency("a")
             if entry in self.afe:
                 self.afe.remove(entry)
-            if entry[0] in self.stack:
+            if self._stack_index(entry[0]) >= 0:
                 self._unstack(entry[0])
         self._start_formatting(token)
 
@@ -1406,7 +1436,7 @@ class TreeBuilder:
         nid = self._insert_element(token)
         self._pop()
         attrs = self.doc.attrs[nid] or {}
-        if attrs.get("type", "").lower() != "hidden":
+        if attrs.get("type", "").translate(ASCII_LOWER) != "hidden":
             self.frameset_ok = False
 
     def _start_param(self, token) -> None:
@@ -1511,7 +1541,7 @@ class TreeBuilder:
         if not self._template_open():
             node = self.form_id
             self.form_id = NULL
-            if node == NULL or node not in self.stack or \
+            if node == NULL or self._stack_index(node) < 0 or \
                     not self._in_scope("form"):
                 return
             self._generate_implied_end_tags()
@@ -1621,7 +1651,7 @@ class TreeBuilder:
                 return
             if tag == "input":
                 attrs = dict(token[2])
-                if attrs.get("type", "").lower() == "hidden":
+                if attrs.get("type", "").translate(ASCII_LOWER) == "hidden":
                     self._insert_element(token)
                     self._pop()
                     return
@@ -2235,12 +2265,12 @@ class TreeBuilder:
                 return
             stack = self.stack
             node_i = len(stack) - 1
-            if node_i > 0 and doc.tag[stack[-1]].lower() == tag:
+            if node_i > 0 and doc.tag[stack[-1]].translate(ASCII_LOWER) == tag:
                 self._pop()  # the end tag of the current node
                 return
             while node_i > 0:
                 node = self.stack[node_i]
-                if doc.tag[node].lower() == tag:
+                if doc.tag[node].translate(ASCII_LOWER) == tag:
                     self._pop_to(node_i)
                     return
                 node_i -= 1

@@ -77,3 +77,33 @@ def test_innertext_cr_in_api_set_text():
     tree = HTML5DOM().parse("<div id=x></div>")
     tree.at("#x").text("a\rb")
     assert tree.at("#x").innerText() == "ab"
+
+
+def test_whitespace_collapse_matches_the_character_loop():
+    """The collapse runs only on text holding a run to collapse; on
+    random text of whitespace, NBSP, ``\\r`` and letters the result is
+    the reference's character loop (utils.c:451-463): ``\\r`` dropped,
+    each run of ASCII whitespace one space, none at the start, trailing
+    spaces rtrimmed."""
+    import random
+
+    def collapse(s):
+        out = []
+        for c in s:
+            if c == "\r":
+                continue
+            if c in " \t\n\x0b\x0c":
+                if out and out[-1] != " ":
+                    out.append(" ")
+            else:
+                out.append(c)
+        return "".join(out).rstrip(" ")
+
+    rnd = random.Random(12)
+    alphabet = " \t\n\x0b\x0c\r\xa0ab"
+    tree = HTML5DOM().parse("<div id=x></div>")
+    div = tree.at("#x")
+    for _ in range(20000):
+        s = "".join(rnd.choice(alphabet) for _ in range(rnd.randint(0, 10)))
+        div.text(s)
+        assert div.innerText() == collapse(s), repr(s)

@@ -157,6 +157,25 @@ def test_repair_scan_finds_catalog_without_trailer():
     assert extract_pdf_text(body_only)[1] == "res"
 
 
+def test_xref_table_with_19_byte_entries(monkeypatch):
+    """Entries ending in a one-byte EOL (``... n\\n``, 19 bytes) are read
+    by their matched length: every offset comes from the table, and the
+    repair scan never runs (stepping 20 bytes lost the next entry's
+    first digit and fell back to it)."""
+    pdf = build_pdf(one_page(b"BT 10 700 Td (short) Tj ET"))
+    short = pdf.replace(b" n \n", b" n\n").replace(b" f \n", b" f\n")
+    assert short != pdf and b" n \n" not in short
+
+    def no_repair(self):
+        raise AssertionError("repair scan ran")
+
+    monkeypatch.setattr(PdfParser, "_repair_scan", no_repair)
+    want = {n: pdf.index(b"\n%d 0 obj" % n) + 1 for n in range(1, 5)}
+    assert PdfParser(pdf).xref == want
+    assert PdfParser(short).xref == want
+    assert extract_pdf_text(short)[1] == "short"
+
+
 def test_missing_header_raises():
     with pytest.raises(PdfError):
         PdfParser(b"not a pdf at all")

@@ -5,6 +5,7 @@ Each case: input HTML → expected body.outerHTML after reserialization."""
 import pytest
 
 from perl_html5_dom_spark import HTML5DOM
+from perl_html5_dom_spark.dom.tokenizer import Tokenizer
 from perl_html5_dom_spark.dom.treebuilder import TreeBuilder
 
 
@@ -257,13 +258,15 @@ def _cpu_ratio(unit: str, n: int, head: str = "") -> float:
         "print(min(b for _, b in runs) / min(s for s, _ in runs))\n"))
 
 
-@pytest.mark.parametrize("unit", ["<div>", "<b><i><u>x"])
+@pytest.mark.parametrize("unit", ["<div>", "<b><i><u>x", "<a><div>"])
 def test_deep_nesting_parses_in_linear_time(unit):
     """n to 4n nested elements cost at most 5x the time (linear is 4x).
     Per-tag open-element counts answer "has a p element in button
-    scope" without walking the stack when no p is open, and the
-    reconstruction check looks at the current node first; a walk over
-    the whole stack on every token makes the parse quadratic."""
+    scope" without walking the stack when no p is open, and each open
+    element's recorded stack position answers "is it open" and "where"
+    for the reconstruction and the adoption agency (``<a><div>`` runs
+    the adoption agency on every ``<a>``); a search of the whole stack
+    on every token makes the parse quadratic."""
     assert _cpu_ratio(unit, 1000) <= 5
 
 
@@ -302,3 +305,79 @@ def test_empty_end_tags_do_not_recurse():
         "print(HTML5DOM().parse(src.encode()).body().text())\n"
         "print(extract_one(src.encode())['inner_text'])\n", timeout=60)
     assert out.split() == ["ab", "ab", "ab"]
+
+
+@pytest.mark.parametrize("src,tag,attr", [
+    ("<aÄb DÄTA=1>x</AÄB>y", "aÄb", "dÄta"),
+    ("<span İd=2>x</span>y", "span", "İd"),
+    ("<x\u212a \u212a=3>x</X\u212a>y", "x\u212a", "\u212a"),
+    ("<DIV Data-X=4>x</DIV>y", "div", "data-x"),
+])
+def test_names_lowercase_ascii_only(src, tag, attr):
+    """Tag and attribute names lowercase only ASCII upper alpha (WHATWG
+    §13.2.5, as MyHTML): ``Ä``, ``İ`` and the Kelvin sign stay as
+    written, and an end tag closes the element whose name it matches
+    after the same lowercasing."""
+    assert Tokenizer(src).next_token()[1] == tag
+    doc = TreeBuilder().parse(src)
+    el = doc.first_child[doc.body_node]
+    assert doc.tag[el] == tag
+    assert list(doc.attrs[el]) == [attr]
+    assert [doc.text[c] for c in doc.children(el)] == ["x"]
+    assert doc.text[doc.next_sib[el]] == "y"
+
+
+def test_doctype_and_end_tag_names_lowercase_ascii_only():
+    doc = TreeBuilder().parse("<!DOCTYPE HTMLÄ><p>x")
+    assert doc.text[doc.doctype_node] == "htmlÄ"
+    assert doc.quirks
+    # ``</xk>`` does not close ``<x\u212a>`` (Kelvin sign): the foreign
+    # element stays open, in the tokenizer and in the builder's foreign
+    # end-tag compare
+    doc = TreeBuilder().parse("<svg><x\u212a>a</xk>b</svg>")
+    svg = doc.first_child[doc.body_node]
+    xk = doc.first_child[svg]
+    assert doc.tag[xk] == "x\u212a"
+    assert [doc.text[c] for c in doc.children(xk)] == ["ab"]
+    # a script closes only at an ASCII ``</script``: ``\u017f`` (long s)
+    # is not ``s`` here
+    doc = TreeBuilder().parse("<script>a</\u017fcript>b</script>c")
+    head = doc.head_node
+    script = doc.last_child[head]
+    assert doc.text[doc.first_child[script]] == "a</\u017fcript>b"
+
+
+def test_input_type_hidden_compares_ascii_case_insensitively():
+    """``type=HIDDEN`` is a hidden input, kept inside the table; a
+    non-ASCII look-alike is fostered out like any other input."""
+    for value, hidden in (("HIDDEN", True), ("hİdden", False)):
+        doc = TreeBuilder().parse(
+            f"<table><input type={value}><tr><td>x</td></tr></table>")
+        table = doc.first_child[doc.body_node]
+        inside = doc.tag[table] == "table" and any(
+            doc.tag[c] == "input" for c in doc.children(table))
+        assert inside == hidden, value
+
+
+@pytest.mark.parametrize("tag", [
+    '<annotation-xml encoding="text/html">',
+    "<foreignObject>",
+    '<DIV Class="a" DATA-X="b" data-y="c"/>',
+    '<a href="/x?a=1&b=2&amp;c=3" title="&notit; &not &lt= &copy x">',
+    '<img alt="&#60;&#x3e;&#0;&#99999999;" src="a.png">',
+    '<p id="a" ID="b" class="" data-n:s_x.y="1">',
+    '<input value="a > b < c">',
+    "</foreignObject>",
+    "</DIV \n>",
+])
+def test_common_tag_shapes_match_the_character_loop(tag):
+    """The data state's one match per token reads the widened common
+    shapes (hyphenated and mixed-case ASCII names, quoted values holding
+    ``&``) exactly as the character loop ``_markup`` does."""
+    from perl_html5_dom_spark.dom.tokenizer import _TOKEN_RE
+
+    assert _TOKEN_RE.match(tag) is not None
+    want = Tokenizer(tag)._markup(0)
+    tok = Tokenizer(tag)
+    assert tok.next_token() == want
+    assert tok.pos == len(tag)

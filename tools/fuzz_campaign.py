@@ -19,10 +19,12 @@ only the other side runs out of Python stack (``RecursionError``) are
 counted apart: the explicit-stack lexer parses them.
 
 ``extract`` mode is the same kind of differential run for the HTML
-extraction kernel: each tag soup goes through both checkouts'
-``extract_one`` (every field, ``a[href]`` spans) and ``inner_text`` of
-the document node, and must give the same values, or the same
-exception type and message, under the same per-document bound.
+extraction kernel and the serializer: each tag soup goes through both
+checkouts' ``extract_one`` (every field, ``a[href]`` spans),
+``inner_text`` of the document node, ``serialize`` of the document node,
+the body's inner ``serialize`` and its ``text_content``, and must give
+the same values, or the same exception type and message, under the
+same per-document bound.
 
 Multiprocess over all cores with distinct seeds; failures are saved to
 /tmp/fuzz_failures/ for triage.  Usage:
@@ -92,7 +94,7 @@ _TAILS = ["", "</body></html>", "</body>", "</html>", "<!-- t -->", "</td>"]
 def gen_doc(rng: random.Random) -> str:
     parts = [rng.choice(_HEADS)]
     for _ in range(rng.randint(0, 16)):
-        kind = rng.randint(0, 5)
+        kind = rng.randint(0, 6)
         t = rng.choice(_TAGS)
         if kind == 0:
             parts.append(f"<{t}>")
@@ -107,8 +109,15 @@ def gen_doc(rng: random.Random) -> str:
             parts.append(
                 f'<{t} class="c d" id=\'{rng.randint(0, 9)}\' '
                 f'title="a{rng.choice(["&not;", "&noti;", "&ampx", ""])}b">')
-        else:
+        elif kind == 5:
             parts.append(f"<{t}/>")
+        else:
+            # the tokenizer's common shape: double-quoted values (with
+            # references) after mixed-case and hyphenated names
+            parts.append(
+                f'<{rng.choice((t, t.upper()))} Data-X="'
+                f'{rng.choice(["&amp;", "&lt=", "&notit;", "&not", "x"])}"'
+                f' title="{rng.choice(_TEXT_ALPHA)}"{rng.choice(["", "/"])}>')
     parts.append(rng.choice(_TAILS))
     return "".join(parts)
 
@@ -295,18 +304,25 @@ def _package(root: str, name: str):
 
 
 def _extract_outcome(pkg: str, src: str) -> list:
-    """``["ok", extract_one row, inner_text of the document node]`` of
-    package ``pkg`` on ``src``, or ``["err", type, message]``."""
+    """``["ok", extract_one row, inner_text of the document node,
+    serialize of the document node, the body's inner serialize and
+    text_content]`` of package ``pkg`` on ``src``, or ``["err", type,
+    message]``."""
     import importlib
 
     extract = importlib.import_module(pkg + ".operators.extract")
     fastparse = importlib.import_module(pkg + ".dom.fastparse")
     innertext = importlib.import_module(pkg + ".dom.innertext")
+    serializer = importlib.import_module(pkg + ".dom.serializer")
     matcher = importlib.import_module(pkg + ".selector.matcher")
     try:
         row = extract.extract_one(src, matcher.compile_selector("a[href]"))
         doc = fastparse.parse_document(src)
-        return ["ok", row, innertext.inner_text(doc, doc.root)]
+        body = doc.body_node if doc.body_node != -1 else doc.root
+        return ["ok", row, innertext.inner_text(doc, doc.root),
+                serializer.serialize(doc, doc.root),
+                serializer.serialize(doc, body, inner=True),
+                serializer.text_content(doc, body)]
     except Exception as e:
         return ["err", type(e).__name__, str(e)]
 
