@@ -249,14 +249,6 @@ def detect_unicode(data: bytes) -> str | None:
     return None
 
 
-def _is_valid_utf8(data: bytes) -> bool:
-    try:
-        data.decode("utf-8")
-        return True
-    except UnicodeDecodeError:
-        return False
-
-
 # frequency-scored single-byte cyrillic detection. The reference's
 # myencoding uses letter-frequency tables per candidate encoding; this is
 # an equivalent scoring over the most frequent Russian/Ukrainian letters.
@@ -290,17 +282,23 @@ detect_russian = detect_cyrillic
 detect_ukrainian = detect_cyrillic
 
 
+def _detect(data: bytes) -> tuple[str | None, str | None]:
+    """(:func:`detect`'s answer, the text of ``data`` when it is valid
+    UTF-8 and the heuristic decoded it to find out, else None)."""
+    enc = detect_unicode(data)
+    if enc is not None:
+        return enc, None
+    try:
+        text = data.decode("utf-8")
+    except UnicodeDecodeError:
+        return detect_cyrillic(data), None
+    return (None if data[:8192].isascii() else "UTF-8"), text
+
+
 def detect(data: bytes) -> str | None:
     """detectAuto-style content heuristic: unicode first, then cyrillic
     (reference DOM.xs:2953-2997)."""
-    enc = detect_unicode(data)
-    if enc is not None:
-        return enc
-    if _is_valid_utf8(data):
-        if not data[:8192].isascii():
-            return "UTF-8"
-        return None
-    return detect_cyrillic(data)
+    return _detect(data)[0]
 
 
 def detect_auto(data: bytes) -> tuple[str | None, bytes]:
@@ -330,6 +328,7 @@ def sniff_and_decode(
     if isinstance(data, str):
         return "UTF-8", data
     enc: str | None = None
+    text = None   # the heuristic's UTF-8 decode, when it made one
     if encoding:
         enc = _LABELS.get(encoding.strip().lower(), encoding.strip().upper())
         if enc not in ENCODINGS:
@@ -340,8 +339,10 @@ def sniff_and_decode(
         if enc is None and use_bom:
             enc, data = detect_bom_and_cut(data)
         if enc is None:
-            enc = detect(data)
+            enc, text = _detect(data)
     if enc is None:
         enc = default_encoding
     codec = ENCODINGS.get(enc, "utf-8")
+    if text is not None and codec == "utf-8":
+        return enc, text   # valid UTF-8: "replace" would change nothing
     return enc, data.decode(codec, "replace")

@@ -71,6 +71,11 @@ _NOT_HEX = re.compile(rb"[^0-9A-Fa-f]")
 # runs to the end of the data), possessive so it never backtracks
 _WSC = rb"[\x00\t\n\x0c\r ]*+(?:%[^\n]*+\n?[\x00\t\n\x0c\r ]*+)*+"
 _WS_RE = re.compile(_WSC)
+# the end of an inline image's data (§8.9.7): the first ``EI`` after a
+# whitespace byte and before whitespace, a delimiter or the end, so
+# image bytes that spell ``EI`` do not end it
+_EI_RE = re.compile(
+    rb"[\x00\t\n\x0c\r ]EI(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|\Z)")
 # the token scan (see "Lexer" above): every byte outside a
 # whitespace/comment run starts exactly one alternative, and each token
 # takes the run after it, so findall yields the tokens back to back
@@ -861,9 +866,9 @@ def _spans_from_content(content: bytes) -> list[tuple[float, float, str]]:
                     tm = tlm
                     if in_text and stack:
                         show(stack[-1])
-                else:  # BI: an inline image, skipped to EI
-                    j = data.find(b"EI", _at(toks, i - 1, base, end) + 2)
-                    p = len(data) if j < 0 else j + 2
+                else:  # BI: an inline image, skipped to its EI
+                    m = _EI_RE.search(data, _at(toks, i - 1, base, end) + 2)
+                    p = m.end() if m else len(data)
                     toks, i, lim, base, end = [], 0, 0, p, p
             except (IndexError, TypeError, ValueError):
                 pass

@@ -2,13 +2,14 @@
 
 Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard.
 The per-document signatures (MinHash, SimHash) run as zero-shuffle
-Arrow ``mapInPandas`` kernels — the package's only two outside the
-shared per-row runner (``util.map_documents``): each hashes the
-distinct texts of a batch first and then runs ONE numpy pass over all
-of them (``reduceat`` per text), which a per-document body would split
-into one small array pass per text.  Everything keyed across documents
-(grouping, bucket self-joins, verification) is a declarative plan that
-shuffles only on its join/group keys.  Every hash is derived from
+Arrow ``mapInPandas`` kernels (through ``util.map_in_pandas``) — the
+package's only two outside the shared per-row runner
+(``util.map_documents``): each hashes the distinct texts of a batch
+first and then runs ONE numpy pass over all of them (``reduceat`` per
+text), which a per-document body would split into one small array
+pass per text.  Everything keyed across documents (grouping, bucket
+self-joins, verification) is a declarative plan that shuffles only on
+its join/group keys.  Every hash is derived from
 ``md5`` so DuckDB oracles can reproduce results bit-for-bit:
 
     H(s)  = first 60 bits of md5(s) as bigint        (cross-engine)
@@ -33,6 +34,8 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..util import checkpoint_parquet, map_in_pandas
 
 #: modulus for minhash permutations (2^31 - 1, prime)
 P = 2_147_483_647
@@ -268,7 +271,7 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
     schema = ("doc_id bigint, "
               + ", ".join(f"{c} bigint" for c in mh_cols)
               + ", hset array<bigint>")
-    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
+    return map_in_pandas(docs.select("doc_id", "text"), run, schema)
 
 
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
@@ -323,7 +326,6 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
     # and both verify sides, so it is parquet-CHECKPOINTED: the A/B at
     # sf1 reads persist 3.17s / parquet 2.68s / none 3.49s (repeated
     # InMemoryRelation scans lose to vectorized parquet reads).
-    from ..util import checkpoint_parquet
     wide = checkpoint_parquet(_doc_minhash_sets(docs, num_perm, k),
                               "minhash_wide")
     cand = _bucket_pairs(_band_keys(wide, num_perm, bands))
@@ -569,8 +571,8 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids,
                                 "simhash": sim[np.array(uidxs)]})
 
-    return docs.select("doc_id", "text").mapInPandas(
-        run, schema="doc_id bigint, simhash bigint")
+    return map_in_pandas(docs.select("doc_id", "text"), run,
+                         "doc_id bigint, simhash bigint")
 
 
 def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,

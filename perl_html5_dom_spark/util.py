@@ -9,10 +9,12 @@ of ``queries.py`` and the corpus generators of ``sources/``.  It is
 the analog of the reference's single Perl↔C binding layer (DOM.xs):
 one ``mapInPandas`` pass whose batches cross the JVM→Python boundary
 via Arrow, so batch, null, memo and containment policy live here once
-and every operator keeps only its body.  Only the two MinHash/SimHash
-signature kernels of ``operators/dedup.py`` keep their own
-``mapInPandas``: their numpy step runs once per batch across all
-distinct texts (``reduceat``), which a per-row body cannot express.
+and every operator keeps only its body.  The two MinHash/SimHash
+signature kernels of ``operators/dedup.py`` keep their own batch
+function: their numpy step runs once per batch across all distinct
+texts (``reduceat``), which a per-row body cannot express.  They, and
+the runner, reach Spark through :func:`map_in_pandas`, the package's
+one call of ``DataFrame.mapInPandas``.
 
   * **memo** — web corpora carry 30-50% byte-identical pages (mirrors,
     re-crawls, session urls) and every body is a pure function of its
@@ -33,6 +35,21 @@ distinct texts (``reduceat``), which a per-row body cannot express.
     empty result instead of failing the task; the ``err`` column, where
     an operator has one, says ``truncated: N > M bytes`` and/or
     ``Type: message``.  Operators without an ``err`` column fail fast.
+  * **per-task setup** — PySpark calls ``importlib.invalidate_caches()``
+    at the start of every task (PySpark 4.1.2
+    ``pyspark/worker_util.py:144``, from ``worker.py:3355``), and on
+    CPython 3.10+ every cached ``zipimporter`` then re-reads its
+    archive's whole central directory (CPython 3.11
+    ``zipimport.py:329-336``).  A worker caches one importer per
+    package directory it imported from Spark's archives (the 3.5 MB
+    ``pyspark.zip``, the py4j zip, the Spark core jar): 16 in a live
+    worker, 140-220 ms of CPU per task.  So :func:`map_in_pandas`
+    drops Spark's own zip importers from ``sys.path_importer_cache``
+    before each task's first batch (:func:`_drop_spark_zip_finders`).
+    The first task of a new worker still pays; a reused worker does
+    not.  The two ``applyInPandasWithState`` operators
+    (``operators/events.py``, ``streaming/ingest.py``) run per group
+    and have no such hook.
 
 Several operators lower dialect-portable SQL (the same text a DuckDB
 oracle runs) onto Spark via temp views.  A fixed view name is fine for
@@ -48,13 +65,54 @@ import atexit
 import contextlib
 import itertools
 import os
+import sys
 import tempfile
 import uuid
+import zipimport
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
 _counter = itertools.count()
+
+
+def _drop_spark_zip_finders() -> None:
+    """Delete from ``sys.path_importer_cache`` every ``zipimporter`` of
+    Spark's own archives, so PySpark's per-task
+    ``importlib.invalidate_caches()`` re-reads none of them.  Those are
+    the archives in the directory ``pyspark`` was imported from
+    (``$SPARK_HOME/python/lib``: ``pyspark.zip`` and the py4j zip) and
+    the Spark core jar, which Spark also puts on the worker's path
+    (``PythonUtils.sparkPythonPath``; 5k entries, the costliest
+    re-read).  Does nothing where ``pyspark`` is not imported from a
+    zip (a driver, an unzipped install).
+
+    The cache is only a cache: the next import through a dropped path
+    builds a new importer from ``zipimport._zip_directory_cache``
+    without reading the archive, and Spark's archives do not change
+    while a worker lives.  User ``--py-files`` zips live elsewhere (the
+    SparkFiles directory) and keep their importers and their refresh."""
+    loader = getattr(sys.modules.get("pyspark"), "__loader__", None)
+    if not isinstance(loader, zipimport.zipimporter):
+        return
+    lib = os.path.dirname(loader.archive)
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and (
+                finder.archive.endswith(".jar")
+                or os.path.dirname(finder.archive) == lib):
+            del cache[path]
+
+
+def map_in_pandas(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
+    """``df.mapInPandas(fn, schema)`` whose tasks first drop Spark's own
+    cached zip importers (:func:`_drop_spark_zip_finders`; module
+    docstring, per-task setup) — the package's one ``mapInPandas``."""
+    def run(batches: Iterable) -> Iterator:
+        _drop_spark_zip_finders()
+        yield from fn(batches)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
@@ -138,8 +196,8 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
                 out[k] = v if empty_row is not None else v.repeat(counts)
             yield pd.DataFrame(out, columns=names)
 
-    return df.select(*dict.fromkeys(keys + payload)).mapInPandas(
-        run, schema=schema)
+    return map_in_pandas(df.select(*dict.fromkeys(keys + payload)), run,
+                         schema)
 
 
 @contextlib.contextmanager

@@ -38,6 +38,28 @@ GOLDENS = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 RECURSION_CASES = ("deep/array-3000", "deep/content-array-3000",
                    "deep/dict-3000", "deep/mixed-3000")
 
+#: inputs whose content stream holds the snippet ``BI … ID \x00\xffEI)( EI``:
+#: the per-token lexer ended the image at the first ``EI`` bytes, so
+#: ``)( EI`` left a literal string open (``PdfError``); an image now ends
+#: at an ``EI`` between whitespace and whitespace, a delimiter or the end
+#: (§8.9.7), and these parse.  Name → the outcome now expected.
+INLINE_IMAGE_CASES = {
+    name: ["ok", 1, digest] for digest, names in {
+        "4dc7c9ec434ed065": ("content/10", "mutant/content/10/0-truncate",
+                             "mutant/content/10/2-stale",
+                             "mutant/content/10/5-flip"),
+        "7a92f3d26362d655": ("content/118", "mutant/content/118/0-ws",
+                             "mutant/content/118/1-ws",
+                             "mutant/content/118/3-truncate",
+                             "mutant/content/118/4-flip",
+                             "mutant/content/118/5-ws"),
+        "8d739e16c9d3384d": ("content/44", "mutant/content/44/0-flip",
+                             "mutant/content/44/1-stale",
+                             "mutant/content/44/5-truncate",
+                             "mutant/content/69/2-construct"),
+        "95c9204b3562bf8b": ("mutant/content/74/0-construct",),
+    }.items() for name in names}
+
 _TEXTS = [
     "body text with (parens) and back\\slash {i}",
     "plain words only {i}",

@@ -178,11 +178,13 @@ def _loop_detect(data):
     found = _loop_detect_unicode(data)
     if found is not None:
         return found
-    if enc._is_valid_utf8(data):
-        if any(b >= 0x80 for b in data[:8192]):
-            return "UTF-8"
-        return None
-    return _loop_detect_cyrillic(data)
+    try:
+        data.decode("utf-8")
+    except UnicodeDecodeError:
+        return _loop_detect_cyrillic(data)
+    if any(b >= 0x80 for b in data[:8192]):
+        return "UTF-8"
+    return None
 
 
 def _heuristic_inputs():
@@ -225,5 +227,27 @@ def test_heuristics_match_byte_loops(monkeypatch):
         assert enc.detect_cyrillic(data) == _loop_detect_cyrillic(data)
         assert enc.detect(data) == _loop_detect(data)
     fast = [enc.sniff_and_decode(d) for d in inputs]
-    monkeypatch.setattr(enc, "detect", _loop_detect)
+    # the loop heuristic hands back no text: every input decoded anew
+    monkeypatch.setattr(enc, "_detect", lambda d: (_loop_detect(d), None))
     assert [enc.sniff_and_decode(d) for d in inputs] == fast
+
+
+def test_sniff_and_decode_keeps_the_heuristic_utf8_text():
+    # the heuristic's strict UTF-8 decode is returned only where the
+    # resolved codec is UTF-8; every other case decodes with its codec
+    late = b"a" * 9000 + "\u00e9\u0436".encode()   # non-ASCII past 8 KiB
+    early = "\u00e9\u0436 ".encode() * 100
+    ascii_ = b"<p>plain ascii</p>" * 10
+    cases = [
+        (late, "UTF-8", ("UTF-8", late.decode())),
+        (late, "WINDOWS-1252", ("WINDOWS-1252", late.decode("cp1252"))),
+        (early, "WINDOWS-1252", ("UTF-8", early.decode())),
+        (CP1251_SAMPLE, "UTF-8",
+         ("WINDOWS-1251", CP1251_SAMPLE.decode("cp1251"))),
+        (ascii_, "UTF-8", ("UTF-8", ascii_.decode())),
+        (ascii_, "WINDOWS-1252", ("WINDOWS-1252", ascii_.decode())),
+        (b"", "WINDOWS-1252", ("WINDOWS-1252", "")),
+    ]
+    for data, default, want in cases:
+        assert enc.sniff_and_decode(data, default_encoding=default) \
+            == want, (data[:20], default)

@@ -281,6 +281,22 @@ def test_inline_image_skipped():
     ) == "before\nafter"
 
 
+def test_inline_image_ends_at_a_delimited_ei():
+    # ``EI`` bytes inside the image data, not between whitespace and
+    # whitespace or a delimiter, do not end it (§8.9.7)
+    assert run_content(
+        b"BT 10 700 Td (before) Tj ET\n"
+        b"BI /W 8 /H 1 ID \x00EI\xffxEI(EIx\n EI\n"
+        b"BT 10 680 Td (after) Tj ET"
+    ) == "before\nafter"
+    # an end followed by a delimiter, and one at the end of the data
+    assert run_content(
+        b"BI /W 1 ID \x00 EI[]BT 10 700 Td (x) Tj ET") == "x"
+    assert run_content(b"BT 10 700 Td (x) Tj ET BI /W 1 ID xEI EI") == "x"
+    # no delimited ``EI``: the image runs to the end of the data
+    assert run_content(b"BT 10 700 Td (x) Tj ET BI ID (EIEI)") == "x"
+
+
 def test_line_grouping_tolerance():
     # y within 2 units -> same line, ordered by x
     assert run_content(
@@ -578,7 +594,8 @@ def test_reference_cycles_terminate(shape):
 
 
 def test_recorded_outcomes():
-    from pdf_cases import RECURSION_CASES, _sha, cases, goldens, outcome
+    from pdf_cases import (INLINE_IMAGE_CASES, RECURSION_CASES, _sha, cases,
+                           goldens, outcome)
 
     want = goldens()
     inputs = cases()
@@ -594,6 +611,11 @@ def test_recorded_outcomes():
             # parsed on the explicit container stack now
             if got[0] != "ok":
                 diff[name] = got
+        elif name in INLINE_IMAGE_CASES:
+            # the recorded error, and the outcome expected now
+            assert want[name][1:3] == ["err", "PdfError"], name
+            if got != INLINE_IMAGE_CASES[name]:
+                diff[name] = (INLINE_IMAGE_CASES[name], got)
         elif got != want[name][1:]:
             diff[name] = (want[name][1:], got)
     assert not diff, f"{len(diff)} differ: {list(diff.items())[:5]}"

@@ -7,9 +7,9 @@ and checks that every ``perl_html5_dom_spark`` name it imports, and
 every ``alias.attr`` it reads from an imported package module, still
 exists.
 
-The package itself is checked to keep one per-row kernel runner: only
-``util.map_documents`` and the two batch-wide dedup signature kernels
-call ``mapInPandas``.
+The package itself is checked to keep one ``mapInPandas`` entry: only
+``util.map_in_pandas`` calls it, so every task of every kernel gets the
+same per-task setup.
 """
 
 import ast
@@ -92,13 +92,9 @@ def test_dangling_reference_is_caught(tmp_path):
         "5: perl_html5_dom_spark.operators.dedup._no_such_kernel"]
 
 
-#: the only functions allowed to call ``mapInPandas``: the per-row
-#: runner, and the two dedup kernels whose numpy step spans a whole batch
-MAP_IN_PANDAS_CALLERS = {
-    "util.map_documents",
-    "operators.dedup._doc_minhash_sets",
-    "operators.dedup.simhash",
-}
+#: the only function allowed to call ``mapInPandas``: the entry that the
+#: per-row runner and the two batch-wide dedup kernels go through
+MAP_IN_PANDAS_CALLERS = {"util.map_in_pandas"}
 
 
 def _map_in_pandas_callers(pkg: Path) -> list[str]:
