@@ -7,8 +7,8 @@ No per-node objects are created during parse — the DOM facade in
 ``node.py`` wraps (doc, index) lazily, matching the reference's lazy SV
 materialization (/root/reference/DOM.xs:159-180).
 
-``finalize()`` computes pre-order indexes and subtree intervals used by the
-selector matcher and the Spark-side relational node table.
+``preorder()`` computes the pre-order indexes and subtree intervals of
+the Spark-side relational node table.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ class Document:
         "root", "html_node", "head_node", "body_node",
         "doctype_node", "quirks", "encoding", "fragment_context",
         "scripting", "fostered", "misnested",
-        "_order", "_order_pos", "_subtree_end", "_dirty",
     )
 
     def __init__(self) -> None:
@@ -69,11 +68,6 @@ class Document:
         self.encoding = "utf-8"
         self.fragment_context: str | None = None
 
-        self._order: list[int] | None = None       # preorder node ids
-        self._order_pos: list[int] | None = None   # node id -> preorder pos
-        self._subtree_end: list[int] | None = None # node id -> last preorder pos in subtree
-        self._dirty = True
-
     # ------------------------------------------------------------------
     # node creation
     # ------------------------------------------------------------------
@@ -94,7 +88,6 @@ class Document:
         self.raw_length.append(0)
         self.elem_begin.append(0)
         self.elem_length.append(0)
-        self._dirty = True
         return nid
 
     def new_element(self, tag: str, ns: int = NS_HTML,
@@ -143,7 +136,6 @@ class Document:
         else:
             self.first_child[parent] = child
         self.last_child[parent] = child
-        self._dirty = True
 
     def insert_before(self, ref: int, node: int) -> None:
         if self.parent[node] != NULL:
@@ -158,7 +150,6 @@ class Document:
             self.next_sib[prev] = node
         elif parent != NULL:
             self.first_child[parent] = node
-        self._dirty = True
 
     def insert_after(self, ref: int, node: int) -> None:
         nxt = self.next_sib[ref]
@@ -182,7 +173,6 @@ class Document:
         self.parent[node] = NULL
         self.prev_sib[node] = NULL
         self.next_sib[node] = NULL
-        self._dirty = True
 
     def prepend_child(self, parent: int, child: int) -> None:
         first = self.first_child[parent]
@@ -224,73 +214,39 @@ class Document:
                 return
             c = stack.pop()
 
-    def ancestors(self, node: int):
-        p = self.parent[node]
-        while p != NULL:
-            yield p
-            p = self.parent[p]
-
-    def is_descendant(self, node: int, ancestor: int) -> bool:
-        p = self.parent[node]
-        while p != NULL:
-            if p == ancestor:
-                return True
-            p = self.parent[p]
-        return False
-
-    # ------------------------------------------------------------------
-    # finalize: preorder order + subtree intervals (document order index)
-    # ------------------------------------------------------------------
-    def ensure_order(self) -> None:
-        if not self._dirty and self._order is not None:
-            return
-        n = len(self.tag)
+    def preorder(self) -> tuple[list[int], list[int], list[int]]:
+        """``(order, pos, end)`` of the tree under ``root``: the node ids
+        in pre-order, each node's index in it and the index of the last
+        node of its subtree (``pos`` is NULL and ``end`` 0 for a node
+        outside the tree).  One enter/exit walk over the child links,
+        the walk ``serializer.serialize`` makes; nothing is kept, so a
+        mutation needs no bookkeeping."""
+        first_child, next_sib, parent = (
+            self.first_child, self.next_sib, self.parent)
+        root = self.root
         order: list[int] = []
-        pos = [NULL] * n
-        end = [0] * n
-        # iterative DFS from root, tracking exit to fill subtree_end
-        stack = [(self.root, False)]
-        while stack:
-            node, exiting = stack.pop()
-            if exiting:
-                end[node] = len(order) - 1
-                continue
+        pos = [NULL] * len(first_child)
+        end = [0] * len(first_child)
+        node = root
+        while True:
+            # -- enter ``node``; one with children continues into them
             pos[node] = len(order)
             order.append(node)
-            stack.append((node, True))
-            # push children reversed so first child pops first
-            kids = []
-            c = self.first_child[node]
-            while c != NULL:
-                kids.append(c)
-                c = self.next_sib[c]
-            for k in reversed(kids):
-                stack.append((k, False))
-        self._order = order
-        self._order_pos = pos
-        self._subtree_end = end
-        self._dirty = False
-
-    @property
-    def order(self) -> list[int]:
-        self.ensure_order()
-        return self._order  # type: ignore[return-value]
-
-    @property
-    def order_pos(self) -> list[int]:
-        self.ensure_order()
-        return self._order_pos  # type: ignore[return-value]
-
-    @property
-    def subtree_end(self) -> list[int]:
-        self.ensure_order()
-        return self._subtree_end  # type: ignore[return-value]
-
-    def doc_sort(self, nodes: list[int]) -> list[int]:
-        """Sort node handles into document order (detached nodes last)."""
-        self.ensure_order()
-        op = self._order_pos
-        return sorted(nodes, key=lambda n: (op[n] == NULL, op[n]))
+            child = first_child[node]
+            if child != NULL:
+                node = child
+                continue
+            # -- leave ``node`` and every ancestor it ends, up to a sibling
+            last = len(order) - 1
+            while True:
+                end[node] = last
+                if node == root:
+                    return order, pos, end
+                sib = next_sib[node]
+                if sib != NULL:
+                    node = sib
+                    break
+                node = parent[node]
 
     def __len__(self) -> int:
         return len(self.tag)

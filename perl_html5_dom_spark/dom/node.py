@@ -34,25 +34,78 @@ from .document import NULL, Document
 def _wrap(tree: "Tree", nid: int):
     if nid == NULL or nid is None:
         return None
-    nt = tree.doc.node_type[nid]
-    cls = {
-        ELEMENT_NODE: Element,
-        TEXT_NODE: Text,
-        COMMENT_NODE: Comment,
-        DOCTYPE_NODE: DocType,
-        DOCUMENT_NODE: DocumentNode,
-        FRAGMENT_NODE: Fragment,
-    }.get(nt, Node)
-    if nt == ELEMENT_NODE and tree.doc.fragment_context is not None:
-        pass
-    return cls(tree, nid)
+    return _CLASSES.get(tree.doc.node_type[nid], Node)(tree, nid)
 
 
-class Tree:
+#: ``findAttr`` comparator → CSS attribute operator (DOM.pod:1900-1921)
+_ATTR_OPS = {"=": "equal", "~": "include", "|": "dash", "*": "substring",
+             "^": "prefix", "$": "suffix"}
+
+
+class _Queries:
+    """The query methods (DOM.xs:1176-1254), scoped at ``self.nid`` of
+    ``self.tree``: a node's own subtree, or the document node's for a
+    Tree.  Results are in document order; ``findId`` and ``at`` give the
+    first match or None.  ``findTag``/``findClass``/``findId``/``findAttr``,
+    the reference's fast paths past the selector engine (DOM.xs:286-359),
+    are one-simple-selector queries."""
+
+    __slots__ = ()
+
+    def at(self, selector, combinator: str = "descendant"):
+        return _wrap(self.tree, _m.at(self.doc, selector, self.nid, combinator))
+
+    querySelector = at
+
+    def find(self, selector, combinator: str = "descendant") -> "Collection":
+        tree = self.tree
+        return Collection([_wrap(tree, n) for n in
+                           _m.find(self.doc, selector, self.nid, combinator)])
+
+    querySelectorAll = find
+
+    def findTag(self, name: str) -> "Collection":
+        """Case-insensitive; ``*`` is every element (DOM.xs:298-301)."""
+        name = name.lower()
+        return self.find(_m.simple(("star",) if name == "*" else ("tag", name)))
+
+    getElementsByTagName = findTag
+
+    def findClass(self, cls: str) -> "Collection":
+        return self.find(_m.simple(("class", cls)))
+
+    getElementsByClassName = findClass
+
+    def findId(self, id_: str):
+        return self.at(_m.simple(("id", id_)))
+
+    getElementById = findId
+
+    def findAttr(self, key, value=None, icase=False, cmp="=") -> "Collection":
+        if value is None:
+            spec = ("attr", key.lower(), "exists", None, False)
+        else:
+            spec = ("attr", key.lower(), _ATTR_OPS.get(cmp, "equal"), value,
+                    bool(icase))
+        return self.find(_m.simple(spec))
+
+    getElementByAttribute = findAttr
+
+
+class Tree(_Queries):
     """HTML5::DOM::Tree analog (reference DOM.xs:47, utils.h:61-69)."""
 
     def __init__(self, doc: Document):
         self.doc = doc
+
+    # the query scope: the document node of this tree
+    @property
+    def tree(self) -> "Tree":
+        return self
+
+    @property
+    def nid(self) -> int:
+        return self.doc.root
 
     # --- structure accessors (DOM.xs:1336-1381)
     @property
@@ -70,43 +123,6 @@ class Tree:
 
     def body(self):
         return _wrap(self, self.doc.body_node)
-
-    # --- query (DOM.xs:1176-1254)
-    def at(self, selector, combinator: str = "descendant"):
-        return _wrap(self, _m.at(self.doc, selector, self.doc.root, combinator))
-
-    querySelector = at
-
-    def find(self, selector, combinator: str = "descendant") -> "Collection":
-        ids = _m.find(self.doc, selector, self.doc.root, combinator)
-        return Collection([_wrap(self, n) for n in ids])
-
-    querySelectorAll = find
-
-    def findTag(self, name: str) -> "Collection":
-        return Collection([_wrap(self, n)
-                           for n in _m.find_tag(self.doc, self.doc.root, name)])
-
-    getElementsByTagName = findTag
-
-    def findClass(self, cls: str) -> "Collection":
-        return Collection([_wrap(self, n)
-                           for n in _m.find_class(self.doc, self.doc.root, cls)])
-
-    getElementsByClassName = findClass
-
-    def findId(self, id_: str):
-        return _wrap(self, _m.find_id(self.doc, self.doc.root, id_))
-
-    getElementById = findId
-
-    def findAttr(self, key, value=None, icase=False, cmp="=") -> "Collection":
-        return Collection([
-            _wrap(self, n)
-            for n in _m.find_attr(self.doc, self.doc.root, key, value, icase, cmp)
-        ])
-
-    getElementByAttribute = findAttr
 
     # --- node factory (DOM.xs:1054-1114)
     def createElement(self, tag: str, ns: str | int = NS_HTML) -> "Element":
@@ -148,7 +164,7 @@ class Tree:
         return self.doc is other.doc
 
 
-class Node:
+class Node(_Queries):
     """HTML5::DOM::Node analog (tagged by node_type, DOM.xs:105-126)."""
 
     __slots__ = ("tree", "nid")
@@ -182,7 +198,6 @@ class Node:
     def tag(self, new: str | None = None):
         if new is not None:
             self.doc.tag[self.nid] = new.lower()
-            self.doc._dirty = True
             return self
         return self.doc.tag[self.nid]
 
@@ -427,43 +442,6 @@ class Node:
                     d.insert_before(self.nid, tn)
                 else:
                     d.append_child(self.nid, tn)
-
-    # --- query scoped at node
-    def at(self, selector, combinator: str = "descendant"):
-        return self._wrap(_m.at(self.doc, selector, self.nid, combinator))
-
-    querySelector = at
-
-    def find(self, selector, combinator: str = "descendant") -> "Collection":
-        ids = _m.find(self.doc, selector, self.nid, combinator)
-        return Collection([self._wrap(n) for n in ids])
-
-    querySelectorAll = find
-
-    def findTag(self, name: str) -> "Collection":
-        return Collection([self._wrap(n)
-                           for n in _m.find_tag(self.doc, self.nid, name)])
-
-    getElementsByTagName = findTag
-
-    def findClass(self, cls: str) -> "Collection":
-        return Collection([self._wrap(n)
-                           for n in _m.find_class(self.doc, self.nid, cls)])
-
-    getElementsByClassName = findClass
-
-    def findId(self, id_: str):
-        return self._wrap(_m.find_id(self.doc, self.nid, id_))
-
-    getElementById = findId
-
-    def findAttr(self, key, value=None, icase=False, cmp="=") -> "Collection":
-        return Collection([
-            self._wrap(n)
-            for n in _m.find_attr(self.doc, self.nid, key, value, icase, cmp)
-        ])
-
-    getElementByAttribute = findAttr
 
     def matches(self, selector) -> bool:
         return _m.matches(self.doc, self.nid, selector)
@@ -726,6 +704,17 @@ class DocumentNode(Node):
 
 class Fragment(Node):
     __slots__ = ()
+
+
+#: node type → facade class (DOM.xs:105-126); anything else is a Node
+_CLASSES = {
+    ELEMENT_NODE: Element,
+    TEXT_NODE: Text,
+    COMMENT_NODE: Comment,
+    DOCTYPE_NODE: DocType,
+    DOCUMENT_NODE: DocumentNode,
+    FRAGMENT_NODE: Fragment,
+}
 
 
 class Collection:

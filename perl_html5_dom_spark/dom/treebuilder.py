@@ -221,9 +221,6 @@ class TreeBuilder:
         stack = self.stack
         nss = self.doc.ns
         modes = _MODES
-        # nodes are appended to the arrays directly, not through the
-        # Document's methods: mark its document order stale once here
-        self.doc._dirty = True
         # a fragment parsed in a foreign context: its root stands for the
         # context element, so the dispatcher decides there too
         foreign_root = (self.fragment_context_tag is not None

@@ -34,13 +34,13 @@ NODES_SCHEMA = (
 
 _TYPES = dict(p.split(" ", 1) for p in NODES_SCHEMA.split(", "))
 
-#: columns copied straight from a Document array (column → attribute)
-_ARRAY_COLUMNS = {
-    "ord": "order_pos", "subtree_end": "subtree_end", "tag": "tag",
-    "ns": "ns", "node_type": "node_type", "text": "text", "attrs": "attrs",
-    "raw_begin": "raw_begin", "raw_length": "raw_length",
-    "elem_begin": "elem_begin", "elem_length": "elem_length",
-}
+#: columns copied straight from a per-node array: ``ord`` and
+#: ``subtree_end`` from ``Document.preorder``, the rest from the
+#: Document array of the same name
+_ARRAY_COLUMNS = (
+    "ord", "subtree_end", "tag", "ns", "node_type", "text", "attrs",
+    "raw_begin", "raw_length", "elem_begin", "elem_length",
+)
 
 
 def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
@@ -62,7 +62,7 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
         """Per-document column lists (everything except url); the
         runner's memo replays them for byte-identical documents."""
         doc = parse_document(html)
-        order = doc.order
+        order, pos, end = doc.preorder()
         if elements_only:
             nt = doc.node_type
             nids = [n for n in order if nt[n] == ELEMENT_NODE]
@@ -103,9 +103,10 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
         if "self_closed" in keep:
             sc = doc.self_closed
             d["self_closed"] = [bool(sc[n]) for n in nids]
-        for c, attr in _ARRAY_COLUMNS.items():
+        walk = {"ord": pos, "subtree_end": end}
+        for c in _ARRAY_COLUMNS:
             if c in keep:
-                arr = getattr(doc, attr)
+                arr = walk[c] if c in walk else getattr(doc, c)
                 d[c] = [arr[n] for n in nids]
         return len(nids), d
 

@@ -1,8 +1,12 @@
 """CSS selector queries as Spark operators.
 
-Two physical strategies, picked automatically (our analog of the
-reference's fast paths ``findTag/findClass/findId/findAttr`` that bypass
-the CSS engine, /root/reference/DOM.xs:286-359):
+Two physical strategies (our analog of the reference's fast paths
+``findTag/findClass/findId/findAttr`` that bypass the CSS engine,
+reference DOM.xs:286-359).  Nothing picks between them: the
+caller does.  ``css_find_nodes`` runs the lowered one over a node table
+and raises ``ValueError`` on a selector it cannot lower (``try_lower``
+says which can); ``css_find``/``css_at`` run the kernel on any
+selector:
 
 1. **Lowered** — a selector that is a single compound of simple
    predicates (tag / #id / .class / [attr op value]) compiles to plain
@@ -128,7 +132,7 @@ def css_find(df, selector: str, first: bool = False):
     def body(html):
         doc = parse_document(html)
         nids = matcher.find(doc, compiled, first=first)
-        pos, tag = doc.order_pos, doc.tag
+        pos, tag = doc.preorder()[1], doc.tag
         begin, length = doc.elem_begin, doc.elem_length
         return len(nids), {
             "node_id": nids, "ord": [pos[n] for n in nids],
@@ -182,7 +186,7 @@ def css_extract_multi(df, selector: str, whats: tuple = ("text",)):
     def body(html):
         doc = parse_document(html)
         nids = matcher.find(doc, compiled)
-        pos = doc.order_pos
+        pos = doc.preorder()[1]
         cols = {"node_id": nids, "ord": [pos[n] for n in nids]}
         for name, sink in sinks:
             cols[name] = [sink(doc, n) for n in nids]

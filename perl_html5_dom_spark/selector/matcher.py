@@ -94,6 +94,12 @@ def find(doc: Document, selector, scope: int | None = None,
     return out
 
 
+def simple(s) -> SelectorList:
+    """The selector of one simple selector ``s`` (a parser tuple, such
+    as ``("tag", "p")``), with no text to parse."""
+    return SelectorList([Entry([(None, [s])])])
+
+
 def at(doc: Document, selector, scope: int | None = None,
        combinator: str = "descendant") -> int:
     res = find(doc, selector, scope, combinator, first=True)
@@ -212,18 +218,15 @@ def _column_range(doc: Document, el: int) -> tuple[int, int] | None:
 
 
 def _column_cells(doc: Document, el: int) -> list[int]:
-    """Cells of el's column(s), document order (el is col/colgroup)."""
+    """Cells of el's column(s), document order (el is col/colgroup): the
+    grid holds a table's rows, and each row's cells, in document order."""
     rng = _column_range(doc, el)
     if rng is None:
         return []
     c0, span = rng
-    table = _ancestor_table(doc, el)
-    grid = _table_grid(doc, table)
-    doc.ensure_order()
-    cells = [cell for cell, (x, cs) in grid.items()
-             if x < c0 + span and c0 < x + cs]
-    cells.sort(key=lambda n: doc.order_pos[n])
-    return cells
+    grid = _table_grid(doc, _ancestor_table(doc, el))
+    return [cell for cell, (x, cs) in grid.items()
+            if x < c0 + span and c0 < x + cs]
 
 
 # ---------------------------------------------------------------------------
@@ -590,57 +593,3 @@ def _inherited_attr(doc: Document, node: int, name: str) -> str | None:
             return attrs[name]
         n = doc.parent[n]
     return None
-
-
-# ---------------------------------------------------------------------------
-# fast paths, bypassing the selector engine (reference DOM.xs:286-359)
-# ---------------------------------------------------------------------------
-def find_tag(doc: Document, scope: int, name: str) -> list[int]:
-    """getElementsByTagName — case-insensitive (DOM.xs:298-301)."""
-    name = name.lower()
-    star = name == "*"
-    return [
-        n for n in doc.iter_subtree(scope, include_self=False)
-        if doc.node_type[n] == ELEMENT_NODE
-        and (star or doc.tag[n].lower() == name)
-    ]
-
-
-def find_class(doc: Document, scope: int, cls: str) -> list[int]:
-    out = []
-    for n in doc.iter_subtree(scope, include_self=False):
-        if doc.node_type[n] != ELEMENT_NODE:
-            continue
-        attrs = doc.attrs[n]
-        if attrs:
-            c = attrs.get("class")
-            if c is not None and cls in c.split():
-                out.append(n)
-    return out
-
-
-def find_id(doc: Document, scope: int, id_: str) -> int:
-    for n in doc.iter_subtree(scope, include_self=False):
-        if doc.node_type[n] == ELEMENT_NODE:
-            attrs = doc.attrs[n]
-            if attrs and attrs.get("id") == id_:
-                return n
-    return NULL
-
-
-def find_attr(doc: Document, scope: int, key: str, value=None,
-              icase: bool = False, cmp: str = "=") -> list[int]:
-    """getElementByAttribute with comparator (DOM.xs:311-352):
-    '=', '~', '|', '*', '^', '$' (CSS-analog table DOM.pod:1900-1921)."""
-    op = {"=": "equal", "~": "include", "|": "dash", "*": "substring",
-          "^": "prefix", "$": "suffix"}.get(cmp, "equal")
-    key = key.lower()
-    if value is None:
-        spec = ("attr", key, "exists", None, False)
-    else:
-        spec = ("attr", key, op, value, bool(icase))
-    out = []
-    for n in doc.iter_subtree(scope, include_self=False):
-        if doc.node_type[n] == ELEMENT_NODE and _match_attr(doc.attrs[n], spec):
-            out.append(n)
-    return out

@@ -47,7 +47,9 @@ one call of ``DataFrame.mapInPandas``.
     drops Spark's own zip importers from ``sys.path_importer_cache``
     before each task's first batch (:func:`_drop_spark_zip_finders`).
     The first task of a new worker still pays; a reused worker does
-    not.  The two ``applyInPandasWithState`` operators
+    not.  The ``css_*`` SQL functions (``functions/register.py``) are
+    pandas UDFs, not ``mapInPandas``: they drop the importers at the
+    start of every batch.  The two ``applyInPandasWithState`` operators
     (``operators/events.py``, ``streaming/ingest.py``) run per group
     and have no such hook.
 
@@ -222,22 +224,14 @@ def sql_over(builder: Callable[..., str], *dfs: DataFrame,
              prefix: str = "__v") -> DataFrame:
     """Run ``builder(name1, name2, ...)`` SQL over the given DataFrames.
 
-    Each DataFrame is registered under a collision-free unique temp-view
-    name; the views are dropped before returning (analysis is eager in
-    ``spark.sql``), so concurrent jobs sharing one SparkSession never
-    observe each other's views.
+    Each DataFrame is registered through :func:`temp_view`, under a
+    collision-free unique name, and the views are dropped before
+    returning (analysis is eager in ``spark.sql``), so concurrent jobs
+    sharing one SparkSession never observe each other's views.
     """
-    spark = dfs[0].sparkSession
-    names = []
-    for df in dfs:
-        name = f"{prefix}_{next(_counter)}"
-        df.createOrReplaceTempView(name)
-        names.append(name)
-    try:
-        return spark.sql(builder(*names))
-    finally:
-        for n in names:
-            spark.catalog.dropTempView(n)
+    with contextlib.ExitStack() as views:
+        names = [views.enter_context(temp_view(df, prefix)) for df in dfs]
+        return dfs[0].sparkSession.sql(builder(*names))
 
 
 #: (FileSystem, Path) of every checkpoint_parquet dir this process made

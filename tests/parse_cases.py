@@ -37,7 +37,7 @@ SAMPLE_SIZE = 300
 
 def project(doc):
     """Order-stable projection of every node field that matters."""
-    order = doc.order
+    order = doc.preorder()[0]
     pos = {nid: i for i, nid in enumerate(order)}
 
     def ref(nid):

@@ -119,7 +119,7 @@ _FIRST_TAGS = ("template", "table", "svg", "pre")
 
 
 def _first(doc, test) -> int:
-    for nid in doc.order:
+    for nid in doc.preorder()[0]:
         if test(nid):
             return nid
     return -1

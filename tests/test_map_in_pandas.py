@@ -147,3 +147,67 @@ def test_live_worker_holds_no_spark_zip_importer(spark):
     assert extract_pages(pages, fields=["url", "main_text"]).count() == 20
     got = map_in_pandas(pages, probe, "zipped boolean, n long").collect()
     assert [r["n"] for r in got] == [0], got
+
+
+def test_sql_function_batch_drops_spark_zip_importers(spark):
+    """The ``css_*`` SQL functions are pandas UDFs, not ``mapInPandas``:
+    their batches drop Spark's importers themselves.  One projection
+    runs three UDFs per batch in one worker, in order: ``_seed`` puts
+    back an importer per Spark archive on the path, as a new worker
+    holds them, then ``css_text`` runs and ``_left`` counts what is
+    left."""
+    from pyspark.sql.functions import pandas_udf
+
+    from perl_html5_dom_spark.functions.register import register_all
+
+    def spark_importers():
+        # pickled by value (nested), as are the two UDFs below
+        import os
+        import sys
+        import zipimport
+
+        loader = sys.modules["pyspark"].__loader__
+        lib = os.path.dirname(loader.archive)
+        return [p for p in sys.path
+                if p.endswith(".jar") or os.path.dirname(p) == lib]
+
+    def seed(html):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        cache = sys.path_importer_cache
+        for path in spark_importers():
+            cache.setdefault(path, zipimport.zipimporter(path))
+        n = sum(isinstance(cache.get(p), zipimport.zipimporter)
+                for p in spark_importers())
+        return pd.Series([n] * len(html))
+
+    def left(text):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        cache = sys.path_importer_cache
+        n = sum(isinstance(f, zipimport.zipimporter)
+                and f.archive in spark_importers()
+                for f in list(cache.values()))
+        return pd.Series([n] * len(text))
+
+    register_all(spark)
+    spark.udf.register("_seed", pandas_udf(seed, "long"))
+    spark.udf.register("_left", pandas_udf(left, "long"))
+    spark.createDataFrame(
+        [(f"u{i}", f"<p>page {i}</p>") for i in range(20)],
+        "url string, html string").coalesce(1) \
+        .createOrReplaceTempView("zip_probe_pages")
+    try:
+        got = spark.sql(
+            "SELECT _seed(html) AS seeded, _left(css_text(html, 'p')) AS n "
+            "FROM zip_probe_pages").collect()
+    finally:
+        spark.catalog.dropTempView("zip_probe_pages")
+    assert len(got) == 20 and min(r["seeded"] for r in got) >= 1, got
+    assert {r["n"] for r in got} == {0}, got

@@ -242,10 +242,13 @@ def _child(code: str, timeout: float = 120) -> str:
 def _cpu_ratio(unit: str, n: int, head: str = "") -> float:
     """CPU time of parsing ``head + unit * 4n`` over that of ``head +
     unit * n`` (linear is 4, a little more once the bigger tree outgrows
-    the caches): the best of 15 interleaved runs per size, in CPU time,
-    as the machine may be shared."""
+    the caches): the median over 15 pairs, each a small and a big parse
+    run back to back, so both sides of a ratio see the same load on a
+    shared machine.  The best small run over the best big run, taken
+    from different moments, spread to 5.4 on a loaded 4-core box, as a
+    big parse four times as long rarely fits in a quiet spell whole."""
     return float(_child(
-        "import time\n"
+        "import statistics, time\n"
         "from perl_html5_dom_spark.dom.treebuilder import TreeBuilder\n"
         f"small = {head!r} + {unit!r} * {n}\n"
         f"big = {head!r} + {unit!r} * {4 * n}\n"
@@ -254,8 +257,7 @@ def _cpu_ratio(unit: str, n: int, head: str = "") -> float:
         "    TreeBuilder().parse(src)\n"
         "    return time.process_time() - t0\n"
         "cpu(small)\n"
-        "runs = [(cpu(small), cpu(big)) for _ in range(15)]\n"
-        "print(min(b for _, b in runs) / min(s for s, _ in runs))\n"))
+        "print(statistics.median(cpu(big) / cpu(small) for _ in range(15)))\n"))
 
 
 @pytest.mark.parametrize("unit", ["<div>", "<b><i><u>x", "<a><div>"])

@@ -26,12 +26,24 @@ the body's inner ``serialize`` and its ``text_content``, and must give
 the same values, or the same exception type and message, under the
 same per-document bound.
 
+``query`` mode is the differential run for the DOM query layer: each
+tag soup is parsed through both checkouts' public API, and a seeded
+plan of queries runs on both: ``find``/``at`` (random selectors and
+root combinators) and ``findTag``/``findClass``/``findId``/``findAttr``
+(every comparator, with and without ``icase``, and their aliases), each
+scoped at the Tree and at its elements, plus the document's
+``(order, pos, end)`` pre-order triple.  Facade mutations (append,
+before, remove, innerHTML, tag rename, create, clone, text) interleave
+with the queries.  Every step must give the same node ids and facade
+classes, or the same exception type and message, on both sides.
+
 Multiprocess over all cores with distinct seeds; failures are saved to
 /tmp/fuzz_failures/ for triage.  Usage:
 
   python tools/fuzz_campaign.py [seconds] [workers]
   python tools/fuzz_campaign.py pdf <other checkout> [seconds] [workers]
   python tools/fuzz_campaign.py extract <other checkout> [seconds] [workers]
+  python tools/fuzz_campaign.py query <other checkout> [seconds] [workers]
 """
 
 from __future__ import annotations
@@ -50,7 +62,7 @@ _TAGS = (
     "svg math mi mtext annotation-xml foreignObject desc circle g "
     "plaintext xmp listing noscript noframes frameset frame ruby rb rt rp "
     "h3 h4 h5 h6 summary details figure figcaption iframe "
-    "search dialog slot main image"
+    "search dialog slot main image col"
 ).split()
 
 _HEADS = [
@@ -86,6 +98,9 @@ _SNIPPETS = [
     "<svg><html a=b>", "<svg><body a=b>", "<math><svg>",
     "<!----->", "<!-- a -- b -->",
     "<select><select>", "<table><form>x</form></table>",
+    # column combinator ground: col/colgroup spans over a cell grid
+    "<table><colgroup><col span=2><col></colgroup><tr><td>1<td colspan=2>2"
+    "<tr><td rowspan=2>3<td>4</table>",
 ]
 
 _TAILS = ["", "</body></html>", "</body>", "</html>", "<!-- t -->", "</td>"]
@@ -349,9 +364,190 @@ def extract_worker(seed: int, seconds: float, out_dir: str,
     return n, fails
 
 
+#: query-mode vocabulary besides the document's own: names, classes,
+#: ids, attribute keys and values in other cases, and some that match
+#: nothing
+_Q_TAGS = ("body", "BODY", "div", "DIV", "Td", "col", "colgroup",
+           "foreignObject", "foreignobject")
+_Q_NAMES = _Q_TAGS + ("*", "", "x")
+_Q_CLASSES = ("c", "C", "c d", "", "x")
+_Q_IDS = ("3", "", "x")
+_Q_KEYS = ("class", "id", "title", "Data-X", "ID", "href")
+_Q_VALUES = (None, "c", "C", "c d", "a", "b", "X", "&", "-", "")
+_Q_CMPS = ("=", "~", "|", "*", "^", "$", "!")
+_Q_SIMPLES = ("*", ".c", ".d", "#3", "[title]", "[data-x^=x]",
+              "[title$=b i]", "[class~=c]", ":first-child", ":last-of-type",
+              ":nth-child(2n+1)", ":not(.c)", ":has(> b)", ":empty",
+              ":contains(a)", ":root", ":scope")
+_Q_COMBINATORS = (" ", " > ", " + ", " ~ ", " || ", ", ")
+_Q_ROOTS = (">>", ">>", ">>", ">", "+", "~", "^", "||", "nonsense")
+_Q_SNIPPETS = ("<b>x</b>", "<td>c</td><col>", "<p class=c id=3>p</p>",
+               "a<br>b", "", "<table><col span=2><tr><td>1<td>2</table>")
+
+
+def gen_query_plan(rng: random.Random, src: str) -> list:
+    """Steps for ``_query_outcome``: queries (scope ``None`` is the Tree,
+    an int ``i`` the ``i``-th element, modulo their count),
+    mutations (an int ``i`` is node id ``i`` modulo the document's size)
+    and ``("order",)``.  Most names, classes, ids and attributes come
+    from ``src``'s own elements, so most queries match something."""
+    from perl_html5_dom_spark.dom.treebuilder import TreeBuilder
+
+    doc = TreeBuilder().parse(src)
+    els = [n for n in range(len(doc)) if doc.node_type[n] == 1]
+    names = [doc.tag[n] for n in els]
+    attrs = [kv for n in els for kv in (doc.attrs[n] or {}).items()]
+    classes = [c for k, v in attrs if k == "class" for c in v.split()]
+    ids = [v for k, v in attrs if k == "id"]
+
+    def pick(own, other):
+        return rng.choice(own if own and rng.random() < 0.7 else other)
+
+    def selector():
+        parts = []
+        for i in range(rng.choice((1, 1, 1, 2, 3))):
+            if i:
+                parts.append(rng.choice(_Q_COMBINATORS))
+            parts.append(pick(names, _Q_TAGS + ("",)) + "".join(
+                rng.choice(_Q_SIMPLES) for _ in range(rng.choice((0, 0, 1)))))
+        return "".join(parts) or "*"
+
+    steps = [("order",)]
+    for _ in range(rng.randint(1, 4)):
+        for _ in range(rng.randint(4, 12)):
+            scope = None if rng.random() < 0.4 else rng.randrange(64)
+            kind = rng.randrange(6)
+            if kind == 0:
+                q = (rng.choice(("find", "querySelectorAll")), selector(),
+                     rng.choice(_Q_ROOTS))
+            elif kind == 1:
+                q = (rng.choice(("at", "querySelector")), selector(),
+                     rng.choice(_Q_ROOTS))
+            elif kind == 2:
+                name = pick(names, _Q_NAMES)
+                q = (rng.choice(("findTag", "getElementsByTagName")),
+                     name.upper() if rng.random() < 0.2 else name)
+            elif kind == 3:
+                q = (rng.choice(("findClass", "getElementsByClassName")),
+                     pick(classes, _Q_CLASSES))
+            elif kind == 4:
+                q = (rng.choice(("findId", "getElementById")),
+                     pick(ids, _Q_IDS))
+            else:
+                key, value = pick(attrs, [(k, None) for k in _Q_KEYS])
+                if value is None or rng.random() < 0.3:
+                    value = rng.choice(_Q_VALUES)
+                elif rng.random() < 0.5:
+                    # a piece of the value, for the partial comparators
+                    a = rng.randrange(len(value) + 1)
+                    value = value[a:rng.randrange(a, len(value) + 1)]
+                q = (rng.choice(("findAttr", "getElementByAttribute")),
+                     key.upper() if rng.random() < 0.2 else key, value,
+                     rng.random() < 0.5, rng.choice(_Q_CMPS))
+            steps.append(("query", scope) + q)
+        steps.append(("order",))
+        op = rng.choice(("append", "before", "remove", "inner", "tag",
+                         "create", "clone", "text"))
+        steps.append(("mutate", op, rng.randrange(64), rng.randrange(64),
+                      pick(names, _Q_TAGS), rng.choice(_Q_SNIPPETS)))
+        steps.append(("order",))
+    return steps
+
+
+def _q_value(v):
+    """A query result as plain values: facade class and node id."""
+    if v is None:
+        return None
+    if hasattr(v, "items"):
+        return [(type(n).__name__, n.nid) for n in v.items]
+    return (type(v).__name__, v.nid)
+
+
+def _query_outcome(pkg: str, src: str, plan: list) -> list:
+    """One entry per step of ``plan`` on ``src`` parsed by package
+    ``pkg``'s ``HTML5DOM``: a query's result, the pre-order triple, or
+    ``["err", type, message]`` for a step that raised."""
+    import importlib
+
+    api = importlib.import_module(pkg + ".api")
+    tree = api.HTML5DOM().parse(src)
+    doc = tree.doc
+
+    def node(i):
+        return api._wrap(tree, i % len(doc))
+
+    def scope(i):
+        els = [n for n in range(len(doc)) if doc.node_type[n] == 1]
+        return api._wrap(tree, els[i % len(els)] if els else doc.root)
+
+    def step(s):
+        if s[0] == "order":
+            if hasattr(doc, "preorder"):
+                return doc.preorder()
+            return doc.order, doc.order_pos, doc.subtree_end
+        if s[0] == "query":
+            target = tree if s[1] is None else scope(s[1])
+            return _q_value(getattr(target, s[2])(*s[3:]))
+        _, op, i, j, name, snippet = s
+        a, b = node(i), node(j)
+        if op == "append":
+            a.append(b)
+        elif op == "before":
+            a.before(b)
+        elif op == "remove":
+            a.remove()
+        elif op == "inner":
+            a.innerHTML(snippet)
+        elif op == "tag":
+            a.tag(name)
+        elif op == "create":
+            a.append(tree.createElement(name))
+        elif op == "clone":
+            b.append(a.clone(deep=True))
+        else:
+            a.text(snippet)
+        return "ok"
+
+    out = []
+    for s in plan:
+        try:
+            out.append(step(s))
+        except Exception as e:
+            out.append(["err", type(e).__name__, str(e)])
+    return out
+
+
+def query_worker(seed: int, seconds: float, out_dir: str,
+                 other: str) -> tuple[int, int]:
+    """(documents, findings) of the DOM query layer against the one of
+    checkout ``other``, for one seed."""
+    _setup_paths()
+    theirs = _package(other, "other_perl_html5_dom_spark")
+    rng = random.Random(seed)
+    t_end = time.time() + seconds
+    n = fails = 0
+    while time.time() < t_end:
+        src = gen_doc(rng)
+        plan = gen_query_plan(rng, src)
+        ours = _bounded(
+            lambda: _query_outcome("perl_html5_dom_spark", src, plan))
+        other_out = _bounded(lambda: _query_outcome(theirs, src, plan))
+        if ours != other_out:
+            fails += 1
+            label = "hang" if "hang" in (ours[0], other_out[0]) else "diff"
+            with open(f"{out_dir}/query-{label}-{seed}-{n}.html", "w") as f:
+                f.write(f"<!-- plan: {plan!r} -->\n{src}")
+        n += 1
+    return n, fails
+
+
+_MODES = {"pdf": pdf_worker, "extract": extract_worker,
+          "query": query_worker}
+
+
 def main() -> None:
     args = sys.argv[1:]
-    mode = args[0] if args and args[0] in ("pdf", "extract") else None
+    mode = args[0] if args and args[0] in _MODES else None
     if mode:
         other, args = os.path.abspath(args[1]), args[2:]
     seconds = float(args[0]) if args else 300
@@ -363,8 +559,7 @@ def main() -> None:
     base = int(time.time())
     with mp.Pool(workers) as pool:
         if mode:
-            fn = pdf_worker if mode == "pdf" else extract_worker
-            res = pool.starmap(fn, [(base + i, seconds, out_dir, other)
+            res = pool.starmap(_MODES[mode], [(base + i, seconds, out_dir, other)
                                     for i in range(workers)])
         else:
             res = pool.starmap(
