@@ -138,6 +138,11 @@ class Document:
         self.last_child[parent] = child
 
     def insert_before(self, ref: int, node: int) -> None:
+        if node == ref:
+            # inserting a node before itself leaves the tree as it is
+            # (DOM "pre-insert" with child == node); unlinking and then
+            # linking it before itself would make it its own sibling
+            return
         if self.parent[node] != NULL:
             self.remove(node)
         parent = self.parent[ref]

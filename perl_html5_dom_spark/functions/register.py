@@ -28,7 +28,7 @@ from ..dom import innertext, serializer
 from ..dom.fastparse import parse_document
 from ..operators.extract import main_text
 from ..selector import matcher
-from ..util import _drop_spark_zip_finders
+from ..util import _task_setup
 
 
 @lru_cache(maxsize=256)
@@ -39,10 +39,12 @@ def _compiled(selector: str):
 def _per_doc(fn, html: pd.Series, *args: pd.Series,
              dtype=object) -> pd.Series:
     """``fn(doc, *row_args)`` per row over the parsed ``html``; a NULL
-    ``html`` gives SQL NULL.  Like ``util.map_in_pandas`` tasks, each
-    batch first drops Spark's own cached zip importers, so the next
-    task's ``importlib.invalidate_caches()`` re-reads none of them."""
-    _drop_spark_zip_finders()
+    ``html`` gives SQL NULL.  Like ``util.map_in_arrow`` tasks, each
+    batch first runs ``util._task_setup``: it drops Spark's own cached
+    zip importers, so the next task's ``importlib.invalidate_caches()``
+    re-reads none of them, and freezes the worker's heap, so the full
+    collection after the task walks only the objects made since."""
+    _task_setup()
     return pd.Series(
         [None if h is None else fn(parse_document(h), *a)
          for h, *a in zip(html, *args)], dtype=dtype)

@@ -2,8 +2,9 @@
 
 Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard.
 The per-document signatures (MinHash, SimHash) run as zero-shuffle
-Arrow ``mapInPandas`` kernels (through ``util.map_in_pandas``) — the
-package's only two outside the shared per-row runner
+Arrow ``mapInArrow`` kernels (through ``util.map_in_arrow``: they read
+Arrow columns and yield record batches) — the package's only two
+outside the shared per-row runner
 (``util.map_documents``): each hashes the distinct texts of a batch
 first and then runs ONE numpy pass over all of them (``reduceat`` per
 text), which a per-document body would split into one small array
@@ -35,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..util import checkpoint_parquet, map_in_pandas
+from ..util import _cast, checkpoint_parquet, map_in_arrow
 
 #: modulus for minhash permutations (2^31 - 1, prime)
 P = 2_147_483_647
@@ -205,15 +206,15 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
     params = [perm_params(j) for j in range(num_perm)]
     mh_cols = [f"mh{j}" for j in range(num_perm)]
 
-    def run(batches):
+    def run(batches, out):
         from hashlib import md5
 
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         a_vec = np.array([p[0] for p in params], dtype=np.uint64)
         b_vec = np.array([p[1] for p in params], dtype=np.uint64)
-        for pdf in batches:
+        for batch in batches:
             # batch-local distinct-text memo (the round-6 kernel
             # recipe: exact dups share shingle sets, so signature and
             # hset are computed once per DISTINCT text; the memo dies
@@ -225,10 +226,10 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
             u_hs: list = []          # per distinct text: hs list
             offs: list = []
             all_h: list = []
-            rows: list = []          # (doc_id, uidx or None)
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
+            rows: list = []          # per row: uidx, None for null text
+            for text in batch.column("text").to_pylist():
                 if text is None:
-                    rows.append((did, None))
+                    rows.append(None)
                     continue
                 uidx = memo.get(text)
                 if uidx is None:
@@ -245,33 +246,28 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
                     offs.append(len(all_h))
                     all_h.extend(hs)
                     u_hs.append(hs)
-                rows.append((did, uidx))
+                rows.append(uidx)
+            mins = np.zeros((num_perm, 0), dtype=np.int64)
             if u_hs:
                 h_arr = np.array(all_h, dtype=np.uint64) % np.uint64(P)
                 vals = (h_arr[:, None] * a_vec[None, :]
                         + b_vec[None, :]) % np.uint64(P)
                 mins = np.minimum.reduceat(
                     vals, np.array(offs, dtype=np.int64),
-                    axis=0).astype(np.int64)
-            out: dict[str, list] = {c: [] for c in
-                                    ["doc_id"] + mh_cols + ["hset"]}
-            for did, uidx in rows:
-                out["doc_id"].append(did)
-                if uidx is None:
-                    for c in mh_cols:
-                        out[c].append(None)
-                    out["hset"].append([])
-                    continue
-                m = mins[uidx]
-                for ji, c in enumerate(mh_cols):
-                    out[c].append(int(m[ji]))
-                out["hset"].append(u_hs[uidx])
-            yield pd.DataFrame(out)
+                    axis=0).astype(np.int64).T.copy()
+            # a null text takes a null index: null mins, and the extra
+            # empty hash set after the distinct ones
+            take = pa.array(rows, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [_cast(batch.column("doc_id"), pa.int64())]
+                + [pa.array(m).take(take) for m in mins]
+                + [pa.array(u_hs + [[]], out.field("hset").type)
+                   .take(take.fill_null(len(u_hs)))], schema=out)
 
     schema = ("doc_id bigint, "
               + ", ".join(f"{c} bigint" for c in mh_cols)
               + ", hset array<bigint>")
-    return map_in_pandas(docs.select("doc_id", "text"), run, schema)
+    return map_in_arrow(docs.select("doc_id", "text"), run, schema)
 
 
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
@@ -514,24 +510,24 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     ``test_simhash_matches_sql_form``."""
     bit_count = bits
 
-    def run(batches):
+    def run(batches, out):
         from hashlib import md5
 
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         shifts = np.arange(bit_count, dtype=np.uint64)
         mask = (1 << bit_count) - 1
-        for pdf in batches:
+        for batch in batches:
+            # SQL twin: explode(split(null)) emits no token rows, so a
+            # doc with null text is absent from the aggregate
+            batch = batch.filter(pc.is_valid(batch.column("text")))
             hmemo: dict = {}
             tmemo: dict = {}      # text -> distinct index (round-6
-            ids, uidxs = [], []   # batch-local exact-dup memo: equal
+            uidxs = []            # batch-local exact-dup memo: equal
             hs, ws, offs = [], [], []  # texts share the fingerprint)
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    # SQL twin: explode(split(null)) emits no token
-                    # rows, so the doc is absent from the aggregate
-                    continue
+            for text in batch.column("text").to_pylist():
                 u = tmemo.get(text)
                 if u is None:
                     cnt: dict = {}
@@ -548,31 +544,30 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
                         ws.append(w)
                     u = len(tmemo)
                     tmemo[text] = u
-                ids.append(did)
                 uidxs.append(u)
-            if not ids:
-                yield pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                    "simhash": pd.Series(dtype="int64")})
-                continue
             # rows × bits sign contributions, summed per DISTINCT text
             # in one reduceat; rows are grouped per text by
             # construction and every text has >= 1 row (split(' ') of
             # non-null text is never empty), so every slice is
             # non-empty; docs then index their text's fingerprint
-            h_arr = np.array(hs, dtype=np.uint64)
-            w_arr = np.array(ws, dtype=np.int64)
-            bits_m = ((h_arr[:, None] >> shifts) & np.uint64(1)
-                      ).astype(np.int64)
-            contrib = (2 * bits_m - 1) * w_arr[:, None]
-            sums = np.add.reduceat(
-                contrib, np.array(offs, dtype=np.int64), axis=0)
-            sim = ((sums > 0).astype(np.uint64)
-                   << shifts[None, :]).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({"doc_id": ids,
-                                "simhash": sim[np.array(uidxs)]})
+            sim = np.zeros(0, dtype=np.int64)
+            if offs:
+                h_arr = np.array(hs, dtype=np.uint64)
+                w_arr = np.array(ws, dtype=np.int64)
+                bits_m = ((h_arr[:, None] >> shifts) & np.uint64(1)
+                          ).astype(np.int64)
+                contrib = (2 * bits_m - 1) * w_arr[:, None]
+                sums = np.add.reduceat(
+                    contrib, np.array(offs, dtype=np.int64), axis=0)
+                sim = ((sums > 0).astype(np.uint64)
+                       << shifts[None, :]).sum(axis=1).astype(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [_cast(batch.column("doc_id"), pa.int64()),
+                 pa.array(sim[np.array(uidxs, dtype=np.int64)])],
+                schema=out)
 
-    return map_in_pandas(docs.select("doc_id", "text"), run,
-                         "doc_id bigint, simhash bigint")
+    return map_in_arrow(docs.select("doc_id", "text"), run,
+                        "doc_id bigint, simhash bigint")
 
 
 def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,

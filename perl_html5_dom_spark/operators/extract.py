@@ -2,7 +2,7 @@
 
 This is the Spark restatement of the reference's three top entry points
 (/root/reference/DOM.xs:934-971 parse, DOM.xs:218-284 find/at,
-utils.c:439-576 innerText): one ``mapInPandas`` pass over batches of
+utils.c:439-576 innerText): one ``mapInArrow`` pass over batches of
 ``(url, html binary)`` rows that parses each document with the pure-Python
 HTML5 engine (``dom/``), evaluates compiled CSS selectors broadcast from
 the driver (``selector/``), strips boilerplate with DOM heuristics and
@@ -15,8 +15,10 @@ Design for 100 TB:
   * documents never span partitions — all tree work is partition-local,
     the only shuffle in the whole pipeline is the optional salted
     repartition (plans/pipeline.py);
-  * batches cross the JVM→Python boundary via Arrow (mapInPandas), the
-    analog of the reference's Perl↔XS boundary; zero per-row Python UDFs;
+  * batches cross the JVM→Python boundary as Arrow record batches
+    (mapInArrow, no pandas step), the analog of the reference's Perl↔XS
+    boundary; zero per-row Python UDFs, and a duplicate row costs one
+    memo probe (its result is copied with Arrow ``take``);
   * selector compilation happens once on the driver and ships to
     executors inside the closure — the analog of the reference's
     precompiled-selector reuse (DOM.pod:2544-2551).

@@ -53,8 +53,8 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
 
     Construction is COLUMNAR: the body builds one list per requested
     column (the Document already stores struct-of-arrays) and the runner
-    extends the batch's columns with them, so unrequested columns cost
-    nothing and pandas never pivots a row list."""
+    builds one Arrow array per column from them, so unrequested columns
+    cost nothing and no row list is ever pivoted."""
     keep = {c: t for c, t in _TYPES.items()
             if c != "url" and (columns is None or c in columns)}
 

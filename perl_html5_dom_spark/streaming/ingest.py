@@ -4,8 +4,9 @@ The reference's streaming surface is chunked parse of one document
 (/root/reference/DOM.xs:814-931) — per SURVEY.md §2.9 the Spark analog
 is WARC-batch ingestion: ``readStream`` over arriving page files →
 the same extraction kernel → ``writeStream`` with checkpointing.  The
-kernel is identical to the batch path (mapInPandas works unchanged on
-streaming DataFrames); exactly-once lands on the sink's commit log.
+kernel is identical to the batch path (``mapInArrow``, the package's
+one Arrow entry, works unchanged on streaming DataFrames); exactly-once
+lands on the sink's commit log.
 """
 
 from __future__ import annotations
@@ -124,7 +125,7 @@ def near_dup_stream(docs: DataFrame, num_perm: int = 16,
     from ..operators.dedup import _band_keys, _doc_minhash_sets
 
     # the batch operators' signature kernel and band keys: stateless
-    # per-document map work (mapInPandas runs unchanged on a stream), so
+    # per-document map work (mapInArrow runs unchanged on a stream), so
     # the only stateful operator in the plan is the bucket store below
     buckets = _band_keys(_doc_minhash_sets(docs, num_perm, k),
                          num_perm, bands)
@@ -167,7 +168,7 @@ def start_warc_extraction(spark: SparkSession, warc_dir: str, output_dir: str,
     """Wire-format streaming pipeline: ``*.warc[.gz]`` files landing in
     ``warc_dir`` → WARC record kernel → HTML extraction kernel →
     parquet sink.  Both kernels are the exact batch code paths
-    (mapInPandas is stream-transparent); restart-safety comes from the
+    (mapInArrow is stream-transparent); restart-safety comes from the
     file source offsets + sink commit log under ``checkpoint_dir``."""
     from ..sources.warc import read_warc_stream
 

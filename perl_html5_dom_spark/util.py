@@ -7,24 +7,35 @@ body of every Arrow kernel in the package — the HTML and PDF operators
 ``ngram_repetition``), the WARC/WET/CDX decoders, the catalog kernels
 of ``queries.py`` and the corpus generators of ``sources/``.  It is
 the analog of the reference's single Perl↔C binding layer (DOM.xs):
-one ``mapInPandas`` pass whose batches cross the JVM→Python boundary
-via Arrow, so batch, null, memo and containment policy live here once
-and every operator keeps only its body.  The two MinHash/SimHash
-signature kernels of ``operators/dedup.py`` keep their own batch
-function: their numpy step runs once per batch across all distinct
-texts (``reduceat``), which a per-row body cannot express.  They, and
-the runner, reach Spark through :func:`map_in_pandas`, the package's
-one call of ``DataFrame.mapInPandas``.
+one ``mapInArrow`` pass whose batches cross the JVM→Python boundary
+as Arrow record batches, so batch, null, memo and containment policy
+live here once and every operator keeps only its body.  The two
+MinHash/SimHash signature kernels of ``operators/dedup.py`` keep their
+own batch function: their numpy step runs once per batch across all
+distinct texts (``reduceat``), which a per-row body cannot express.
+They, and the runner, reach Spark through :func:`map_in_arrow`, the
+package's one call of ``DataFrame.mapInArrow``.
 
-  * **memo** — web corpora carry 30-50% byte-identical pages (mirrors,
-    re-crawls, session urls) and every body is a pure function of its
-    payload, so each DISTINCT payload runs once per Arrow batch and
-    replicas reuse its result.  The memo dies with the batch (bounded
-    memory: at most one batch of results); on an all-distinct input it
-    costs one dict probe per row;
-  * **keys** — the ``keys`` columns are copied from the input onto
-    every output row, never through the memo, so two rows sharing a
-    payload keep their own key values;
+  * **per distinct document, not per row** — web corpora carry 30-50%
+    byte-identical pages (mirrors, re-crawls, session urls) and every
+    body is a pure function of its payload, so each DISTINCT payload
+    runs once per Arrow batch.  The batch's payload columns become
+    Python values once (``to_pylist``) and one dict probe per row maps
+    each row to its distinct payload; each output column is built once,
+    as one Arrow array over the distinct results, and copied onto the
+    rows with Arrow ``take``.  So a memo hit costs one probe and no
+    Python per output value, and no column passes through pandas.  The
+    memo dies with the batch (bounded memory: at most one batch of
+    results); on an all-distinct input the ``take`` is skipped;
+  * **keys** — the ``keys`` columns are copied from the input batch onto
+    every output row as Arrow arrays (per match: taken once per
+    match), never through the memo, so two rows sharing a payload keep
+    their own key values;
+  * **exact types** — ``mapInArrow`` does not cast what a task returns,
+    so every output column's Arrow type is computed on the driver from
+    its declared Spark type (``to_arrow_schema``) and each column is
+    built as, or cast to, that type (a key column whose type already
+    matches is passed on as it is);
   * **null payloads** — a row with a null payload value emits the
     operator's ``empty_row`` (``err`` null; all-``None`` mirrors SQL
     NULL, zeros mirror a count over nothing); a per-match operator emits
@@ -35,23 +46,41 @@ one call of ``DataFrame.mapInPandas``.
     empty result instead of failing the task; the ``err`` column, where
     an operator has one, says ``truncated: N > M bytes`` and/or
     ``Type: message``.  Operators without an ``err`` column fail fast.
-  * **per-task setup** — PySpark calls ``importlib.invalidate_caches()``
-    at the start of every task (PySpark 4.1.2
-    ``pyspark/worker_util.py:144``, from ``worker.py:3355``), and on
-    CPython 3.10+ every cached ``zipimporter`` then re-reads its
-    archive's whole central directory (CPython 3.11
-    ``zipimport.py:329-336``).  A worker caches one importer per
-    package directory it imported from Spark's archives (the 3.5 MB
-    ``pyspark.zip``, the py4j zip, the Spark core jar): 16 in a live
-    worker, 140-220 ms of CPU per task.  So :func:`map_in_pandas`
-    drops Spark's own zip importers from ``sys.path_importer_cache``
-    before each task's first batch (:func:`_drop_spark_zip_finders`).
-    The first task of a new worker still pays; a reused worker does
-    not.  The ``css_*`` SQL functions (``functions/register.py``) are
-    pandas UDFs, not ``mapInPandas``: they drop the importers at the
-    start of every batch.  The two ``applyInPandasWithState`` operators
-    (``operators/events.py``, ``streaming/ingest.py``) run per group
-    and have no such hook.
+  * **per-task setup** (:func:`_task_setup`) — two PySpark costs of a
+    reused Python worker that have nothing to do with the data:
+
+    - PySpark calls ``importlib.invalidate_caches()`` at the start of
+      every task (PySpark 4.1.2 ``pyspark/worker_util.py:144``, from
+      ``worker.py:3355``), and on CPython 3.10+ every cached
+      ``zipimporter`` then re-reads its archive's whole central
+      directory (CPython 3.11 ``zipimport.py:329-336``).  A worker
+      caches one importer per package directory it imported from
+      Spark's archives (the 3.5 MB ``pyspark.zip``, the py4j zip, the
+      Spark core jar): 16 in a live worker, 140-220 ms of CPU per task.
+      So each task first drops Spark's own zip importers from
+      ``sys.path_importer_cache`` (:func:`_drop_spark_zip_finders`).
+    - PySpark's daemon runs a full ``gc.collect()`` after every task of
+      a reused worker (``pyspark/daemon.py:244``), which walks every
+      tracked object that pyspark, pandas, pyarrow and this package
+      hold (about 74k, 23-27 ms a task).  So every task first calls
+      ``gc.freeze()``, which moves what is alive to the permanent
+      generation in O(1): the collection after the task walks only the
+      objects the task made.  Freezing at each task start, not once,
+      also covers the modules and caches that a worker's first tasks
+      import and fill (about 32k objects after one ``extract_pages``
+      task, 9-11 ms a collection).  It leaks nothing: at a task's start
+      the daemon has just collected, so what is alive is reachable,
+      and the package's kernels leave no cyclic garbage (none found
+      after ``extract_one``, the ``css_*`` functions, PDF extraction and
+      selector-cache evictions), so freed objects go by reference count
+      as before.
+
+    The first task of a new worker still pays for the importers; a
+    reused worker does not.  Every task of :func:`map_in_arrow` and
+    every batch of the ``css_*`` SQL functions (``functions/register.py``,
+    pandas UDFs) runs the setup.  The two ``applyInPandasWithState``
+    operators (``operators/events.py``, ``streaming/ingest.py``) run per
+    group and have no such hook.
 
 Several operators lower dialect-portable SQL (the same text a DuckDB
 oracle runs) onto Spark via temp views.  A fixed view name is fine for
@@ -65,6 +94,7 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import gc
 import itertools
 import os
 import sys
@@ -106,15 +136,38 @@ def _drop_spark_zip_finders() -> None:
             del cache[path]
 
 
-def map_in_pandas(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
-    """``df.mapInPandas(fn, schema)`` whose tasks first drop Spark's own
-    cached zip importers (:func:`_drop_spark_zip_finders`; module
-    docstring, per-task setup) — the package's one ``mapInPandas``."""
-    def run(batches: Iterable) -> Iterator:
-        _drop_spark_zip_finders()
-        yield from fn(batches)
+def _task_setup() -> None:
+    """The per-task setup of every Python task the package runs (module
+    docstring): drop Spark's cached zip importers, and freeze the heap,
+    so the daemon's full collection after the task walks only the
+    objects made since."""
+    _drop_spark_zip_finders()
+    gc.freeze()
 
-    return df.mapInPandas(run, schema=schema)
+
+def _cast(col, t):
+    """The Arrow array ``col`` as type ``t``; no copy when it is one."""
+    return col if col.type == t else col.cast(t)
+
+
+def map_in_arrow(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
+    """``df.mapInArrow`` whose tasks first run :func:`_task_setup` — the
+    package's one ``mapInArrow``.  ``fn(batches, out)`` gets the
+    task's input ``pyarrow.RecordBatch`` iterator and ``out``, the Arrow
+    schema of the DDL ``schema`` (computed here, on the driver), and
+    yields record batches of exactly that schema: Spark does not cast
+    them."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    out = to_arrow_schema(struct)
+
+    def run(batches: Iterable) -> Iterator:
+        _task_setup()
+        yield from fn(batches, out)
+
+    return df.mapInArrow(run, schema=struct)
 
 
 def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
@@ -127,10 +180,11 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
     ``keys`` names the input columns copied onto every output row, with
     their Spark types from ``df.schema``; they may overlap the payload.
     ``payload`` names one input column or a tuple of them: their values
-    are the memo key and ``body``'s arguments (``max_bytes`` applies to
-    a single payload column).  ``columns`` maps each column ``body``
-    returns, plus ``err`` for per-document operators, to its Spark type
-    in output order:
+    (Python values: a ``bigint`` arrives as ``int``, a ``binary`` as
+    ``bytes``) are the memo key and ``body``'s arguments (``max_bytes``
+    applies to a single payload column).  ``columns`` maps each column
+    ``body`` returns, plus ``err`` for per-document operators, to its
+    Spark type in output order:
 
     * per-document operators pass ``empty_row`` (column → value, the row
       a null or failed payload emits) and ``body`` returns one such
@@ -139,14 +193,13 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
       ``(n, {column: list of n values})``; a null or failed payload
       emits no rows.
 
-    Output is built column by column: keys are copied (per match:
-    repeated) as whole arrays, and a memo hit costs one append (one
-    list extend per match column) per body column.  Policy: see the
-    module docstring."""
+    Each output column is one Arrow array over the batch's distinct
+    results, taken onto the rows (per match: the row-level indices come
+    from numpy ``repeat``/``cumsum``); keys are the input arrays, taken
+    the same way per match.  Policy: see the module docstring."""
     keys = tuple(keys)
     payload = (payload,) if isinstance(payload, str) else tuple(payload)
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    names = [*keys, *columns]
     sinks = [c for c in columns if c != "err"]
     schema = ", ".join([f"{k} {types[k]}" for k in keys]
                        + [f"{c} {t}" for c, t in columns.items()])
@@ -165,41 +218,50 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
             msg = f"{type(exc).__name__}: {exc}"
             return empty[0], (f"{err}; {msg}" if err else msg)
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    def run(batches: Iterable, out) -> Iterator:
+        import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
-            out = {c: [] for c in columns}
-            errs = out.get("err")
-            cols = [(out[c], c) for c in sinks]
-            counts = []   # per-match: output rows of each input row
+        for batch in batches:
             memo: dict = {}
-            for data in zip(*(pdf[p] for p in payload)):
-                if None in data:
-                    r, err = empty
-                else:
-                    hit = memo.get(data)
-                    if hit is None:
-                        hit = memo[data] = one(data)
-                    r, err = hit
-                if empty_row is not None:
-                    for col, c in cols:
-                        col.append(r[c])
-                    if errs is not None:
-                        errs.append(err)
-                else:
-                    n, d = r
-                    counts.append(n)
-                    if n:
-                        for col, c in cols:
-                            col.extend(d[c])
-            for k in keys:
-                v = pdf[k].values
-                out[k] = v if empty_row is not None else v.repeat(counts)
-            yield pd.DataFrame(out, columns=names)
+            results = []   # (body result, err) per distinct payload
+            index = []     # per row: its payload's place in results
+            for data in zip(*(batch.column(p).to_pylist()
+                              for p in payload)):
+                i = memo.get(data)
+                if i is None:
+                    i = memo[data] = len(results)
+                    results.append(empty if None in data else one(data))
+                index.append(i)
+            distinct = len(results) == len(index)
+            arrays = [_cast(batch.column(k), out.field(k).type)
+                      for k in keys]
+            if empty_row is not None:
+                take = None if distinct else pa.array(index, pa.int64())
+                for c in columns:
+                    a = pa.array([e for _, e in results] if c == "err"
+                                 else [r[c] for r, _ in results],
+                                 out.field(c).type)
+                    arrays.append(a if take is None else a.take(take))
+            else:
+                # output row j of input row i is row start[index[i]] + j
+                # of the distinct results' flattened matches
+                n = np.array([r[0] for r, _ in results], np.int64)
+                idx = np.array(index, np.int64)
+                per_row = n[idx]
+                start = np.cumsum(n) - n
+                flat = np.repeat(start[idx] - np.cumsum(per_row) + per_row,
+                                 per_row) + np.arange(per_row.sum())
+                rows = np.repeat(np.arange(len(idx)), per_row)
+                arrays = [a.take(rows) for a in arrays]
+                for c in sinks:
+                    a = pa.array([v for (m, d), _ in results if m
+                                  for v in d[c]], out.field(c).type)
+                    arrays.append(a if distinct else a.take(flat))
+            yield pa.RecordBatch.from_arrays(arrays, schema=out)
 
-    return map_in_pandas(df.select(*dict.fromkeys(keys + payload)), run,
-                         schema)
+    return map_in_arrow(df.select(*dict.fromkeys(keys + payload)), run,
+                        schema)
 
 
 @contextlib.contextmanager

@@ -1,0 +1,342 @@
+"""``util.map_in_arrow`` and the runner built on it.
+
+Every task first runs ``util._task_setup``: it drops Spark's own cached
+zip importers, so PySpark's per-task ``importlib.invalidate_caches()``
+re-reads none of Spark's archives, and freezes the worker's heap once,
+so the daemon's full collection after each task walks only new
+objects.  The importer rule is checked in child interpreters laid out
+as a Python worker is (``pyspark.zip``, the py4j zip and the Spark core
+jar first on ``PYTHONPATH``), counting archive reads instead of timing
+them; then, with the freeze, in a live worker of the shared session.
+
+The runner's edge cases (empty and all-null batches, a two-column
+payload with one null member, truncation of duplicated rows, per-match
+duplicates around documents with no match, a timestamp key) are
+compared with outputs recorded from the ``mapInPandas`` runner this
+one replaced.
+"""
+
+import datetime
+import glob
+import os
+import subprocess
+import sys
+import zipfile
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+SPARK_HOME = os.environ.get("SPARK_HOME", "")
+LIB = os.path.join(SPARK_HOME, "python", "lib")
+SPARK_ARCHIVES = (sorted(glob.glob(os.path.join(LIB, "pyspark.zip")))
+                  + sorted(glob.glob(os.path.join(LIB, "py4j-*-src.zip")))
+                  + sorted(glob.glob(os.path.join(SPARK_HOME, "jars",
+                                                  "spark-core_*.jar"))))
+
+CHILD = """
+import importlib, os, sys, zipimport
+
+import userpkg.sub
+import pyspark.worker
+from perl_html5_dom_spark import util
+
+spark_dir = os.path.dirname(sys.modules["pyspark"].__loader__.archive)
+
+
+def spark_owned(archive):
+    return archive.endswith(".jar") or os.path.dirname(archive) == spark_dir
+
+
+def zips():
+    return {k: f for k, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)}
+
+
+before = zips()
+assert isinstance(sys.modules["pyspark"].__loader__, zipimport.zipimporter)
+assert sum(spark_owned(f.archive) for f in before.values()) >= 3, before
+user = {k: f for k, f in before.items() if f.archive == USER_ZIP}
+assert len(user) == 2, before   # the zip's root and its package directory
+
+util._drop_spark_zip_finders()
+after = zips()
+assert not [k for k, f in after.items() if spark_owned(f.archive)], after
+assert after == user, after     # the very same importer objects
+
+reads = []
+real = zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or real(path)
+importlib.invalidate_caches()
+assert USER_ZIP in reads and not [p for p in reads if spark_owned(p)], \\
+    reads   # the user zip still refreshes, Spark's archives do not
+
+del reads[:]
+import pyspark.ml.linalg
+assert pyspark.ml.linalg.__file__.startswith(spark_dir), \\
+    pyspark.ml.linalg.__file__
+assert not [p for p in reads if spark_owned(p)], reads
+print("ok")
+"""
+
+PLAIN = """
+import sys, zipimport
+
+import userpkg.sub
+import pyspark
+from perl_html5_dom_spark import util
+
+assert not isinstance(getattr(pyspark, "__loader__", None),
+                      zipimport.zipimporter)
+before = dict(sys.path_importer_cache)
+assert any(isinstance(f, zipimport.zipimporter) for f in before.values())
+util._drop_spark_zip_finders()
+assert sys.path_importer_cache == before
+print("ok")
+"""
+
+
+def _user_zip(tmp_path) -> str:
+    path = tmp_path / "user.zip"
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("userpkg/__init__.py", "")
+        z.writestr("userpkg/sub/__init__.py", "VALUE = 1\n")
+    return str(path)
+
+
+def _run(code: str, pythonpath: list, user_zip: str) -> str:
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(pythonpath)}
+    out = subprocess.run(
+        [sys.executable, "-c", f"USER_ZIP = {user_zip!r}\n" + code],
+        capture_output=True, text=True, timeout=120, cwd=ROOT, env=env)
+    assert out.returncode == 0, out.stderr[-3000:]
+    return out.stdout
+
+
+@pytest.mark.skipif(len(SPARK_ARCHIVES) != 3,
+                    reason="needs $SPARK_HOME's pyspark/py4j zips and jar")
+def test_worker_drops_only_spark_zip_importers(tmp_path):
+    user_zip = _user_zip(tmp_path)
+    assert _run(CHILD, [*SPARK_ARCHIVES, user_zip], user_zip) == "ok\n"
+
+
+def test_unzipped_pyspark_leaves_cache_alone(tmp_path):
+    user_zip = _user_zip(tmp_path)
+    assert _run(PLAIN, [user_zip], user_zip) == "ok\n"
+
+
+def test_live_worker_holds_no_spark_zip_importer(spark):
+    from perl_html5_dom_spark.operators.extract import extract_pages
+    from perl_html5_dom_spark.util import map_in_arrow
+
+    def probe(batches, out):
+        # pickled by value (nested): the count of importers of Spark's
+        # archives in this worker's cache and its frozen object count,
+        # read before the batches, whose decoding may import
+        import gc
+        import os
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        loader = sys.modules["pyspark"].__loader__
+        zipped = isinstance(loader, zipimport.zipimporter)
+        lib = os.path.dirname(loader.archive) if zipped else None
+        n = sum(isinstance(f, zipimport.zipimporter)
+                and (f.archive.endswith(".jar")
+                     or os.path.dirname(f.archive) == lib)
+                for f in list(sys.path_importer_cache.values()))
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([zipped]), pa.array([n], pa.int64()),
+             pa.array([gc.get_freeze_count()], pa.int64())], schema=out)
+
+    pages = spark.createDataFrame(
+        [(f"u{i}", f"<p>page {i}</p>") for i in range(20)],
+        "url string, html string").coalesce(1)
+    assert extract_pages(pages, fields=["url", "main_text"]).count() == 20
+    got = map_in_arrow(pages, probe,
+                       "zipped boolean, n long, frozen long").collect()
+    assert [r["n"] for r in got] == [0], got
+    assert got[0]["frozen"] > 0, got
+
+
+def test_sql_function_batch_runs_task_setup(spark):
+    """The ``css_*`` SQL functions are pandas UDFs, not ``mapInArrow``:
+    their batches run the per-task setup themselves.  One projection
+    runs three UDFs per batch in one worker, in order: ``_seed`` puts
+    the worker back in a new worker's state (an importer per Spark
+    archive on the path, an unfrozen heap), then ``css_text`` runs and
+    ``_left`` reports what is left."""
+    from pyspark.sql.functions import pandas_udf
+
+    from perl_html5_dom_spark.functions.register import register_all
+
+    def spark_importers():
+        # pickled by value (nested), as are the two UDFs below
+        import os
+        import sys
+        import zipimport
+
+        loader = sys.modules["pyspark"].__loader__
+        lib = os.path.dirname(loader.archive)
+        return [p for p in sys.path
+                if p.endswith(".jar") or os.path.dirname(p) == lib]
+
+    def seed(html):
+        import gc
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        cache = sys.path_importer_cache
+        for path in spark_importers():
+            cache.setdefault(path, zipimport.zipimporter(path))
+        n = sum(isinstance(cache.get(p), zipimport.zipimporter)
+                for p in spark_importers())
+        gc.unfreeze()
+        return pd.Series([n] * len(html))
+
+    def left(text):
+        import gc
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        cache = sys.path_importer_cache
+        n = sum(isinstance(f, zipimport.zipimporter)
+                and f.archive in spark_importers()
+                for f in list(cache.values()))
+        return pd.Series([n * 10**9 + gc.get_freeze_count()] * len(text))
+
+    register_all(spark)
+    spark.udf.register("_seed", pandas_udf(seed, "long"))
+    spark.udf.register("_left", pandas_udf(left, "long"))
+    spark.createDataFrame(
+        [(f"u{i}", f"<p>page {i}</p>") for i in range(20)],
+        "url string, html string").coalesce(1) \
+        .createOrReplaceTempView("zip_probe_pages")
+    try:
+        got = spark.sql(
+            "SELECT _seed(html) AS seeded, _left(css_text(html, 'p')) AS n "
+            "FROM zip_probe_pages").collect()
+    finally:
+        spark.catalog.dropTempView("zip_probe_pages")
+    assert len(got) == 20 and min(r["seeded"] for r in got) >= 1, got
+    # no Spark importer left (n // 10**9 == 0), and a frozen heap
+    assert all(0 < r["n"] < 10**9 for r in got), got
+
+
+# ---------------------------------------------------------------------------
+# runner edge cases, against outputs of the mapInPandas runner
+# ---------------------------------------------------------------------------
+
+_HTML = "url string, html binary"
+_BIG = b"<p>" + b"word " * 40 + b"</p><p>tail</p>"
+_A = b"<p>one</p><div><p>two</p></div>"
+_B = b"<div>none</div>"
+_C = b"<p>a</p><p>b</p><section><p>c</p></section>"
+_T0 = datetime.datetime(2024, 5, 6, 7, 8, 9, 123456)
+_EXTRACT_SCHEMA = (
+    "struct<url:string,encoding:string,title:string,main_text:string,"
+    "inner_text:string,text_content:string,n_nodes:bigint,n_elements:bigint,"
+    "spans:array<struct<node_id:bigint,begin:bigint,length:bigint>>,"
+    "err:string>")
+_FIND_SCHEMA = ("struct<url:string,node_id:bigint,ord:bigint,tag:string,"
+                "begin:bigint,length:bigint>")
+
+
+def _edge_case(spark, name):
+    """(output DataFrame, recorded schema or None, recorded rows)."""
+    from perl_html5_dom_spark.operators import selector_ops as so
+    from perl_html5_dom_spark.operators import textstats as ts
+    from perl_html5_dom_spark.operators.extract import (
+        ALL_FIELDS, extract_pages)
+    from perl_html5_dom_spark.sources import warc
+    from perl_html5_dom_spark.util import map_documents
+
+    def frame(rows, schema=_HTML):
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
+    def extract(df):
+        return extract_pages(df, fields=ALL_FIELDS + ("err",))
+
+    trunc = "truncated: 218 > 40 bytes"
+    word = "word word word word word word word wo"
+    empty = ("", "", "", "", "", 0, 0, [], None)
+    return {
+        "empty_batch": lambda: (
+            extract(spark.createDataFrame([], _HTML)), _EXTRACT_SCHEMA, []),
+        "empty_batch_per_match": lambda: (
+            so.css_find(spark.createDataFrame([], _HTML), "p"),
+            _FIND_SCHEMA, []),
+        "all_null": lambda: (
+            extract(frame([("a", None), ("b", None)])), None,
+            [("a", *empty), ("b", *empty)]),
+        "all_null_per_match": lambda: (
+            so.css_find(frame([("a", None), ("b", None)]), "p"), None, []),
+        "pair_with_null_member": lambda: (
+            warc.roundtrip_df(frame(
+                [(None, b"<p>x</p>"), ("u", None), ("u2", b"<p>y</p>"),
+                 ("u2", b"<p>y</p>"), ("u3", b"<p>z</p>")])), None,
+            [(None, None), (None, None), ("u2", b"<p>y</p>"),
+             ("u2", b"<p>y</p>"), ("u3", b"<p>z</p>")]),
+        "pair_with_key_in_payload": lambda: (
+            map_documents(
+                frame([(1, "a"), (2, None), (3, "a"), (1, "a"), (4, "b")],
+                      "doc_id long, text string"),
+                ("doc_id",), ("doc_id", "text"),
+                lambda did, text: {"s": f"{did}:{text}", "n": did * 2},
+                {"s": "string", "n": "bigint"},
+                empty_row={"s": None, "n": None}), None,
+            [(1, "1:a", 2), (2, None, None), (3, "3:a", 6), (1, "1:a", 2),
+             (4, "4:b", 8)]),
+        "truncated_duplicates": lambda: (
+            extract_pages(
+                frame([("a", _BIG), ("b", _BIG), ("c", b"<p>small</p>"),
+                       ("d", _BIG)]),
+                fields=("url", "main_text", "n_nodes", "err"),
+                max_html_bytes=40), None,
+            [("a", word, 6, trunc), ("b", word, 6, trunc),
+             ("c", "small", 6, None), ("d", word, 6, trunc)]),
+        "per_match_interleaved": lambda: (
+            so.css_find(frame([(f"u{i}", d) for i, d in enumerate(
+                [_A, _B, _A, _C, _B, _A, None, _C])]), "p"), None,
+            [(u, *m) for u, ms in (("u0", "A"), ("u2", "A"), ("u3", "C"),
+                                   ("u5", "A"), ("u7", "C"))
+             for m in {"A": [(4, 4, "p", 0, 3), (7, 7, "p", 15, 3)],
+                       "C": [(4, 4, "p", 0, 3), (6, 6, "p", 8, 3),
+                             (9, 9, "p", 25, 3)]}[ms]]),
+        "timestamp_key": lambda: (
+            ts.quality_scores(frame(
+                [(1, "the cat and the dog", _T0),
+                 (2, "the cat and the dog", None),
+                 (3, None, _T0 + datetime.timedelta(days=1)),
+                 (4, "solo", _T0 - datetime.timedelta(seconds=1))],
+                "doc_id long, text string, ts timestamp"), carry=("ts",)),
+            "struct<doc_id:bigint,n_chars:bigint,n_tokens:bigint,"
+            "avg_token_len:double,stopword_ratio:double,alpha_ratio:double,"
+            "ts:timestamp,quality:double>",
+            [(1, 19, 5, 3.0, 0.6, 0.789474, _T0, 0.759869),
+             (2, 19, 5, 3.0, 0.6, 0.789474, None, 0.759869),
+             (3, None, None, None, None, None,
+              _T0 + datetime.timedelta(days=1), None),
+             (4, 4, 1, 4.0, 0.0, 1.0, _T0 - datetime.timedelta(seconds=1),
+              0.5125)]),
+    }[name]()
+
+
+@pytest.mark.parametrize("name", [
+    "empty_batch", "empty_batch_per_match", "all_null", "all_null_per_match",
+    "pair_with_null_member", "pair_with_key_in_payload",
+    "truncated_duplicates", "per_match_interleaved", "timestamp_key"])
+def test_runner_edge_case_matches_recorded(spark, name):
+    """One partition, so each case is one Arrow batch and one memo."""
+    df, schema, rows = _edge_case(spark, name)
+    if schema is not None:
+        assert df.schema.simpleString() == schema
+    assert [tuple(r) for r in df.collect()] == rows

@@ -218,3 +218,37 @@ def test_hierarchy_guard_rejects_ancestor_insertion():
     assert tree.at("div").at("p").at("span") is not None
     tree.body().append(tree.at("p"))
     assert tree.at("div").at("p") is None
+
+
+#: runs in a child interpreter: a node inserted before itself must
+#: leave the tree, its links and its serialization unchanged, and a
+#: following-sibling query from it must end
+_SELF_INSERT = """
+from perl_html5_dom_spark import HTML5DOM
+
+t = HTML5DOM().parse(
+    "<!-- lead --><!DOCTYPE html><ul><li>a</li><li>b</li><li>c</li></ul>")
+doc = t.doc
+links = (doc.parent, doc.first_child, doc.prev_sib, doc.next_sib)
+before = [list(a) for a in links], t.html()
+li = t.find("li")[1]
+li.before(li)
+li.parent().insertBefore(li, li)
+t.document().before(t.document())
+assert ([list(a) for a in links], t.html()) == before
+assert [n.text() for n in li.find("*", "~")] == ["c"]
+assert [n.text() for n in t.find("li")[2].find("*", "~")] == []
+print("ok")
+"""
+
+
+def test_insert_before_itself_is_a_no_op():
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    out = subprocess.run(
+        [sys.executable, "-c", _SELF_INSERT], capture_output=True,
+        text=True, timeout=60, cwd=Path(__file__).resolve().parent.parent)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout == "ok\n"

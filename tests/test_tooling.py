@@ -7,9 +7,10 @@ and checks that every ``perl_html5_dom_spark`` name it imports, and
 every ``alias.attr`` it reads from an imported package module, still
 exists.
 
-The package itself is checked to keep one ``mapInPandas`` entry: only
-``util.map_in_pandas`` calls it, so every task of every kernel gets the
-same per-task setup.
+The package itself is checked to keep one Arrow map entry: only
+``util.map_in_arrow`` calls ``mapInArrow`` and nothing calls
+``mapInPandas``, so every task of every kernel gets the same per-task
+setup.
 """
 
 import ast
@@ -92,13 +93,13 @@ def test_dangling_reference_is_caught(tmp_path):
         "5: perl_html5_dom_spark.operators.dedup._no_such_kernel"]
 
 
-#: the only function allowed to call ``mapInPandas``: the entry that the
+#: the only function allowed to call ``mapInArrow``: the entry that the
 #: per-row runner and the two batch-wide dedup kernels go through
-MAP_IN_PANDAS_CALLERS = {"util.map_in_pandas"}
+MAP_IN_ARROW_CALLERS = {"util.map_in_arrow"}
 
 
-def _map_in_pandas_callers(pkg: Path) -> list[str]:
-    """``module.function`` of every ``mapInPandas`` call under ``pkg``,
+def _map_callers(pkg: Path, method: str) -> list[str]:
+    """``module.function`` of every ``.method(...)`` call under ``pkg``,
     named by the enclosing top-level function (``<module>`` outside
     one)."""
     found = []
@@ -112,20 +113,22 @@ def _map_in_pandas_callers(pkg: Path) -> list[str]:
             found += [f"{mod}.{name}" for node in ast.walk(top)
                       if isinstance(node, ast.Call)
                       and isinstance(node.func, ast.Attribute)
-                      and node.func.attr == "mapInPandas"]
+                      and node.func.attr == method]
     return found
 
 
 def test_one_per_row_runner():
-    callers = _map_in_pandas_callers(ROOT / PKG)
-    assert sorted(callers) == sorted(MAP_IN_PANDAS_CALLERS)
+    pkg = ROOT / PKG
+    assert sorted(_map_callers(pkg, "mapInArrow")) == sorted(
+        MAP_IN_ARROW_CALLERS)
+    assert _map_callers(pkg, "mapInPandas") == []
 
 
-def test_map_in_pandas_caller_is_caught(tmp_path):
+def test_map_caller_is_caught(tmp_path):
     (tmp_path / "ops").mkdir()
     (tmp_path / "ops" / "k.py").write_text(
         "def kernel(df):\n"
-        "    return df.mapInPandas(run, schema='x long')\n"
+        "    return df.mapInArrow(run, schema='x long')\n"
         "df.mapInPandas(run, schema='x long')\n")
-    assert _map_in_pandas_callers(tmp_path) == [
-        "ops.k.kernel", "ops.k.<module>"]
+    assert _map_callers(tmp_path, "mapInArrow") == ["ops.k.kernel"]
+    assert _map_callers(tmp_path, "mapInPandas") == ["ops.k.<module>"]
