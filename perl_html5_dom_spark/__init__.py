@@ -3,8 +3,9 @@ query / main-content extraction engine.
 
 A from-scratch re-expression of the capabilities of Azq2/perl-html5-dom
 (HTML5 parse → DOM → CSS Selectors L4 → serialization/innerText) as an
-idiomatic Spark pipeline: the parse/match/extract kernel runs as
-Arrow-vectorized pandas UDFs over DataFrames of Common-Crawl-style pages,
+idiomatic Spark pipeline: the parse/match/extract kernel runs once per
+distinct page of each Arrow batch (``util``: ``mapInArrow`` and Arrow
+UDFs) over DataFrames of Common-Crawl-style pages,
 with explicit partitioning/skew/lineage handling for 10^12-document scale.
 
 Layout:

@@ -14,10 +14,11 @@ columns), and keep every float division and ``round`` in SQL.
 from __future__ import annotations
 
 import re
+import unicodedata
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import map_documents
+from ..util import map_documents, scalar_udf
 from .dedup import H, P, tokens_expr
 
 #: tiny per-language stopword marker sets for the n-gram/stopword
@@ -185,19 +186,16 @@ def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     byte-different but canonically-equal spellings (composed vs
     combining accents) dedup together.
 
-    NFC runs as an Arrow-vectorized ``Series.str.normalize`` pandas UDF
-    (Spark has no built-in Unicode normalizer); the whitespace collapse
-    stays a JVM ``regexp_replace``.  The oracle uses DuckDB's native
-    ``nfc_normalize`` — two independent NFC implementations agreeing."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfc(s):
-        return s.str.normalize("NFC")
-
+    NFC runs as ``unicodedata.normalize`` once per distinct text of an
+    Arrow batch (``util.scalar_udf``; Spark has no built-in Unicode
+    normalizer, and pandas ``Series.str.normalize`` calls the same
+    function); the whitespace collapse stays a JVM ``regexp_replace``.
+    The oracle uses DuckDB's native ``nfc_normalize`` — two independent
+    NFC implementations agreeing."""
+    nfc = scalar_udf(lambda s: unicodedata.normalize("NFC", s), "string")
     return docs.select(
         "doc_id",
-        F.regexp_replace(F.trim(_nfc(F.col(text_col))), r"\s+", " ")
+        F.regexp_replace(F.trim(nfc(F.col(text_col))), r"\s+", " ")
         .alias("text_norm"))
 
 

@@ -822,8 +822,9 @@ def q_host_stats(spark, sf_dir):
 def q_normalize_text(spark, sf_dir):
     """Unicode NFC + whitespace collapse (textstats.normalize_text)
     over text salted with combining sequences; Spark normalizes via
-    pandas Series.str.normalize, DuckDB via nfc_normalize — two
-    independent NFC implementations must agree byte-for-byte."""
+    Python's unicodedata.normalize in an Arrow UDF, DuckDB via
+    nfc_normalize — two independent NFC implementations must agree
+    byte-for-byte."""
     # e + U+0301 (utf8 cc 81) and A + U+0308 (utf8 cc 88), plus messy
     # whitespace; NFC composes them to é / Ä
     corpus = ut.sql_over(

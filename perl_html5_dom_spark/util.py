@@ -14,19 +14,26 @@ MinHash/SimHash signature kernels of ``operators/dedup.py`` keep their
 own batch function: their numpy step runs once per batch across all
 distinct texts (``reduceat``), which a per-row body cannot express.
 They, and the runner, reach Spark through :func:`map_in_arrow`, the
-package's one call of ``DataFrame.mapInArrow``.
+package's one call of ``DataFrame.mapInArrow``.  The SQL-callable
+scalar functions (the ``css_*`` family of ``functions/register.py``,
+the NFC step of ``textstats.normalize_text``) are Arrow UDFs made by
+:func:`scalar_udf`, the package's one ``arrow_udf``.  The runner and
+the UDFs share one per-batch core, :func:`per_distinct`.
 
   * **per distinct document, not per row** — web corpora carry 30-50%
     byte-identical pages (mirrors, re-crawls, session urls) and every
     body is a pure function of its payload, so each DISTINCT payload
-    runs once per Arrow batch.  The batch's payload columns become
-    Python values once (``to_pylist``) and one dict probe per row maps
-    each row to its distinct payload; each output column is built once,
-    as one Arrow array over the distinct results, and copied onto the
-    rows with Arrow ``take``.  So a memo hit costs one probe and no
-    Python per output value, and no column passes through pandas.  The
-    memo dies with the batch (bounded memory: at most one batch of
-    results); on an all-distinct input the ``take`` is skipped;
+    runs once per Arrow batch (:func:`per_distinct`).  The batch's
+    payload columns become Python values once (``to_pylist``) and one
+    dict probe per row maps each row to its distinct payload; each
+    output column is built once, as one Arrow array over the distinct
+    results, and copied onto the rows with Arrow ``take``.  So a memo
+    hit costs one probe and no Python per output value, and no column
+    passes through pandas.  The memo dies with the batch (bounded
+    memory: at most one batch of results); on an all-distinct input
+    the ``take`` is skipped.  Each caller keeps its own null policy
+    (the runner: below; a :func:`scalar_udf`: a NULL first argument
+    gives NULL);
   * **keys** — the ``keys`` columns are copied from the input batch onto
     every output row as Arrow arrays (per match: taken once per
     match), never through the memo, so two rows sharing a payload keep
@@ -77,8 +84,8 @@ package's one call of ``DataFrame.mapInArrow``.
 
     The first task of a new worker still pays for the importers; a
     reused worker does not.  Every task of :func:`map_in_arrow` and
-    every batch of the ``css_*`` SQL functions (``functions/register.py``,
-    pandas UDFs) runs the setup.  The two ``applyInPandasWithState``
+    every batch of a :func:`scalar_udf` (the ``css_*`` SQL functions,
+    NFC) runs the setup.  The two ``applyInPandasWithState``
     operators (``operators/events.py``, ``streaming/ingest.py``) run per
     group and have no such hook.
 
@@ -104,6 +111,9 @@ import zipimport
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import _parse_datatype_string
 
 _counter = itertools.count()
 
@@ -150,6 +160,37 @@ def _cast(col, t):
     return col if col.type == t else col.cast(t)
 
 
+def per_distinct(columns, one: Callable) -> tuple:
+    """``(results, take)`` over Arrow ``columns`` of equal length:
+    ``one(key)`` runs once per distinct tuple of the rows' Python values
+    (``to_pylist``; a null is ``None`` and is keyed like any value), and
+    ``results[i]`` is its result for the ``i``-th distinct tuple met.
+    ``take`` is the int64 Arrow array that maps each row to its place
+    in ``results``, or ``None`` when every row is distinct (so
+    ``results`` is already in row order).  No null policy: each caller
+    decides what a ``None`` in its key means."""
+    import pyarrow as pa
+
+    memo, results, index = {}, [], []
+    for key in zip(*(c.to_pylist() for c in columns)):
+        i = memo.get(key)
+        if i is None:
+            i = memo[key] = len(results)
+            results.append(one(key))
+        index.append(i)
+    return results, (None if len(results) == len(index)
+                      else pa.array(index, pa.int64()))
+
+
+def _onto_rows(values: list, take, t):
+    """``values`` as one Arrow array of type ``t``, taken onto the rows
+    by ``take`` (``None``: already one value per row)."""
+    import pyarrow as pa
+
+    a = pa.array(values, t)
+    return a if take is None else a.take(take)
+
+
 def map_in_arrow(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
     """``df.mapInArrow`` whose tasks first run :func:`_task_setup` — the
     package's one ``mapInArrow``.  ``fn(batches, out)`` gets the
@@ -157,9 +198,6 @@ def map_in_arrow(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
     schema of the DDL ``schema`` (computed here, on the driver), and
     yields record batches of exactly that schema: Spark does not cast
     them."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
     struct = _parse_datatype_string(schema)
     out = to_arrow_schema(struct)
 
@@ -168,6 +206,27 @@ def map_in_arrow(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
         yield from fn(batches, out)
 
     return df.mapInArrow(run, schema=struct)
+
+
+def scalar_udf(fn: Callable, return_type: str):
+    """A scalar Arrow UDF (``pyspark.sql.functions.arrow_udf``) that
+    runs ``fn(*values)`` once per distinct tuple of argument values of
+    each Arrow batch — the package's one ``arrow_udf``.  Each batch
+    first runs :func:`_task_setup`; the distinct results become one
+    Arrow array of ``return_type`` taken onto the rows.  The DDL
+    ``return_type`` is parsed here, by the driver's JVM, so a session
+    must be active.  ``fn`` gets Python values; a NULL first argument
+    (the document) gives NULL without calling ``fn``, and a NULL in a
+    later one reaches ``fn`` as ``None``."""
+    t = to_arrow_type(_parse_datatype_string(return_type))
+
+    def run(*columns):
+        _task_setup()
+        results, take = per_distinct(columns, lambda key: (
+            None if key[0] is None else fn(*key)))
+        return _onto_rows(results, take, t)
+
+    return arrow_udf(run, return_type)
 
 
 def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
@@ -200,12 +259,13 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
     keys = tuple(keys)
     payload = (payload,) if isinstance(payload, str) else tuple(payload)
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    sinks = [c for c in columns if c != "err"]
     schema = ", ".join([f"{k} {types[k]}" for k in keys]
                        + [f"{c} {t}" for c, t in columns.items()])
     empty = (empty_row if empty_row is not None else (0, {}), None)
 
     def one(data):
+        if None in data:
+            return empty
         err = None
         if max_bytes is not None and len(data[0]) > max_bytes:
             err = f"truncated: {len(data[0])} > {max_bytes} bytes"
@@ -223,41 +283,32 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
         import pyarrow as pa
 
         for batch in batches:
-            memo: dict = {}
-            results = []   # (body result, err) per distinct payload
-            index = []     # per row: its payload's place in results
-            for data in zip(*(batch.column(p).to_pylist()
-                              for p in payload)):
-                i = memo.get(data)
-                if i is None:
-                    i = memo[data] = len(results)
-                    results.append(empty if None in data else one(data))
-                index.append(i)
-            distinct = len(results) == len(index)
+            # (body result, err) per distinct payload
+            results, take = per_distinct(
+                [batch.column(p) for p in payload], one)
             arrays = [_cast(batch.column(k), out.field(k).type)
                       for k in keys]
             if empty_row is not None:
-                take = None if distinct else pa.array(index, pa.int64())
-                for c in columns:
-                    a = pa.array([e for _, e in results] if c == "err"
-                                 else [r[c] for r, _ in results],
-                                 out.field(c).type)
-                    arrays.append(a if take is None else a.take(take))
+                arrays += [_onto_rows([e for _, e in results] if c == "err"
+                                      else [r[c] for r, _ in results],
+                                      take, out.field(c).type)
+                           for c in columns]
             else:
-                # output row j of input row i is row start[index[i]] + j
+                # output row j of input row i is row start[idx[i]] + j
                 # of the distinct results' flattened matches
                 n = np.array([r[0] for r, _ in results], np.int64)
-                idx = np.array(index, np.int64)
+                idx = np.arange(len(n)) if take is None else take.to_numpy()
                 per_row = n[idx]
                 start = np.cumsum(n) - n
                 flat = np.repeat(start[idx] - np.cumsum(per_row) + per_row,
                                  per_row) + np.arange(per_row.sum())
                 rows = np.repeat(np.arange(len(idx)), per_row)
                 arrays = [a.take(rows) for a in arrays]
-                for c in sinks:
-                    a = pa.array([v for (m, d), _ in results if m
-                                  for v in d[c]], out.field(c).type)
-                    arrays.append(a if distinct else a.take(flat))
+                arrays += [_onto_rows([v for (m, d), _ in results if m
+                                       for v in d[c]],
+                                      None if take is None else flat,
+                                      out.field(c).type)
+                           for c in columns]
             yield pa.RecordBatch.from_arrays(arrays, schema=out)
 
     return map_in_arrow(df.select(*dict.fromkeys(keys + payload)), run,

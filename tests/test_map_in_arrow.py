@@ -1,4 +1,4 @@
-"""``util.map_in_arrow`` and the runner built on it.
+"""``util.map_in_arrow``, ``util.scalar_udf`` and what is built on them.
 
 Every task first runs ``util._task_setup``: it drops Spark's own cached
 zip importers, so PySpark's per-task ``importlib.invalidate_caches()``
@@ -13,7 +13,11 @@ The runner's edge cases (empty and all-null batches, a two-column
 payload with one null member, truncation of duplicated rows, per-match
 duplicates around documents with no match, a timestamp key) are
 compared with outputs recorded from the ``mapInPandas`` runner this
-one replaced.
+one replaced, and the ``css_*`` SQL functions' edge cases (NULL html,
+selector and attribute name, an invalid selector, string and binary
+html, duplicates across several Arrow batches) with outputs recorded
+from the pandas UDFs that ``util.scalar_udf`` replaced.  The per-batch
+core they share, ``util.per_distinct``, is tested in-process.
 """
 
 import datetime
@@ -164,13 +168,15 @@ def test_live_worker_holds_no_spark_zip_importer(spark):
 
 
 def test_sql_function_batch_runs_task_setup(spark):
-    """The ``css_*`` SQL functions are pandas UDFs, not ``mapInArrow``:
+    """The ``css_*`` SQL functions are Arrow UDFs, not ``mapInArrow``:
     their batches run the per-task setup themselves.  One projection
-    runs three UDFs per batch in one worker, in order: ``_seed`` puts
-    the worker back in a new worker's state (an importer per Spark
+    runs three Arrow UDFs per batch in one worker, in order: ``_seed``
+    puts the worker back in a new worker's state (an importer per Spark
     archive on the path, an unfrozen heap), then ``css_text`` runs and
-    ``_left`` reports what is left."""
-    from pyspark.sql.functions import pandas_udf
+    ``_left`` reports what is left.  The three share one
+    ``ArrowEvalPython`` node (UDFs of different eval types, such as a
+    pandas UDF, would not), so they run in one worker."""
+    from pyspark.sql.functions import arrow_udf
 
     from perl_html5_dom_spark.functions.register import register_all
 
@@ -178,7 +184,6 @@ def test_sql_function_batch_runs_task_setup(spark):
         # pickled by value (nested), as are the two UDFs below
         import os
         import sys
-        import zipimport
 
         loader = sys.modules["pyspark"].__loader__
         lib = os.path.dirname(loader.archive)
@@ -190,7 +195,7 @@ def test_sql_function_batch_runs_task_setup(spark):
         import sys
         import zipimport
 
-        import pandas as pd
+        import pyarrow as pa
 
         cache = sys.path_importer_cache
         for path in spark_importers():
@@ -198,37 +203,143 @@ def test_sql_function_batch_runs_task_setup(spark):
         n = sum(isinstance(cache.get(p), zipimport.zipimporter)
                 for p in spark_importers())
         gc.unfreeze()
-        return pd.Series([n] * len(html))
+        return pa.array([n] * len(html), pa.int64())
 
     def left(text):
         import gc
         import sys
         import zipimport
 
-        import pandas as pd
+        import pyarrow as pa
 
         cache = sys.path_importer_cache
         n = sum(isinstance(f, zipimport.zipimporter)
                 and f.archive in spark_importers()
                 for f in list(cache.values()))
-        return pd.Series([n * 10**9 + gc.get_freeze_count()] * len(text))
+        return pa.array([n * 10**9 + gc.get_freeze_count()] * len(text),
+                        pa.int64())
 
     register_all(spark)
-    spark.udf.register("_seed", pandas_udf(seed, "long"))
-    spark.udf.register("_left", pandas_udf(left, "long"))
+    spark.udf.register("_seed", arrow_udf(seed, "long"))
+    spark.udf.register("_left", arrow_udf(left, "long"))
     spark.createDataFrame(
         [(f"u{i}", f"<p>page {i}</p>") for i in range(20)],
         "url string, html string").coalesce(1) \
         .createOrReplaceTempView("zip_probe_pages")
     try:
-        got = spark.sql(
+        df = spark.sql(
             "SELECT _seed(html) AS seeded, _left(css_text(html, 'p')) AS n "
-            "FROM zip_probe_pages").collect()
+            "FROM zip_probe_pages")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = df.collect()
     finally:
         spark.catalog.dropTempView("zip_probe_pages")
+    nodes = [line for line in plan.splitlines() if "EvalPython" in line]
+    assert len(nodes) == 1 and "ArrowEvalPython" in nodes[0], plan
+    assert all(f in nodes[0] for f in ("_seed(", "_left(", "css_text(")), plan
     assert len(got) == 20 and min(r["seeded"] for r in got) >= 1, got
     # no Spark importer left (n // 10**9 == 0), and a frozen heap
     assert all(0 < r["n"] < 10**9 for r in got), got
+
+
+# ---------------------------------------------------------------------------
+# the per-batch core, in-process
+# ---------------------------------------------------------------------------
+
+def test_per_distinct_calls_once_per_distinct_key():
+    import pyarrow as pa
+
+    from perl_html5_dom_spark.util import per_distinct
+
+    a = pa.array(["x", None, "x", "y", None, "x", None])
+    b = pa.array([1, 2, 1, 1, 2, None, None])
+    calls = []
+    results, take = per_distinct(
+        [a, b], lambda key: calls.append(key) or f"r{len(calls)}")
+    assert calls == [("x", 1), (None, 2), ("y", 1), ("x", None),
+                     (None, None)]
+    assert results == ["r1", "r2", "r3", "r4", "r5"]
+    assert take.type == pa.int64()
+    assert take.to_pylist() == [0, 1, 0, 2, 1, 3, 4]
+    assert [calls[i] for i in take.to_pylist()] == list(
+        zip(a.to_pylist(), b.to_pylist()))
+
+
+def test_per_distinct_all_distinct_has_no_take():
+    import pyarrow as pa
+
+    from perl_html5_dom_spark.util import per_distinct
+
+    assert per_distinct([pa.array([3, None, 2])],
+                        lambda key: key) == ([(3,), (None,), (2,)], None)
+    assert per_distinct([pa.array([], pa.binary())],
+                        lambda key: key) == ([], None)
+
+
+# ---------------------------------------------------------------------------
+# the css_* SQL functions, against outputs of the pandas UDFs they replaced
+# ---------------------------------------------------------------------------
+
+_SQL_P = ('<title>T</title><p class="a">x <b>y</b></p>'
+          '<a href="/u" id="k">l</a>')
+_SQL_Q = "<body><div><p>one</p><p>two</p></div></body>"
+_SQL_R = '<p>r</p><a name="n">m</a><a href="/v">w</a>'
+#: html → recorded (css_inner_text, css_main_text)
+_SQL_TEXTS = {None: (None, None), _SQL_P: ("x y\n\nl", "x y"),
+              _SQL_Q: ("one\n\ntwo\n\n", "one\n\ntwo"),
+              _SQL_R: ("r\n\nmw", "r")}
+_LINK_P = ("l", 1, '<a href="/u" id="k">l</a>')
+_SQL_CASES = [
+    # id, html, selector, attribute name, then the recorded css_text,
+    # css_count, css_html and css_attr
+    (0, None, "p", "href", None, None, None, None),
+    (1, _SQL_P, None, "href", None, 0, None, None),    # NULL selector
+    (2, _SQL_P, "a", None, *_LINK_P, None),            # NULL name
+    (3, _SQL_P, "p[", "href", None, 0, None, None),    # invalid selector
+    (4, _SQL_P, "a", "href", *_LINK_P, "/u"),
+    (5, _SQL_Q, "p", "id", "one", 2, "<p>one</p>", None),
+    (6, _SQL_P, "a", "href", *_LINK_P, "/u"),
+    (7, _SQL_R, "a", "href", "m", 2, '<a name="n">m</a>', None),
+    (8, None, "p", "href", None, None, None, None),
+    (9, _SQL_Q, "p", "id", "one", 2, "<p>one</p>", None),
+    (10, _SQL_P, "a", "href", *_LINK_P, "/u"),
+    (11, _SQL_R, "a[href]", "href", "w", 1, '<a href="/v">w</a>', "/v"),
+    (12, _SQL_P, None, "href", None, 0, None, None),
+    (13, _SQL_R, "a", "href", "m", 2, '<a name="n">m</a>', None),
+    (14, _SQL_Q, "div > p:nth-child(2)", "x", "two", 1, "<p>two</p>", None),
+    (15, _SQL_P, "p[", "href", None, 0, None, None),
+    (16, _SQL_P, "a", None, *_LINK_P, None),
+    (17, _SQL_Q, "p", "id", "one", 2, "<p>one</p>", None),
+]
+
+
+@pytest.mark.parametrize("kind", ["string", "binary"])
+def test_sql_functions_match_recorded(spark, kind):
+    """Three rows per Arrow batch over one partition: six batches, with
+    duplicates inside one batch (rows 4 and 6) and across batches, and
+    all-distinct batches."""
+    from perl_html5_dom_spark.functions.register import register_all
+
+    register_all(spark)
+    rows = [(i, h if h is None or kind == "string" else h.encode(), s, n)
+            for i, h, s, n, *_ in _SQL_CASES]
+    spark.createDataFrame(
+        rows, f"id long, html {kind}, sel string, name string") \
+        .coalesce(1).createOrReplaceTempView("sql_cases")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = [tuple(r) for r in spark.sql(
+            "SELECT id, css_text(html, sel), css_count(html, sel), "
+            "css_html(html, sel), css_inner_text(html), "
+            "css_main_text(html), css_attr(html, sel, name) "
+            "FROM sql_cases ORDER BY id").collect()]
+    finally:
+        spark.conf.set(key, before)
+        spark.catalog.dropTempView("sql_cases")
+    assert got == [(i, text, n, html_out, *_SQL_TEXTS[h], attr)
+                   for i, h, _, _, text, n, html_out, attr in _SQL_CASES]
 
 
 # ---------------------------------------------------------------------------

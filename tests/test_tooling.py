@@ -7,10 +7,11 @@ and checks that every ``perl_html5_dom_spark`` name it imports, and
 every ``alias.attr`` it reads from an imported package module, still
 exists.
 
-The package itself is checked to keep one Arrow map entry: only
-``util.map_in_arrow`` calls ``mapInArrow`` and nothing calls
-``mapInPandas``, so every task of every kernel gets the same per-task
-setup.
+The package itself is checked to keep one entry per Spark batch API:
+only ``util.map_in_arrow`` calls ``mapInArrow``, only
+``util.scalar_udf`` calls ``arrow_udf``, and nothing uses
+``mapInPandas`` or ``pandas_udf``, so every task of every kernel and
+every batch of every SQL function gets the same per-task setup.
 """
 
 import ast
@@ -98,8 +99,10 @@ def test_dangling_reference_is_caught(tmp_path):
 MAP_IN_ARROW_CALLERS = {"util.map_in_arrow"}
 
 
-def _map_callers(pkg: Path, method: str) -> list[str]:
-    """``module.function`` of every ``.method(...)`` call under ``pkg``,
+def _map_callers(pkg: Path, name: str) -> list[str]:
+    """``module.function`` of every use of ``name`` under ``pkg``: an
+    ``x.name`` attribute, a bare ``name`` (a call, a decorator with or
+    without arguments) or an import of it under another name; each
     named by the enclosing top-level function (``<module>`` outside
     one)."""
     found = []
@@ -107,28 +110,45 @@ def _map_callers(pkg: Path, method: str) -> list[str]:
         mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
         tree = ast.parse(path.read_text(), str(path))
         for top in tree.body:
-            name = (top.name if isinstance(
+            where = (top.name if isinstance(
                 top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
                 else "<module>")
-            found += [f"{mod}.{name}" for node in ast.walk(top)
-                      if isinstance(node, ast.Call)
-                      and isinstance(node.func, ast.Attribute)
-                      and node.func.attr == method]
+            found += [f"{mod}.{where}" for node in ast.walk(top)
+                      if isinstance(node, ast.Attribute) and node.attr == name
+                      or isinstance(node, ast.Name) and node.id == name
+                      or isinstance(node, ast.alias) and node.name == name
+                      and node.asname not in (None, name)]
     return found
 
 
 def test_one_per_row_runner():
+    """One ``mapInArrow`` entry and one ``arrow_udf`` entry, both in
+    ``util`` and both running the per-task setup; no pandas batch API."""
     pkg = ROOT / PKG
     assert sorted(_map_callers(pkg, "mapInArrow")) == sorted(
         MAP_IN_ARROW_CALLERS)
+    assert _map_callers(pkg, "arrow_udf") == ["util.scalar_udf"]
     assert _map_callers(pkg, "mapInPandas") == []
+    assert _map_callers(pkg, "pandas_udf") == []
 
 
 def test_map_caller_is_caught(tmp_path):
     (tmp_path / "ops").mkdir()
     (tmp_path / "ops" / "k.py").write_text(
+        "from pyspark.sql.functions import pandas_udf\n"
+        "from pyspark.sql.functions import pandas_udf as pu\n"
         "def kernel(df):\n"
         "    return df.mapInArrow(run, schema='x long')\n"
-        "df.mapInPandas(run, schema='x long')\n")
+        "df.mapInPandas(run, schema='x long')\n"
+        "def udfs():\n"
+        "    f = pandas_udf(g, 'long')\n"
+        "    @pandas_udf('string')\n"
+        "    def h(s):\n"
+        "        return s\n"
+        "@pandas_udf\n"
+        "def top(s):\n"
+        "    return s\n")
     assert _map_callers(tmp_path, "mapInArrow") == ["ops.k.kernel"]
     assert _map_callers(tmp_path, "mapInPandas") == ["ops.k.<module>"]
+    assert sorted(_map_callers(tmp_path, "pandas_udf")) == [
+        "ops.k.<module>", "ops.k.top", "ops.k.udfs", "ops.k.udfs"]
