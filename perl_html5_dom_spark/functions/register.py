@@ -5,8 +5,8 @@ query face is usable from plain ``spark.sql``.  All are Arrow UDFs made
 by ``util.scalar_udf`` (never per-row Python): each parses a distinct
 ``(html, arguments)`` tuple once per Arrow batch, and compiles its
 selector once per executor via an LRU cache — the executor-side analog
-of the reference's precompiled selectors (DOM.pod:2544-2551).  A NULL
-``html`` gives SQL NULL.
+of the reference's precompiled selectors (DOM.pod:2544-2551).  Any
+NULL argument (``html``, selector or attribute name) gives SQL NULL.
 
     SELECT css_text(html, 'article h1')       -- first match's text
     SELECT css_count(html, 'a[href]')         -- number of matches

@@ -2,13 +2,14 @@
 
 Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard.
 The per-document signatures (MinHash, SimHash) run as zero-shuffle
-Arrow ``mapInArrow`` kernels (through ``util.map_in_arrow``: they read
-Arrow columns and yield record batches) — the package's only two
-outside the shared per-row runner
-(``util.map_documents``): each hashes the distinct texts of a batch
-first and then runs ONE numpy pass over all of them (``reduceat`` per
-text), which a per-document body would split into one small array
-pass per text.  Everything keyed across documents (grouping, bucket
+Arrow kernels (through ``util.map_in_arrow``: they read Arrow columns
+and yield record batches).  Their per-batch memo is the one every
+Python batch of the package shares, ``util.per_distinct``: each
+distinct text of a batch is hashed once, and the kernels keep only
+their numpy step, ONE pass over all distinct texts of the batch
+(``reduceat`` per text), which a per-document body of the shared
+runner (``util.map_documents``) would split into one small array pass
+per text.  Everything keyed across documents (grouping, bucket
 self-joins, verification) is a declarative plan that shuffles only on
 its join/group keys.  Every hash is derived from
 ``md5`` so DuckDB oracles can reproduce results bit-for-bit:
@@ -16,6 +17,7 @@ its join/group keys.  Every hash is derived from
     H(s)  = first 60 bits of md5(s) as bigint        (cross-engine)
     Spark:  cast(conv(substr(md5(s),1,15),16,10) as bigint)
     DuckDB: cast('0x' || substr(md5(s),1,15) as bigint)
+    Python: _h60(s)
 
 Scale notes (100 TB):
   * exact dedup — one shuffle on the 128-bit digest; AQE handles skew.
@@ -34,9 +36,14 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections import Counter
+from hashlib import md5
+from itertools import chain
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..util import _cast, checkpoint_parquet, map_in_arrow
+from ..util import (_cast, _onto_rows, checkpoint_parquet, map_in_arrow,
+                    per_distinct)
 
 #: modulus for minhash permutations (2^31 - 1, prime)
 P = 2_147_483_647
@@ -44,6 +51,11 @@ P = 2_147_483_647
 #: 60-bit md5-derived hash, identical in DuckDB (see module docstring)
 def H(col: str) -> str:
     return f"cast(conv(substr(md5({col}), 1, 15), 16, 10) as bigint)"
+
+
+def _h60(s: str) -> int:
+    """:func:`H` of one Python string, for the Arrow kernels."""
+    return int(md5(s.encode()).hexdigest()[:15], 16)
 
 
 def perm_params(j: int) -> tuple[int, int]:
@@ -204,68 +216,52 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
     text mirrors the SQL twin: its only hs is null, so mins are null
     and the hash set is empty (collect_set drops nulls)."""
     params = [perm_params(j) for j in range(num_perm)]
-    mh_cols = [f"mh{j}" for j in range(num_perm)]
+
+    def shingle_hashes(key):
+        """The distinct shingle hashes of one text; None for null."""
+        text, = key
+        if text is None:
+            return None
+        t = text.split(" ")
+        return [_h60(s) for s in (
+            {" ".join(t[i:i + k]) for i in range(len(t) - k + 1)}
+            if len(t) >= k else {text})]
 
     def run(batches, out):
-        from hashlib import md5
-
         import numpy as np
         import pyarrow as pa
 
         a_vec = np.array([p[0] for p in params], dtype=np.uint64)
         b_vec = np.array([p[1] for p in params], dtype=np.uint64)
         for batch in batches:
-            # batch-local distinct-text memo (the round-6 kernel
-            # recipe: exact dups share shingle sets, so signature and
-            # hset are computed once per DISTINCT text; the memo dies
-            # with the batch), and the 16 permutation mins run as ONE
-            # numpy reduceat over the batch's shingle rows instead of
-            # a Python loop (2x per-batch, bit-exact: h % P < 2^31 and
+            # one hash list per DISTINCT text of the batch (exact dups
+            # share shingle sets), then the permutation mins of all
+            # non-null ones as ONE numpy reduceat over their hashes
+            # instead of a Python loop (bit-exact: h % P < 2^31 and
             # a, b < P, so a*h+b < 2^62 never overflows uint64)
-            memo: dict = {}          # text -> index into u_hs/mins
-            u_hs: list = []          # per distinct text: hs list
-            offs: list = []
-            all_h: list = []
-            rows: list = []          # per row: uidx, None for null text
-            for text in batch.column("text").to_pylist():
-                if text is None:
-                    rows.append(None)
-                    continue
-                uidx = memo.get(text)
-                if uidx is None:
-                    t = text.split(" ")
-                    if len(t) >= k:
-                        sh = {" ".join(t[i:i + k])
-                              for i in range(len(t) - k + 1)}
-                    else:
-                        sh = {text}
-                    hs = [int(md5(s.encode()).hexdigest()[:15], 16)
-                          for s in sh]
-                    uidx = len(u_hs)
-                    memo[text] = uidx
-                    offs.append(len(all_h))
-                    all_h.extend(hs)
-                    u_hs.append(hs)
-                rows.append(uidx)
-            mins = np.zeros((num_perm, 0), dtype=np.int64)
-            if u_hs:
-                h_arr = np.array(all_h, dtype=np.uint64) % np.uint64(P)
+            u_hs, take = per_distinct([batch.column("text")],
+                                      shingle_hashes)
+            null = np.array([hs is None for hs in u_hs], dtype=bool)
+            lists = [hs for hs in u_hs if hs is not None]
+            mins = np.zeros((num_perm, len(u_hs)), dtype=np.int64)
+            if lists:
+                n = np.array([len(hs) for hs in lists], dtype=np.int64)
+                h_arr = np.fromiter(chain.from_iterable(lists), np.uint64,
+                                    n.sum()) % np.uint64(P)
                 vals = (h_arr[:, None] * a_vec[None, :]
                         + b_vec[None, :]) % np.uint64(P)
-                mins = np.minimum.reduceat(
-                    vals, np.array(offs, dtype=np.int64),
-                    axis=0).astype(np.int64).T.copy()
-            # a null text takes a null index: null mins, and the extra
-            # empty hash set after the distinct ones
-            take = pa.array(rows, pa.int64())
+                mins[:, ~null] = np.minimum.reduceat(
+                    vals, np.cumsum(n) - n, axis=0).T
+            # a null text: null mins and an empty hash set
             yield pa.RecordBatch.from_arrays(
                 [_cast(batch.column("doc_id"), pa.int64())]
-                + [pa.array(m).take(take) for m in mins]
-                + [pa.array(u_hs + [[]], out.field("hset").type)
-                   .take(take.fill_null(len(u_hs)))], schema=out)
+                + [_onto_rows(np.ma.MaskedArray(m, null), take, pa.int64())
+                   for m in mins]
+                + [_onto_rows([hs or [] for hs in u_hs], take,
+                              out.field("hset").type)], schema=out)
 
     schema = ("doc_id bigint, "
-              + ", ".join(f"{c} bigint" for c in mh_cols)
+              + ", ".join(f"mh{j} bigint" for j in range(num_perm))
               + ", hset array<bigint>")
     return map_in_arrow(docs.select("doc_id", "text"), run, schema)
 
@@ -348,20 +344,29 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
     )
     if classes is None:
         return rep_pairs
-    # expansion back to doc pairs (output-sized, pure joins/projections):
-    # cross-class pairs inherit the rep pair's jaccard; each class of
-    # m > 1 members contributes its own pairs at exactly 1.0
+    return _expand_classes(rep_pairs, classes, "rep", "cast(1.0 as double)")
+
+
+def _expand_classes(pairs: DataFrame, classes: DataFrame, key: str,
+                    same: str) -> DataFrame:
+    """Doc pairs (a, b, metric) from class pairs — the expansion step
+    of both collapsed near-dup searches (output-sized, pure joins and
+    projections).  ``classes`` is (doc_id, ``key``), ``pairs`` is
+    (a, b, metric) over ``key`` values: every (x in class a, y in class
+    b) inherits its class pair's metric, and each class of m > 1
+    members contributes its own m·(m-1)/2 pairs at the SQL value
+    ``same``."""
+    metric = pairs.columns[2]
     cross = (
-        rep_pairs
-        .join(classes.selectExpr("doc_id as x", "rep as a"), "a")
-        .join(classes.selectExpr("doc_id as y", "rep as b"), "b")
-        .selectExpr("least(x, y) as a", "greatest(x, y) as b", "jaccard")
+        pairs
+        .join(classes.selectExpr("doc_id as x", f"{key} as a"), "a")
+        .join(classes.selectExpr("doc_id as y", f"{key} as b"), "b")
+        .selectExpr("least(x, y) as a", "greatest(x, y) as b", metric)
     )
     within = (
-        classes.alias("l").join(classes.alias("r"), "rep")
+        classes.alias("l").join(classes.alias("r"), key)
         .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .selectExpr("l.doc_id as a", "r.doc_id as b",
-                    "cast(1.0 as double) as jaccard")
+        .selectExpr("l.doc_id as a", "r.doc_id as b", f"{same} as {metric}")
     )
     return cross.unionAll(within)
 
@@ -502,69 +507,58 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     (doc, token) weight groupBy plus the per-doc sum groupBy: ~7.6M
     narrow rows each at sf1) and computed one JVM md5 per distinct
     (doc, token) pair.  The kernel batches the bit-sign sums through
-    numpy (one reduceat over the whole Arrow batch) and memoizes
-    token → hash per batch (Zipf: a batch's vocabulary is ~10× smaller
-    than its token stream).  Bit-exact vs the SQL form: the hash is
-    the same H() (first 15 md5 hex digits as int), weights are exact
-    counts, sums are integers, and ``bit set ⇔ sum > 0`` — pinned by
+    numpy (one reduceat over the distinct texts of an Arrow batch,
+    ``util.per_distinct``) and memoizes token → hash per batch (Zipf: a
+    batch's vocabulary is ~10× smaller than its token stream).
+    Bit-exact vs the SQL form: the hash is the same H() (first 15 md5
+    hex digits as int), weights are exact counts, sums are integers,
+    and ``bit set ⇔ sum > 0`` — pinned by
     ``test_simhash_matches_sql_form``."""
-    bit_count = bits
+    mask = (1 << bits) - 1
 
     def run(batches, out):
-        from hashlib import md5
-
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        shifts = np.arange(bit_count, dtype=np.uint64)
-        mask = (1 << bit_count) - 1
+        shifts = np.arange(bits, dtype=np.uint64)
         for batch in batches:
             # SQL twin: explode(split(null)) emits no token rows, so a
             # doc with null text is absent from the aggregate
             batch = batch.filter(pc.is_valid(batch.column("text")))
-            hmemo: dict = {}
-            tmemo: dict = {}      # text -> distinct index (round-6
-            uidxs = []            # batch-local exact-dup memo: equal
-            hs, ws, offs = [], [], []  # texts share the fingerprint)
-            for text in batch.column("text").to_pylist():
-                u = tmemo.get(text)
-                if u is None:
-                    cnt: dict = {}
-                    for t in text.split(" "):
-                        cnt[t] = cnt.get(t, 0) + 1
-                    offs.append(len(hs))
-                    for t, w in cnt.items():
-                        h = hmemo.get(t)
-                        if h is None:
-                            h = int(md5(t.encode()).hexdigest()[:15],
-                                    16) & mask
-                            hmemo[t] = h
-                        hs.append(h)
-                        ws.append(w)
-                    u = len(tmemo)
-                    tmemo[text] = u
-                uidxs.append(u)
-            # rows × bits sign contributions, summed per DISTINCT text
-            # in one reduceat; rows are grouped per text by
-            # construction and every text has >= 1 row (split(' ') of
-            # non-null text is never empty), so every slice is
-            # non-empty; docs then index their text's fingerprint
+            hmemo: dict = {}      # token -> hash, per batch
+
+            def weighted(key):
+                """(token hashes, token counts) of one distinct text."""
+                cnt = Counter(key[0].split(" "))
+                hs = []
+                for t in cnt:
+                    h = hmemo.get(t)
+                    if h is None:
+                        h = hmemo[t] = _h60(t) & mask
+                    hs.append(h)
+                return hs, list(cnt.values())
+
+            u, take = per_distinct([batch.column("text")], weighted)
+            # tokens × bits sign contributions, summed per DISTINCT text
+            # in one reduceat; split(' ') of a non-null text is never
+            # empty, so every slice is non-empty
             sim = np.zeros(0, dtype=np.int64)
-            if offs:
-                h_arr = np.array(hs, dtype=np.uint64)
-                w_arr = np.array(ws, dtype=np.int64)
+            if u:
+                n = np.array([len(hs) for hs, _ in u], dtype=np.int64)
+                h_arr = np.fromiter(chain.from_iterable(hs for hs, _ in u),
+                                    np.uint64, n.sum())
+                w_arr = np.fromiter(chain.from_iterable(ws for _, ws in u),
+                                    np.int64, n.sum())
                 bits_m = ((h_arr[:, None] >> shifts) & np.uint64(1)
                           ).astype(np.int64)
                 contrib = (2 * bits_m - 1) * w_arr[:, None]
-                sums = np.add.reduceat(
-                    contrib, np.array(offs, dtype=np.int64), axis=0)
+                sums = np.add.reduceat(contrib, np.cumsum(n) - n, axis=0)
                 sim = ((sums > 0).astype(np.uint64)
                        << shifts[None, :]).sum(axis=1).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [_cast(batch.column("doc_id"), pa.int64()),
-                 pa.array(sim[np.array(uidxs, dtype=np.int64)])],
-                schema=out)
+                 _onto_rows(sim, take, pa.int64())], schema=out)
 
     return map_in_arrow(docs.select("doc_id", "text"), run,
                         "doc_id bigint, simhash bigint")
@@ -716,27 +710,24 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
     offs = [sum(widths[:i]) for i in range(g)]
     exact_entries, probe_entries = [], []
     for h, (w, o) in enumerate(zip(widths, offs)):
-        mask = (1 << w) - 1
-        key = f"(shiftright(simhash, {o}) & {mask})"
+        key = f"(shiftright(simhash, {o}) & {(1 << w) - 1})"
         exact_entries.append(f"struct({h} as h, {key} as key)")
-        probe_entries.append(
-            f"struct({h} as h, {key} as key)")
+        probe_entries.append(exact_entries[-1])
         probe_entries.extend(
             f"struct({h} as h, ({key} ^ {1 << b}) as key)"
             for b in range(w))
-    exact = vals.selectExpr(
-        "simhash",
-        f"explode(array({', '.join(exact_entries)})) as e"
-    ).selectExpr("simhash", "e.h as h", "e.key as key")
-    probe = vals.selectExpr(
-        "simhash",
-        f"explode(array({', '.join(probe_entries)})) as e"
-    ).selectExpr("simhash", "e.h as h", "e.key as key")
+
+    def index(entries):     # (simhash, h, key): one row per entry
+        return vals.selectExpr(
+            "simhash", f"explode(array({', '.join(entries)})) as e"
+        ).selectExpr("simhash", "e.h as h", "e.key as key")
+
+    exact, probe = index(exact_entries), index(probe_entries)
     vpairs = (
         probe.alias("l").join(exact.alias("r"), ["h", "key"])
         .filter(F.col("l.simhash") < F.col("r.simhash"))
-        .select(F.col("l.simhash").alias("va"),
-                F.col("r.simhash").alias("vb"),
+        .select(F.col("l.simhash").alias("a"),
+                F.col("r.simhash").alias("b"),
                 F.expr("cast(bit_count(l.simhash ^ r.simhash) as bigint)")
                 .alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
@@ -744,16 +735,5 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
     )
     # materialized: the candidate stage (the expensive one) must run
     # exactly once and hand AQE its true size before the expansion joins
-    vpairs = _materialize(vpairs)
-    cross = (
-        vpairs.join(sh.selectExpr("doc_id as x", "simhash as va"), "va")
-        .join(sh.selectExpr("doc_id as y", "simhash as vb"), "vb")
-        .selectExpr("least(x, y) as a", "greatest(x, y) as b", "hamming")
-    )
-    within = (
-        sh.alias("l").join(sh.alias("r"), "simhash")
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .selectExpr("l.doc_id as a", "r.doc_id as b",
-                    "cast(0 as bigint) as hamming")
-    )
-    return cross.unionAll(within)
+    return _expand_classes(_materialize(vpairs), sh, "simhash",
+                           "cast(0 as bigint)")

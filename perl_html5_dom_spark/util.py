@@ -10,15 +10,16 @@ the analog of the reference's single Perl↔C binding layer (DOM.xs):
 one ``mapInArrow`` pass whose batches cross the JVM→Python boundary
 as Arrow record batches, so batch, null, memo and containment policy
 live here once and every operator keeps only its body.  The two
-MinHash/SimHash signature kernels of ``operators/dedup.py`` keep their
-own batch function: their numpy step runs once per batch across all
-distinct texts (``reduceat``), which a per-row body cannot express.
-They, and the runner, reach Spark through :func:`map_in_arrow`, the
-package's one call of ``DataFrame.mapInArrow``.  The SQL-callable
-scalar functions (the ``css_*`` family of ``functions/register.py``,
-the NFC step of ``textstats.normalize_text``) are Arrow UDFs made by
-:func:`scalar_udf`, the package's one ``arrow_udf``.  The runner and
-the UDFs share one per-batch core, :func:`per_distinct`.
+MinHash/SimHash signature kernels of ``operators/dedup.py`` keep only
+their numpy step, which runs once per batch across all distinct texts
+(``reduceat``) and which a per-row body cannot express.  They, and the
+runner, reach Spark through :func:`map_in_arrow`, the package's one
+call of ``DataFrame.mapInArrow``.  The SQL-callable scalar functions
+(the ``css_*`` family of ``functions/register.py``, the NFC step of
+``textstats.normalize_text``) are Arrow UDFs made by
+:func:`scalar_udf`, the package's one ``arrow_udf``.  The runner, the
+UDFs and the two signature kernels share one per-batch core,
+:func:`per_distinct`, the package's only ``to_pylist``.
 
   * **per distinct document, not per row** — web corpora carry 30-50%
     byte-identical pages (mirrors, re-crawls, session urls) and every
@@ -32,8 +33,8 @@ the UDFs share one per-batch core, :func:`per_distinct`.
     passes through pandas.  The memo dies with the batch (bounded
     memory: at most one batch of results); on an all-distinct input
     the ``take`` is skipped.  Each caller keeps its own null policy
-    (the runner: below; a :func:`scalar_udf`: a NULL first argument
-    gives NULL);
+    (the runner: below; a :func:`scalar_udf`: any NULL argument gives
+    NULL; the signature kernels: as their SQL twins);
   * **keys** — the ``keys`` columns are copied from the input batch onto
     every output row as Arrow arrays (per match: taken once per
     match), never through the memo, so two rows sharing a payload keep
@@ -215,15 +216,15 @@ def scalar_udf(fn: Callable, return_type: str):
     first runs :func:`_task_setup`; the distinct results become one
     Arrow array of ``return_type`` taken onto the rows.  The DDL
     ``return_type`` is parsed here, by the driver's JVM, so a session
-    must be active.  ``fn`` gets Python values; a NULL first argument
-    (the document) gives NULL without calling ``fn``, and a NULL in a
-    later one reaches ``fn`` as ``None``."""
+    must be active.  ``fn`` gets Python values, none of them ``None``:
+    any NULL argument gives NULL without calling ``fn`` (SQL's rule for
+    strict functions)."""
     t = to_arrow_type(_parse_datatype_string(return_type))
 
     def run(*columns):
         _task_setup()
         results, take = per_distinct(columns, lambda key: (
-            None if key[0] is None else fn(*key)))
+            None if None in key else fn(*key)))
         return _onto_rows(results, take, t)
 
     return arrow_udf(run, return_type)

@@ -16,7 +16,8 @@ compared with outputs recorded from the ``mapInPandas`` runner this
 one replaced, and the ``css_*`` SQL functions' edge cases (NULL html,
 selector and attribute name, an invalid selector, string and binary
 html, duplicates across several Arrow batches) with outputs recorded
-from the pandas UDFs that ``util.scalar_udf`` replaced.  The per-batch
+from the pandas UDFs that ``util.scalar_udf`` replaced, except that a
+NULL selector now gives NULL from ``css_count`` too.  The per-batch
 core they share, ``util.per_distinct``, is tested in-process.
 """
 
@@ -284,16 +285,17 @@ _SQL_P = ('<title>T</title><p class="a">x <b>y</b></p>'
           '<a href="/u" id="k">l</a>')
 _SQL_Q = "<body><div><p>one</p><p>two</p></div></body>"
 _SQL_R = '<p>r</p><a name="n">m</a><a href="/v">w</a>'
+_SQL_N = "<none>x</none><p>y</p>"
 #: html → recorded (css_inner_text, css_main_text)
 _SQL_TEXTS = {None: (None, None), _SQL_P: ("x y\n\nl", "x y"),
               _SQL_Q: ("one\n\ntwo\n\n", "one\n\ntwo"),
-              _SQL_R: ("r\n\nmw", "r")}
+              _SQL_R: ("r\n\nmw", "r"), _SQL_N: ("x\ny\n\n", "y")}
 _LINK_P = ("l", 1, '<a href="/u" id="k">l</a>')
 _SQL_CASES = [
     # id, html, selector, attribute name, then the recorded css_text,
     # css_count, css_html and css_attr
     (0, None, "p", "href", None, None, None, None),
-    (1, _SQL_P, None, "href", None, 0, None, None),    # NULL selector
+    (1, _SQL_P, None, "href", None, None, None, None),  # NULL selector
     (2, _SQL_P, "a", None, *_LINK_P, None),            # NULL name
     (3, _SQL_P, "p[", "href", None, 0, None, None),    # invalid selector
     (4, _SQL_P, "a", "href", *_LINK_P, "/u"),
@@ -304,20 +306,23 @@ _SQL_CASES = [
     (9, _SQL_Q, "p", "id", "one", 2, "<p>one</p>", None),
     (10, _SQL_P, "a", "href", *_LINK_P, "/u"),
     (11, _SQL_R, "a[href]", "href", "w", 1, '<a href="/v">w</a>', "/v"),
-    (12, _SQL_P, None, "href", None, 0, None, None),
+    (12, _SQL_P, None, "href", None, None, None, None),
     (13, _SQL_R, "a", "href", "m", 2, '<a name="n">m</a>', None),
     (14, _SQL_Q, "div > p:nth-child(2)", "x", "two", 1, "<p>two</p>", None),
     (15, _SQL_P, "p[", "href", None, 0, None, None),
     (16, _SQL_P, "a", None, *_LINK_P, None),
     (17, _SQL_Q, "p", "id", "one", 2, "<p>one</p>", None),
+    # a NULL selector is NULL, not the selector text "None"
+    (18, _SQL_N, None, "href", None, None, None, None),
 ]
 
 
 @pytest.mark.parametrize("kind", ["string", "binary"])
 def test_sql_functions_match_recorded(spark, kind):
-    """Three rows per Arrow batch over one partition: six batches, with
-    duplicates inside one batch (rows 4 and 6) and across batches, and
-    all-distinct batches."""
+    """Three rows per Arrow batch over one partition: seven batches,
+    with duplicates inside one batch (rows 4 and 6) and across batches,
+    and all-distinct batches.  Any NULL argument gives NULL (rows 1, 12
+    and 18: the recorded ``css_count`` of a NULL selector was 0)."""
     from perl_html5_dom_spark.functions.register import register_all
 
     register_all(spark)

@@ -605,10 +605,42 @@ def test_runner_keys_stay_aligned_with_memo(spark):
         assert rep[d].top2_frac == 0.0 and rep[d].keep_rep
 
 
-def test_simhash_matches_sql_form(spark, corpus):
+@pytest.fixture(params=[None, 3], ids=["default_batch", "batch3"])
+def arrow_batch(spark, request):
+    """Arrow batches of Spark's default size, or of 3 rows, for the
+    kernels' per-batch memo; the setting is restored afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    if request.param is not None:
+        spark.conf.set(key, str(request.param))
+    yield request.param
+    spark.conf.set(key, before)
+
+
+def _edge_frame(spark, texts, first_id):
+    """``texts`` as (doc_id, text) rows of ONE partition, in order, so a
+    batch of 3 rows holds texts[0:3], the next texts[3:6], ..."""
+    return spark.createDataFrame(
+        list(enumerate(texts, first_id)),
+        "doc_id long, text string").coalesce(1)
+
+
+def _edge_texts(short, mid, long_):
+    """Edge texts in batches of 3: all distinct, a null first (no
+    take); one text twice around a null; that text again, across
+    batches, plus a pair; all distinct, none null; all null."""
+    return [None, "", short,
+            mid, None, mid,
+            mid, long_, long_,
+            short, "p q r s", "",
+            None, None, None]
+
+
+def test_simhash_matches_sql_form(spark, corpus, arrow_batch):
     """Round-6: the zero-shuffle numpy simhash kernel must be
     BIT-identical to the declarative two-groupBy SQL form it replaced
-    (kept here as the twin)."""
+    (kept here as the twin), in one batch and in batches of 3 rows
+    (``_edge_texts``)."""
     from pyspark.sql import functions as F
 
     from perl_html5_dom_spark.operators import dedup as dd
@@ -632,10 +664,8 @@ def test_simhash_matches_sql_form(spark, corpus):
         return (hashed.groupBy("doc_id").agg(*bit_sums)
                 .selectExpr("doc_id", f"{pieces} as simhash"))
 
-    edge = spark.createDataFrame(
-        [(9200001, ""), (9200002, "one"), (9200003, None),
-         (9200004, "a a a b  b"), (9200005, "x " * 50)],
-        "doc_id long, text string")
+    edge = _edge_frame(
+        spark, _edge_texts("one", "a a a b  b", "x " * 50), 9200001)
     sample = corpus.limit(80).unionAll(edge)
     want = {r.doc_id: r.simhash for r in sql_impl(sample).collect()}
     got = {r.doc_id: r.simhash
@@ -657,17 +687,17 @@ def _minhash_wide(hashed, num_perm=16):
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def test_minhash_wide_sets_match_sql(spark, corpus):
+def test_minhash_wide_sets_match_sql(spark, corpus, arrow_batch):
     """Round-6: the per-doc minhash kernel (_doc_minhash_sets) must be
     BIT-identical to the declarative shingle-explode + wide-aggregate
     + collect_set form it replaced (``_minhash_wide`` + collect_set,
-    kept here as the twin)."""
+    kept here as the twin), in one batch and in batches of 3 rows
+    (``_edge_texts``)."""
     from perl_html5_dom_spark.operators import dedup as dd
 
-    edge = spark.createDataFrame(
-        [(9300001, ""), (9300002, "one two"), (9300003, None),
-         (9300004, "a b c d e f g"), (9300005, "x y x y x y")],
-        "doc_id long, text string")
+    edge = _edge_frame(
+        spark, _edge_texts("one two", "a b c d e f g", "x y x y x y"),
+        9300001)
     sample = corpus.limit(80).unionAll(edge)
 
     sh = dd._shingles(sample, 3).selectExpr(

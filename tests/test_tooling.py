@@ -11,7 +11,10 @@ The package itself is checked to keep one entry per Spark batch API:
 only ``util.map_in_arrow`` calls ``mapInArrow``, only
 ``util.scalar_udf`` calls ``arrow_udf``, and nothing uses
 ``mapInPandas`` or ``pandas_udf``, so every task of every kernel and
-every batch of every SQL function gets the same per-task setup.
+every batch of every SQL function gets the same per-task setup.  And
+one per-batch core: only ``util.per_distinct`` calls ``to_pylist``, and
+its callers are the runner, the UDF entry and the two dedup signature
+kernels, so every Python batch meets its distinct-payload memo.
 """
 
 import ast
@@ -95,8 +98,14 @@ def test_dangling_reference_is_caught(tmp_path):
 
 
 #: the only function allowed to call ``mapInArrow``: the entry that the
-#: per-row runner and the two batch-wide dedup kernels go through
+#: per-row runner and the two dedup signature kernels go through (all
+#: three on ``util.per_distinct``, pinned below)
 MAP_IN_ARROW_CALLERS = {"util.map_in_arrow"}
+
+#: the callers of the one per-batch core, ``util.per_distinct``
+PER_DISTINCT_CALLERS = ["operators.dedup._doc_minhash_sets",
+                        "operators.dedup.simhash",
+                        "util.map_documents", "util.scalar_udf"]
 
 
 def _map_callers(pkg: Path, name: str) -> list[str]:
@@ -123,13 +132,17 @@ def _map_callers(pkg: Path, name: str) -> list[str]:
 
 def test_one_per_row_runner():
     """One ``mapInArrow`` entry and one ``arrow_udf`` entry, both in
-    ``util`` and both running the per-task setup; no pandas batch API."""
+    ``util`` and both running the per-task setup; no pandas batch API;
+    and one per-batch core: every Python batch becomes Python values in
+    ``util.per_distinct`` only, and each caller calls it once."""
     pkg = ROOT / PKG
     assert sorted(_map_callers(pkg, "mapInArrow")) == sorted(
         MAP_IN_ARROW_CALLERS)
     assert _map_callers(pkg, "arrow_udf") == ["util.scalar_udf"]
     assert _map_callers(pkg, "mapInPandas") == []
     assert _map_callers(pkg, "pandas_udf") == []
+    assert _map_callers(pkg, "to_pylist") == ["util.per_distinct"]
+    assert sorted(_map_callers(pkg, "per_distinct")) == PER_DISTINCT_CALLERS
 
 
 def test_map_caller_is_caught(tmp_path):
@@ -147,8 +160,11 @@ def test_map_caller_is_caught(tmp_path):
         "        return s\n"
         "@pandas_udf\n"
         "def top(s):\n"
-        "    return s\n")
+        "    return s\n"
+        "def memo(batch):\n"
+        "    return batch.column('x').to_pylist()\n")
     assert _map_callers(tmp_path, "mapInArrow") == ["ops.k.kernel"]
     assert _map_callers(tmp_path, "mapInPandas") == ["ops.k.<module>"]
     assert sorted(_map_callers(tmp_path, "pandas_udf")) == [
         "ops.k.<module>", "ops.k.top", "ops.k.udfs", "ops.k.udfs"]
+    assert _map_callers(tmp_path, "to_pylist") == ["ops.k.memo"]
