@@ -300,15 +300,14 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
     Hash semantics are engine-mirrored: both sides take distinct
     shingle STRINGS per doc, then operate purely on H(shingle), so the
     DuckDB oracle reproduces counts bit-for-bit."""
-    tcol = "text" if "text" in docs.columns else docs.columns[-1]
     if collapse_exact is None:
         n, nd = docs.agg(
-            F.count("*"), F.approx_count_distinct(tcol)).first()
+            F.count("*"), F.approx_count_distinct("text")).first()
         collapse_exact = nd < 0.8 * n
     classes = None
     if collapse_exact:
         classes = _materialize(  # (doc_id, rep); rep == class min doc_id
-            docs.selectExpr("doc_id", f"md5({tcol}) as tkey")
+            docs.selectExpr("doc_id", "md5(text) as tkey")
             .withColumn("rep",
                         F.min("doc_id").over(Window.partitionBy("tkey")))
             .select("doc_id", "rep"))

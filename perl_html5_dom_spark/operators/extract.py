@@ -245,6 +245,9 @@ _EMPTY_ROW = {
     "text_content": "", "n_nodes": 0, "n_elements": 0, "spans": [],
 }
 
+#: the ``title`` field's selector, parsed once per process
+_TITLE = matcher.compile_selector("title")
+
 
 def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
     """Per-document kernel; computes ONLY the requested fields — the
@@ -256,7 +259,7 @@ def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
     if "encoding" in fields:
         out["encoding"] = doc.encoding
     if "title" in fields:
-        nid = matcher.at(doc, "title")
+        nid = matcher.at(doc, _TITLE)
         out["title"] = serializer.text_content(doc, nid) if nid != -1 else ""
     body = doc.body_node if doc.body_node != -1 else doc.root
     # one body render: main_text takes its paragraphs from it

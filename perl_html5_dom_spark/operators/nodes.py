@@ -58,9 +58,10 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
     keep = {c: t for c, t in _TYPES.items()
             if c != "url" and (columns is None or c in columns)}
 
-    def one_doc(html) -> tuple[int, dict[str, list]]:
-        """Per-document column lists (everything except url); the
-        runner's memo replays them for byte-identical documents."""
+    def one_doc(html) -> dict[str, list]:
+        """Per-document column lists, one value per node (everything
+        except url); the runner's memo replays them for byte-identical
+        documents and flattens them onto one row per node."""
         doc = parse_document(html)
         order, pos, end = doc.preorder()
         if elements_only:
@@ -108,7 +109,7 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
             if c in keep:
                 arr = walk[c] if c in walk else getattr(doc, c)
                 d[c] = [arr[n] for n in nids]
-        return len(nids), d
+        return d
 
     return map_documents(df, ("url",), "html", one_doc, keep)
 

@@ -17,7 +17,10 @@ selector:
    comma lists) is evaluated by the full matcher as the body of the
    shared document runner (``util.map_documents``) over ``(url,
    html)``, compiled once on the driver and shipped in the closure
-   (reference precompiled selectors, DOM.pod:2544-2551).
+   (reference precompiled selectors, DOM.pod:2544-2551).  One match
+   kernel, :func:`_matches`, serves ``css_find``/``css_at`` and
+   ``css_extract_multi``: it returns one list per column, of one value
+   per match, which the runner flattens onto one row per match.
 
 Both return the same shape: ``(url, node_id, ord, tag, begin, length)``
 — matched node handles + open-tag source spans, document order via
@@ -34,9 +37,11 @@ from ..selector.parser import parse_selector
 from ..util import map_documents
 from .extract import parse_document
 
-MATCH_COLUMNS = {
-    "node_id": "bigint", "ord": "bigint", "tag": "string",
-    "begin": "bigint", "length": "bigint",
+#: css_find's per-match handle columns: (Spark type, (doc, node) → value)
+_HANDLES = {
+    "tag": ("string", lambda doc, n: doc.tag[n]),
+    "begin": ("bigint", lambda doc, n: doc.elem_begin[n]),
+    "length": ("bigint", lambda doc, n: doc.elem_length[n]),
 }
 
 
@@ -122,25 +127,32 @@ def css_find_nodes(nodes_df, selector: str):
 # Strategy 2: full matcher kernel
 # ---------------------------------------------------------------------------
 
-def css_find(df, selector: str, first: bool = False):
-    """DataFrame(url, html) → matches via the full CSS L4 matcher.
-
-    ``first=True`` is ``at()`` — early exit per document inside the
-    kernel (reference utils.c:248-254)."""
+def _matches(df, selector: str, columns: dict, first: bool = False):
+    """DataFrame(url, html) → (url, node_id, ord, *columns): one row per
+    node the full CSS L4 matcher matches, in document order, from one
+    parse per document.  ``columns`` maps each further column to
+    ``(Spark type, (doc, node) → value)``."""
     compiled = matcher.compile_selector(selector)
 
     def body(html):
         doc = parse_document(html)
         nids = matcher.find(doc, compiled, first=first)
-        pos, tag = doc.preorder()[1], doc.tag
-        begin, length = doc.elem_begin, doc.elem_length
-        return len(nids), {
-            "node_id": nids, "ord": [pos[n] for n in nids],
-            "tag": [tag[n] for n in nids],
-            "begin": [begin[n] for n in nids],
-            "length": [length[n] for n in nids]}
+        pos = doc.preorder()[1]
+        return {"node_id": nids, "ord": [pos[n] for n in nids],
+                **{c: [value(doc, n) for n in nids]
+                   for c, (_, value) in columns.items()}}
 
-    return map_documents(df, ("url",), "html", body, MATCH_COLUMNS)
+    return map_documents(df, ("url",), "html", body, {
+        "node_id": "bigint", "ord": "bigint",
+        **{c: t for c, (t, _) in columns.items()}})
+
+
+def css_find(df, selector: str, first: bool = False):
+    """DataFrame(url, html) → matches via the full CSS L4 matcher.
+
+    ``first=True`` is ``at()`` — early exit per document inside the
+    kernel (reference utils.c:248-254)."""
+    return _matches(df, selector, _HANDLES, first)
 
 
 def css_at(df, selector: str):
@@ -172,29 +184,16 @@ def css_extract_multi(df, selector: str, whats: tuple = ("text",)):
     sinks of the reference (Collection.pm:117-131).  Returns (url,
     node_id, ord, <one column per sink>); ``attr:name`` sinks become
     ``attr_name`` columns."""
-    compiled = matcher.compile_selector(selector)
-    sinks = []
+    sinks = {}
     for w in whats:
         if w.startswith("attr:"):
-            sinks.append(("attr_" + w[5:].replace(":", "_"),
-                          _attr_sink(w[5:])))
+            sinks["attr_" + w[5:].replace(":", "_")] = (
+                "string", _attr_sink(w[5:]))
         elif w in _SINKS:
-            sinks.append((w, _SINKS[w]))
+            sinks[w] = ("string", _SINKS[w])
         else:
             raise ValueError(w)
-
-    def body(html):
-        doc = parse_document(html)
-        nids = matcher.find(doc, compiled)
-        pos = doc.preorder()[1]
-        cols = {"node_id": nids, "ord": [pos[n] for n in nids]}
-        for name, sink in sinks:
-            cols[name] = [sink(doc, n) for n in nids]
-        return len(nids), cols
-
-    return map_documents(df, ("url",), "html", body, {
-        "node_id": "bigint", "ord": "bigint",
-        **{name: "string" for name, _ in sinks}})
+    return _matches(df, selector, sinks)
 
 
 def css_extract(df, selector: str, what: str = "text"):

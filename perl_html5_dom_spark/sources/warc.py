@@ -18,8 +18,9 @@ one record independently.  This module implements:
 
 Every Spark decoder here (the WARC/WET sources, the CDX index and the
 in-flight round trips) is a per-file or per-page body of the shared
-runner (``util.map_documents``): a file body returns its records as
-per-match rows, a round trip returns one row per page.
+runner (``util.map_documents``): a file body returns one list per
+column, of one value per record, which the runner flattens onto one
+row per record; a round trip returns one row per page.
 
 Scale note: one WARC file = one task.  Common Crawl segments a crawl
 into ~64k files of ~1 GB per dump, so a 1000-executor cluster gets its
@@ -322,8 +323,8 @@ def cdx_index_df(spark, path: str):
     def body(path, content):
         es = list(iter_cdx_entries(content))
         base = _os.path.basename(str(path))
-        return len(es), {"file": [base] * len(es),
-                         **{k: [e[k] for e in es] for k in _CDX_COLS}}
+        return {"file": [base] * len(es),
+                **{k: [e[k] for e in es] for k in _CDX_COLS}}
 
     files = spark.read.format("binaryFile").load(path)
     return map_documents(files, (), ("path", "content"), body,
@@ -387,9 +388,9 @@ def _records_df(files, warc_type: str):
     def body(content):
         recs = [r for r in iter_warc_records(content)
                 if r["warc_type"] == warc_type]
-        return len(recs), {"url": [r["target_uri"] for r in recs],
-                           "warc_ts": [r["date"] for r in recs],
-                           col: [value(r) for r in recs]}
+        return {"url": [r["target_uri"] for r in recs],
+                "warc_ts": [r["date"] for r in recs],
+                col: [value(r) for r in recs]}
 
     return map_documents(
         files, (), "content", body,

@@ -30,7 +30,10 @@ UDFs and the two signature kernels share one per-batch core,
     output column is built once, as one Arrow array over the distinct
     results, and copied onto the rows with Arrow ``take``.  So a memo
     hit costs one probe and no Python per output value, and no column
-    passes through pandas.  The memo dies with the batch (bounded
+    passes through pandas.  A per-match operator's column is one Arrow
+    list per distinct result, and Arrow turns the taken lists into one
+    row per match (``list_parent_indices``, ``flatten``), so the runner
+    has one result shape.  The memo dies with the batch (bounded
     memory: at most one batch of results); on an all-distinct input
     the ``take`` is skipped.  Each caller keeps its own null policy
     (the runner: below; a :func:`scalar_udf`: any NULL argument gives
@@ -249,20 +252,22 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
     * per-document operators pass ``empty_row`` (column → value, the row
       a null or failed payload emits) and ``body`` returns one such
       mapping;
-    * per-match operators pass no ``empty_row`` and ``body`` returns
-      ``(n, {column: list of n values})``; a null or failed payload
-      emits no rows.
+    * per-match operators pass no ``empty_row`` and ``body`` returns a
+      mapping of each column to the list of the document's matches; a
+      null or failed payload emits no rows.
 
     Each output column is one Arrow array over the batch's distinct
-    results, taken onto the rows (per match: the row-level indices come
-    from numpy ``repeat``/``cumsum``); keys are the input arrays, taken
-    the same way per match.  Policy: see the module docstring."""
+    results, taken onto the rows; keys are the input arrays.  Per match
+    the array is of lists, and the taken lists become one row per match
+    (``flatten``) with the keys taken by ``list_parent_indices``.
+    Policy: see the module docstring."""
     keys = tuple(keys)
     payload = (payload,) if isinstance(payload, str) else tuple(payload)
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     schema = ", ".join([f"{k} {types[k]}" for k in keys]
                        + [f"{c} {t}" for c, t in columns.items()])
-    empty = (empty_row if empty_row is not None else (0, {}), None)
+    per_match = empty_row is None
+    empty = (dict.fromkeys(columns, ()) if per_match else empty_row, None)
 
     def one(data):
         if None in data:
@@ -280,37 +285,26 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
             return empty[0], (f"{err}; {msg}" if err else msg)
 
     def run(batches: Iterable, out) -> Iterator:
-        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
+        types = [pa.list_(out.field(c).type) if per_match
+                 else out.field(c).type for c in columns]
         for batch in batches:
             # (body result, err) per distinct payload
             results, take = per_distinct(
                 [batch.column(p) for p in payload], one)
             arrays = [_cast(batch.column(k), out.field(k).type)
                       for k in keys]
-            if empty_row is not None:
-                arrays += [_onto_rows([e for _, e in results] if c == "err"
-                                      else [r[c] for r, _ in results],
-                                      take, out.field(c).type)
-                           for c in columns]
-            else:
-                # output row j of input row i is row start[idx[i]] + j
-                # of the distinct results' flattened matches
-                n = np.array([r[0] for r, _ in results], np.int64)
-                idx = np.arange(len(n)) if take is None else take.to_numpy()
-                per_row = n[idx]
-                start = np.cumsum(n) - n
-                flat = np.repeat(start[idx] - np.cumsum(per_row) + per_row,
-                                 per_row) + np.arange(per_row.sum())
-                rows = np.repeat(np.arange(len(idx)), per_row)
+            cols = [_onto_rows([e for _, e in results] if c == "err"
+                               else [r[c] for r, _ in results], take, t)
+                    for c, t in zip(columns, types)]
+            if per_match:
+                # one output row per match, keyed by its input row
+                rows = pc.list_parent_indices(cols[0])
                 arrays = [a.take(rows) for a in arrays]
-                arrays += [_onto_rows([v for (m, d), _ in results if m
-                                       for v in d[c]],
-                                      None if take is None else flat,
-                                      out.field(c).type)
-                           for c in columns]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out)
+                cols = [c.flatten() for c in cols]
+            yield pa.RecordBatch.from_arrays(arrays + cols, schema=out)
 
     return map_in_arrow(df.select(*dict.fromkeys(keys + payload)), run,
                         schema)

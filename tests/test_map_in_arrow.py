@@ -348,7 +348,7 @@ def test_sql_functions_match_recorded(spark, kind):
 
 
 # ---------------------------------------------------------------------------
-# runner edge cases, against outputs of the mapInPandas runner
+# runner edge cases, against outputs recorded from earlier runners
 # ---------------------------------------------------------------------------
 
 _HTML = "url string, html binary"
@@ -427,6 +427,23 @@ def _edge_case(spark, name):
              for m in {"A": [(4, 4, "p", 0, 3), (7, 7, "p", 15, 3)],
                        "C": [(4, 4, "p", 0, 3), (6, 6, "p", 8, 3),
                              (9, 9, "p", 25, 3)]}[ms]]),
+        "per_match_all_distinct": lambda: (
+            so.css_find(frame([("u0", _A), ("u1", _B), ("u2", _C)]), "p"),
+            _FIND_SCHEMA,
+            [("u0", 4, 4, "p", 0, 3), ("u0", 7, 7, "p", 15, 3),
+             ("u2", 4, 4, "p", 0, 3), ("u2", 6, 6, "p", 8, 3),
+             ("u2", 9, 9, "p", 25, 3)]),
+        "per_match_no_keys": lambda: (
+            map_documents(
+                frame([("a bb",), (None,), ("ccc",), ("a bb",), ("",),
+                       (None,), ("ccc",)], "text string"),
+                (), "text",
+                lambda text: {"word": (w := text.split()),
+                              "n": [len(x) for x in w]},
+                {"word": "string", "n": "bigint"}),
+            "struct<word:string,n:bigint>",
+            [("a", 1), ("bb", 2), ("ccc", 3), ("a", 1), ("bb", 2),
+             ("ccc", 3)]),
         "timestamp_key": lambda: (
             ts.quality_scores(frame(
                 [(1, "the cat and the dog", _T0),
@@ -449,7 +466,8 @@ def _edge_case(spark, name):
 @pytest.mark.parametrize("name", [
     "empty_batch", "empty_batch_per_match", "all_null", "all_null_per_match",
     "pair_with_null_member", "pair_with_key_in_payload",
-    "truncated_duplicates", "per_match_interleaved", "timestamp_key"])
+    "truncated_duplicates", "per_match_interleaved",
+    "per_match_all_distinct", "per_match_no_keys", "timestamp_key"])
 def test_runner_edge_case_matches_recorded(spark, name):
     """One partition, so each case is one Arrow batch and one memo."""
     df, schema, rows = _edge_case(spark, name)

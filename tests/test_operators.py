@@ -35,6 +35,47 @@ def test_minhash_is_subset_of_exact_jaccard(spark, corpus):
     assert planted <= lsh
 
 
+def _jobs_of_group(spark, group, fn):
+    """Run ``fn()`` in Spark job group ``group``; the ids of the jobs
+    it started.  A marker job run afterwards in a group of its own is
+    awaited in the status tracker first: the tracker is filled in
+    event order, so by then every job of ``group`` is in it."""
+    import time
+
+    sc, marker = spark.sparkContext, group + "_marker"
+    for name, run in ((group, fn), (marker, spark.range(1).collect)):
+        sc.setJobGroup(name, name)
+        try:
+            run()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+    deadline = time.monotonic() + 60
+    while (not sc.statusTracker().getJobIdsForGroup(marker)
+           and time.monotonic() < deadline):
+        time.sleep(0.05)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_minhash_without_text_fails_before_any_job(spark):
+    """The signature kernel reads ``text``, so a frame without it fails
+    at analysis, before the exact-dup collapse materializes its
+    classes."""
+    from pyspark.errors import AnalysisException
+
+    from perl_html5_dom_spark.operators.dedup import minhash_near_dups
+
+    df = spark.createDataFrame([(1, "a b c d"), (2, "a b c d")],
+                               "doc_id long, body string")
+
+    def call():
+        with pytest.raises(AnalysisException):
+            minhash_near_dups(df, collapse_exact=True)
+
+    assert _jobs_of_group(spark, "minhash_no_text", call) == []
+
+
 def test_simhash_identical_docs_zero_hamming(spark, corpus):
     from perl_html5_dom_spark.operators.dedup import simhash
 

@@ -1,7 +1,8 @@
 """Static checks on the package and the scripts around it.
 
-No test runs the scripts (the tools, the stage benchmark, the Spark job
-and the frozen harness entry points), so a name deleted from the
+No test runs the scripts (the tools, the frozen benchmark
+``perfbench/``, the stage benchmark, the Spark job and the frozen
+harness entry points), so a name deleted from the
 package would break them silently.  This parses each one with ``ast``
 and checks that every ``perl_html5_dom_spark`` name it imports, and
 every ``alias.attr`` it reads from an imported package module, still
@@ -26,7 +27,7 @@ import pytest
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "perl_html5_dom_spark"
 SCRIPTS = sorted(
-    [*ROOT.glob("tools/*.py")]
+    [*ROOT.glob("tools/*.py"), *ROOT.glob("perfbench/*.py")]
     + [ROOT / f for f in ("bench_extra.py", "spark_job.py", "bench.py",
                           "__spark_entry__.py")])
 
