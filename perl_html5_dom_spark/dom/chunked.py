@@ -88,11 +88,11 @@ class ChunkedParser:
         """The next token for ``TreeBuilder.pump``, or None to wait for
         more input."""
         tok = self.tb.tok
-        save = (tok.pos, tok._done, tok._raw_mode, tok._raw_tag)
+        save = (tok.pos, tok._done, tok._raw_mode, tok._raw_end)
         token = tok.next_token()
         if not self.ended and (token[0] == "eof" or tok.pos >= tok.n):
             # possibly-truncated token: hold it back until more input
-            tok.pos, tok._done, tok._raw_mode, tok._raw_tag = save
+            tok.pos, tok._done, tok._raw_mode, tok._raw_end = save
             return None
         if self._base:
             fields = _POS_FIELDS.get(token[0])

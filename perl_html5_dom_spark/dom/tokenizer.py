@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import html as _html
 import re
+from functools import lru_cache
 from html.entities import html5 as _HTML5_ENTITIES
 
 from .constants import ASCII_LOWER
@@ -193,11 +194,20 @@ def _decode_text(text: str) -> str:
 
 
 
+@lru_cache(maxsize=None)
+def _raw_end_re(tag: str) -> re.Pattern:
+    """The end tag that closes RCDATA / RAWTEXT opened by ``tag``,
+    compiled once per tag name (the tree builder passes a handful of
+    them), not once per raw-text token."""
+    return re.compile(r"</" + re.escape(tag) + r"(?=[\t\n\x0c />]|$)",
+                      re.IGNORECASE | re.ASCII)
+
+
 class Tokenizer:
     """Pull tokenizer. The tree builder calls :meth:`next_token` repeatedly
     and may call :meth:`set_rawtext` / :attr:`allow_cdata` between pulls."""
 
-    __slots__ = ("src", "pos", "n", "_raw_mode", "_raw_tag", "allow_cdata", "_done")
+    __slots__ = ("src", "pos", "n", "_raw_mode", "_raw_end", "allow_cdata", "_done")
 
     def __init__(self, src: str) -> None:
         # input-stream preprocessing: newline normalization (WHATWG §13.2.3.5)
@@ -207,14 +217,14 @@ class Tokenizer:
         self.pos = 0
         self.n = len(src)
         self._raw_mode: str | None = None  # 'rcdata'|'rawtext'|'script'|'plaintext'
-        self._raw_tag: str = ""
+        self._raw_end: re.Pattern | None = None  # RCDATA/RAWTEXT end tag
         self.allow_cdata = False
         self._done = False
 
     # -- state switches driven by the tree builder ---------------------
     def set_rawtext(self, tag: str, mode: str) -> None:
         self._raw_mode = mode
-        self._raw_tag = tag
+        self._raw_end = _raw_end_re(tag)
 
     # -- main entry -----------------------------------------------------
     def next_token(self):
@@ -283,11 +293,7 @@ class Tokenizer:
         if mode == "script":
             end = self._script_end(pos)
         else:
-            pat = re.compile(
-                r"</" + re.escape(self._raw_tag) + r"(?=[\t\n\x0c />]|$)",
-                re.IGNORECASE | re.ASCII
-            )
-            m = pat.search(src, pos)
+            m = self._raw_end.search(src, pos)
             end = None if m is None else m.start()
         if end is None:
             self._raw_mode = None

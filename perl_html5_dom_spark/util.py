@@ -19,7 +19,8 @@ call of ``DataFrame.mapInArrow``.  The SQL-callable scalar functions
 ``textstats.normalize_text``) are Arrow UDFs made by
 :func:`scalar_udf`, the package's one ``arrow_udf``.  The runner, the
 UDFs and the two signature kernels share one per-batch core,
-:func:`per_distinct`, the package's only ``to_pylist``.
+:func:`per_distinct`, the package's only ``to_pylist``, and one column
+builder, :func:`arrow_column`.
 
   * **per distinct document, not per row** — web corpora carry 30-50%
     byte-identical pages (mirrors, re-crawls, session urls) and every
@@ -38,6 +39,22 @@ UDFs and the two signature kernels share one per-batch core,
     the ``take`` is skipped.  Each caller keeps its own null policy
     (the runner: below; a :func:`scalar_udf`: any NULL argument gives
     NULL; the signature kernels: as their SQL twins);
+  * **columns from buffers** (:func:`arrow_column`) — each output
+    column, and the ``take`` index, is built with
+    ``pa.Array.from_buffers`` over ``array``-module, numpy and bytes
+    buffers and a validity bitmap, never with ``pa.array``: before it
+    converts a Python list or numpy array, ``pa.array`` asks pyarrow's
+    pandas shim whether the input is a pandas object, and the shim's
+    first call imports ``pandas`` and ``pyarrow.pandas_compat`` (pyarrow
+    16.1 ``array.pxi``, ``pandas-shim.pxi``), about 35 MB of resident
+    memory and 0.2-0.3 s of CPU in every Spark Python worker, though no
+    kernel uses pandas.  So no worker that runs only the package's
+    Arrow kernels imports pandas.  The builder covers exactly the types
+    the kernels emit and rejects any other on the driver, before a job
+    runs; there is no ``pa.array`` path to fall back on.  The shim is
+    left alone (no ``sys.modules`` entry is faked): it caches a failed
+    import, and a pandas UDF or ``applyInPandasWithState`` operator on
+    the same reused worker needs it;
   * **keys** — the ``keys`` columns are copied from the input batch onto
     every output row as Arrow arrays (per match: taken once per
     match), never through the memo, so two rows sharing a payload keep
@@ -72,19 +89,22 @@ UDFs and the two signature kernels share one per-batch core,
       ``sys.path_importer_cache`` (:func:`_drop_spark_zip_finders`).
     - PySpark's daemon runs a full ``gc.collect()`` after every task of
       a reused worker (``pyspark/daemon.py:244``), which walks every
-      tracked object that pyspark, pandas, pyarrow and this package
-      hold (about 74k, 23-27 ms a task).  So every task first calls
-      ``gc.freeze()``, which moves what is alive to the permanent
-      generation in O(1): the collection after the task walks only the
-      objects the task made.  Freezing at each task start, not once,
-      also covers the modules and caches that a worker's first tasks
-      import and fill (about 32k objects after one ``extract_pages``
-      task, 9-11 ms a collection).  It leaks nothing: at a task's start
-      the daemon has just collected, so what is alive is reachable,
-      and the package's kernels leave no cyclic garbage (none found
-      after ``extract_one``, the ``css_*`` functions, PDF extraction and
-      selector-cache evictions), so freed objects go by reference count
-      as before.
+      tracked object that pyspark, pyarrow and this package hold
+      (``gc.get_freeze_count()`` in a live worker: about 43k at its
+      first task and 47k after an ``extract_pages`` task, 11-17 ms a
+      collection in a ``local[1]`` worker on a 4-core box; 74k and
+      23-44 ms when ``pa.array`` had loaded pandas).  So every task
+      first calls ``gc.freeze()``, which moves what is alive to the
+      permanent generation in O(1): the collection after the task walks
+      only the objects the task made.  Freezing at each task start, not
+      once, also covers the modules and caches that a worker's first
+      tasks import and fill (about 4k objects after one
+      ``extract_pages`` task).  It leaks nothing: at a task's
+      start the daemon has just collected, so what is alive is
+      reachable, and the package's kernels leave no cyclic garbage
+      (none found after ``extract_one``, the ``css_*`` functions, PDF
+      extraction and selector-cache evictions), so freed objects go by
+      reference count as before.
 
     The first task of a new worker still pays for the importers; a
     reused worker does not.  Every task of :func:`map_in_arrow` and
@@ -112,8 +132,11 @@ import sys
 import tempfile
 import uuid
 import zipimport
+from array import array
+from functools import lru_cache, partial
 from typing import Callable, Iterable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
@@ -164,6 +187,127 @@ def _cast(col, t):
     return col if col.type == t else col.cast(t)
 
 
+def _offsets(values) -> array:
+    """The int32 offsets of a variable-size Arrow array over ``values``:
+    0, then the running total of their lengths (``OverflowError`` past
+    2 GiB, where ``pa.array`` would have split the column)."""
+    return array("i", [0, *itertools.accumulate(map(len, values))])
+
+
+def _varbinary(empty, values) -> tuple:
+    """``string`` (``empty`` is ``""``) or ``binary`` (``b""``): one
+    join; an all-ASCII text is its own UTF-8 (``isascii`` is O(1))."""
+    data = empty.join(values)
+    if type(data) is str:
+        if data.isascii():
+            data = data.encode()
+        else:
+            values = [v.encode() for v in values]
+            data = b"".join(values)
+    return [_offsets(values), data], None
+
+
+def _fixed(code, values) -> tuple:
+    """``bigint`` (``code`` ``"q"``) or ``int`` (``"i"``)."""
+    if isinstance(values, np.ndarray):
+        return [np.ascontiguousarray(values, code)], None
+    return [array(code, values)], None
+
+
+def _bools(values) -> tuple:
+    return [np.packbits(array("b", values), bitorder="little")], None
+
+
+def _list(item: Callable, values) -> tuple:
+    return [_offsets(values)], [item(list(itertools.chain.from_iterable(
+        values)))]
+
+
+def _map(entries: Callable, rows) -> tuple:
+    """A ``map`` is a list of ``(key, value)`` structs: its dict rows'
+    items."""
+    return [_offsets(rows)], [entries(list(itertools.chain.from_iterable(
+        map(dict.items, rows))))]
+
+
+def _struct(names: tuple, fields: list, rows) -> tuple:
+    """Rows as tuples in field order, or as dicts by field name (a
+    missing name is null)."""
+    if set(map(type, rows)) - {tuple}:
+        rows = [tuple(map(r.get, names)) if isinstance(r, dict)
+                else tuple(r) for r in rows]
+    cols = list(zip(*rows)) if rows else [()] * len(fields)
+    if len(cols) != len(fields):
+        raise ValueError(f"struct rows of {len(cols)} values, not "
+                         f"{len(fields)}")
+    return [], [f(c) for f, c in zip(fields, cols)]
+
+
+def _column(t, kernel: Callable, fill, values):
+    """One Arrow array of type ``t`` over ``values`` (a list or tuple,
+    or numpy integers with or without a mask).  ``kernel(values)`` gives
+    the buffers after the validity bitmap and the child arrays, and
+    raises ``TypeError`` on a ``None``; then the values go through it
+    once more with each ``None`` replaced by ``fill``, under a validity
+    bitmap.  So a column without nulls pays no null scan."""
+    import pyarrow as pa
+
+    valid, nulls = None, 0
+    if isinstance(values, np.ndarray):
+        valid = ~np.ma.getmaskarray(values)
+        values = np.ma.getdata(values)
+        nulls = len(values) - int(np.count_nonzero(valid))
+        buffers, children = kernel(values)
+    else:
+        try:
+            buffers, children = kernel(values)
+        except TypeError:
+            nulls = values.count(None)
+            if nulls == len(values):
+                return pa.nulls(nulls, t)
+            valid = [v is not None for v in values]
+            buffers, children = kernel(
+                [fill if v is None else v for v in values])
+    validity = np.packbits(valid, bitorder="little") if nulls else None
+    return pa.Array.from_buffers(
+        t, len(values), [None if b is None else pa.py_buffer(b)
+                         for b in (validity, *buffers)],
+        nulls, children=children)
+
+
+@lru_cache(maxsize=None)
+def arrow_column(t) -> Callable:
+    """The builder of one Arrow array of type ``t`` from Python values,
+    which takes them in the shapes ``pa.array`` takes: a list or tuple
+    (``None`` is null), struct rows as tuples or dicts, map rows as
+    dicts, or numpy integers with or without a mask.  It covers the
+    types that the package's kernels emit: ``string``, ``binary``,
+    ``bigint``, ``int``, ``boolean``, and ``list``/``struct``/``map`` of
+    these; any other raises ``TypeError`` here (no ``pa.array`` path:
+    module docstring).  Cached: one builder per column type declared."""
+    import pyarrow as pa
+
+    leaves = {pa.string(): (partial(_varbinary, ""), ""),
+              pa.binary(): (partial(_varbinary, b""), b""),
+              pa.int64(): (partial(_fixed, "q"), 0),
+              pa.int32(): (partial(_fixed, "i"), 0),
+              pa.bool_(): (_bools, False)}
+    if t in leaves:
+        kernel, fill = leaves[t]
+    elif pa.types.is_list(t):
+        kernel, fill = partial(_list, arrow_column(t.value_type)), ()
+    elif pa.types.is_map(t):
+        kernel, fill = partial(_map, arrow_column(
+            pa.struct([t.key_field, t.item_field]))), {}
+    elif pa.types.is_struct(t):
+        kernel = partial(_struct, tuple(f.name for f in t),
+                         [arrow_column(f.type) for f in t])
+        fill = (None,) * t.num_fields
+    else:
+        raise TypeError(f"no Arrow column builder for type {t}")
+    return partial(_column, t, kernel, fill)
+
+
 def per_distinct(columns, one: Callable) -> tuple:
     """``(results, take)`` over Arrow ``columns`` of equal length:
     ``one(key)`` runs once per distinct tuple of the rows' Python values
@@ -183,26 +327,26 @@ def per_distinct(columns, one: Callable) -> tuple:
             results.append(one(key))
         index.append(i)
     return results, (None if len(results) == len(index)
-                      else pa.array(index, pa.int64()))
+                      else arrow_column(pa.int64())(index))
 
 
-def _onto_rows(values: list, take, t):
-    """``values`` as one Arrow array of type ``t``, taken onto the rows
-    by ``take`` (``None``: already one value per row)."""
-    import pyarrow as pa
-
-    a = pa.array(values, t)
+def _onto_rows(values, take, t):
+    """``values`` as one Arrow array of type ``t`` (:func:`arrow_column`),
+    taken onto the rows by ``take`` (``None``: already one value per
+    row)."""
+    a = arrow_column(t)(values)
     return a if take is None else a.take(take)
 
 
-def map_in_arrow(df: DataFrame, fn: Callable, schema: str) -> DataFrame:
+def map_in_arrow(df: DataFrame, fn: Callable, schema) -> DataFrame:
     """``df.mapInArrow`` whose tasks first run :func:`_task_setup` — the
     package's one ``mapInArrow``.  ``fn(batches, out)`` gets the
     task's input ``pyarrow.RecordBatch`` iterator and ``out``, the Arrow
-    schema of the DDL ``schema`` (computed here, on the driver), and
-    yields record batches of exactly that schema: Spark does not cast
-    them."""
-    struct = _parse_datatype_string(schema)
+    schema of ``schema`` (a DDL string or a ``StructType``; computed
+    here, on the driver), and yields record batches of exactly that
+    schema: Spark does not cast them."""
+    struct = (_parse_datatype_string(schema) if isinstance(schema, str)
+              else schema)
     out = to_arrow_schema(struct)
 
     def run(batches: Iterable) -> Iterator:
@@ -223,6 +367,7 @@ def scalar_udf(fn: Callable, return_type: str):
     any NULL argument gives NULL without calling ``fn`` (SQL's rule for
     strict functions)."""
     t = to_arrow_type(_parse_datatype_string(return_type))
+    arrow_column(t)     # an unsupported type fails here, before any job
 
     def run(*columns):
         _task_setup()
@@ -261,12 +406,20 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
     the array is of lists, and the taken lists become one row per match
     (``flatten``) with the keys taken by ``list_parent_indices``.
     Policy: see the module docstring."""
+    import pyarrow as pa
+
     keys = tuple(keys)
     payload = (payload,) if isinstance(payload, str) else tuple(payload)
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema = ", ".join([f"{k} {types[k]}" for k in keys]
-                       + [f"{c} {t}" for c, t in columns.items()])
+    schema = _parse_datatype_string(", ".join(
+        [f"{k} {types[k]}" for k in keys]
+        + [f"{c} {t}" for c, t in columns.items()]))
+    out = to_arrow_schema(schema)
     per_match = empty_row is None
+    column_types = [pa.list_(out.field(c).type) if per_match
+                    else out.field(c).type for c in columns]
+    for t in column_types:  # an unsupported type fails here, before any job
+        arrow_column(t)
     empty = (dict.fromkeys(columns, ()) if per_match else empty_row, None)
 
     def one(data):
@@ -285,11 +438,8 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
             return empty[0], (f"{err}; {msg}" if err else msg)
 
     def run(batches: Iterable, out) -> Iterator:
-        import pyarrow as pa
         import pyarrow.compute as pc
 
-        types = [pa.list_(out.field(c).type) if per_match
-                 else out.field(c).type for c in columns]
         for batch in batches:
             # (body result, err) per distinct payload
             results, take = per_distinct(
@@ -298,7 +448,7 @@ def map_documents(df: DataFrame, keys: tuple, payload, body: Callable,
                       for k in keys]
             cols = [_onto_rows([e for _, e in results] if c == "err"
                                else [r[c] for r, _ in results], take, t)
-                    for c, t in zip(columns, types)]
+                    for c, t in zip(columns, column_types)]
             if per_match:
                 # one output row per match, keyed by its input row
                 rows = pc.list_parent_indices(cols[0])

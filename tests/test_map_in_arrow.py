@@ -29,6 +29,8 @@ import sys
 import zipfile
 from pathlib import Path
 
+import numpy as np
+import pyarrow as pa
 import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -243,8 +245,79 @@ def test_sql_function_batch_runs_task_setup(spark):
     assert all(0 < r["n"] < 10**9 for r in got), got
 
 
+FRESH_WORKER = """
+import sys
+
+from pyspark.sql import SparkSession
+
+from perl_html5_dom_spark.functions.register import register_all
+from perl_html5_dom_spark.operators import dedup, selector_ops
+from perl_html5_dom_spark.operators.extract import extract_pages
+from perl_html5_dom_spark.operators.nodes import nodes_df
+from perl_html5_dom_spark.util import map_in_arrow
+import pyarrow as pa
+
+
+def probe(batches, out):
+    # the worker's pid and whether it holds pandas; the batch is built
+    # from buffers, as the package builds its columns
+    import os
+    import sys
+
+    from perl_html5_dom_spark.util import arrow_column
+
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_arrays(
+        [arrow_column(pa.int64())([os.getpid()]),
+         arrow_column(pa.bool_())(["pandas" in sys.modules])], schema=out)
+
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+pages = spark.createDataFrame(
+    [(f"u{i}", f'<p id="x{i}">page <a href="/{i}">{i % 3}</a></p>'
+      '<textarea>t</textarea>') for i in range(30)],
+    "url string, html string")
+docs = spark.createDataFrame([(i, f"the cat sat on mat {i % 4}")
+                              for i in range(30)], "doc_id bigint, text string")
+one = pages.limit(1)
+first = map_in_arrow(one, probe, "pid bigint, pandas boolean").collect()
+assert extract_pages(pages).count() == 30
+assert selector_ops.css_find(pages, "a[href]").count() == 30
+assert nodes_df(pages).count() > 30
+register_all(spark)
+pages.createOrReplaceTempView("pages")
+assert spark.sql("SELECT sum(css_count(html, 'p')) FROM pages").first()[0] == 30
+assert dedup._doc_minhash_sets(docs, 4, 2).count() == 30
+assert dedup.simhash(docs).count() == 30
+last = map_in_arrow(one, probe, "pid bigint, pandas boolean").collect()
+spark.stop()
+print(first[0]["pid"] == last[0]["pid"], last[0]["pandas"])
+"""
+
+
+def test_fresh_worker_never_imports_pandas():
+    """Every runner path in one new ``local[1]`` worker — ``extract_pages``,
+    ``css_find``, ``nodes_df`` with every column, a ``css_*`` SQL
+    function and the two signature kernels — leaves no ``pandas`` in its
+    ``sys.modules``: the package builds its Arrow columns from buffers,
+    and ``pa.array`` would import pandas through pyarrow's shim.  A child
+    session, because the shared one reuses workers that other tests'
+    pandas operators may have given pandas.  The first and last probes
+    run in the same worker, so it is that worker that ran every path."""
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        [str(ROOT), *filter(None, [os.environ.get("PYTHONPATH")])])}
+    out = subprocess.run([sys.executable, "-c", FRESH_WORKER],
+                         capture_output=True, text=True, timeout=600,
+                         cwd=ROOT, env=env)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.splitlines()[-1] == "True False", out.stdout
+
+
 # ---------------------------------------------------------------------------
-# the per-batch core, in-process
+# the per-batch core and the column builder, in-process
 # ---------------------------------------------------------------------------
 
 def test_per_distinct_calls_once_per_distinct_key():
@@ -275,6 +348,94 @@ def test_per_distinct_all_distinct_has_no_take():
                         lambda key: key) == ([(3,), (None,), (2,)], None)
     assert per_distinct([pa.array([], pa.binary())],
                         lambda key: key) == ([], None)
+
+
+_SPAN = pa.list_(pa.field("element", pa.struct(
+    [("node_id", pa.int64()), ("begin", pa.int64()), ("length", pa.int64())])))
+_ATTRS = pa.map_(pa.string(), pa.string())
+_PAIR = pa.struct([("a", pa.int64()), ("b", pa.string())])
+_INTS = np.array([5, -1, 2**62], dtype=np.int64)
+#: (type, values) for every type ``util.arrow_column`` covers, in the
+#: shapes the package's kernels pass
+_BUILDER_CASES = [
+    (pa.string(), ["a", None, "", "h\u00e9llo \u2713", "x"]),
+    (pa.string(), ["ascii", "only"]),
+    (pa.string(), [None, None, None]),
+    (pa.string(), ("\u00e9", "")),
+    (pa.string(), []),
+    (pa.binary(), [b"\xff\x00", None, b""]),
+    (pa.binary(), [b"<p>", b"x"]),
+    (pa.int64(), [1, None, -2**63, 2**63 - 1]),
+    (pa.int64(), [3, 1, 2]),
+    (pa.int64(), [None]),
+    (pa.int64(), _INTS),
+    (pa.int64(), np.ma.MaskedArray(_INTS, [False, True, False])),
+    (pa.int64(), np.ma.MaskedArray(_INTS, [True, True, True])),
+    (pa.int32(), [1, None, -3]),
+    (pa.bool_(), [True, None, False]),
+    (pa.bool_(), [True] * 9 + [False]),
+    (pa.list_(pa.string()), [["a", None], [], None, ("\u00e9",)]),
+    (pa.list_(pa.int64()), [(), (), ()]),
+    (pa.list_(pa.bool_()), [[True, None], [False], None]),
+    (pa.list_(pa.binary()), [[b"a", None], [b""]]),
+    (pa.list_(pa.int32()), [[1, None], None]),
+    (_SPAN, [[(1, 2, 3)], [], None, (), [(4, None, 6), (7, 8, 9)]]),
+    (_SPAN, [[{"node_id": 1, "begin": 2, "length": 3}], [{"begin": 5}],
+             None, []]),
+    (_PAIR, [(1, "x"), None, (None, "y")]),
+    (_PAIR, [{"a": 1}, None, {"b": "y"}]),
+    (_ATTRS, [{"href": "/u", "id": None}, {}, None, {"\u00e9": "x"}]),
+    (_ATTRS, [{}, {}]),
+    (pa.list_(_ATTRS), [[{"a": "b"}], [], [None, {}]]),
+]
+
+
+@pytest.mark.parametrize("t, values", _BUILDER_CASES,
+                         ids=lambda x: str(x) if isinstance(x, pa.DataType)
+                         else "")
+def test_arrow_column_equals_pa_array(t, values):
+    """The buffer-built column equals ``pa.array`` on every covered type,
+    with nulls, all-null and no-null columns, empty strings, lists and
+    maps, non-ASCII text, ``()`` (the per-match empty value), structs
+    from tuples and from dicts, and numpy int64 with and without a
+    mask."""
+    from perl_html5_dom_spark.util import arrow_column
+
+    got = arrow_column(t)(values)
+    got.validate(full=True)
+    assert got.type == t
+    assert got.equals(pa.array(values, t)), (got, values)
+
+
+@pytest.mark.parametrize("t, name", [
+    (pa.float64(), "double"), (pa.large_string(), "large_string"),
+    (pa.list_(pa.float32()), "float"),
+    (pa.map_(pa.string(), pa.timestamp("us")), "timestamp")])
+def test_arrow_column_rejects_other_types(t, name):
+    from perl_html5_dom_spark.util import arrow_column
+
+    with pytest.raises(TypeError, match=f"type {name}"):
+        arrow_column(t)
+
+
+def test_unsupported_type_fails_before_any_job(spark):
+    """A column type the builder does not cover fails on the driver, when
+    the output schema is computed: the job group records no job."""
+    from perl_html5_dom_spark.util import map_documents, scalar_udf
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([("a",)], "text string")
+    sc.setJobGroup("unsupported_type", "no job may start")
+    try:
+        with pytest.raises(TypeError, match="double"):
+            map_documents(df, (), "text", lambda text: {"x": 1.0},
+                          {"x": "double"}, empty_row={"x": None}).collect()
+        with pytest.raises(TypeError, match="double"):
+            scalar_udf(float, "double")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "unsupported_type")) == []
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,11 @@ only ``util.map_in_arrow`` calls ``mapInArrow``, only
 every batch of every SQL function gets the same per-task setup.  And
 one per-batch core: only ``util.per_distinct`` calls ``to_pylist``, and
 its callers are the runner, the UDF entry and the two dedup signature
-kernels, so every Python batch meets its distinct-payload memo.
+kernels, so every Python batch meets its distinct-payload memo.  And
+no package module calls a pyarrow constructor that converts Python
+values through pyarrow's pandas shim (``pa.array`` and its kin import
+pandas into the worker on first use): the runner builds its columns
+from buffers (``util.arrow_column``).
 """
 
 import ast
@@ -169,3 +173,73 @@ def test_map_caller_is_caught(tmp_path):
     assert sorted(_map_callers(tmp_path, "pandas_udf")) == [
         "ops.k.<module>", "ops.k.top", "ops.k.udfs", "ops.k.udfs"]
     assert _map_callers(tmp_path, "to_pylist") == ["ops.k.memo"]
+
+
+#: pyarrow functions that convert Python values through pyarrow's pandas
+#: shim, which imports pandas on first use: called through a name bound
+#: to ``pyarrow`` (any alias) or imported from it by name ...
+SHIM_FUNCTIONS = {"array", "chunked_array", "scalar", "table",
+                  "record_batch"}
+#: ... and the class methods that do the same, on whatever object
+SHIM_METHODS = {"from_pylist", "from_pydict", "from_pandas"}
+
+
+def _shim_calls(pkg: Path) -> list[str]:
+    """``module:line`` of every call under ``pkg`` of a pyarrow function
+    that converts Python values through the pandas shim."""
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        tree = ast.parse(path.read_text(), str(path))
+        modules, functions = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name == "pyarrow" or (a.name.startswith("pyarrow.")
+                                               and a.asname is None):
+                        modules.add(a.asname or "pyarrow")
+            elif isinstance(node, ast.ImportFrom) and node.module == "pyarrow":
+                functions |= {a.asname or a.name for a in node.names
+                              if a.name in SHIM_FUNCTIONS}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if (isinstance(f, ast.Attribute) and (
+                    f.attr in SHIM_METHODS
+                    or f.attr in SHIM_FUNCTIONS
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id in modules)
+                    or isinstance(f, ast.Name) and f.id in functions):
+                found.append(f"{mod}:{node.lineno}")
+    return found
+
+
+def test_no_pandas_shim_constructor():
+    """The runner, the UDF entry and the signature kernels build their
+    Arrow arrays from buffers, so no Spark Python worker imports pandas
+    for them."""
+    assert _shim_calls(ROOT / PKG) == []
+
+
+def test_shim_constructor_is_caught(tmp_path):
+    (tmp_path / "ops").mkdir()
+    (tmp_path / "ops" / "k.py").write_text(
+        "import numpy as np\n"
+        "import pyarrow as pa\n"
+        "import pyarrow.compute as pc\n"
+        "def kernel(batch):\n"
+        "    import pyarrow as arrow\n"
+        "    from pyarrow import record_batch as rb, field\n"
+        "    pa.array([1])\n"
+        "    np.array([1])\n"
+        "    arrow.table({'x': [1]})\n"
+        "    pa.Table.from_pylist([{'x': 1}])\n"
+        "    rb([pc.add(1, 2)], names=['x'])\n"
+        "    field('x', pa.int64())\n"
+        "    pa.Array.from_buffers(pa.int64(), 0, [None, None])\n")
+    (tmp_path / "ops" / "m.py").write_text(
+        "import pyarrow.parquet\n"
+        "pyarrow.chunked_array([[1]])\n")
+    assert _shim_calls(tmp_path) == ["ops.k:7", "ops.k:9", "ops.k:10",
+                                     "ops.k:11", "ops.m:2"]
