@@ -843,7 +843,7 @@ class TokenList:
         self.element = element
 
     def _tokens(self) -> list[str]:
-        return (self.element.attr("class") or "").split()
+        return _m.ascii_tokens(self.element.attr("class") or "")
 
     def _store(self, tokens: list[str]):
         self.element.attr("class", " ".join(tokens))

@@ -25,13 +25,16 @@ Scale notes (100 TB):
     signature with no exchange; ``_band_keys`` projects it to LSH band
     buckets, and the O(n²) pair search becomes an equi-join on
     (band, key).  Batch, LSH-only and streaming near-dup all bucket
-    documents through these two functions.
+    documents through these two functions, one plan each: signature
+    kernel → band keys → verify, over every document.
   * Shingle Jaccard — common-shingle blowup is bounded by ``max_df``
     (drop shingles appearing in more docs — the standard stop-shingle
     cut).
   * SimHash — 32-bit fingerprint per doc from one kernel; near-dup
-    search joins on multi-index group keys (pigeonhole: any pair within
-    ``max_hamming`` agrees on some group up to one bit).
+    search runs over DISTINCT fingerprints, joins on multi-index group
+    keys (pigeonhole: any pair within ``max_hamming`` agrees on some
+    group up to one bit), and ``_expand_classes`` maps value pairs back
+    to doc pairs.
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ from collections import Counter
 from hashlib import md5
 from itertools import chain
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..util import (_cast, _onto_rows, checkpoint_parquet, map_in_arrow,
                     per_distinct)
@@ -267,52 +270,28 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
 
 
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
-                      num_perm: int = 16, bands: int = 4, k: int = 3,
-                      collapse_exact: bool | None = None) -> DataFrame:
+                      num_perm: int = 16, bands: int = 4,
+                      k: int = 3) -> DataFrame:
     """LSH candidates → exact Jaccard verification (a, b, jaccard).
 
-    Round-5 scale shape (verify arrays + collapse), round-6 kernel
-    front (``_doc_minhash_sets``), outside-in:
+    Round-6 kernel front (``_doc_minhash_sets``) over the round-5
+    verify arrays:
 
-    1. ADAPTIVE EXACT-DUP COLLAPSE.  Docs with identical text have
-       identical shingle sets, hence identical signatures, band
-       buckets, and jaccard against any third doc — so the whole
-       shingle/signature/verify machinery can run once per DISTINCT
-       text (the class rep = min doc_id), with doc-level pairs
-       recovered by arithmetic expansion: rep-pair (ra, rb, j) fans
-       out to every (x in class a, y in class b), and each class of
-       m > 1 contributes its own m·(m-1)/2 pairs at jaccard 1.0.
-       Bit-for-bit equivalent to running on raw docs (candidate-ship
-       and jaccard are functions of the shingle set alone).  On web
-       corpora (30-50% exact dups) this cuts the quadratic verify work
-       by the dup factor squared inside dense clusters, but on a
-       low-dup corpus the class bookkeeping is pure overhead — so by
-       default one cheap approx_count_distinct probe picks the path
-       (``collapse_exact`` forces it either way).
-    2. ONE Arrow kernel pass computes each doc's signature AND its
+    1. ONE Arrow kernel pass computes each doc's signature AND its
        verify hash array (_doc_minhash_sets — both are per-document
        functions, so the round-5 shingle explode and its two
        aggregate exchanges are gone).
-    3. Band keys from a pure projection over the kernel output; the
+    2. Band keys from a pure projection over the kernel output; the
        only shuffles are the bucket self-join, the candidate
        distinct, and the verify joins.
+
+    Exact dups are not collapsed to one class representative first:
+    on the catalog corpus (distinct/total 0.87) the class bookkeeping
+    cost more Spark jobs and wall time than the verify work it saved.
 
     Hash semantics are engine-mirrored: both sides take distinct
     shingle STRINGS per doc, then operate purely on H(shingle), so the
     DuckDB oracle reproduces counts bit-for-bit."""
-    if collapse_exact is None:
-        n, nd = docs.agg(
-            F.count("*"), F.approx_count_distinct("text")).first()
-        collapse_exact = nd < 0.8 * n
-    classes = None
-    if collapse_exact:
-        classes = _materialize(  # (doc_id, rep); rep == class min doc_id
-            docs.selectExpr("doc_id", "md5(text) as tkey")
-            .withColumn("rep",
-                        F.min("doc_id").over(Window.partitionBy("tkey")))
-            .select("doc_id", "rep"))
-        docs = docs.join(
-            classes.where("doc_id = rep").select("doc_id"), "doc_id")
     # the kernel's (doc_id, mh*, hset) table feeds the bucket self-join
     # and both verify sides, so it is parquet-CHECKPOINTED: the A/B at
     # sf1 reads persist 3.17s / parquet 2.68s / none 3.49s (repeated
@@ -332,7 +311,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
     # within-doc collision would off-by-one the jaccard denominator,
     # p < 1e-10 per doc — the DuckDB oracle sees none at test scale).
     sets = wide.select("doc_id", "hset")
-    rep_pairs = (
+    return (
         cand.join(sets.selectExpr("doc_id as a", "hset as ha"), "a")
         .join(sets.selectExpr("doc_id as b", "hset as hb"), "b")
         .selectExpr("a", "b", "size(array_intersect(ha, hb)) as inter",
@@ -341,16 +320,13 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
         .filter(F.col("j_raw") >= threshold)
         .selectExpr("a", "b", "round(j_raw, 6) as jaccard")
     )
-    if classes is None:
-        return rep_pairs
-    return _expand_classes(rep_pairs, classes, "rep", "cast(1.0 as double)")
 
 
 def _expand_classes(pairs: DataFrame, classes: DataFrame, key: str,
                     same: str) -> DataFrame:
     """Doc pairs (a, b, metric) from class pairs — the expansion step
-    of both collapsed near-dup searches (output-sized, pure joins and
-    projections).  ``classes`` is (doc_id, ``key``), ``pairs`` is
+    of the collapsed SimHash near-dup search (output-sized, pure joins
+    and projections).  ``classes`` is (doc_id, ``key``), ``pairs`` is
     (a, b, metric) over ``key`` values: every (x in class a, y in class
     b) inherits its class pair's metric, and each class of m > 1
     members contributes its own m·(m-1)/2 pairs at the SQL value

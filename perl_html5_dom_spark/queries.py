@@ -271,13 +271,9 @@ def q_css_contains(spark, sf_dir):
 
 
 def q_attr_prefix_https(spark, sf_dir):
-    """Lowered fast path: single-compound selector → Column predicates
-    (no Python matcher in the plan)."""
-    nodes = nd.nodes_df(_pages(spark, sf_dir), columns=[
-        "url", "node_id", "ord", "tag", "node_type", "attrs",
-        "elem_begin", "elem_length"])
+    """[attr^=v] prefix comparator (findAttr analog, DOM.pod:1900-1921)."""
     return (
-        so.css_find_nodes(nodes, "a[href^='https://']")
+        so.css_find(_pages(spark, sf_dir), "a[href^='https://']")
         .groupBy("url").agg(F.count("*").cast("bigint").alias("n"))
     )
 
@@ -518,13 +514,9 @@ def q_general_sibling(spark, sf_dir):
 
 
 def q_attr_include(spark, sf_dir):
-    """[class~=v] include comparator via the lowered fast path
-    (findClass analog, DOM.xs:302-305)."""
-    nodes = nd.nodes_df(_pages(spark, sf_dir), columns=[
-        "url", "node_id", "ord", "tag", "node_type", "attrs",
-        "elem_begin", "elem_length"])
+    """[class~=v] include comparator (findClass analog, DOM.xs:302-305)."""
     return (
-        so.css_find_nodes(nodes, "[class~=widget]")
+        so.css_find(_pages(spark, sf_dir), "[class~=widget]")
         .groupBy("url").agg(F.count("*").cast("bigint").alias("n"))
     )
 
@@ -1180,12 +1172,7 @@ def q_webtext_pipeline(spark, sf_dir):
         ts.quality_scores(corpus, carry=("text",))
         .where("quality >= 0.75").select("doc_id", "text"),
         "webtext_kept")
-    # collapse_exact pinned: the kept corpus is ~15% exact dups by
-    # construction (nd/n ~ 0.85 > the 0.8 probe threshold at every
-    # sf), so the adaptive probe always lands here — pinning skips
-    # its extra aggregation pass; either path is bit-identical
-    pairs = dd.minhash_near_dups(kept, threshold=0.5,
-                                 collapse_exact=False)
+    pairs = dd.minhash_near_dups(kept, threshold=0.5)
     # losers = pair-members that are not their cluster's min id; docs in
     # no pair are trivially canonical, so labeling the pair subgraph
     # alone is equivalent to dedup_keep over the full corpus

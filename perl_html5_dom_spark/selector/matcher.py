@@ -22,6 +22,8 @@ modest_finder_node_combinator_column, utils.c:306-310).
 
 from __future__ import annotations
 
+import re
+
 from ..dom.constants import (
     DOCUMENT_NODE,
     ELEMENT_NODE,
@@ -31,6 +33,11 @@ from ..dom.constants import (
 )
 from ..dom.document import NULL, Document
 from .parser import Entry, SelectorList, parse_selector
+
+#: ``class`` tokens and ``~=`` words: a string split on ASCII whitespace
+#: (tab, LF, FF, CR, space — DOM "split on ASCII whitespace", CSS ``~=``);
+#: ``str.split()`` would also split on NBSP, VT and the Unicode spaces
+ascii_tokens = re.compile(r"[^\t\n\f\r ]+").findall
 
 _FORM_CONTROL = frozenset(
     "button input select textarea optgroup option fieldset".split()
@@ -368,7 +375,7 @@ def _match_simple(doc: Document, node: int, s, scope) -> bool:
         if attrs is None:
             return False
         cls = attrs.get("class")
-        return cls is not None and s[1] in cls.split()
+        return cls is not None and s[1] in ascii_tokens(cls)
     if kind == "attr":
         return _match_attr(attrs, s)
     if kind == "pseudo":
@@ -397,7 +404,7 @@ def _match_attr(attrs, s) -> bool:
     if op == "equal":
         return actual == value
     if op == "include":
-        return value in actual.split()
+        return value in ascii_tokens(actual)
     if op == "dash":
         return actual == value or actual.startswith(value + "-")
     if op == "prefix":

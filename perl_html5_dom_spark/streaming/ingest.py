@@ -31,16 +31,12 @@ def read_page_stream(spark: SparkSession, input_dir: str,
     )
 
 
-def extract_stream(pages: DataFrame, span_selector: str | None = "a[href]") -> DataFrame:
-    """Streaming extraction — same kernel as batch."""
-    return extract_pages(pages, span_selector=span_selector)
-
-
-def start_extraction(spark: SparkSession, input_dir: str, output_dir: str,
-                     checkpoint_dir: str, trigger_once: bool = True):
-    """File-sink pipeline with checkpoint-based exactly-once."""
+def _start_parquet_sink(pages: DataFrame, output_dir: str,
+                        checkpoint_dir: str, trigger_once: bool):
+    """The batch extraction kernel over a page stream → parquet file
+    sink, exactly-once through the checkpoint's offsets + commit log."""
     q = (
-        extract_stream(read_page_stream(spark, input_dir))
+        extract_pages(pages)
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -48,6 +44,13 @@ def start_extraction(spark: SparkSession, input_dir: str, output_dir: str,
     if trigger_once:
         q = q.trigger(availableNow=True)
     return q.start()
+
+
+def start_extraction(spark: SparkSession, input_dir: str, output_dir: str,
+                     checkpoint_dir: str, trigger_once: bool = True):
+    """File-sink pipeline with checkpoint-based exactly-once."""
+    return _start_parquet_sink(read_page_stream(spark, input_dir),
+                               output_dir, checkpoint_dir, trigger_once)
 
 
 def dedup_stream(stream: DataFrame, key_col: str = "text",
@@ -174,12 +177,5 @@ def start_warc_extraction(spark: SparkSession, warc_dir: str, output_dir: str,
 
     pages = read_warc_stream(spark, warc_dir,
                              max_files_per_trigger=max_files_per_trigger)
-    q = (
-        extract_stream(pages)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        q = q.trigger(availableNow=True)
-    return q.start()
+    return _start_parquet_sink(pages, output_dir, checkpoint_dir,
+                               trigger_once)

@@ -60,8 +60,7 @@ def _jobs_of_group(spark, group, fn):
 
 def test_minhash_without_text_fails_before_any_job(spark):
     """The signature kernel reads ``text``, so a frame without it fails
-    at analysis, before the exact-dup collapse materializes its
-    classes."""
+    at analysis, before the kernel output is checkpointed."""
     from pyspark.errors import AnalysisException
 
     from perl_html5_dom_spark.operators.dedup import minhash_near_dups
@@ -71,7 +70,7 @@ def test_minhash_without_text_fails_before_any_job(spark):
 
     def call():
         with pytest.raises(AnalysisException):
-            minhash_near_dups(df, collapse_exact=True)
+            minhash_near_dups(df)
 
     assert _jobs_of_group(spark, "minhash_no_text", call) == []
 

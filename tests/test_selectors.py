@@ -73,6 +73,18 @@ def test_find_class(tree):
         assert getattr(tree, method)("yellow").item(0).attr("id") == "test1"
 
 
+@pytest.mark.parametrize("sep,splits", [
+    ("\t", True), ("\n", True), ("\x0c", True),
+    ("\x0b", False), ("\xa0", False), ("\x1c", False)])
+def test_class_tokens_split_on_ascii_whitespace_only(sep, splits):
+    """``class`` and ``~=`` split on ASCII whitespace (tab, LF, FF, CR,
+    space), never on VT, NBSP or the information separators."""
+    tree = HTML5DOM().parse(f'<div class="a{sep}widget"></div>')
+    assert (tree.find(".widget").length() == 1) is splits
+    assert (tree.find("[class~=widget]").length() == 1) is splits
+    assert tree.at("div").classList().has("widget") is splits
+
+
 # all six comparators x icase (t/0-api.t:227-253)
 ATTRS = {"=": "test-attr-eq", "~": "test-attr-space", "|": "test-attr-dash",
          "*": "test-attr-substr", "^": "test-attr-prefix",

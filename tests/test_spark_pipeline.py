@@ -45,20 +45,6 @@ def test_extract_spans_point_at_open_tags(spark, pages):
         assert frag.startswith("<a ") and frag.endswith(">")
 
 
-def test_selector_lowered_matches_kernel(spark, pages):
-    from perl_html5_dom_spark.operators.nodes import nodes_df
-    from perl_html5_dom_spark.operators.selector_ops import (
-        css_find, css_find_nodes)
-
-    nodes = nodes_df(pages).persist()
-    for sel in ["a", ".ref", "li.rel", "a[href^='https://']",
-                "article[id]", "[class~=widget]"]:
-        kernel = {(r.url, r.node_id) for r in css_find(pages, sel).collect()}
-        lowered = {(r.url, r.node_id) for r in css_find_nodes(nodes, sel).collect()}
-        assert kernel == lowered, sel
-    nodes.unpersist()
-
-
 def test_css_at_is_first_in_document_order(spark, pages):
     from perl_html5_dom_spark.operators.selector_ops import css_at, css_find
 

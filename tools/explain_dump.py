@@ -33,7 +33,7 @@ def main() -> None:
 
     import sys
     sys.path.insert(0, ".")
-    from perl_html5_dom_spark.operators import dedup, nodes, selector_ops, similarity
+    from perl_html5_dom_spark.operators import dedup, nodes, similarity
     from perl_html5_dom_spark.operators.extract import extract_pages
     from perl_html5_dom_spark.sources.pages import pages_df
 
@@ -49,18 +49,12 @@ def main() -> None:
     pages = pages_df(spark, sf)
     grab("Extraction kernel input narrowing",
          extract_pages(pages, fields=["url", "main_text"]),
-         "The ArrowEvalPython/MapInPandas node must sit directly on a "
+         "The MapInArrow node must sit directly on a "
          "projection of ONLY (url, html): the kernel is a black box, so "
          "we narrow its input by construction.")
 
     nd = nodes.nodes_df(pages, elements_only=True,
                         columns=["url", "node_id", "parent_id", "tag"])
-    grab("Lowered selector (no Python in the match loop)",
-         selector_ops.css_find_nodes(
-             nodes.nodes_df(pages), "a[href^='https://']"),
-         "Filter on tag/attrs columns stays JVM-side under "
-         "WholeStageCodegen; only the node-table explode is Python.")
-
     child = nd.select("url", "parent_id")
     parent = nd.select("url", F.col("node_id").alias("parent_id"),
                        F.col("tag").alias("parent_tag"))
@@ -83,7 +77,7 @@ def main() -> None:
          dedup._band_keys(dedup._doc_minhash_sets(
              docs.selectExpr("doc_id", "text"), 16, 3), 16, 4),
          "Shingling, md5 hashing and all 16 per-permutation mins run in "
-         "ONE MapInPandas kernel per document (no Exchange); the LSH "
+         "ONE MapInArrow kernel per document (no Exchange); the LSH "
          "band keys are a projection + explode(bands) over its output. "
          "Batch, LSH-only and streaming near-dup all bucket through it.")
 
@@ -111,7 +105,7 @@ def main() -> None:
     from perl_html5_dom_spark.sources import pdfs as pf
     grab("PDF extraction kernel input narrowing",
          px.extract_pdfs(pf.pdf_docs_df(spark, sf)),
-         "Like the HTML kernel: MapInPandas sits on a projection of "
+         "Like the HTML kernel: MapInArrow sits on a projection of "
          "(url, pdf) only; parallelism is per-document.")
 
     from perl_html5_dom_spark.operators import urlnorm as un
@@ -244,7 +238,7 @@ def main() -> None:
          "round 6).  The round-5 sorted-run folds were NOT really "
          "codegen — Catalyst runs lambda bodies through the "
          "interpreted HigherOrderFunction path (~7 ms/doc); the "
-         "counting now runs as one MapInPandas Counter kernel "
+         "counting now runs as one MapInArrow Counter kernel "
          "(~0.13 ms/doc) emitting bit-exact INTEGERS, with every "
          "float division and round in the same SQL projections as "
          "before (the replaced fold is the differential twin that "
@@ -259,7 +253,7 @@ def main() -> None:
          q_wet_extract(spark, sf),
          "Provider-text ingestion (round 5).  The WET round-trip "
          "(text -> conversion record -> gzip member -> parser) plus "
-         "the downstream token count must compile to MapInPandas "
+         "the downstream token count must compile to MapInArrow "
          "nodes over a two-column projection with no operator-owned "
          "Exchange — the lane is record-local by construction, so at "
          "CC scale it is bounded by the WET scan exactly like the "
@@ -271,7 +265,7 @@ def main() -> None:
     from perl_html5_dom_spark.queries import q_cdx_index
     grab("cdx_index: scan-bound capture indexing",
          q_cdx_index(spark, sf),
-         "ONE MapInPandas directly over a projection of (url, html) — "
+         "ONE MapInArrow directly over a projection of (url, html) — "
          "no Exchange anywhere: the index is a pure per-record "
          "projection, so at CC scale the stage is bounded by the WARC "
          "scan itself and its ~100 B/record output can broadcast-join "
